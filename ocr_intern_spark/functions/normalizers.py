@@ -3,9 +3,12 @@
 Second, independent implementation of the semantics in
 ``ocr_intern_spark.oracle.validators`` (reference:
 /root/reference/src/postprocessing/validators.py:5-139) — pure
-Catalyst expressions, so the whole normalizer surface stays inside
-WholeStageCodegen on the JVM: zero Python in the hot path, fully
-vectorized, pushdown-friendly.
+Catalyst expressions: zero Python in the hot path, pushdown-friendly.
+Not all of it is whole-stage codegen'd: the higher-order functions in
+``title_case`` (``transform``) and ``normalize_commune`` (``filter``)
+are CodegenFallback expressions on Spark 4.1, so a Project or Filter
+that contains them runs outside WholeStageCodegen (no ``*(n)`` marker
+in the executed plan) and is evaluated by a generated projection.
 
 Every function takes and returns ``pyspark.sql.Column``.
 
@@ -195,10 +198,21 @@ def normalize_field(key: Column, raw: Column) -> Column:
 
     Returns ONE struct<type,value,valid> column built from a single
     when-chain — not three parallel chains — so the generated code
-    stays ~1/3 the size and inside WholeStageCodegen's 64KB method
-    cap. First matching key rule wins (reference if-chain order).
+    stays ~1/3 the size and under janino's 64KB method cap. The
+    commune branch's ``filter`` is a CodegenFallback HOF, so the
+    cascade runs in a generated projection, not in WholeStageCodegen
+    (module docstring). First matching key rule wins (reference
+    if-chain order).
     """
-    k = F.lower(key)
+    return normalize_field_lowered(F.lower(key), raw)
+
+
+def normalize_field_lowered(k: Column, raw: Column) -> Column:
+    """``normalize_field`` on a key that is already lower-cased. The
+    cascade probes the key ~40 times; a caller that stages
+    ``lower(key)`` as a column of a projection below passes that
+    column here, so the probes read one attribute instead of each
+    repeating ``lower(...)``."""
 
     def pack(tname: str, vv: tuple[Column, Column]) -> Column:
         val, ok = vv

@@ -1410,9 +1410,9 @@ def q_quality_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast-joined in exactly the same plan position.
 
     Scale shape: gram explosion is a narrow codegen'd projection
-    (split + zip_with, no UDF); the only exchanges are the tiny
-    distinct-gram dictionary aggregate and the final doc_id hash
-    aggregate with map-side SUM/COUNT partials. Integer logits —
+    (split + zip_with, no UDF); hashing and weight lookup are
+    per-row expressions; the only exchange is the final doc_id
+    hash aggregate with map-side SUM/COUNT partials. Integer logits —
     no float summation-order hazard between engines.
 
     r6 audit: two rewrites of the double FNV fold were tried and BOTH

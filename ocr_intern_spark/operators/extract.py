@@ -4,7 +4,7 @@ Semantics: ``ocr_intern_spark.oracle.semantics`` (module docstring is
 the spec; reference citations there). Architecture per SURVEY.md §3:
 
     scan → posexplode(spans)                       [narrow]
-      ├── non-media spans → native Catalyst exprs  [narrow, codegen]
+      ├── non-media spans → native Catalyst exprs  [narrow]
       └── media spans → repartition(media_ref)     [shuffle #1, balances
             → mapInPandas(recognize+fuse)            OCR work & splits
                                                      oversized docs]
@@ -18,9 +18,18 @@ Scale design notes (100 TB / 1000 executors):
   one giant doc can't pin a task (SURVEY.md §4 item 1 — AQE cannot
   split a single row). The OCR stage is repartitioned by
   ``hash(media_ref)`` which is near-uniform by construction.
-* All non-media span logic is pure Catalyst (WholeStageCodegen): link
-  density, anchor strip, squash, field-key dispatch normalization.
-  Python touches ONLY media spans, Arrow-batched.
+* All non-media span logic is pure Catalyst: link density, anchor
+  strip, squash, field-key dispatch normalization. Python touches ONLY
+  media spans, Arrow-batched. It is not WholeStageCodegen: the
+  ``aggregate`` in ``_linked_chars``, the ``transform`` in
+  ``title_case`` and the ``filter`` in ``normalize_commune`` are
+  CodegenFallback HOFs, so the transform's Filter and Project run as
+  generated projections outside any ``*(n)`` codegen stage.
+* The transform's Column tree costs the driver ~4,900 py4j round trips
+  to build (each ``F.*`` call is 2–3), about a second per ``extract()``
+  call, so it is built once per SparkContext and reused
+  (``_plain_span_columns``). ``extract()`` runs once per micro-batch
+  in the streaming path and once per store commit, resume and upsert.
 * Re-assembly is ONE hash shuffle on doc_id; collect_list +
   array_sort keeps per-doc state bounded by document size (documents
   are bounded; 10^12-doc scale comes from doc count, not doc size).
@@ -29,16 +38,18 @@ Scale design notes (100 TB / 1000 executors):
 
 from __future__ import annotations
 
+import functools
 import re
 from typing import Any, Callable, Iterable, Iterator
 
 import numpy as np
 import pandas as pd
+from pyspark import SparkContext
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ocr_intern_spark.functions.normalizers import (
-    normalize_field,
+    normalize_field_lowered,
     squash_spaces,
 )
 from ocr_intern_spark.schema import FLAT_DDL
@@ -55,7 +66,7 @@ def _linked_chars(text: Column) -> Column:
     Guarded by a cheap instr() probe: spans with no '<a' at all (the
     common case in a web corpus after upstream block splitting) skip
     the two regex passes entirely — when() branches evaluate lazily
-    per row in codegen, so this is a real skip, not a hint."""
+    per row, so this is a real skip, not a hint."""
     inners = F.regexp_extract_all(text, F.lit(_ANCHOR_INNER), 1)
     total = F.aggregate(inners, F.lit(0), lambda acc, x: acc + F.length(x))
     return F.when(F.instr(text, "<a") > 0, total).otherwise(F.lit(0))
@@ -84,33 +95,46 @@ def explode_spans(docs: DataFrame) -> DataFrame:
     )
 
 
-def transform_plain_spans(flat: DataFrame) -> DataFrame:
-    """Everything except media OCR — pure Catalyst expressions.
+@functools.lru_cache(maxsize=1)
+def _plain_span_columns(
+    sc: SparkContext,
+) -> tuple[list[Column], Column, list[Column | str]]:
+    """The span transform's Columns — ``(staged, keep, out)`` — built
+    once per SparkContext (module docstring); a new context rebuilds.
 
-    text: boilerplate/link-density strip (spec step 2-3);
-    heading: squash (step 4); field: key-dispatch normalize (step 5);
-    media with missing ref: error capture (step 6a).
-    """
+    ``staged`` adds the field key, its raw value and the lower-cased
+    key as columns of a narrow projection, so the normalizer cascade
+    reads three attributes instead of inlining the ``instr``/
+    ``substring_index``/``trim`` subtrees into each of its branches
+    (Catalyst's CollapseProject keeps a non-trivial expression staged
+    when the projection above references it more than once)."""
     text = F.col("text")
     density_drop = (
         _linked_chars(text).cast("double") / F.length(text)
     ) > F.lit(LINK_DENSITY_CUTOFF)
     cleaned = _clean_text(text)
 
-    key = F.trim(F.substring_index(text, ":", 1))
-    raw = F.when(
-        F.instr(text, ":") > 0,
-        F.trim(F.expr("substring(text, instr(text, ':') + 1)")),
-    ).otherwise(F.lit(""))
     # no ':' → whole text is the value, key is ''
-    fkey = F.when(F.instr(text, ":") > 0, key).otherwise(F.lit(""))
-    fraw = F.when(F.instr(text, ":") > 0, raw).otherwise(F.trim(text))
-    fvalue = normalize_field(fkey, fraw)["value"]
+    has_colon = F.instr(text, ":") > 0
+    fkey = F.when(has_colon, F.trim(F.substring_index(text, ":", 1))).otherwise(
+        F.lit("")
+    )
+    fraw = F.when(
+        has_colon, F.trim(F.expr("substring(text, instr(text, ':') + 1)"))
+    ).otherwise(F.trim(text))
+    staged = [
+        fkey.alias("_fkey"),
+        fraw.alias("_fraw"),
+        F.lower(fkey).alias("_fkey_lower"),
+    ]
+    fvalue = normalize_field_lowered(F.col("_fkey_lower"), F.col("_fraw"))[
+        "value"
+    ]
 
     out_text = (
         F.when(F.col("kind") == "text", cleaned)
         .when(F.col("kind") == "heading", squash_spaces(text))
-        .when(F.col("kind") == "field", F.concat(fkey, F.lit("="), fvalue))
+        .when(F.col("kind") == "field", F.concat(F.col("_fkey"), F.lit("="), fvalue))
         .when(F.col("kind") == "media", F.lit("missing media_ref"))
     )
     out_kind = F.when(F.col("kind") == "media", F.lit("error")).otherwise(
@@ -126,7 +150,7 @@ def transform_plain_spans(flat: DataFrame) -> DataFrame:
             & ((F.col("media_ref").isNull()) | (F.col("media_ref") == ""))
         )
     )
-    return flat.where(keep).select(
+    out = [
         "doc_id",
         "offset",
         "pos",
@@ -134,6 +158,22 @@ def transform_plain_spans(flat: DataFrame) -> DataFrame:
         out_kind.alias("kind"),
         out_text.alias("text"),
         F.lit("").alias("media_ref"),
+    ]
+    return staged, keep, out
+
+
+def transform_plain_spans(flat: DataFrame) -> DataFrame:
+    """Everything except media OCR — pure Catalyst expressions.
+
+    text: boilerplate/link-density strip (spec step 2-3);
+    heading: squash (step 4); field: key-dispatch normalize (step 5);
+    media with missing ref: error capture (step 6a).
+    """
+    staged, keep, out = _plain_span_columns(flat.sparkSession.sparkContext)
+    return (
+        flat.where(keep)
+        .select("doc_id", "offset", "pos", "kind", "text", *staged)
+        .select(*out)
     )
 
 

@@ -3,6 +3,7 @@ session_window variant must agree; streaming session_window must
 merge a session across micro-batches and emit it once finalized."""
 
 import datetime as dt
+import os
 
 import pyarrow as pa
 import pyarrow.parquet as pq
@@ -48,6 +49,11 @@ def test_streaming_session_merges_across_microbatches(spark, tmp_path):
             ),
             str(d / f"part-{i}.parquet"),
         )
+        # FileStreamSource orders by modification time; same-instant
+        # writes tie and can run a later file first, whose events
+        # move the watermark past the earlier ones — pin strictly
+        # increasing mtimes so batch order == file index
+        os.utime(d / f"part-{i}.parquet", (1700000000 + i * 60,) * 2)
 
     # user 1's session spans files 0 and 1 (10-min gaps < 30-min gap
     # rule); the user-99 sentinels only advance the watermark so the
@@ -109,6 +115,8 @@ def test_streaming_session_under_rocksdb_state_store(spark, tmp_path):
                 ),
                 str(d / f"part-{i}.parquet"),
             )
+            # batch order == file index (see the test above)
+            os.utime(d / f"part-{i}.parquet", (1700000000 + i * 60,) * 2)
 
         write(0, [(t0, 1, 1.0), (t0 + dt.timedelta(minutes=10), 1, 2.0)])
         write(1, [(t0 + dt.timedelta(minutes=20), 1, 3.0),

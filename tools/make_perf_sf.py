@@ -9,6 +9,9 @@ replicates every sf0.1 table k times with consistent key offsets:
 
 * fact/entity keys (doc_id, o_orderkey, c_custkey, ...) are offset by
   copy * (max_key + 1), keeping FK joins valid and key universes 10x;
+  doc_id's stride is rounded up to a multiple of 5 so each copy keeps
+  the source's doc_id % 5 population (gopher repetition doubles the
+  text of doc_id % 5 == 0 docs; other queries branch on it too);
 * dimension tables region/nation are kept as-is (TPC-H style);
 * text/payload columns are left identical across copies — shingle
   document frequency then grows ~k-fold per shingle, matching the
@@ -78,6 +81,8 @@ def main() -> None:
 
     for t, cols in OFFSETS.items():
         offcols = {c: maxes[(pt, pk)] + 1 for c, pt, pk in cols}
+        if "doc_id" in offcols:  # round up to a multiple of 5 (docstring)
+            offcols["doc_id"] += -offcols["doc_id"] % 5
         names = [
             r[0]
             for r in con.execute(

@@ -11,7 +11,17 @@ partition granularity (SURVEY.md §2.9 B3/B4, §4 items 2-3):
   anti-join guarantees key disjointness (idempotent under re-runs).
 * reference: SQLite ``performance_metrics`` INSERT per document
   (src/utils/performance_analytics.py:20-56) → here: one metrics row
-  per task partition per run, written to a parquet metrics table.
+  per task partition per run, written to a parquet metrics table
+  with the one ledger schema, ``schema.METRICS_DDL``.
+
+Every run writes its extraction output exactly once. The run stages
+it to a run-keyed directory, and the commit MOVES the staged part
+files into the table (``os.replace`` on one filesystem; Spark puts a
+per-job UUID in every part name, so names never collide). That is
+Iceberg's append-existing-data-files commit. An upsert stages its
+input once and reads it back from files for both the anti-join and
+the new table. The ledger rows go in as an Arrow table, so their
+write plans a ``LocalTableScan`` and starts no Python worker.
 
 The adapter is plain parquet + directory layout so it runs anywhere;
 on a real deployment the same call sites map 1:1 onto Iceberg
@@ -23,12 +33,20 @@ precisely so that swap is a config change, not a rewrite
 from __future__ import annotations
 
 import os
+import shutil
 import time
 import uuid
+from datetime import datetime, timezone
 from typing import Callable
 
-from pyspark.sql import DataFrame, SparkSession
+import pyarrow as pa
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import StructType
+
+from ocr_intern_spark.schema import METRICS_DDL
+
 
 class ExtractionStore:
     """Checkpoint/resume + lineage metrics for the extraction job."""
@@ -55,16 +73,20 @@ class ExtractionStore:
 
     # -- write -------------------------------------------------------------
 
-    def commit(self, extracted: DataFrame, n_docs: int | None = None) -> int:
-        """Append newly extracted docs. Caller must have produced
-        ``extracted`` from :meth:`pending` input — key disjointness
-        makes append == MERGE WHEN NOT MATCHED INSERT. Pass ``n_docs``
-        when the caller already knows the row count (run_resumable
-        does, from the stage-write observation) to skip the count
-        action — one fewer read of the staged files."""
-        before = extracted.count() if n_docs is None else n_docs
-        extracted.write.mode("append").parquet(self.extracted_path)
-        return before
+    def commit(self, stage_path: str, n_docs: int) -> int:
+        """Append a staged run of ``n_docs`` docs by moving its part
+        files into the table — no Spark job, the rows are not
+        rewritten. The stage must hold :meth:`pending` output: key
+        disjointness makes append == MERGE WHEN NOT MATCHED INSERT.
+
+        Each move is atomic and every doc lives in exactly one part
+        file, so a crash part-way through leaves some whole files
+        committed and the rest in the stage. The re-run's anti-join
+        then re-extracts only the docs of the unmoved files. An empty
+        run moves nothing (its stage holds a schema-only file)."""
+        if n_docs:
+            self._move_parts(stage_path, self.extracted_path)
+        return n_docs
 
     def run_resumable(
         self,
@@ -72,48 +94,46 @@ class ExtractionStore:
         extract_fn: Callable[[DataFrame], DataFrame],
         run_id: str | None = None,
     ) -> dict:
-        """One idempotent batch: probe → extract pending → append +
-        metrics. Re-running after any failure (or success) never
-        duplicates a document."""
+        """One idempotent batch: probe → extract pending → stage →
+        commit → ledger. Re-running after any failure (or success)
+        never duplicates a document.
+
+        The extraction plan is evaluated exactly once, into the
+        run-keyed directory ``_staging_<run_id>``. The lineage stats
+        and the commit both derive from the staged FILES, never from
+        the live plan, so no recompute can diverge the committed rows
+        from the recorded stats. The commit moves those files into
+        the table, and the ledger rows follow. The staging directory
+        is removed on success and on any raised error; a killed
+        process leaves it behind, and no later run reads it."""
         spark = docs.sparkSession
         run_id = run_id or uuid.uuid4().hex[:12]
         t0 = time.perf_counter()
         todo = self.pending(docs)
-        # STAGE-then-COMMIT barrier: the extraction plan is evaluated
-        # exactly once, into a run-keyed staging directory. Both the
-        # lineage stats and the commit then derive from the staged
-        # FILES, never from the live plan — so there is no path for a
-        # cache eviction (or any recompute) to re-read extracted_path
-        # mid-write and diverge the committed rows from the collected
-        # stats. persist() alone is only a hint; files are a barrier.
-        # On Iceberg this staging table + append is MERGE INTO.
         stage_path = os.path.join(self.root, f"_staging_{run_id}")
         # run-level totals ride the stage write itself (observe() =
         # zero extra action/scan); per-PARTITION lineage still needs
         # the relational agg over the staged files — observation
         # metrics are global only
-        from pyspark.sql import Observation
-
         obs = Observation(f"extract_run_{run_id}")
-        extract_fn(todo).observe(
-            obs,
-            F.count(F.lit(1)).alias("docs"),
-            F.coalesce(F.sum(F.size("spans")), F.lit(0)).alias("spans_out"),
-            F.coalesce(
-                F.sum(
-                    F.size(
-                        F.filter(
-                            "spans", lambda s: s["kind"] == F.lit("error")
-                        )
-                    )
-                ),
-                F.lit(0),
-            ).alias("errors"),
-        ).write.mode("overwrite").parquet(stage_path)
-        totals = obs.get
         try:
-            staged = spark.read.parquet(stage_path)
-            stats_rows = self._partition_stats(staged)
+            extract_fn(todo).observe(
+                obs,
+                F.count(F.lit(1)).alias("docs"),
+                F.coalesce(F.sum(F.size("spans")), F.lit(0)).alias("spans_out"),
+                F.coalesce(
+                    F.sum(
+                        F.size(
+                            F.filter(
+                                "spans", lambda s: s["kind"] == F.lit("error")
+                            )
+                        )
+                    ),
+                    F.lit(0),
+                ).alias("errors"),
+            ).write.mode("overwrite").parquet(stage_path)
+            totals = obs.get
+            stats_rows = self._partition_stats(spark.read.parquet(stage_path))
             # free cross-check: the observed totals and the staged-file
             # aggregation must agree — divergence means the extraction
             # plan is nondeterministic between evaluations, which would
@@ -128,12 +148,10 @@ class ExtractionStore:
                     f"staged-file stats {summed} disagree with stage-write "
                     f"observation {totals}: nondeterministic extraction plan"
                 )
-            n_new = self.commit(staged, n_docs=int(totals["docs"]))
+            n_new = self.commit(stage_path, n_docs=int(totals["docs"]))
             wall_ms = (time.perf_counter() - t0) * 1000.0
             self._append_metrics(spark, run_id, stats_rows, wall_ms)
         finally:
-            import shutil
-
             shutil.rmtree(stage_path, ignore_errors=True)
         return {
             "run_id": run_id,
@@ -148,14 +166,22 @@ class ExtractionStore:
         path after an operator upgrade reprocesses a subset and must
         REPLACE those docs, which append-only resume cannot.
 
-        Parquet emulation of the Iceberg MERGE INTO this maps onto:
-        survivors = target ANTI-JOIN updates, union the updates, write
-        to a run-keyed staging directory, then swap directories —
-        the read and the write never touch the same live path, and
-        the swap is the commit point (Iceberg replaces this with a
-        snapshot commit that rewrites only the touched files instead
-        of the full table; the call-site contract is identical).
-        Idempotent: re-running the same upsert yields the same table.
+        Parquet emulation of the Iceberg MERGE INTO this maps onto,
+        all under one run-keyed ``_upsert_<id>`` directory:
+
+        1. write ``updated`` once to ``updates/`` — the only time its
+           plan runs;
+        2. write the survivors (target ANTI-JOIN the staged doc_ids)
+           to ``table/``;
+        3. move the staged update files into ``table/``;
+        4. swap ``table/`` in for the live table — the commit point.
+
+        The read and the writes never touch the same live path.
+        Iceberg would rewrite only the touched files instead of the
+        full table; the call-site contract is identical. A raised
+        error before the swap leaves the table untouched and removes
+        the ``_upsert_`` directory. Idempotent: re-running the same
+        upsert yields the same table.
 
         Snapshot-handle contract: ``updated`` may derive from the
         CURRENT table (this call stages it to files before touching
@@ -165,25 +191,41 @@ class ExtractionStore:
         caveat; it is the one semantic difference of the parquet
         emulation.)"""
         spark = updated.sparkSession
-        stage_path = os.path.join(self.root, f"_upsert_{uuid.uuid4().hex[:12]}")
-        if self._has_data(self.extracted_path):
-            existing = spark.read.parquet(self.extracted_path)
-            survivors = existing.join(
-                updated.select("doc_id"), "doc_id", "left_anti"
-            )
-            merged = survivors.unionByName(updated)
-        else:
-            merged = updated
-        merged.write.mode("overwrite").parquet(stage_path)
-        n = spark.read.parquet(stage_path).count()
-        old_path = self.extracted_path + "_old"
-        import shutil
-
-        if os.path.isdir(self.extracted_path):
-            os.rename(self.extracted_path, old_path)
-        os.rename(stage_path, self.extracted_path)
-        shutil.rmtree(old_path, ignore_errors=True)
+        work = os.path.join(self.root, f"_upsert_{uuid.uuid4().hex[:12]}")
+        updates_path = os.path.join(work, "updates")
+        table_path = os.path.join(work, "table")
+        try:
+            n = self._write_counted(updated, updates_path)
+            if self._has_data(self.extracted_path):
+                staged_ids = spark.read.parquet(updates_path).select("doc_id")
+                survivors = spark.read.parquet(self.extracted_path).join(
+                    staged_ids, "doc_id", "left_anti"
+                )
+                n += self._write_counted(survivors, table_path)
+            self._move_parts(updates_path, table_path)
+            old_path = self.extracted_path + "_old"
+            if os.path.isdir(self.extracted_path):
+                os.rename(self.extracted_path, old_path)
+            os.rename(table_path, self.extracted_path)
+            shutil.rmtree(old_path, ignore_errors=True)
+        finally:
+            shutil.rmtree(work, ignore_errors=True)
         return {"docs_total": n}
+
+    @staticmethod
+    def _write_counted(df: DataFrame, path: str) -> int:
+        """Write ``df`` to ``path``; its row count rides the write."""
+        obs = Observation()
+        df.observe(obs, F.count(F.lit(1)).alias("n")).write.parquet(path)
+        return int(obs.get["n"])
+
+    @staticmethod
+    def _move_parts(src: str, dst: str) -> None:
+        """Move every parquet part file of ``src`` into ``dst``."""
+        os.makedirs(dst, exist_ok=True)
+        for f in sorted(os.listdir(src)):
+            if f.endswith(".parquet"):
+                os.replace(os.path.join(src, f), os.path.join(dst, f))
 
     # -- metrics -----------------------------------------------------------
 
@@ -213,19 +255,21 @@ class ExtractionStore:
         self, spark: SparkSession, run_id: str, stats_rows: list,
         wall_ms: float,
     ) -> None:
+        """Append one ledger row per partition. The rows go in as an
+        Arrow table typed from ``METRICS_DDL``, which Spark plans as a
+        ``LocalTableScan``: no Python worker, no serialized RDD."""
+        ts = datetime.now(timezone.utc)
         rows = [
-            (run_id, int(r["partition_id"]), int(r["docs"]), 0,
-             int(r["spans_out"]), int(r["errors"]), float(wall_ms))
+            {"run_id": run_id, "partition_id": int(r["partition_id"]),
+             "docs": int(r["docs"]), "spans_in": 0,
+             "spans_out": int(r["spans_out"]), "errors": int(r["errors"]),
+             "wall_ms": float(wall_ms), "ts": ts}
             for r in stats_rows
         ]
-        schema = (
-            "run_id string, partition_id int, docs long, spans_in long, "
-            "spans_out long, errors long, wall_ms double"
-        )
-        stats = spark.createDataFrame(rows, schema).withColumn(
-            "ts", F.current_timestamp()
-        )
-        stats.write.mode("append").parquet(self.metrics_path)
+        schema = to_arrow_schema(StructType.fromDDL(METRICS_DDL))
+        spark.createDataFrame(pa.Table.from_pylist(rows, schema=schema)).write.mode(
+            "append"
+        ).parquet(self.metrics_path)
 
     def metrics(self, spark: SparkSession) -> DataFrame:
         return spark.read.parquet(self.metrics_path)

@@ -9,6 +9,8 @@ import tempfile
 from collections import Counter
 from decimal import ROUND_HALF_UP, Decimal
 
+import pytest
+
 
 def _r(x, places):
     """Spark-compatible HALF_UP rounding (python round is banker's)."""
@@ -126,3 +128,37 @@ def test_ensemble_midrank_closed_form_and_degenerate_bottom(spark):
     # mid-rank sanity: with 4 distinct quality values the percentiles
     # would be odd eighths; our fixture has ties — just check range
     assert all(0 < v < 1 for v in by_id.values())
+
+
+def test_null_text_doc_matches_oracle(spark):
+    """A doc with NULL text: every signal folds to 0.0 (the length, punct
+    and stopword tests are NULL, so each CASE takes its 0.0 branch), so
+    no melted ``val`` is NULL and the doc keeps its row, exactly as in
+    the oracle's per-signal inner joins."""
+    import duckdb
+
+    from ocr_intern_spark.functions.text import QUERIES
+
+    query, oracle = QUERIES["text_quality_ensemble"]
+    texts = [
+        "the quick brown fox jumps over the lazy dog while a bird watches",
+        None,
+        "spam " * 40,
+        "some repeated words some repeated words and a few more items",
+    ]
+    with tempfile.TemporaryDirectory() as d:
+        spark.createDataFrame(
+            [(i, t, "en", "s", len(t or "")) for i, t in enumerate(texts)],
+            "doc_id long, text string, lang string, source string, n_chars long",
+        ).write.parquet(f"{d}/documents.parquet")
+        got = [tuple(r) for r in query(spark, d).collect()]
+        con = duckdb.connect()
+        con.sql(
+            "CREATE VIEW documents AS SELECT * FROM "
+            f"read_parquet('{d}/documents.parquet/*.parquet')"
+        )
+        want = con.sql(oracle).fetchall()
+    assert [r[0] for r in got] == [r[0] for r in want] == [0, 1, 2, 3]
+    for g, w in zip(got, want):
+        assert g[1:] == pytest.approx(w[1:], abs=1e-9)
+    assert got[1][1:4] == (0.0, 0.0, 0.0)

@@ -200,3 +200,119 @@ def test_crash_between_commit_and_metrics_is_exactly_once(spark, store):
     # and the retry's lineage is consistent (0 docs this run)
     m = store.metrics(spark).where("run_id = 'retry2'").collect()
     assert sum(r["docs"] for r in m) == 0
+
+
+def test_ledger_schema_is_metrics_ddl(spark, store):
+    """The ledger is typed from the one metrics schema, ``ts`` included."""
+    from pyspark.sql.types import StructType, TimestampType
+
+    from ocr_intern_spark.schema import METRICS_DDL
+
+    store.run_resumable(corpus_to_spark(spark, 6, seed=42), _extract_fn)
+    got = store.metrics(spark).schema
+    assert got == StructType.fromDDL(METRICS_DDL)
+    assert got["ts"].dataType == TimestampType()
+
+
+def test_crash_mid_move_reextracts_only_unmoved_docs(spark, store, monkeypatch):
+    """Kill the commit after its first part file is moved: that file's
+    docs are committed, the re-run's anti-join re-extracts only the
+    docs of the unmoved files, and the table ends with every doc once."""
+    import os
+
+    from ocr_intern_spark.sources import storage
+
+    docs = corpus_to_spark(spark, 20, seed=42)
+    all_ids = sorted(r.doc_id for r in docs.select("doc_id").collect())
+
+    def two_files(d):
+        return _extract_fn(d).repartition(2, "doc_id")
+
+    real_replace = os.replace
+    moved = []
+
+    def replace_once(src, dst):
+        if "_staging_" not in src:
+            return real_replace(src, dst)
+        if moved:
+            raise OSError("simulated crash after the first moved file")
+        real_replace(src, dst)
+        moved.append(dst)
+
+    monkeypatch.setattr(storage.os, "replace", replace_once)
+    with pytest.raises(OSError, match="simulated crash"):
+        store.run_resumable(docs, two_files, run_id="crash3")
+    monkeypatch.undo()
+
+    assert len(moved) == 1
+    committed = {
+        r.doc_id for r in spark.read.parquet(store.extracted_path).collect()
+    }
+    assert 0 < len(committed) < len(all_ids)
+    # the crashed run wrote no ledger row
+    assert not os.path.isdir(store.metrics_path)
+
+    res = store.run_resumable(docs, two_files, run_id="retry3")
+    assert res["docs_written"] == len(all_ids) - len(committed)
+    assert res["observed"]["docs"] == len(all_ids) - len(committed)
+    back = [r.doc_id for r in spark.read.parquet(store.extracted_path).collect()]
+    assert sorted(back) == all_ids
+    leftovers = [
+        p for p in os.listdir(store.root)
+        if p.startswith(("_staging_", "_upsert_"))
+    ]
+    assert leftovers == []
+
+
+def test_commit_launches_no_spark_job(spark, store, monkeypatch):
+    """The commit moves the staged files; it writes no rows itself."""
+    sc = spark.sparkContext
+    real_commit = ExtractionStore.commit
+
+    def grouped_commit(self, stage_path, n_docs=None):
+        sc.setJobGroup("store-commit", "ExtractionStore.commit")
+        try:
+            return real_commit(self, stage_path, n_docs)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+
+    monkeypatch.setattr(ExtractionStore, "commit", grouped_commit)
+    res = store.run_resumable(corpus_to_spark(spark, 10, seed=42), _extract_fn)
+    assert res["docs_written"] == 10
+    assert spark.read.parquet(store.extracted_path).count() == 10
+    assert list(sc.statusTracker().getJobIdsForGroup("store-commit")) == []
+
+
+def test_upsert_extracts_its_input_once(spark, store):
+    """One ``upsert(extract(upd))`` runs the recognizer once per media
+    ref of ``upd``: the upsert input is staged once, then read back."""
+    import os
+
+    from pyspark.sql import functions as F
+
+    from ocr_intern_spark.sources.corpus import make_corpus
+
+    docs = corpus_to_spark(spark, 12, seed=42)
+    store.run_resumable(docs, _extract_fn, run_id="u1")
+
+    upd = sorted(make_corpus(12, seed=42), key=lambda d: d["doc_id"])[:5]
+    upd_ids = [d["doc_id"] for d in upd]
+    n_refs = sum(
+        1 for d in upd for s in d["spans"]
+        if s["kind"] == "media" and s["media_ref"]
+    )
+    assert n_refs > 0
+
+    calls = spark.sparkContext.accumulator(0)
+
+    def counting(ref):
+        calls.add(1)
+        return stub_ocr_tokens(ref)
+
+    res = store.upsert(extract(docs.where(F.col("doc_id").isin(upd_ids)), counting))
+    assert calls.value == n_refs
+    assert res["docs_total"] == 12
+    back = spark.read.parquet(store.extracted_path)
+    assert back.count() == back.select("doc_id").distinct().count() == 12
+    assert [p for p in os.listdir(store.root) if p.startswith("_upsert_")] == []

@@ -30,6 +30,7 @@ from ocr_intern_spark.operators import (
 )
 from ocr_intern_spark.operators.extract import extract
 from ocr_intern_spark.sources.corpus import stub_ocr_tokens
+from ocr_intern_spark.sources.tables import spread, table
 from ocr_intern_spark.streaming import stream_queries
 
 _MODULES = (
@@ -50,10 +51,8 @@ def derive_spans(docs: DataFrame) -> DataFrame:
     single-file documents table at every sf (r6 profile: 9.4 s serial
     at 10x-sf0.1, sub-second once spread). Spread the RAW rows across
     the cluster first when the scan is under-partitioned (guide §2.5
-    input skew; same conditional as operators' _docs helper)."""
-    sc = docs.sparkSession.sparkContext
-    if docs.rdd.getNumPartitions() < sc.defaultParallelism:
-        docs = docs.repartition(sc.defaultParallelism)
+    input skew)."""
+    docs = spread(docs)
     toks = F.split(F.trim(F.col("text")), r"\s+")
     nchunks = F.ceil(F.size(toks) / F.lit(8)).cast("int")
     chunks = F.transform(
@@ -96,14 +95,14 @@ def derive_spans(docs: DataFrame) -> DataFrame:
 
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship: full extraction pipeline at sf0.001."""
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+    docs = table(spark, "/root/testdata/sf0.001", "documents")
     return extract(derive_spans(docs), stub_ocr_tokens)
 
 
 def _q_extract_full(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Full pipeline (media OCR included) — rows-only check; exact
     semantics are pinned by tests/test_extract_e2e.py."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = table(spark, sf_dir, "documents")
     out = extract(derive_spans(docs), stub_ocr_tokens)
     return out.select(
         "doc_id", F.posexplode("spans").alias("ord", "s")
@@ -115,7 +114,7 @@ def _q_template_fields(spark: SparkSession, sf_dir: str) -> DataFrame:
     semantics pinned by tests/test_template_fields.py vs the oracle."""
     from ocr_intern_spark.operators.template_fields import template_fields
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = table(spark, sf_dir, "documents")
     return template_fields(derive_spans(docs), stub_ocr_tokens)
 
 
@@ -128,7 +127,7 @@ def _q_template_fields_auto(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ocr_intern_spark.operators.template_fields import template_fields_auto
     from ocr_intern_spark.sources.templates import TEMPLATES
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = table(spark, sf_dir, "documents")
     spans = derive_spans(docs)
     probes = [t.name for t in TEMPLATES.values()] + ["aucun document"]
     pick = F.element_at(
@@ -154,7 +153,7 @@ def _q_export_fanout(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc per format."""
     from ocr_intern_spark.sources.export import export_documents
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = table(spark, sf_dir, "documents")
     out = export_documents(derive_spans(docs), formats=("pdf", "docx", "xlsx"))
     return out.select("doc_id", "fmt", "n_bytes").orderBy("doc_id", "fmt")
 
@@ -206,7 +205,7 @@ def _q_doc_confidence(spark: SparkSession, sf_dir: str) -> DataFrame:
     pinned by tests/test_doc_confidence.py vs the oracle."""
     from ocr_intern_spark.operators.extract import doc_confidence
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = table(spark, sf_dir, "documents")
     out = doc_confidence(derive_spans(docs), stub_ocr_tokens)
     return out.select("doc_id", "n_tokens", F.round("mean_conf", 6).alias("mean_conf"))
 
@@ -247,7 +246,7 @@ def _q_span_regression(spark: SparkSession, sf_dir: str) -> DataFrame:
     engines emit 0 rows (golden LEFT JOIN live), so the gate degrades
     closed, never spuriously red."""
     live = _per_doc_span_fp(_q_extract_full(spark, sf_dir), "n_spans", "fp")
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = table(spark, sf_dir, "documents")
     key = docs.agg(
         F.count("*").alias("_nd"),
         F.sum(F.length("text")).cast("long").alias("_tc"),

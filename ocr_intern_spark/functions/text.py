@@ -13,19 +13,10 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ocr_intern_spark.functions.normalizers import guess_lang
+from ocr_intern_spark.sources.tables import documents, table
 
 # Tiny deterministic stopword set (shared with the SQL oracle).
 STOPWORDS = ("the", "a", "of", "and", "to", "in", "is", "on", "for")
-
-
-def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # balance a small-file scan; at real scale the scan is already
-    # wide and this must NOT force a full shuffle (see dedup._docs)
-    d = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    p = spark.sparkContext.defaultParallelism
-    if d.rdd.getNumPartitions() < p:
-        d = d.repartition(p)
-    return d
 
 
 def token_count(text: Column) -> Column:
@@ -38,7 +29,10 @@ def token_count(text: Column) -> Column:
 
 def punct_ratio(text: Column) -> Column:
     no_punct = F.regexp_replace(text, r"[^\p{L}\p{N}\s]", "")
-    return (F.length(text) - F.length(no_punct)).cast("double") / F.length(text)
+    # '' text → NULL (as in DuckDB), not DIVIDE_BY_ZERO under ANSI
+    return F.try_divide(
+        (F.length(text) - F.length(no_punct)).cast("double"), F.length(text)
+    )
 
 
 def stopword_ratio(text: Column) -> Column:
@@ -70,7 +64,7 @@ def fingerprint(text: Column) -> Column:
 
 
 def q_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = _docs(spark, sf_dir)
+    d = documents(spark, sf_dir)
     return d.select(
         "doc_id",
         token_count(F.col("text")).alias("n_tokens"),
@@ -95,7 +89,7 @@ FROM documents
 def q_lang_guess(spark: SparkSession, sf_dir: str) -> DataFrame:
     """V13 language guess, with deterministic Arabic injection so the
     Arabic branch is exercised on the latin-only testdata."""
-    d = _docs(spark, sf_dir)
+    d = documents(spark, sf_dir)
     probe = F.when(
         F.col("doc_id") % 4 == 0, F.concat(F.col("text"), F.lit(" شهادة"))
     ).when(F.col("doc_id") % 4 == 1, F.lit("123 456 !!")).otherwise(F.col("text"))
@@ -119,7 +113,7 @@ FROM (
 """
 
 def q_quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = _docs(spark, sf_dir)
+    d = documents(spark, sf_dir)
     return d.select(
         "doc_id", F.round(quality_score(F.col("text")), 6).alias("quality")
     )
@@ -150,7 +144,7 @@ def q_corpus_filter_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     shape of a pretraining-corpus filter stage. One scan, one hash
     aggregate with map-side partials (conditional sums, no joins,
     no second pass per gate)."""
-    d = _docs(spark, sf_dir)
+    d = documents(spark, sf_dir)
     q = quality_score(F.col("text"))
     lang_ok = guess_lang(F.col("text")) == "french"  # latin-script gate
     pass_q = (q >= 0.75).cast("int")
@@ -204,7 +198,7 @@ def q_repetition_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
     standard filter for degenerate/looping text. Pure higher-order
     array functions, one narrow stage. Probe text doubles every 5th
     doc's tail so the filter fires on the latin word-soup testdata."""
-    d = _docs(spark, sf_dir)
+    d = documents(spark, sf_dir)
     probe = F.when(
         F.col("doc_id") % 5 == 0,
         F.concat(F.col("text"), F.lit(" "), F.col("text")),
@@ -300,7 +294,7 @@ def q_gopher_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
     ×3 sfs); the window frame is per-doc and row-bounded."""
     from pyspark.sql.window import Window
 
-    d = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    d = table(spark, sf_dir, "documents")
     # window needs doc-clustered rows; spread fine-grained so the
     # per-task sort/aggregate state stays small (never narrower than
     # the scan)
@@ -497,7 +491,7 @@ def q_vocab_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     frame, so the window is bounded."""
     from pyspark.sql.window import Window
 
-    d = _docs(spark, sf_dir)
+    d = documents(spark, sf_dir)
     toks = d.select(
         "doc_id",
         F.explode(F.split(F.trim(F.lower(F.col("text"))), r"\s+")).alias("tok"),
@@ -572,7 +566,7 @@ def q_zipf_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     round(…, 6) on the outputs is what both engines pin)."""
     from ocr_intern_spark.operators.skew import global_rank
 
-    d = _docs(spark, sf_dir)
+    d = documents(spark, sf_dir)
     vocab = (
         d.select(
             F.explode(
@@ -663,7 +657,7 @@ def q_heaps_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     power sums fall under the 1e-6-round contract."""
     from pyspark.sql.window import Window
 
-    d = _docs(spark, sf_dir)
+    d = documents(spark, sf_dir)
     mx = d.agg(F.max("doc_id").alias("mx"))
     toks = F.split(F.trim(F.lower(F.col("text"))), r"\s+")
     nt = F.size(toks)
@@ -784,7 +778,7 @@ def q_chunk_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     pretraining context-window prep). Pure Catalyst — sequence +
     transform + posexplode, no Python; one narrow stage, nothing to
     shuffle. Emits (doc_id, chunk_id, n_tokens, chunk)."""
-    d = _docs(spark, sf_dir)
+    d = documents(spark, sf_dir)
     toks = F.split(F.trim(F.col("text")), r"\s+")
     n = F.size(toks)
     n_chunks = F.when(
@@ -842,7 +836,7 @@ def q_deterministic_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     rand(seed), which are partition-layout-dependent). The standard
     way to carve held-out slices from a 10^12-doc corpus so reruns and
     downstream joins see the identical sample."""
-    d = _docs(spark, sf_dir)
+    d = documents(spark, sf_dir)
     bucket = (
         F.conv(
             F.substring(F.md5(F.col("doc_id").cast("string")), 1, 6), 16, 10
@@ -883,7 +877,7 @@ def redact_pii(text: Column) -> Column:
 def q_redact_pii(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PII redaction over text with deterministically injected
     emails/phones (testdata is PII-free word soup)."""
-    d = _docs(spark, sf_dir)
+    d = documents(spark, sf_dir)
     probe = F.concat(
         F.col("text"),
         F.when(
@@ -936,7 +930,7 @@ def q_pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
     plan. Output is the per-pack summary (fill level / doc fan-in)."""
     from pyspark.sql.window import Window
 
-    d = _docs(spark, sf_dir)
+    d = documents(spark, sf_dir)
     w = Window.partitionBy("source").orderBy("doc_id")
     toks = d.select(
         "source", "doc_id", token_count(F.col("text")).alias("n_tokens")
@@ -998,7 +992,7 @@ def q_pack_efficiency_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     terms are exact integers."""
     from pyspark.sql.window import Window
 
-    d = _docs(spark, sf_dir)
+    d = documents(spark, sf_dir)
     w = Window.partitionBy("source").orderBy("doc_id")
     toks = d.select(
         "source", "doc_id", token_count(F.col("text")).alias("n_tokens")
@@ -1094,7 +1088,7 @@ def q_stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus sample). One hash exchange on source; rank + filter."""
     from pyspark.sql.window import Window
 
-    d = _docs(spark, sf_dir)
+    d = documents(spark, sf_dir)
     w = Window.partitionBy("source").orderBy(
         F.md5(F.col("doc_id").cast("string"))
     )
@@ -1132,7 +1126,7 @@ def q_unigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     (top-1M words + an OOV floor); here the full vocab joins on the
     8-byte word hash. No driver-side scalars: the corpus total rides
     along via a 1-row broadcast cross join."""
-    d = _docs(spark, sf_dir)
+    d = documents(spark, sf_dir)
     toks = d.select(
         "doc_id",
         F.explode(F.split(F.trim(F.lower(F.col("text"))), r"\s+")).alias("w"),
@@ -1184,7 +1178,7 @@ def q_quality_curriculum_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
     — a single exchange."""
     from pyspark.sql.window import Window
 
-    d = _docs(spark, sf_dir)
+    d = documents(spark, sf_dir)
     scored = d.select(
         "doc_id", "source",
         F.round(quality_score(F.col("text")), 6).alias("q"),
@@ -1256,7 +1250,7 @@ def q_bigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     explicit localCheckpoint of the stream was tried and REVERTED:
     its eager barrier cost as much as the recomputes it saved (A/B
     at 10x-sf0.1, three alternating draws each)."""
-    d = _docs(spark, sf_dir)
+    d = documents(spark, sf_dir)
     toks = F.split(F.trim(F.lower(F.col("text"))), r"\s+")
     pairs = F.zip_with(
         F.slice(toks, 1, F.greatest(F.size(toks) - 1, F.lit(0))),
@@ -1326,7 +1320,7 @@ def q_length_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-source document-length histogram (100-char buckets) — the
     standard corpus-quality dashboard input. One scan, one partial/
     final hash aggregate; bucket arithmetic is scan-side codegen."""
-    d = _docs(spark, sf_dir)
+    d = documents(spark, sf_dir)
     bucket = (F.floor(F.col("n_chars") / 100) * 100).cast("long")
     return (
         d.groupBy("source", bucket.alias("len_bucket"))
@@ -1364,7 +1358,7 @@ def q_tfidf_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
     already produced."""
     from pyspark.sql.window import Window
 
-    d = _docs(spark, sf_dir)
+    d = documents(spark, sf_dir)
     toks = d.select(
         "doc_id",
         F.explode(F.split(F.lower(F.trim(F.col("text"))), r"\s+")).alias("w"),
@@ -1442,7 +1436,7 @@ def q_bpe_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Whitespace vs BPE-ish token counts per doc + the fertility
     ratio (pretokens per whitespace word) used to spot tokenizer-
     hostile text (code, tables, degenerate punctuation)."""
-    d = _docs(spark, sf_dir)
+    d = documents(spark, sf_dir)
     n_ws = token_count(F.col("text"))
     n_bpe = bpe_token_count(F.col("text"))
     return d.select(
@@ -1540,7 +1534,7 @@ def q_winnow_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact winnowing fingerprint rows for a deterministic 10% doc
     slice (doc_id % 10 = 0) — the slice bounds oracle-compare size;
     the full-corpus path is exercised by q_winnow_shared_pairs."""
-    d = _docs(spark, sf_dir).where(F.col("doc_id") % 10 == 0)
+    d = documents(spark, sf_dir).where(F.col("doc_id") % 10 == 0)
     return _winnow_fps(d).orderBy("doc_id", "fp")
 
 
@@ -1564,7 +1558,7 @@ def q_winnow_shared_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     BUCKETING only — to cut shuffle bytes at scale, repartition both
     sides by xxhash64(fp) while still joining on fp, which Spark's
     hash partitioning on the equality key already does here."""
-    fps = _winnow_fps(_docs(spark, sf_dir)).cache()
+    fps = _winnow_fps(documents(spark, sf_dir)).cache()
     rare = (
         fps.groupBy("fp")
         .agg(F.count("*").alias("df"))
@@ -1655,7 +1649,7 @@ def q_bpe_learn_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     production moves the post-agg vocab table to a single partition
     anyway — it fits — while THIS shape keeps every round distributed
     and skew-free)."""
-    vocab = _bpe_vocab(_docs(spark, sf_dir)).select("syms", "freq")
+    vocab = _bpe_vocab(documents(spark, sf_dir)).select("syms", "freq")
     merges = []
     cur = vocab
     for k in range(BPE_LEARN_ROUNDS):
@@ -1776,7 +1770,7 @@ def q_bpe_apply_fertility(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     fertility = n_subtok / n_words, one double division rounded to
     1e-6 — identical in both engines."""
-    d = _docs(spark, sf_dir)
+    d = documents(spark, sf_dir)
     words = (
         d.select(
             "doc_id",
@@ -1947,7 +1941,7 @@ def q_char_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     the oracle sums per-group in arbitrary order — both are ≤100-term
     double sums whose reassociation error is ~1e-12, absorbed by the
     1e-6 round (the same contract as every logprob op here)."""
-    d = _docs(spark, sf_dir)
+    d = documents(spark, sf_dir)
     chars = _entropy_chars()
     n = F.size(chars).cast("long")
     agg = _entropy_fold(chars)
@@ -2053,7 +2047,7 @@ def q_quality_ensemble(spark: SparkSession, sf_dir: str) -> DataFrame:
     Portability: counts exact; pct = (below + ½·eq)/N is one double
     expression evaluated identically; the ensemble mean of three such
     terms is rounded to 1e-6."""
-    d = _docs(spark, sf_dir)
+    d = documents(spark, sf_dir)
     chars = _entropy_chars()
     toks = F.split(F.trim(F.lower(F.col("text"))), r"\s+")
     n = F.size(toks)
@@ -2218,7 +2212,7 @@ def q_gopher_quality_flags(spark: SparkSession, sf_dir: str) -> DataFrame:
     (3·nw ≤ chars ≤ 10·nw; 5·n_alpha ≥ 4·nw) — no division, no float,
     bit-portable by construction. One narrow codegen pass, zero
     exchanges beyond the output sort."""
-    d = _docs(spark, sf_dir)
+    d = documents(spark, sf_dir)
     toks = F.split(F.trim(F.lower(F.col("text"))), r"\s+")
     nw = F.size(toks)
     chars = F.aggregate(
@@ -2310,7 +2304,7 @@ def q_allpairs_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     consumed twice by the self-join (Spark shares no subplans) — at
     production scale it is written once as the index table and both
     sides read it (the ngram-Jaccard cache→checkpoint-table swap)."""
-    d = _docs(spark, sf_dir)
+    d = documents(spark, sf_dir)
     toks = d.select(
         "doc_id",
         F.explode(F.split(F.trim(F.lower(F.col("text"))), r"\s+")).alias("w"),
@@ -2394,7 +2388,7 @@ def q_readability_fk(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: per-row projection — tokenize, one fold over the
     token array, two regex counts — fused in codegen; no shuffle
     before the presentation sort. Map-only at 100 TB."""
-    d = _docs(spark, sf_dir)
+    d = documents(spark, sf_dir)
     toks = F.split(F.trim(F.col("text")), r"\s+")
     k = (F.col("doc_id") % 4 + 6).cast("int")
     punct = F.array_join(
@@ -2595,7 +2589,7 @@ def q_cdc_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
     fp → counts, both map-side combinable. The md5-of-joined-words
     chunk fingerprint never ships more than one chunk's words through
     a shuffle."""
-    d = _docs(spark, sf_dir).where(F.length(F.trim(F.col("text"))) > 0)
+    d = documents(spark, sf_dir).where(F.length(F.trim(F.col("text"))) > 0)
     chunks = cdc_doc_chunks(d)
     return (
         chunks.groupBy("fp")
@@ -2722,7 +2716,7 @@ def q_term_burstiness(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: one (term, doc) aggregate → one term aggregate
     (both map-side combinable) — two hash aggregations over the
     token stream, no windows, no joins beyond the 1-row N."""
-    d = _docs(spark, sf_dir)
+    d = documents(spark, sf_dir)
     toks = d.select(
         "doc_id",
         F.explode(
@@ -2805,7 +2799,7 @@ def q_cdc_shift_certificate(spark: SparkSession, sf_dir: str) -> DataFrame:
     shifted — a constant ×2), fingerprint sets are (doc, fp) hash
     aggregates, and survival is one equi-join on (doc_id, fp); no
     windows beyond the per-doc chunkers'."""
-    d = _docs(spark, sf_dir).where(F.length(F.trim(F.col("text"))) > 0)
+    d = documents(spark, sf_dir).where(F.length(F.trim(F.col("text"))) > 0)
     shifted = d.select(
         "doc_id",
         F.concat(F.lit(CDC_SHIFT_PREFIX + " "), F.col("text")).alias("text"),

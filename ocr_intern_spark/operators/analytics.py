@@ -18,9 +18,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+from ocr_intern_spark.sources.tables import table
 
 
 # --- A8: windowed perf summary (performance_analytics.py:58-89) -----------
@@ -29,7 +27,7 @@ _CUTOFF = "2024-01-15 00:00:00"
 
 
 def q_events_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _t(spark, sf_dir, "events")
+    ev = table(spark, sf_dir, "events")
     return (
         ev.where(F.col("ts") > F.lit(_CUTOFF).cast("timestamp"))
         .agg(
@@ -54,7 +52,7 @@ FROM events WHERE ts > TIMESTAMP '{_CUTOFF}'
 
 
 def q_events_by_type(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _t(spark, sf_dir, "events")
+    ev = table(spark, sf_dir, "events")
     return (
         ev.groupBy("event_type")
         .agg(
@@ -79,7 +77,7 @@ FROM events GROUP BY event_type ORDER BY event_type
 
 
 def q_error_users(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _t(spark, sf_dir, "events")
+    ev = table(spark, sf_dir, "events")
     agg = ev.groupBy("user_id").agg(
         F.count("*").alias("n"),
         F.sum(F.when(F.col("event_type") == "error", 1).otherwise(0)).alias(
@@ -116,7 +114,7 @@ ORDER BY error_rate DESC, user_id
 
 
 def q_recent_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _t(spark, sf_dir, "events")
+    ev = table(spark, sf_dir, "events")
     # ORDER BY + LIMIT → TakeOrderedAndProject: per-partition top-100
     # then merge on driver; never a global sort. event_id breaks ts ties.
     return (
@@ -136,7 +134,7 @@ FROM events ORDER BY ts DESC, event_id DESC LIMIT 100
 
 
 def q_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem")
+    li = table(spark, sf_dir, "lineitem")
     return (
         li.where(F.col("l_shipdate") <= F.lit("2024-06-01").cast("timestamp"))
         .groupBy("l_returnflag", "l_linestatus")
@@ -175,10 +173,10 @@ def q_revenue_by_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
     customer (smallest fact side) broadcast-able; lineitem, the big
     fact, is never shuffled by the dimension joins at scale — only
     the final groupBy aggregates, with map-side partials."""
-    cust = _t(spark, sf_dir, "customer")
-    orders = _t(spark, sf_dir, "orders")
-    li = _t(spark, sf_dir, "lineitem")
-    nation = _t(spark, sf_dir, "nation")
+    cust = table(spark, sf_dir, "customer")
+    orders = table(spark, sf_dir, "orders")
+    li = table(spark, sf_dir, "lineitem")
+    nation = table(spark, sf_dir, "nation")
     rev = (
         li.join(orders, li.l_orderkey == orders.o_orderkey)
         .join(cust, orders.o_custkey == cust.c_custkey)
@@ -211,9 +209,9 @@ GROUP BY n_name ORDER BY n_name
 
 
 def q_top_customer_per_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
-    cust = _t(spark, sf_dir, "customer")
-    orders = _t(spark, sf_dir, "orders")
-    nation = _t(spark, sf_dir, "nation")
+    cust = table(spark, sf_dir, "customer")
+    orders = table(spark, sf_dir, "orders")
+    nation = table(spark, sf_dir, "nation")
     spend = (
         orders.groupBy("o_custkey")
         .agg(F.round(F.sum("o_totalprice"), 2).alias("spend"))
@@ -253,8 +251,8 @@ def q_order_priority_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     no post-join distinct is needed — at scale this is one shuffle on
     the join key and the big lineitem side never materializes a join
     output wider than the match bit."""
-    orders = _t(spark, sf_dir, "orders")
-    li = _t(spark, sf_dir, "lineitem")
+    orders = table(spark, sf_dir, "orders")
+    li = table(spark, sf_dir, "lineitem")
     hit = orders.join(
         li,
         (orders.o_orderkey == li.l_orderkey)
@@ -288,7 +286,7 @@ def q_order_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     hash aggregate, i.e. one shuffle for all three granularities
     (vs three separate jobs). NULL group keys mark the rollup levels
     exactly as in ANSI SQL."""
-    orders = _t(spark, sf_dir, "orders")
+    orders = table(spark, sf_dir, "orders")
     return (
         orders.rollup("o_orderstatus", "o_orderpriority")
         .agg(
@@ -327,7 +325,7 @@ def q_order_cube(spark: SparkSession, sf_dir: str) -> DataFrame:
     the per-priority marginal that ROLLUP can't produce. grouping_id
     disambiguates a genuine NULL key from an aggregated-out level
     (none in this data, but the column is part of the contract)."""
-    orders = _t(spark, sf_dir, "orders")
+    orders = table(spark, sf_dir, "orders")
     return (
         orders.cube("o_orderstatus", "o_orderpriority")
         .agg(
@@ -364,7 +362,7 @@ def q_events_json_props(spark: SparkSession, sf_dir: str) -> DataFrame:
     At 100 TB the declared-schema parse beats schema inference (one
     pass, no sampling job) and malformed rows become NULLs instead of
     failures (PERMISSIVE default)."""
-    ev = _t(spark, sf_dir, "events")
+    ev = table(spark, sf_dir, "events")
     k = F.from_json(F.col("props"), "k INT")["k"]
     return (
         ev.select("event_type", k.alias("k"))
@@ -392,7 +390,7 @@ def q_customer_order_gaps(spark: SparkSession, sf_dir: str) -> DataFrame:
     window over (customer, order date). One hash shuffle on o_custkey
     feeds BOTH the window sort and the subsequent groupBy (same key:
     Catalyst reuses the partitioning, no second exchange)."""
-    orders = _t(spark, sf_dir, "orders")
+    orders = table(spark, sf_dir, "orders")
     w = Window.partitionBy("o_custkey").orderBy("o_orderdate", "o_orderkey")
     prev = F.lag("o_orderdate").over(w)
     gap = F.datediff(F.col("o_orderdate"), prev)
@@ -429,7 +427,7 @@ def q_users_click_and_error(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Users present in BOTH the click and error event streams —
     INTERSECT plans as a distinct-aggregate + hash semi-join, one
     shuffle per side on user_id."""
-    ev = _t(spark, sf_dir, "events")
+    ev = table(spark, sf_dir, "events")
     clicks = ev.where(F.col("event_type") == "click").select("user_id")
     errors = ev.where(F.col("event_type") == "error").select("user_id")
     return clicks.intersect(errors).orderBy("user_id")
@@ -449,7 +447,7 @@ def q_users_click_no_error(spark: SparkSession, sf_dir: str) -> DataFrame:
     work' query. (value > 150 keeps the result non-trivially split:
     every user has some error at small SF, so unqualified EXCEPT
     would be empty.)"""
-    ev = _t(spark, sf_dir, "events")
+    ev = table(spark, sf_dir, "events")
     clicks = ev.where(F.col("event_type") == "click").select("user_id")
     errors = ev.where(
         (F.col("event_type") == "error") & (F.col("value") > 150)
@@ -475,7 +473,7 @@ def q_small_quantity_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     decorrelates into a per-part aggregate joined back to the fact —
     expressed directly in that shape so the join input is one row per
     part (aggregate-before-join), never a per-row subquery."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = table(spark, sf_dir, "lineitem")
     part_avg = li.groupBy("l_partkey").agg(
         (F.avg("l_quantity") * 0.2).alias("qty_cut")
     )
@@ -510,8 +508,8 @@ def q_brand_promo_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     both sides so it evaluates as the join's residual condition, while
     the single-sided conjuncts (quantity floor, size floor) split out
     and PUSH DOWN to the scans."""
-    li = _t(spark, sf_dir, "lineitem")
-    part = _t(spark, sf_dir, "part")
+    li = table(spark, sf_dir, "lineitem")
+    part = table(spark, sf_dir, "part")
     j = li.join(F.broadcast(part), li.l_partkey == part.p_partkey)
     clause1 = (
         (F.col("p_brand") == "Brand#1")
@@ -558,7 +556,7 @@ def q_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     has no peer rows and is deterministic under any partitioning.
     At 10^12 events the partition key becomes (user_id bucket, day)
     with session stitching at day boundaries — same operator shape."""
-    return sessionize(_t(spark, sf_dir, "events"))
+    return sessionize(table(spark, sf_dir, "events"))
 
 
 def sessionize(ev: DataFrame, gap: str = "30 MINUTES") -> DataFrame:
@@ -627,7 +625,7 @@ def q_events_rollup_cascade(spark: SparkSession, sf_dir: str) -> DataFrame:
     — double summation is order-sensitive and a cascaded float sum
     could differ from the oracle's direct sum in the last ulp;
     integer sums are associative, so re-aggregation is bit-exact."""
-    ev = _t(spark, sf_dir, "events")
+    ev = table(spark, sf_dir, "events")
     cents = F.round(F.col("value") * 100).cast("long")
     minute = (
         ev.groupBy(F.date_trunc("minute", "ts").alias("bucket"))
@@ -674,7 +672,7 @@ def q_events_sliding_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     plans the explode inline (Generate) before the partial aggregate,
     so the fan-out never materializes unaggregated. First week only,
     to bound the oracle compare."""
-    ev = _t(spark, sf_dir, "events")
+    ev = table(spark, sf_dir, "events")
     return (
         ev.where(F.col("ts") < F.lit("2024-01-08 00:00:00").cast("timestamp"))
         .groupBy(
@@ -721,7 +719,7 @@ def q_events_value_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     anything, but for a high-cardinality group key at 100 TB the
     production swap is `approx_percentile` (t-digest, mergeable
     partials) — same call shape, no oracle-exactness."""
-    ev = _t(spark, sf_dir, "events")
+    ev = table(spark, sf_dir, "events")
     return (
         ev.groupBy("event_type")
         .agg(
@@ -751,8 +749,8 @@ def q_idle_rich_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     distinct urgent-order custkeys (priority filter PUSHED to the
     orders scan); the rollup is a partial/final hash aggregate on the
     surviving (small) customer set."""
-    cust = _t(spark, sf_dir, "customer")
-    orders = _t(spark, sf_dir, "orders")
+    cust = table(spark, sf_dir, "customer")
+    orders = table(spark, sf_dir, "orders")
     avg_bal = cust.where(F.col("c_acctbal") > 0).agg(
         F.avg("c_acctbal").alias("avg_bal")
     )
@@ -807,7 +805,7 @@ def q_retention_cohorts(spark: SparkSession, sf_dir: str) -> DataFrame:
     into the triangle, whose size is O(horizon²) — tiny — regardless
     of corpus size. No window function, no self-join, all-integer
     output."""
-    ev = _t(spark, sf_dir, "events")
+    ev = table(spark, sf_dir, "events")
     per_user = (
         ev.select(
             "user_id",
@@ -868,7 +866,7 @@ def q_events_state_history(spark: SparkSession, sf_dir: str) -> DataFrame:
     on the already-filtered rows. No joins, no second shuffle."""
     from pyspark.sql.window import Window
 
-    ev = _t(spark, sf_dir, "events").select(
+    ev = table(spark, sf_dir, "events").select(
         "user_id", "ts", "event_id", "event_type"
     )
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
@@ -937,7 +935,7 @@ def q_events_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     at the cost of one extra exchange — stated, not hidden. The final
     3-row funnel is a driver-side-free single-row aggregate unpivoted
     with a literal stack."""
-    e = _t(spark, sf_dir, "events")
+    e = table(spark, sf_dir, "events")
     per_user = e.groupBy("user_id").agg(
         *[
             F.array_sort(
@@ -1030,7 +1028,7 @@ def q_events_twap(spark: SparkSession, sf_dir: str) -> DataFrame:
     # day-time INTERVAL, no zone anywhere) and cast the interval to
     # decimal(20,6) — exact seconds with the full microsecond
     # fraction — then scale to integer microseconds.
-    e = _t(spark, sf_dir, "events")
+    e = table(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     dt = (
         (F.lead("ts").over(w) - F.col("ts"))
@@ -1090,7 +1088,7 @@ def q_events_rate_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
     Portability: counts and medians are exact (median of integers is
     k or k.5 in both engines); the single float division robust_z is
     rounded to 1e-6."""
-    e = _t(spark, sf_dir, "events")
+    e = table(spark, sf_dir, "events")
     # cache the collapsed rate table: med, dev and mad each branch off
     # it, and without materialization every branch re-scans the RAW
     # event stream (4 full scans at 100 TB instead of one)
@@ -1169,7 +1167,7 @@ def q_events_transition_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     engines)."""
     from pyspark.sql.window import Window
 
-    e = _t(spark, sf_dir, "events")
+    e = table(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     pairs = (
         e.select(
@@ -1233,13 +1231,13 @@ def q_market_share_by_year(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Portability: the share is one double division rounded 1e-6;
     volumes are double sums under the repo's reassociation contract."""
-    li = _t(spark, sf_dir, "lineitem")
-    orders = _t(spark, sf_dir, "orders")
-    cust = _t(spark, sf_dir, "customer")
-    supp = _t(spark, sf_dir, "supplier")
-    part = _t(spark, sf_dir, "part")
-    nation = _t(spark, sf_dir, "nation")
-    region = _t(spark, sf_dir, "region")
+    li = table(spark, sf_dir, "lineitem")
+    orders = table(spark, sf_dir, "orders")
+    cust = table(spark, sf_dir, "customer")
+    supp = table(spark, sf_dir, "supplier")
+    part = table(spark, sf_dir, "part")
+    nation = table(spark, sf_dir, "nation")
+    region = table(spark, sf_dir, "region")
 
     promo = part.where(F.col("p_type") == "PROMO").select("p_partkey")
     eur = region.where(F.col("r_name") == "EUROPE").select("r_regionkey")
@@ -1322,8 +1320,8 @@ def q_top_supplier_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     Portability: the max-equality filter compares the 2-decimal
     ROUNDED revenues, which both engines pin identically — never the
     raw double sums."""
-    li = _t(spark, sf_dir, "lineitem")
-    supp = _t(spark, sf_dir, "supplier")
+    li = table(spark, sf_dir, "lineitem")
+    supp = table(spark, sf_dir, "supplier")
     vol = F.col("l_extendedprice") * (1 - F.col("l_discount"))
     rev = (
         li.where(
@@ -1385,7 +1383,7 @@ def q_error_follows_click(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Portability: pure timestamp comparison and integer counts; one
     1e-6-rounded rate on the users-sized frame."""
-    e = _t(spark, sf_dir, "events")
+    e = table(spark, sf_dir, "events")
     clicks = e.where(F.col("event_type") == "click").select(
         "user_id", "event_id", "ts"
     )
@@ -1465,7 +1463,7 @@ def q_customer_spend_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
     rounded spends under the reassociation contract."""
     from ocr_intern_spark.operators.skew import global_rank
 
-    orders = _t(spark, sf_dir, "orders")
+    orders = table(spark, sf_dir, "orders")
     spend = orders.groupBy("o_custkey").agg(
         F.round(F.sum("o_totalprice"), 2).alias("spend")
     )
@@ -1527,8 +1525,8 @@ def q_customer_order_distribution(spark: SparkSession, sf_dir: str) -> DataFrame
     c_count — tiny. At 100 TB the orders pre-agg is the only wide
     shuffle and it's the minimal one; joining raw orders to customer
     before counting would shuffle the full fact table."""
-    cust = _t(spark, sf_dir, "customer")
-    orders = _t(spark, sf_dir, "orders")
+    cust = table(spark, sf_dir, "customer")
+    orders = table(spark, sf_dir, "orders")
     per_cust = orders.groupBy("o_custkey").agg(
         F.count(F.lit(1)).alias("n_orders")
     )
@@ -1576,7 +1574,7 @@ def q_major_revenue_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     (~1e9 cents · ~1e9 parts · 10) overflows int64, where ANSI mode
     would error out. The sum is emitted as a digit string (BIGINT vs
     HUGEINT rendering)."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = table(spark, sf_dir, "lineitem")
     cents = F.floor(
         F.col("l_extendedprice") * (1 - F.col("l_discount")) * 100
     ).cast("long")
@@ -1632,9 +1630,9 @@ def q_large_order_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     test scale while staying a shuffle join at 100 TB. Quantities are
     integral doubles (exact under summation well below 2^53), so the
     sum is cast to BIGINT for a canonical cross-engine rendering."""
-    li = _t(spark, sf_dir, "lineitem")
-    orders = _t(spark, sf_dir, "orders")
-    cust = _t(spark, sf_dir, "customer")
+    li = table(spark, sf_dir, "lineitem")
+    orders = table(spark, sf_dir, "orders")
+    cust = table(spark, sf_dir, "customer")
     big = (
         li.groupBy("l_orderkey")
         .agg(F.sum("l_quantity").alias("_qty"))
@@ -1696,12 +1694,12 @@ def q_unshipped_order_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     order, so the LIMIT boundary is deterministic on both engines."""
     cut = F.lit(_Q3_CUT).cast("timestamp")
     cust = (
-        _t(spark, sf_dir, "customer")
+        table(spark, sf_dir, "customer")
         .where(F.col("c_mktsegment") == "BUILDING")
         .select("c_custkey")
     )
-    orders = _t(spark, sf_dir, "orders").where(F.col("o_orderdate") < cut)
-    li = _t(spark, sf_dir, "lineitem").where(F.col("l_shipdate") > cut)
+    orders = table(spark, sf_dir, "orders").where(F.col("o_orderdate") < cut)
+    li = table(spark, sf_dir, "lineitem").where(F.col("l_shipdate") > cut)
     rev = F.col("l_extendedprice") * (1 - F.col("l_discount"))
     return (
         li.join(orders, li.l_orderkey == orders.o_orderkey)
@@ -1747,9 +1745,9 @@ def q_nation_trade_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
     on the joined row. One keyed exchange (lineitem⋈orders), final
     agg over a years×2 frame."""
     pair = [_Q7_NATION_A, _Q7_NATION_B]
-    nation = _t(spark, sf_dir, "nation").where(F.col("n_name").isin(pair))
+    nation = table(spark, sf_dir, "nation").where(F.col("n_name").isin(pair))
     supp = (
-        _t(spark, sf_dir, "supplier")
+        table(spark, sf_dir, "supplier")
         .join(
             F.broadcast(nation),
             F.col("s_nationkey") == F.col("n_nationkey"),
@@ -1757,15 +1755,15 @@ def q_nation_trade_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("s_suppkey", F.col("n_name").alias("supp_nation"))
     )
     cust = (
-        _t(spark, sf_dir, "customer")
+        table(spark, sf_dir, "customer")
         .join(
             F.broadcast(nation),
             F.col("c_nationkey") == F.col("n_nationkey"),
         )
         .select("c_custkey", F.col("n_name").alias("cust_nation"))
     )
-    li = _t(spark, sf_dir, "lineitem")
-    orders = _t(spark, sf_dir, "orders")
+    li = table(spark, sf_dir, "lineitem")
+    orders = table(spark, sf_dir, "orders")
     vol = F.col("l_extendedprice") * (1 - F.col("l_discount"))
     return (
         li.join(F.broadcast(supp), li.l_suppkey == supp.s_suppkey)
@@ -1819,12 +1817,12 @@ def q_returned_item_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     (revenue DESC, c_custkey)."""
     start = F.lit(_Q10_START).cast("timestamp")
     end = F.lit(_Q10_END).cast("timestamp")
-    li = _t(spark, sf_dir, "lineitem").where(F.col("l_returnflag") == "R")
-    orders = _t(spark, sf_dir, "orders").where(
+    li = table(spark, sf_dir, "lineitem").where(F.col("l_returnflag") == "R")
+    orders = table(spark, sf_dir, "orders").where(
         (F.col("o_orderdate") >= start) & (F.col("o_orderdate") < end)
     )
-    cust = _t(spark, sf_dir, "customer")
-    nation = _t(spark, sf_dir, "nation")
+    cust = table(spark, sf_dir, "customer")
+    nation = table(spark, sf_dir, "nation")
     rev = F.col("l_extendedprice") * (1 - F.col("l_discount"))
     per_cust = (
         li.join(orders, li.l_orderkey == orders.o_orderkey)
@@ -1892,8 +1890,8 @@ def q_late_sole_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     deliberately keeps the textbook EXISTS/NOT EXISTS formulation:
     hash equality proves the decorrelation, not just the
     arithmetic."""
-    li = _t(spark, sf_dir, "lineitem")
-    orders = _t(spark, sf_dir, "orders").select("o_orderkey", "o_orderdate")
+    li = table(spark, sf_dir, "lineitem")
+    orders = table(spark, sf_dir, "orders").select("o_orderkey", "o_orderdate")
     late = (
         F.col("l_shipdate")
         > F.col("o_orderdate") + F.expr(f"INTERVAL {_Q21_LATE_DAYS} DAYS")
@@ -1968,7 +1966,7 @@ def q_sketch_accuracy(spark: SparkSession, sf_dir: str) -> DataFrame:
     pass, mergeable, no count_distinct expand shuffle, no global
     sort); the exact side here is the audit harness — at production
     scale the same audit runs over a sampled partition."""
-    ev = _t(spark, sf_dir, "events")
+    ev = table(spark, sf_dir, "events")
     per = ev.groupBy("event_type").agg(
         F.count_distinct("user_id").alias("n_users_exact"),
         F.approx_count_distinct("user_id", _SKETCH_RSD).alias("_hll"),
@@ -2022,8 +2020,8 @@ def q_late_order_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     order on each side; the final aggregate is a 5-row priority
     frame. The oracle deliberately keeps the textbook correlated
     EXISTS — hash equality proves the MAX-fold decorrelation."""
-    li = _t(spark, sf_dir, "lineitem")
-    orders = _t(spark, sf_dir, "orders")
+    li = table(spark, sf_dir, "lineitem")
+    orders = table(spark, sf_dir, "orders")
     per_order = li.groupBy("l_orderkey").agg(
         F.max("l_shipdate").alias("max_ship")
     )
@@ -2082,11 +2080,11 @@ def q_min_cost_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     min-equality join-back never compares floats. TakeOrderedAndProject
     top-K, no global sort. The oracle keeps the textbook correlated
     scalar subquery."""
-    li = _t(spark, sf_dir, "lineitem")
-    supp = _t(spark, sf_dir, "supplier")
-    nation = _t(spark, sf_dir, "nation")
-    region = _t(spark, sf_dir, "region")
-    part = _t(spark, sf_dir, "part")
+    li = table(spark, sf_dir, "lineitem")
+    supp = table(spark, sf_dir, "supplier")
+    nation = table(spark, sf_dir, "nation")
+    region = table(spark, sf_dir, "region")
+    part = table(spark, sf_dir, "part")
 
     eur = region.where(F.col("r_name") == _Q2_REGION).select("r_regionkey")
     euro_supp = (
@@ -2187,9 +2185,9 @@ def q_part_supplier_variety(spark: SparkSession, sf_dir: str) -> DataFrame:
     collapsed frame by the 3 grouping attributes. Two keyed shuffles
     total — pairs-distinct and the group-by — both over
     aggregate-collapsed frames."""
-    li = _t(spark, sf_dir, "lineitem")
-    part = _t(spark, sf_dir, "part")
-    supp = _t(spark, sf_dir, "supplier")
+    li = table(spark, sf_dir, "lineitem")
+    part = table(spark, sf_dir, "part")
+    supp = table(spark, sf_dir, "supplier")
 
     blocklist = supp.where(F.col("s_acctbal") < 0).select("s_suppkey")
     pairs = li.select("l_partkey", "l_suppkey").distinct()
@@ -2251,9 +2249,9 @@ def q_dominant_part_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     The type + year filters are pushed to the scans, cutting the
     fact BEFORE any aggregation. The oracle keeps the textbook
     correlated-scalar form."""
-    li = _t(spark, sf_dir, "lineitem")
-    part = _t(spark, sf_dir, "part")
-    supp = _t(spark, sf_dir, "supplier")
+    li = table(spark, sf_dir, "lineitem")
+    part = table(spark, sf_dir, "part")
+    supp = table(spark, sf_dir, "supplier")
 
     promo = part.where(F.col("p_type") == _Q20_TYPE).select("p_partkey")
     q10 = F.floor(F.col("l_quantity") * 10).cast("long")
@@ -2334,8 +2332,8 @@ def q_bracket_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     when-cascade on the joined rows inside codegen. One broadcast
     join, one 3-row aggregate; revenue in integer cents emitted as a
     digit string."""
-    li = _t(spark, sf_dir, "lineitem")
-    part = _t(spark, sf_dir, "part")
+    li = table(spark, sf_dir, "lineitem")
+    part = table(spark, sf_dir, "part")
 
     qty_lo = min(b[3] for b in _Q19_BRANCHES)
     qty_hi = max(b[4] for b in _Q19_BRANCHES)
@@ -2431,7 +2429,7 @@ def q_ship_priority_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
     # `timestamp + INTERVAL n DAYS` (wall-clock day-add, the one form
     # that is DST-sensitive under an LTZ reading). Values identical
     # locally (hash-exact ×3 sfs).
-    raw_li = _t(spark, sf_dir, "lineitem")
+    raw_li = table(spark, sf_dir, "lineitem")
     ship_t = raw_li.schema["l_shipdate"].dataType
     li = (
         raw_li
@@ -2441,7 +2439,7 @@ def q_ship_priority_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select("l_orderkey", "l_shipdate", "l_returnflag", "l_linestatus")
     )
-    orders = _t(spark, sf_dir, "orders").select(
+    orders = table(spark, sf_dir, "orders").select(
         "o_orderkey",
         "o_orderdate",
         F.col("o_orderpriority").isin(*_Q12_HIGH).alias("is_high"),
@@ -2495,7 +2493,7 @@ def q_events_daily_type_pivot(spark: SparkSession, sf_dir: str) -> DataFrame:
     wide dashboard shape costs the long-form groupBy plus a
     negligible second exchange over the tiny frame. n_total is a
     column sum over the pivoted cells, not a second fact pass."""
-    ev = _t(spark, sf_dir, "events")
+    ev = table(spark, sf_dir, "events")
     piv = (
         ev.select(F.to_date("ts").alias("day"), "event_type")
         .groupBy("day")
@@ -2541,7 +2539,7 @@ def q_events_daily_type_unpivot(spark: SparkSession, sf_dir: str) -> DataFrame:
     (day, type) count (same single reduction as the pivot query); the
     pivot and the Expand-based unpivot both run on the already-reduced
     days×|types| frame, bytes-scale at any corpus size."""
-    ev = _t(spark, sf_dir, "events")
+    ev = table(spark, sf_dir, "events")
     wide = (
         ev.select(F.to_date("ts").alias("day"), "event_type")
         .groupBy("day")
@@ -2597,7 +2595,7 @@ def q_forecast_revenue_change(spark: SparkSession, sf_dir: str) -> DataFrame:
     Revenue rides floor(l_extendedprice · l_discount · 100) integer
     cents summed as decimal(38,0) → digit string (overflow-proof at
     10^12 rows, render-identical both engines)."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = table(spark, sf_dir, "lineitem")
     cents = F.floor(
         F.col("l_extendedprice") * F.col("l_discount") * 100
     ).cast("long")
@@ -2660,11 +2658,11 @@ def q_product_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
     both engines); the final sum rides decimal(38,0) → digit string
     so a 10^12-row corpus cannot overflow or hit the HUGEINT-vs-
     decimal rendering trap (the dsir lesson)."""
-    li = _t(spark, sf_dir, "lineitem")
-    orders = _t(spark, sf_dir, "orders")
-    supp = _t(spark, sf_dir, "supplier")
-    nation = _t(spark, sf_dir, "nation")
-    part = _t(spark, sf_dir, "part")
+    li = table(spark, sf_dir, "lineitem")
+    orders = table(spark, sf_dir, "orders")
+    supp = table(spark, sf_dir, "supplier")
+    nation = table(spark, sf_dir, "nation")
+    part = table(spark, sf_dir, "part")
 
     scoped = part.where(
         F.col("p_name").contains(_Q9_PART_LIKE)
@@ -2788,7 +2786,7 @@ def q_events_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     equality proves the decorrelation. Money is floor-cents BIGINT
     (the cross-engine-exact convention); timestamps never appear in
     the output (last_event_id carries recency)."""
-    ev = _t(spark, sf_dir, "events")
+    ev = table(spark, sf_dir, "events")
     cut = F.lit(_MERGE_CUT).cast("timestamp")
     rows = ev.select(
         "user_id",
@@ -2917,7 +2915,7 @@ def q_activity_bitmap(spark: SparkSession, sf_dir: str) -> DataFrame:
     month-bounded frames; features are pure projections."""
     from pyspark.sql.window import Window
 
-    ev = _t(spark, sf_dir, "events")
+    ev = table(spark, sf_dir, "events")
     days = ev.select(
         "user_id", (F.dayofmonth("ts") - 1).alias("d")
     ).distinct()
@@ -2998,7 +2996,7 @@ def q_quality_expectations(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: every metric is a map-side-combinable aggregate over
     ONE scan (conditional counts, min/max, one exact distinct on the
     key column); no joins, no windows."""
-    ev = _t(spark, sf_dir, "events")
+    ev = table(spark, sf_dir, "events")
     agg = ev.agg(
         F.count("*").alias("n_rows"),
         F.sum(F.when(F.col("user_id").isNull(), 1).otherwise(0)).alias(
@@ -3129,7 +3127,7 @@ def q_props_schema_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     (key) hash aggregate with min/max/distinct-day partials; the
     declared-parse lesson of q_events_json_props applies (no
     inference pass)."""
-    ev = _t(spark, sf_dir, "events")
+    ev = table(spark, sf_dir, "events")
     day = F.dayofmonth("ts")
     aug = F.concat(
         F.lit('{"k": '),
@@ -3200,7 +3198,7 @@ def q_salted_type_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     floor-cents BIGINT through both phases and is emitted as a digit
     string (the dsir lesson); count/sum/min/max are all decomposable
     so the two-phase merge is exact, not approximate."""
-    ev = _t(spark, sf_dir, "events").select(
+    ev = table(spark, sf_dir, "events").select(
         "event_id", "ts", "user_id", "event_type", "value", "props"
     )
     salted = ev.withColumn(
@@ -3259,7 +3257,7 @@ def q_salted_dim_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     emitted as a digit string (the dsir lesson)."""
     from ocr_intern_spark.functions.hashing import fnv1a64_spark
 
-    ev = _t(spark, sf_dir, "events").select(
+    ev = table(spark, sf_dir, "events").select(
         "event_id", "ts", "user_id", "event_type", "value", "props"
     )
     dim = (
@@ -3338,7 +3336,7 @@ def q_pareto_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ocr_intern_spark.operators.skew import pareto_front
 
     spend = (
-        _t(spark, sf_dir, "orders")
+        table(spark, sf_dir, "orders")
         .groupBy(F.col("o_custkey").alias("c_custkey"))
         .agg(
             F.sum(F.floor(F.col("o_totalprice") * 100).cast("long"))
@@ -3346,7 +3344,7 @@ def q_pareto_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     pts = (
-        _t(spark, sf_dir, "customer")
+        table(spark, sf_dir, "customer")
         .select(
             "c_custkey",
             F.floor(F.col("c_acctbal") * 100).cast("long").alias("bal_cents"),
@@ -3407,7 +3405,7 @@ def q_events_session_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     engines. Scale: day bins bound the join fan-in to concurrent
     sessions per day; at 10^12 events the bin narrows to the hour and
     sessions pre-aggregate per (user, bin) — same shape."""
-    ev = _t(spark, sf_dir, "events").where(F.col("event_type") == "error")
+    ev = table(spark, sf_dir, "events").where(F.col("event_type") == "error")
     # materialize the session-bounds frame: BOTH sides of the self-join
     # consume it, and without the persist each alias re-runs the whole
     # sessionize (two raw scans + two window passes instead of one)
@@ -3542,7 +3540,7 @@ def q_events_ivm_retract(spark: SparkSession, sf_dir: str) -> DataFrame:
     digits)."""
     from ocr_intern_spark.operators.skew import global_rank
 
-    ev = _t(spark, sf_dir, "events").select(
+    ev = table(spark, sf_dir, "events").select(
         "ts", "event_id", "event_type", "value"
     )
     # base/delta carve via the DISTRIBUTED two-pass rank (production
@@ -3678,7 +3676,7 @@ def q_events_cms_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     the BROADCAST 1,024-cell sketch. At 10^12 events you keep ONLY
     the sketch side plus a candidate set (the exact side here is the
     audit harness, as with the HLL contract)."""
-    ev = _t(spark, sf_dir, "events").select("user_id")
+    ev = table(spark, sf_dir, "events").select("user_id")
     bucket = _cms_bucket
     rows_i = F.explode(F.sequence(F.lit(0), F.lit(CMS_D - 1))).alias("i")
     cells = ev.select("user_id", rows_i).select(
@@ -3756,7 +3754,7 @@ def q_market_basket_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     join-backs are map-side-combinable hash aggregates; n_orders is a
     1-row broadcast. Top-K via TakeOrderedAndProject."""
     basket = (
-        _t(spark, sf_dir, "lineitem")
+        table(spark, sf_dir, "lineitem")
         .select("l_orderkey", "l_partkey")
         .distinct()
     )
@@ -3851,7 +3849,7 @@ def q_events_user_growth(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate for actives, one (day) aggregate for news, a day-keyed
     merge join, and a prefix window over the ≤31-row day frame —
     nothing user-grain ever crosses a window."""
-    ev = _t(spark, sf_dir, "events").select(
+    ev = table(spark, sf_dir, "events").select(
         "user_id", F.to_date("ts").alias("day")
     )
     act = ev.distinct()
@@ -3910,7 +3908,7 @@ def q_customer_k_anonymity(spark: SparkSession, sf_dir: str) -> DataFrame:
     quasi-identifier — the class table is |nations × segments|
     (bounded by domain, not rows); the audit costs one scan at any
     table size."""
-    c = _t(spark, sf_dir, "customer")
+    c = table(spark, sf_dir, "customer")
     return (
         c.groupBy("c_nationkey", "c_mktsegment")
         .agg(F.count(F.lit(1)).alias("class_size"))
@@ -3956,7 +3954,7 @@ def q_events_target_encode_loo(spark: SparkSession, sf_dir: str) -> DataFrame:
     (user, type) aggregate; the encode is a projection over their
     join. Nothing row-grain survives; at 10^12 events this is two
     map-side-combinable passes."""
-    ev = _t(spark, sf_dir, "events").select(
+    ev = table(spark, sf_dir, "events").select(
         "user_id",
         "event_type",
         F.floor(F.col("value") * 100).cast("long").alias("cents"),
@@ -4024,7 +4022,7 @@ def q_cohort_ltv_triangle(spark: SparkSession, sf_dir: str) -> DataFrame:
     the triangle = one (cohort, age) aggregate over the join-back;
     the cumulative window partitions by cohort over the month frame.
     Nothing order-grain crosses a window at any scale."""
-    o = _t(spark, sf_dir, "orders").select(
+    o = table(spark, sf_dir, "orders").select(
         "o_custkey",
         F.date_trunc("month", "o_orderdate").alias("om"),
         F.floor(F.col("o_totalprice") * 100).cast("long").alias("cents"),
@@ -4106,7 +4104,7 @@ def q_events_cusum_changepoints(spark: SparkSession, sf_dir: str) -> DataFrame:
     then re-explode. The oracle is a recursive CTE unrolling the
     same recurrence row by row — the iterative-algorithm proof shape
     q_knn_bfs_hops established, applied to a stateful scan."""
-    ev = _t(spark, sf_dir, "events").select(
+    ev = table(spark, sf_dir, "events").select(
         "event_type", F.to_date("ts").alias("day")
     )
     bounds = ev.agg(
@@ -4241,7 +4239,7 @@ def q_customer_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ocr_intern_spark.operators.skew import global_rank
 
     per = (
-        _t(spark, sf_dir, "orders")
+        table(spark, sf_dir, "orders")
         .groupBy(F.col("o_custkey").alias("c"))
         .agg(
             F.max(F.to_date("o_orderdate")).alias("last_day"),
@@ -4251,7 +4249,7 @@ def q_customer_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
         )
     )
-    anchor = _t(spark, sf_dir, "orders").agg(
+    anchor = table(spark, sf_dir, "orders").agg(
         F.max(F.to_date("o_orderdate")).alias("anchor")
     )
     base = per.crossJoin(F.broadcast(anchor)).select(
@@ -4373,7 +4371,7 @@ def q_events_gini_concentration(spark: SparkSession, sf_dir: str) -> DataFrame:
         return num * 1_000_000 // (n * tot)
 
     cnt = (
-        _t(spark, sf_dir, "events")
+        table(spark, sf_dir, "events")
         .groupBy("event_type", "user_id")
         .agg(F.count(F.lit(1)).alias("x"))
         .persist()  # two aggregates consume it (Spark refuses mixing
@@ -4438,7 +4436,7 @@ def q_revenue_concentration(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     per = (
-        _t(spark, sf_dir, "orders")
+        table(spark, sf_dir, "orders")
         .groupBy(F.col("o_custkey").alias("c"))
         .agg(
             F.sum(F.floor(F.col("o_totalprice") * 100).cast("long")).alias(
@@ -4521,7 +4519,7 @@ def q_events_wau_stickiness(spark: SparkSession, sf_dir: str) -> DataFrame:
     user grain. Report days clamp to the corpus range so early days
     use the partial trailing window, and stickiness is integer ppm."""
     act = (
-        _t(spark, sf_dir, "events")
+        table(spark, sf_dir, "events")
         .select("user_id", F.to_date("ts").alias("day"))
         .distinct()
         .persist()
@@ -4596,7 +4594,7 @@ def q_events_abtest_chi2(spark: SparkSession, sf_dir: str) -> DataFrame:
     bool_or), one 4-cell aggregate, all downstream arithmetic on a
     single row. At 10^12 events: scan + one user-keyed exchange."""
     per_user = (
-        _t(spark, sf_dir, "events")
+        table(spark, sf_dir, "events")
         .groupBy("user_id")
         .agg(
             F.max(
@@ -4718,7 +4716,7 @@ def q_events_interarrival_cv(spark: SparkSession, sf_dir: str) -> DataFrame:
     AND the per-user aggregate (same key — one shuffle), then a
     narrow projection. The decimal(38)/HUGEINT ride is mandatory:
     day-scale gaps square past BIGINT."""
-    e = _t(spark, sf_dir, "events")
+    e = table(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     dt = (
         (F.lead("ts").over(w) - F.col("ts")).cast("decimal(20,6)")
@@ -4798,7 +4796,7 @@ def q_events_power_analysis(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: one per-user aggregate, one 1-row moment
     aggregate, 3-row literal spine, single-row algebra."""
     per_user = (
-        _t(spark, sf_dir, "events")
+        table(spark, sf_dir, "events")
         .groupBy("user_id")
         .agg(F.count(F.lit(1)).alias("x"))
     )
@@ -4884,7 +4882,7 @@ def q_orders_returns_shrinkage(spark: SparkSession, sf_dir: str) -> DataFrame:
     combinable conditional count), then TakeOrderedAndProject
     top-K — at 10^12 rows this is a scan plus one part-keyed
     exchange."""
-    li = _t(spark, sf_dir, "lineitem").groupBy(
+    li = table(spark, sf_dir, "lineitem").groupBy(
         F.col("l_partkey").alias("part")
     ).agg(
         F.count(F.lit(1)).alias("n"),
@@ -4942,7 +4940,7 @@ def q_events_did_estimator(spark: SparkSession, sf_dir: str) -> DataFrame:
     cells in one pass, map-side combinable), one 1-row variant
     aggregate, single-row algebra — scan + one user-keyed exchange
     at any size."""
-    ev = _t(spark, sf_dir, "events").select(
+    ev = table(spark, sf_dir, "events").select(
         "user_id", F.to_date("ts").alias("day"), "event_type"
     )
     bounds = ev.agg(
@@ -5068,7 +5066,7 @@ def q_orders_price_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: one (part, year) aggregate (map-side combinable) →
     a part-keyed self-merge of the two year slices → ONE 1-row
     weighted-sum aggregate."""
-    li = _t(spark, sf_dir, "lineitem").select(
+    li = table(spark, sf_dir, "lineitem").select(
         "l_partkey",
         F.year("l_shipdate").alias("y"),
         F.floor(F.col("l_extendedprice") * 100).cast("long").alias("cents"),
@@ -5183,7 +5181,7 @@ def q_events_markov_stationary(spark: SparkSession, sf_dir: str) -> DataFrame:
     scalar is folded into the plan as a 1-row broadcast column
     referenced from the fold's lambdas — building the frame runs no
     driver-side job."""
-    ev = _t(spark, sf_dir, "events")
+    ev = table(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     pairs = (
         ev.select(
@@ -5353,7 +5351,7 @@ def q_events_bootstrap_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
     resampling happens at the aggregate grain, weighted, in one
     pass."""
     per_user = (
-        _t(spark, sf_dir, "events")
+        table(spark, sf_dir, "events")
         .groupBy("user_id")
         .agg(F.count(F.lit(1)).alias("x"))
     )
@@ -5488,7 +5486,7 @@ def q_events_ses_forecast(spark: SparkSession, sf_dir: str) -> DataFrame:
     calendar-bounded fold-inside-Catalyst class (CUSUM's shape):
     collect the ≤date-span series into one array, F.aggregate,
     re-explode; recursive-CTE oracle."""
-    ev = _t(spark, sf_dir, "events").select(F.to_date("ts").alias("day"))
+    ev = table(spark, sf_dir, "events").select(F.to_date("ts").alias("day"))
     bounds = ev.agg(F.min("day").alias("d0"), F.max("day").alias("d1"))
     spine = bounds.select(F.explode(F.sequence("d0", "d1")).alias("day"))
     counts = ev.groupBy("day").agg(F.count(F.lit(1)).alias("x"))
@@ -5593,7 +5591,7 @@ def q_events_cuped_adjust(spark: SparkSession, sf_dir: str) -> DataFrame:
     conditional counts), one global 1-row moment aggregate + one
     2-row variant aggregate, then single-row algebra. At 10^12
     events: scan + one user-keyed exchange."""
-    ev = _t(spark, sf_dir, "events").select(
+    ev = table(spark, sf_dir, "events").select(
         "user_id", F.to_date("ts").alias("day"), "event_type"
     )
     bounds = ev.agg(
@@ -5749,7 +5747,7 @@ def q_events_path_trigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     window and both leads (same ordering — one sort); the trigram
     count is a map-side-combinable aggregate; top-K is
     TakeOrderedAndProject."""
-    ev = _t(spark, sf_dir, "events")
+    ev = table(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     prev = F.lag("ts").over(w)
     new_sess = F.when(
@@ -5843,7 +5841,7 @@ def q_orders_backlog_aging(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: scan + ONE map-side-combinable aggregate over ≤4
     groups; the anchor is the allowlisted 1-row broadcast. The
     status filter reaches the parquet reader as a pushed filter."""
-    o = _t(spark, sf_dir, "orders")
+    o = table(spark, sf_dir, "orders")
     anchor = o.agg(F.max(F.to_date("o_orderdate")).alias("anchor"))
     aged = (
         o.where(F.col("o_orderstatus") == "O")
@@ -5925,7 +5923,7 @@ def q_events_hll_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     partial registers, the merge is elementwise max), one 64-row
     register aggregate, one exact-distinct audit aggregate (the
     harness side, as with CMS), two 1-row broadcasts."""
-    ev = _t(spark, sf_dir, "events").select("user_id")
+    ev = table(spark, sf_dir, "events").select("user_id")
     regs = hll_decompose(ev).groupBy("j").agg(F.max("r").alias("m"))
     return hll_finalize(regs, ev)
 
@@ -6054,7 +6052,7 @@ def q_orders_seasonal_decompose(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate are all calendar-bounded. Edge days without a full
     7-day window are excluded (count-guarded), the standard
     decomposition boundary rule."""
-    o = _t(spark, sf_dir, "orders").select(
+    o = table(spark, sf_dir, "orders").select(
         F.to_date("o_orderdate").alias("day"),
         F.floor(F.col("o_totalprice") * 100).cast("long").alias("cents"),
     )
@@ -6171,7 +6169,7 @@ def q_orders_benford_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     cents = F.floor(F.col("o_totalprice") * 100).cast("long")
     digit = F.substring(cents.cast("string"), 1, 1).cast("int")
     counts = (
-        _t(spark, sf_dir, "orders")
+        table(spark, sf_dir, "orders")
         .select(digit.alias("digit"))
         .groupBy("digit")
         .agg(F.count(F.lit(1)).alias("n_obs"))
@@ -6253,7 +6251,7 @@ def q_events_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     purchase event id — frames bounded by clicks/user/week."""
     # `ts` loads as TIMESTAMP_NTZ, so to_date()/datediff() here are
     # already session-TZ-free — left as-is (r6 audit).
-    ev = _t(spark, sf_dir, "events")
+    ev = table(spark, sf_dir, "events")
     base = ev.select(
         "event_id",
         "user_id",
@@ -6398,7 +6396,7 @@ def q_customer_survival_km(spark: SparkSession, sf_dir: str) -> DataFrame:
     anchor is a 1-row broadcast (scalar-broadcast BNLJ class). The
     single fold also carries the at-risk countdown, so n_risk needs
     no second pass."""
-    orders = _t(spark, sf_dir, "orders")
+    orders = table(spark, sf_dir, "orders")
     w = Window.partitionBy("o_custkey").orderBy("o_orderdate", "o_orderkey")
     seq = orders.select(
         "o_custkey",
@@ -6536,7 +6534,7 @@ def q_events_acf(spark: SparkSession, sf_dir: str) -> DataFrame:
     ≈ 3·10¹⁷ at sf0.1 — inside BIGINT with 30× headroom; a
     year-scale corpus would move num/den to decimal(38) with the
     same digit-string emission."""
-    ev = _t(spark, sf_dir, "events").select(F.to_date("ts").alias("day"))
+    ev = table(spark, sf_dir, "events").select(F.to_date("ts").alias("day"))
     bounds = ev.agg(F.min("day").alias("d0"), F.max("day").alias("d1"))
     spine = bounds.select(F.explode(F.sequence("d0", "d1")).alias("day"))
     counts = ev.groupBy("day").agg(F.count(F.lit(1)).alias("x"))

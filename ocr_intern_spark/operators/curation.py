@@ -23,6 +23,7 @@ from ocr_intern_spark.functions.text import (
     quality_score,
     token_count,
 )
+from ocr_intern_spark.sources.tables import documents, table
 
 DECON_NGRAM = 8       # words per contamination gram (GPT-3 used 13;
                       # 8 fits the synthetic corpus's doc lengths)
@@ -30,14 +31,6 @@ BENCH_MOD = 10        # doc_id % BENCH_MOD == 0 → "benchmark" doc
                       # (a 10% slice: wide enough to intersect the
                       # synthetic corpus's duplicate families at
                       # every sf, so the query is never vacuous)
-
-
-def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    p = spark.sparkContext.defaultParallelism
-    if d.rdd.getNumPartitions() < p:
-        d = d.repartition(p)
-    return d
 
 
 def _grams(d: DataFrame, ngram: int = DECON_NGRAM) -> DataFrame:
@@ -80,7 +73,7 @@ def q_decontaminate_flags(spark: SparkSession, sf_dir: str) -> DataFrame:
     hash: at 10^9+ grams birthday collisions would flag clean docs
     (same reasoning as the winnowing pair join). The benchmark side is
     broadcast — the corpus-side gram stream never shuffles to join."""
-    g = _grams(_docs(spark, sf_dir))
+    g = _grams(documents(spark, sf_dir))
     bench = (
         g.where(F.col("doc_id") % BENCH_MOD == 0)
         .select(F.col("doc_id").alias("bdoc"), "g")
@@ -118,7 +111,7 @@ def q_source_mix_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     upsample). One map-side-combined aggregation; the per-source
     frame is tiny at any corpus scale, so the share division happens
     on a broadcast 1-row total."""
-    d = _docs(spark, sf_dir).select(
+    d = documents(spark, sf_dir).select(
         "source", token_count(F.col("text")).alias("nt")
     )
     per = d.groupBy("source").agg(
@@ -196,7 +189,7 @@ def q_langid_ngram(spark: SparkSession, sf_dir: str) -> DataFrame:
     map-side-combinable sum."""
     from pyspark.sql.window import Window
 
-    d = _docs(spark, sf_dir)
+    d = documents(spark, sf_dir)
     phrase = F.element_at(
         F.create_map(*[F.lit(x) for kv in LANG_PHRASES.items() for x in kv]),
         F.col("lang"),
@@ -335,7 +328,7 @@ def q_interleaved_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
     array; the synthesized stream here keeps the oracle closed-form."""
     from pyspark.sql.window import Window
 
-    d = _docs(spark, sf_dir)
+    d = documents(spark, sf_dir)
     toks = F.slice(F.split(F.trim(F.col("text")), r"\s+"), 1, 24)
     n = F.size(toks)
     words = F.transform(
@@ -413,10 +406,10 @@ def q_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     downstream metadata-only plan."""
     from ocr_intern_spark.operators.multimodal import sample_video_frames
 
-    # read directly (not via _docs): the stage repartitions by
+    # read bare (not via documents()): the stage repartitions by
     # hash(media_id) itself, so a round-robin pre-repartition would
     # just add a second full exchange of the wide payload rows
-    d = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    d = table(spark, sf_dir, "documents")
     media = d.select(
         F.col("doc_id").cast("string").alias("media_id"),
         F.encode("text", "utf-8").alias("payload"),
@@ -465,7 +458,7 @@ def q_scene_cuts(spark: SparkSession, sf_dir: str) -> DataFrame:
     BIGINT in both engines; Hamming = bit_count(xor)."""
     from ocr_intern_spark.operators.multimodal import sample_video_frames
 
-    d = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    d = table(spark, sf_dir, "documents")
     media = d.select(
         F.col("doc_id").cast("string").alias("media_id"),
         F.encode("text", "utf-8").alias("payload"),
@@ -561,7 +554,7 @@ def q_phash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         image_ahash,
     )
 
-    d = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    d = table(spark, sf_dir, "documents")
     media = d.select(
         F.col("doc_id").cast("string").alias("media_id"),
         F.encode(F.substring("text", 1, 64), "utf-8").alias("payload"),
@@ -619,7 +612,7 @@ def q_phash_band_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
         image_ahash,
     )
 
-    d = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    d = table(spark, sf_dir, "documents")
     media = d.select(
         F.col("doc_id").cast("string").alias("media_id"),
         F.encode(F.substring("text", 1, 64), "utf-8").alias("payload"),
@@ -695,9 +688,9 @@ def q_caption_align(spark: SparkSession, sf_dir: str) -> DataFrame:
     any downstream quality filter). Emits token counts per side so
     the empty-side edge (media at position 0 of a short doc) is
     visible rather than silent."""
-    # read directly (not via _docs): its round-robin repartition would
+    # read bare (not via documents()): its round-robin repartition would
     # add a full exchange of the text payloads to a map-only plan
-    d = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    d = table(spark, sf_dir, "documents")
     toks = F.slice(F.split(F.trim(F.col("text")), r"\s+"), 1, 24)
     n = F.size(toks)
     m = (n / 2).cast("int")
@@ -768,7 +761,7 @@ def q_contrastive_views(spark: SparkSession, sf_dir: str) -> DataFrame:
     scan → filter → project, the multimodal_caption_align plan shape.
     At 10^12 docs the dataloader reads this output shard-aligned with
     table_shard_manifest's cuts."""
-    d = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    d = table(spark, sf_dir, "documents")
     toks = F.slice(F.split(F.trim(F.col("text")), r"\s+"), 1, 24)
     n = F.size(toks)
     m = (n / 2).cast("int")
@@ -826,7 +819,7 @@ def q_modality_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
     Shares are integer ppm by cross-multiplication (no float
     division). One map-side-combinable aggregate over per-doc token
     counts — scan-shaped at any corpus size."""
-    d = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    d = table(spark, sf_dir, "documents")
     n_text = F.least(
         F.size(F.split(F.trim(F.col("text")), r"\s+")), F.lit(24)
     )
@@ -883,7 +876,7 @@ def q_rouge_neardup_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     before the token explode, so token counting touches only pair
     members; the per-pair overlap is one (pair, token) hash aggregate
     over the min of two counts. All integers."""
-    d = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
+    d = table(spark, sf_dir, "documents").select(
         "doc_id", "text", F.substring("text", 1, 64).alias("k")
     )
     a = d.alias("a")
@@ -1024,7 +1017,7 @@ def q_mix_resample(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: per-source stats are a tiny broadcast; the decision
     is a narrow codegen'd projection per row — no shuffle at all
     beyond the stats agg."""
-    d = _docs(spark, sf_dir)
+    d = documents(spark, sf_dir)
     per = d.select(
         "source", token_count(F.col("text")).alias("nt")
     ).groupBy("source").agg(F.sum("nt").alias("src_tokens"))
@@ -1101,7 +1094,7 @@ def q_novelty_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     index equi-join on the same key (never all-pairs, same class as
     the n-gram Jaccard index); the final per-doc fraction is one
     doc_id aggregate. Integer counts divided once at the end."""
-    g = _grams(_docs(spark, sf_dir))
+    g = _grams(documents(spark, sf_dir))
     first = g.groupBy("g").agg(F.min("doc_id").alias("first_doc"))
     return (
         g.join(first, "g")
@@ -1177,7 +1170,7 @@ def q_span_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-key frame back on the span STRING (no 64-bit-collision risk,
     same rule as decontamination); reassembly is ONE doc_id exchange.
     AQE skew-join splits any residual hot-span partition."""
-    d = _docs(spark, sf_dir).where(F.length(F.trim("text")) > 0)
+    d = documents(spark, sf_dir).where(F.length(F.trim("text")) > 0)
     toks = F.split(F.trim(F.lower(F.col("text"))), r"\s+")
     nseg = ((F.size(toks) - 1) / SPAN_W).cast("int") + 1
     segs = F.transform(
@@ -1282,7 +1275,7 @@ def q_substr_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     combinable min(struct) on the window STRING; flag re-assembly is
     ONE doc_id exchange into a per-doc boolean array; the cover test
     is then a pure array fold (no per-token rows ever shuffle)."""
-    d = _docs(spark, sf_dir).where(F.length(F.trim("text")) > 0)
+    d = documents(spark, sf_dir).where(F.length(F.trim("text")) > 0)
     toks_col = F.split(F.trim(F.lower(F.col("text"))), r"\s+")
     base = d.select("doc_id", toks_col.alias("toks"))
     n = F.size("toks")
@@ -1428,7 +1421,7 @@ def q_quality_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
     Details in OPTIMIZATION_r06.md."""
     from ocr_intern_spark.operators.dedup import fnv1a64_spark
 
-    d = _docs(spark, sf_dir)
+    d = documents(spark, sf_dir)
     toks = F.split(F.trim(F.lower(F.col("text"))), r"\s+")
     n = F.size(toks)
     pairs = F.greatest(n - 1, F.lit(0))
@@ -1523,7 +1516,7 @@ def q_dsir_select(spark: SparkSession, sf_dir: str) -> DataFrame:
     for a threshold from approx_percentile(score)."""
     from ocr_intern_spark.operators.dedup import fnv1a64_spark
 
-    d = _docs(spark, sf_dir)
+    d = documents(spark, sf_dir)
     phrase = F.element_at(
         F.create_map(*[F.lit(x) for kv in LANG_PHRASES.items() for x in kv]),
         F.col("lang"),
@@ -1638,7 +1631,7 @@ def q_provenance_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
     ~10 rounds at real iteration counts, the connected-components
     recipe). Ranks rounded to 1e-9 per round, 1e-6 at the end - the
     repo's float-portability quantum discipline."""
-    d = _docs(spark, sf_dir)
+    d = documents(spark, sf_dir)
     g = _grams(d)
     first = g.groupBy("g").agg(F.min("doc_id").alias("src"))
     edges = (
@@ -1734,7 +1727,7 @@ def q_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     portability concerns."""
     from pyspark.sql.window import Window
 
-    d = _docs(spark, sf_dir)
+    d = documents(spark, sf_dir)
     g = _grams(d)
     first = g.groupBy("g").agg(F.min("doc_id").alias("src"))
     dir_e = (
@@ -1821,7 +1814,7 @@ def q_degree_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: canonical edges once (inverted-index class), one
     degree aggregate, two deg join-backs, ONE total-sum aggregate —
     O(|E|) flat."""
-    d = _docs(spark, sf_dir)
+    d = documents(spark, sf_dir)
     g = _grams(d)
     first = g.groupBy("g").agg(F.min("doc_id").alias("src"))
     de = (
@@ -1932,7 +1925,7 @@ def q_audio_chunk_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     plannable: a narrow sequence-explode, zero shuffles, payload
     column never touched (Catalyst prunes it — at 100 TB of audio
     the plan reads only the metadata struct)."""
-    d = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    d = table(spark, sf_dir, "documents")
     dur = (F.lit(10_000) + (F.col("doc_id") * F.lit(7919)) % F.lit(590_001)).cast(
         "long"
     )
@@ -2073,7 +2066,7 @@ def q_image_tile_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     explode (transform × flatten); the pixel payload never enters the
     plan. Decode/crop itself stays behind the multimodal module's
     injectable-codec seam."""
-    d = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    d = table(spark, sf_dir, "documents")
     w = (F.lit(512) + (F.col("doc_id") * 13) % F.lit(1537)).cast("int")
     h = (F.lit(384) + (F.col("doc_id") * 29) % F.lit(1153)).cast("int")
     media = d.select(
@@ -2192,7 +2185,7 @@ def q_community_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
     lab = q_label_propagation(spark, sf_dir).select(
         "doc_id", F.col("label").alias("community")
     )
-    d = _docs(spark, sf_dir)
+    d = documents(spark, sf_dir)
     g = _grams(d)
     first = g.groupBy("g").agg(F.min("doc_id").alias("src"))
     de = (
@@ -2301,7 +2294,7 @@ def q_triangle_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     Wedges come from ONE degree aggregate; every count is an integer
     (the single rounded division happens on two already-final
     scalars)."""
-    d = _docs(spark, sf_dir)
+    d = documents(spark, sf_dir)
     g = _grams(d)
     first = g.groupBy("g").agg(F.min("doc_id").alias("src"))
     de = (
@@ -2416,7 +2409,7 @@ def q_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     removes whole degree-layers at once. Integer-only state.
 
     Output: surviving doc_id + its degree inside the final core."""
-    d = _docs(spark, sf_dir)
+    d = documents(spark, sf_dir)
     g = _grams(d, KCORE_NGRAM)
     first = g.groupBy("g").agg(F.min("doc_id").alias("src"))
     de = (
@@ -2518,7 +2511,7 @@ def q_source_kl_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     materialize (inner join)."""
     from pyspark.sql.window import Window
 
-    d = _docs(spark, sf_dir)
+    d = documents(spark, sf_dir)
     toks = d.select(
         "source",
         F.explode(F.split(F.trim(F.lower(F.col("text"))), r"\s+")).alias("t"),
@@ -2591,7 +2584,7 @@ def q_source_vocab_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Portability: pure integer set algebra; the single float division
     is rounded to 1e-6."""
-    d = _docs(spark, sf_dir)
+    d = documents(spark, sf_dir)
     toks = F.split(F.trim(F.lower(F.col("text"))), r"\s+")
     n = F.size(toks)
     idx = F.sequence(F.lit(0), n - OVERLAP_NGRAM)
@@ -2698,7 +2691,7 @@ def q_line_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     same rule as decontamination), and a billion-doc boilerplate line
     is still ONE verdict row — the hot key rides the broadcast-able
     side, never a window. Reassembly is one doc_id exchange."""
-    d = _docs(spark, sf_dir).where(F.length(F.trim("text")) > 0)
+    d = documents(spark, sf_dir).where(F.length(F.trim("text")) > 0)
     toks = F.split(F.trim(F.lower(F.col("text"))), r"\s+")
     nseg = ((F.size(toks) - 1) / LINE_W).cast("int") + 1
     segs = F.transform(
@@ -2793,7 +2786,7 @@ def q_source_cap(spark: SparkSession, sf_dir: str) -> DataFrame:
     test_session6_ops.py), so a source with a billion docs moves at
     most K rows per map partition into the shuffle, not the whole
     group."""
-    d = _docs(spark, sf_dir)
+    d = documents(spark, sf_dir)
     q = F.round(quality_score(F.col("text")), 6)
     w = Window.partitionBy("source").orderBy(
         F.desc("quality"), F.desc("n_chars"), F.asc("doc_id")
@@ -2888,7 +2881,7 @@ def q_pii_redact(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffles before the final presentation sort. At 100 TB this is a
     pure map stage; the counts aggregate (if wanted per-source)
     would be map-side combinable."""
-    d = _docs(spark, sf_dir)
+    d = documents(spark, sf_dir)
     probe = _pii_probe_spark()
     redacted = F.regexp_replace(
         F.regexp_replace(
@@ -2959,7 +2952,7 @@ def q_url_canonicalize(spark: SparkSession, sf_dir: str) -> DataFrame:
     (map-side combinable). At 100 TB this replaces content-level
     dedup for the ~40% of crawl duplicates that are URL-identical —
     the cheapest shuffle in the pipeline, and it runs first."""
-    d = _docs(spark, sf_dir)
+    d = documents(spark, sf_dir)
     toks = F.split(F.trim(F.lower(F.col("text"))), r"\s+")
     w = F.coalesce(F.try_element_at(toks, F.lit(1)), F.lit("x"))
     k = (F.col("doc_id") % URL_SITES).cast("string")
@@ -3098,7 +3091,7 @@ def q_interleave_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc's partition — and the per-doc rollup reuses that exchange
     (doc_id is the grouping prefix). One shuffle end to end, exactly
     the plan this filter needs over the real spans array at 100 TB."""
-    d = _docs(spark, sf_dir).where(F.length(F.trim("text")) > 0)
+    d = documents(spark, sf_dir).where(F.length(F.trim("text")) > 0)
     toks = F.slice(F.split(F.trim(F.col("text")), r"\s+"), 1, 24)
     n = F.size(toks)
     m = (F.col("doc_id") % 5).cast("int")
@@ -3203,7 +3196,7 @@ def q_sample_alpha(spark: SparkSession, sf_dir: str) -> DataFrame:
     windows over the ≤#langs-row language frame. At a 10¹²-doc corpus
     the per-language frame is still dozens of rows — the allocation
     is free; the count is the only fact pass."""
-    per = _docs(spark, sf_dir).groupBy("lang").agg(
+    per = documents(spark, sf_dir).groupBy("lang").agg(
         F.count(F.lit(1)).alias("n_docs")
     )
     # bounded-window: frame is the per-LANGUAGE table (≤ dozens of rows)
@@ -3284,7 +3277,7 @@ def q_anchor_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     join is ANCHOR_SITES rows, broadcast. At web scale this is
     exactly the anchor-corpus build: 10^12 edges hash-aggregated to
     ~10^8 hosts with no per-host sort anywhere."""
-    d = _docs(spark, sf_dir)
+    d = documents(spark, sf_dir)
     toks = F.split(F.trim(F.lower(F.col("text"))), r"\s+")
     edges = d.select(
         "doc_id",
@@ -3421,7 +3414,7 @@ def q_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
     hash aggregate — identical plan shape to a PageRank round, O(|E|)
     per round, cached edge table reused four times (checkpoint table
     at real scale)."""
-    d = _docs(spark, sf_dir)
+    d = documents(spark, sf_dir)
     g = _grams(d)
     first = g.groupBy("g").agg(F.min("doc_id").alias("src"))
     edges = (
@@ -3532,7 +3525,7 @@ def q_curation_skyline(spark: SparkSession, sf_dir: str) -> DataFrame:
     summary crosses the broadcast boundary."""
     from ocr_intern_spark.operators.skew import pareto_front
 
-    d = _docs(spark, sf_dir)
+    d = documents(spark, sf_dir)
     pts = d.select(
         "doc_id",
         F.when(F.length("text") == 0, F.lit(0))

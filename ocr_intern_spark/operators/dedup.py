@@ -24,6 +24,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ocr_intern_spark.functions.text import STOPWORDS, fingerprint
+from ocr_intern_spark.sources.tables import documents, table
 
 N_SHINGLE = 3          # words per shingle
 MINHASH_SEEDS = 8      # signature length
@@ -47,19 +48,6 @@ def _round_checkpoint(df: DataFrame) -> DataFrame:
     if sc.getCheckpointDir() is not None:
         return df.checkpoint(eager=True)
     return df.localCheckpoint()
-
-
-def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # Spread a small-file scan across cores before the CPU-heavy
-    # shingle/hash expressions — but ONLY when the scan is actually
-    # under-partitioned. An unconditional repartition would be a full
-    # shuffle of the corpus at 100 TB, where the parquet scan already
-    # yields thousands of partitions and needs no help.
-    d = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    p = spark.sparkContext.defaultParallelism
-    if d.rdd.getNumPartitions() < p:
-        d = d.repartition(p)
-    return d
 
 
 def _shingles(d: DataFrame, blur: bool = True) -> DataFrame:
@@ -100,7 +88,7 @@ _SHINGLES_SQL = f"""
 def q_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact dedup on a 5-word-prefix normal form (creates real
     collisions in the synthetic corpus): keeper = min doc_id."""
-    d = _docs(spark, sf_dir)
+    d = documents(spark, sf_dir)
     prefix = F.array_join(
         F.slice(F.split(F.trim(F.lower(F.col("text"))), r"\s+"), 1, 5), " "
     )
@@ -126,7 +114,7 @@ GROUP BY fp HAVING count(*) > 1 ORDER BY fp
 
 def q_dedup_fingerprint_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Full-text exact dedup stats: distinct fingerprints vs rows."""
-    d = _docs(spark, sf_dir)
+    d = documents(spark, sf_dir)
     return d.agg(
         F.count("*").alias("n_docs"),
         F.count_distinct(fingerprint(F.col("text"))).alias("n_unique"),
@@ -163,7 +151,7 @@ def q_ngram_jaccard_pairs(
     ``sources.storage.checkpoint_table(root, name)`` to land the
     index as a durable, resumable TABLE instead — the 100 TB form,
     tested identical-output in tests/test_session15_round5.py."""
-    d = _docs(spark, sf_dir)
+    d = documents(spark, sf_dir)
     # The index is consumed three times (sizes, DF cut, self-join) —
     # materialized ONCE via the injected strategy. The previous
     # .cache() was the narrated-only version of the same story.
@@ -265,7 +253,7 @@ def q_ngram_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     Exactness: the threshold test is the integer cross-multiplication
     common·10 >= n_a·8 on both engines (no float division at the
     boundary); the reported score is rounded for display only."""
-    d = _docs(spark, sf_dir)
+    d = documents(spark, sf_dir)
     sh = _round_checkpoint(
         _shingles(d).select("doc_id", F.xxhash64("shingle").alias("shingle"))
     )
@@ -330,7 +318,7 @@ def minhash_signature_cols() -> list:
 
 
 def _minhash_sig(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = _docs(spark, sf_dir)
+    d = documents(spark, sf_dir)
     return _shingles(d, blur=False).groupBy("doc_id").agg(*minhash_signature_cols())
 
 
@@ -361,7 +349,7 @@ def q_minhash_fast(spark: SparkSession, sf_dir: str) -> DataFrame:
     pure-Python XXH64 spec implementation (oracle/xxh64.py, pinned
     bit-exact vs F.xxhash64 in tests/test_xxh64_oracle.py) over
     DuckDB-extracted shingles — hash-checked, not rows-only."""
-    d = _docs(spark, sf_dir)
+    d = documents(spark, sf_dir)
     sig = (
         _shingles(d, blur=False)
         .groupBy("doc_id")
@@ -386,7 +374,7 @@ def q_minhash_fast_lsh_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     (oracle/xxh64.py) — hash-checked; candidate-group recall vs the
     md5 family additionally pinned by tests/test_minhash_fast.py."""
     rows_per_band = MINHASH_SEEDS // LSH_BANDS
-    d = _docs(spark, sf_dir)
+    d = documents(spark, sf_dir)
     sig = (
         _shingles(d, blur=False)
         .groupBy("doc_id")
@@ -492,7 +480,7 @@ def q_lsh_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     hash family so the DuckDB oracle reproduces the numbers exactly;
     the xxhash64 production family's recall parity with md5 is pinned
     by tests/test_minhash_fast.py."""
-    d = _docs(spark, sf_dir)
+    d = documents(spark, sf_dir)
     sh = _shingles(d).cache()
     # exact pairs (same construction as q_ngram_jaccard_pairs, md5-free)
     sizes = sh.groupBy("doc_id").agg(F.count("*").alias("n"))
@@ -652,7 +640,7 @@ def q_minhash_portable64(spark: SparkSession, sf_dir: str) -> DataFrame:
     cheaper than a per-codepoint HOF fold); this variant exists so the
     scale shape is oracle-provable, and the fold cost sits in the
     map-side narrow stage where it scales linearly."""
-    d = _docs(spark, sf_dir)
+    d = documents(spark, sf_dir)
     sig_cols = [
         F.expr(fnv1a64_spark(f"concat('{s}|', shingle)")).alias(f"v{s}")
         for s in range(MINHASH_SEEDS)
@@ -689,7 +677,7 @@ def q_dedup_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from ocr_intern_spark.functions.text import quality_score
 
-    d = _docs(spark, sf_dir)
+    d = documents(spark, sf_dir)
     prefix = F.array_join(
         F.slice(F.split(F.trim(F.lower(F.col("text"))), r"\s+"), 1, 5), " "
     )
@@ -977,7 +965,7 @@ def _survivors_from_pairs(
     from ocr_intern_spark.functions.text import quality_score
 
     clusters = connected_components(pairs)
-    docs = _docs(spark, sf_dir).select(
+    docs = documents(spark, sf_dir).select(
         "doc_id", F.round(quality_score(F.col("text")), 6).alias("q")
     )
     members = clusters.join(docs, "doc_id")
@@ -1017,7 +1005,7 @@ def lsh_candidate_jaccard_pairs(
     corpus's true pairs is what q_dedup_pipeline_survivors_lsh's
     oracle row proves (1-(1-s²)⁴ per-pair; near-dups here sit well
     above the s=0.5 knee)."""
-    d = _docs(spark, sf_dir)
+    d = documents(spark, sf_dir)
     # same reliable-checkpoint swap as q_ngram_jaccard_pairs: the
     # shingle index feeds both the signature pass and the verify join
     sh = _round_checkpoint(
@@ -1148,7 +1136,7 @@ def q_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SIMHASH_BITS-bit SimHash over word tokens: per bit, sum +1/-1
     by the token-hash bit, sign → fingerprint bit. One explode + one
     groupBy with 16 conditional sums (all map-side combinable)."""
-    d = _docs(spark, sf_dir)
+    d = documents(spark, sf_dir)
     toks = d.select(
         "doc_id",
         F.explode(F.split(F.trim(F.lower(F.col("text"))), r"\s+")).alias("w"),
@@ -1216,7 +1204,7 @@ def q_lsh_banding_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     from equi-self-joins keyed (cfg, band, bucket); every count is a
     keyed aggregate — the 1-row true-pair total rides a broadcast
     cross join, no driver scalars."""
-    d = _docs(spark, sf_dir)
+    d = documents(spark, sf_dir)
     sh = _shingles(d).cache()
     sizes = sh.groupBy("doc_id").agg(F.count("*").alias("n"))
     rare = (
@@ -1412,7 +1400,7 @@ def q_minhash_est_error(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: true pairs via the inverted-index join (audited);
     signatures are ONE hash aggregate; the comparison is one
     pair-keyed join of two signature rows."""
-    d = _docs(spark, sf_dir)
+    d = documents(spark, sf_dir)
     sh = _shingles(d).cache()
     sizes = sh.groupBy("doc_id").agg(F.count("*").alias("n"))
     rare = (
@@ -1545,7 +1533,7 @@ def q_cc_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     centroids); the contracted CC touches only delta edges and the
     base clusters they collide with."""
     pairs = q_ngram_jaccard_pairs(spark, sf_dir).select("a", "b").persist()
-    docs = _docs(spark, sf_dir)
+    docs = documents(spark, sf_dir)
     cut_df = docs.agg(
         (F.max("doc_id") * CC_CUT_NUM / CC_CUT_DEN)
         .cast("long")
@@ -1647,7 +1635,7 @@ def q_simhash_hamming64(spark: SparkSession, sf_dir: str) -> DataFrame:
     values (65,536 buckets per band) with the DF cut bounding any
     bucket's quadratic term. This is exactly the shape that deduped
     the 8B-page Google crawl in the paper."""
-    d = _docs(spark, sf_dir)
+    d = documents(spark, sf_dir)
     toks = d.select(
         "doc_id",
         F.explode(F.split(F.trim(F.lower(F.col("text"))), r"\s+")).alias("w"),
@@ -1783,7 +1771,7 @@ def q_fuzzy_vocab_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     n-gram Jaccard join; levenshtein is a JVM-side integer residual
     on block-local candidates. Fully integer → bit-portable (both
     engines implement standard unit-cost levenshtein)."""
-    d = _docs(spark, sf_dir)
+    d = documents(spark, sf_dir)
     raw = d.select(
         "doc_id",
         F.explode(F.split(F.trim(F.lower(F.col("text"))), r"\s+")).alias(
@@ -1865,7 +1853,7 @@ def q_split_leakage_safe(spark: SparkSession, sf_dir: str) -> DataFrame:
     projection on the root. Deterministic across runs, engines,
     partition layouts, and cluster sizes — same md5-bucket discipline
     as q_deterministic_sample."""
-    d = _docs(spark, sf_dir)
+    d = documents(spark, sf_dir)
     clusters = connected_components(
         q_ngram_jaccard_pairs(spark, sf_dir).select("a", "b")
     )
@@ -1934,7 +1922,7 @@ def q_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     argument; xxhash64 is for bucketing only)."""
     from pyspark.sql.window import Window
 
-    d = _docs(spark, sf_dir)
+    d = documents(spark, sf_dir)
     prefix = F.array_join(
         F.slice(F.split(F.trim(F.lower(F.col("text"))), r"\s+"), 1, 5), " "
     )
@@ -2012,7 +2000,7 @@ def q_ppjoin_prefix_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     Verification joins candidate pairs back to the full sets on the
     8-byte hashed key; the final filter is the all-integer cross
     multiplication (1+τ')·common ≥ τ'·(na+nb) with τ'=num/den."""
-    d = _docs(spark, sf_dir)
+    d = documents(spark, sf_dir)
     sh = _round_checkpoint(
         _shingles(d).select("doc_id", F.xxhash64("shingle").alias("shingle"))
     )
@@ -2134,7 +2122,7 @@ def q_record_linkage(spark: SparkSession, sf_dir: str) -> DataFrame:
     for hot keys), narrow scoring projections, no windows. At 10^12
     rows this is scan + one keyed shuffle."""
     name_key = F.regexp_replace(F.lower(F.col("c_name")), "[^a-z0-9]", "")
-    base = spark.read.parquet(f"{sf_dir}/customer.parquet").select(
+    base = table(spark, sf_dir, "customer").select(
         "c_custkey",
         name_key.alias("name_key"),
         F.floor(F.col("c_acctbal") * 100).cast("long").alias("cents"),
@@ -2296,7 +2284,7 @@ def q_bloom_fpr_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     fp = F.md5(
         F.trim(F.regexp_replace(F.lower(F.col("text")), r"\s+", " "))
     )
-    docs = _docs(spark, sf_dir).select(
+    docs = documents(spark, sf_dir).select(
         "doc_id", fp.alias("fp"), (F.col("doc_id") % 2).alias("half")
     )
     train = docs.where("half = 0").select("fp").distinct()

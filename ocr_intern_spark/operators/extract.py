@@ -53,6 +53,7 @@ from ocr_intern_spark.functions.normalizers import (
     squash_spaces,
 )
 from ocr_intern_spark.schema import FLAT_DDL
+from ocr_intern_spark.sources.tables import spread
 
 LINK_DENSITY_CUTOFF = 1.0 / 3.0
 
@@ -109,8 +110,10 @@ def _plain_span_columns(
     (Catalyst's CollapseProject keeps a non-trivial expression staged
     when the projection above references it more than once)."""
     text = F.col("text")
-    density_drop = (
-        _linked_chars(text).cast("double") / F.length(text)
+    # try_divide: '' text has density NULL, not DIVIDE_BY_ZERO (ANSI);
+    # its cleaned text is empty too, so the span is dropped either way
+    density_drop = F.try_divide(
+        _linked_chars(text).cast("double"), F.length(text)
     ) > F.lit(LINK_DENSITY_CUTOFF)
     cleaned = _clean_text(text)
 
@@ -543,18 +546,10 @@ def extract(
     baseline-clustered lines, operators/layout.py) for multi-column
     pages the reference's sort interleaves.
     """
-    sc = docs.sparkSession.sparkContext
-    p = partitions or sc.defaultParallelism
-    # Small inputs (or few splits) would otherwise serialize the
-    # CPU-heavy stages; at real scale the scan already yields many
-    # splits and this round-robin shuffle of doc rows is cheap
-    # relative to the work it balances. Conditional since r6: an input
-    # already at >= p partitions (e.g. derive_spans' pre-spread span
-    # frame) skips the extra exchange of the full span payload —
-    # guide §2.4, remove shuffles outright.
-    repartitioned = (
-        docs if docs.rdd.getNumPartitions() >= p else docs.repartition(p)
-    )
+    p = partitions or docs.sparkSession.sparkContext.defaultParallelism
+    # a pre-spread input (derive_spans' span frame) skips the exchange
+    # of the full span payload — guide §2.4, remove shuffles outright
+    repartitioned = spread(docs, p)
     flat = explode_spans(repartitioned)
     plain = transform_plain_spans(flat)
     # Python stages want exactly one partition per worker slot:

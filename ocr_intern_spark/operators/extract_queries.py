@@ -24,29 +24,14 @@ from ocr_intern_spark.functions.normalizers import (
     classify_doc_type,
     normalize_field,
 )
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
-
-
-def _docs_balanced(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """documents with a balancing repartition ONLY when the small-file
-    test scan under-parallelizes (mirrors curation._docs) — at real
-    scale the scan is already wide and map-only queries must stay
-    map-only."""
-    d = _t(spark, sf_dir, "documents")
-    p = spark.sparkContext.defaultParallelism
-    if d.rdd.getNumPartitions() < p:
-        d = d.repartition(p)
-    return d
+from ocr_intern_spark.sources.tables import documents, table
 
 
 # --- A1 doc-type classification (postprocess.py:77-97) --------------------
 
 
 def q_doc_type(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = _t(spark, sf_dir, "documents")
+    d = table(spark, sf_dir, "documents")
     probe = (
         F.when(F.col("doc_id") % 5 == 0, F.concat(F.col("text"), F.lit(" Certificat de résidence")))
         .when(F.col("doc_id") % 5 == 1, F.concat(F.col("text"), F.lit(" Demande d'autorisation")))
@@ -89,7 +74,7 @@ FROM (
 
 
 def q_field_normalizers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    c = _t(spark, sf_dir, "customer")
+    c = table(spark, sf_dir, "customer")
     k = F.col("c_custkey")
     cin_raw = F.concat(F.lit("ab-"), (F.lit(12345) + k % 80000).cast("string"))
     date_raw = F.concat(
@@ -189,9 +174,7 @@ def q_reading_order(spark: SparkSession, sf_dir: str) -> DataFrame:
     expressed with window functions over synthesized token positions:
     x = (i%6)*90, line = i//6, lang arabic iff (doc_id + i*i) % 5 < 2.
     row_number gives the reading order."""
-    d = _t(spark, sf_dir, "documents").repartition(
-        spark.sparkContext.defaultParallelism
-    )
+    d = documents(spark, sf_dir)
     toks = F.slice(F.split(F.trim(F.col("text")), r"\s+"), 1, 24)
     w = d.select("doc_id", F.posexplode(toks).alias("i", "word"))
     w = w.select(
@@ -254,7 +237,7 @@ def q_french_ocr_fixes(spark: SparkSession, sf_dir: str) -> DataFrame:
     confusables."""
     from ocr_intern_spark.functions.normalizers import fix_french_ocr
 
-    d = _t(spark, sf_dir, "documents")
+    d = table(spark, sf_dir, "documents")
     noisy = F.concat(F.lit(" |dent1f1ant| "), F.col("text"), F.lit(" v1lle "))
     return d.select("doc_id", fix_french_ocr(noisy).alias("fixed"))
 
@@ -285,9 +268,7 @@ def q_boilerplate_strip(spark: SparkSession, sf_dir: str) -> DataFrame:
         _linked_chars,
     )
 
-    d = _t(spark, sf_dir, "documents").repartition(
-        spark.sparkContext.defaultParallelism
-    )
+    d = documents(spark, sf_dir)
     toks = F.split(F.trim(F.col("text")), r"\s+")
     head = F.array_join(F.slice(toks, 1, 5), " ")
     tail = F.array_join(
@@ -377,9 +358,7 @@ def q_html_block_classify(spark: SparkSession, sf_dir: str) -> DataFrame:
     Plan: narrow codegen (regex extract + HOFs) feeding one window
     over (doc_id, block idx) — a single exchange, blocks never leave
     their doc's partition."""
-    d = _t(spark, sf_dir, "documents").repartition(
-        spark.sparkContext.defaultParallelism
-    )
+    d = documents(spark, sf_dir)
     toks = F.split(F.trim(F.col("text")), r"\s+")
     nav = F.concat(
         F.lit("<nav><a href='/h'>"), F.element_at(toks, 1),
@@ -522,7 +501,7 @@ def q_template_detect(spark: SparkSession, sf_dir: str) -> DataFrame:
     when-cascade, zero shuffle besides the final sort."""
     from ocr_intern_spark.sources.templates import TEMPLATES, detect_template_type
 
-    d = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    d = table(spark, sf_dir, "documents")
     probes = [t.name for t in TEMPLATES.values()] + ["aucun document"]
     pick = F.element_at(
         F.array(*[F.lit(p) for p in probes]),
@@ -588,7 +567,7 @@ def q_dehyphenate(spark: SparkSession, sf_dir: str) -> DataFrame:
     codegen — split, indexed transform, two regex passes, md5; no
     shuffle before the presentation sort. A 100 TB corpus runs this
     as a map-only stage fused with whatever scan feeds it."""
-    d = _docs_balanced(spark, sf_dir)
+    d = documents(spark, sf_dir)
     toks = F.slice(F.split(F.trim(F.col("text")), r"\s+"), 1, 24)
     norm = F.array_join(toks, " ")
     half = lambda w: (F.length(w) / 2).cast("int")
@@ -676,7 +655,7 @@ def q_mojibake_repair(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: a pure per-row projection — 6 chained replaces + 6
     counts inside whole-stage codegen; no shuffle before the
     presentation sort. Map-only at any corpus size."""
-    d = _docs_balanced(spark, sf_dir)
+    d = documents(spark, sf_dir)
     did = F.col("doc_id")
     mod4 = did % 4
     probe = F.concat(
@@ -753,7 +732,7 @@ def q_span_lang_runs(spark: SparkSession, sf_dir: str) -> DataFrame:
     One exchange on doc_id total (Spark co-plans the two window specs
     and the final (doc_id, lang, grp) aggregate on the same
     clustering)."""
-    d = _t(spark, sf_dir, "documents")
+    d = table(spark, sf_dir, "documents")
     from ocr_intern_spark.functions.normalizers import guess_lang
 
     toks = F.split(F.trim(F.col("text")), r"\s+")

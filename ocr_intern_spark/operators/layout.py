@@ -30,6 +30,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ocr_intern_spark.sources.tables import documents
+
 MIN_GAP_X = 40.0  # vertical cut: column gutters (word gaps are ~10px)
 MIN_GAP_Y = 18.0  # horizontal cut: band gaps (line leading is ~10px)
 
@@ -210,10 +212,7 @@ def q_xycut_order(spark: SparkSession, sf_dir: str) -> DataFrame:
     the recursion must reconstruct it, the same oracle pattern as the
     rollup cascade. Spark runs the real recursive algorithm via
     applyInPandas; nothing order-related is hinted to it."""
-    d = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    p = spark.sparkContext.defaultParallelism
-    if d.rdd.getNumPartitions() < p:
-        d = d.repartition(p)
+    d = documents(spark, sf_dir)
     toks = F.slice(F.split(F.trim(F.col("text")), r"\s+"), 1, 24)
     t = d.select(
         F.col("doc_id").cast("long").alias("doc_id"),
@@ -351,10 +350,7 @@ def q_extract_table_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
     is far under the gap thresholds; the clustering must recover the
     grid through it. The DuckDB oracle runs the same 1-D gap
     clustering as window SQL — integer coordinates end to end."""
-    d = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    p = spark.sparkContext.defaultParallelism
-    if d.rdd.getNumPartitions() < p:
-        d = d.repartition(p)
+    d = documents(spark, sf_dir)
     toks = F.slice(F.split(F.trim(F.col("text")), r"\s+"), 1, 24)
     t = d.select(
         F.col("doc_id").cast("long").alias("doc_id"),

@@ -23,6 +23,8 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ocr_intern_spark.sources.tables import table
+
 # Iceberg rewrite_data_files-style knobs: target rewrite group size,
 # and the small-file admission cut (files >= SMALL_CUT are already
 # "big enough" and left alone — Iceberg's min-file-size-bytes).
@@ -32,7 +34,7 @@ SMALL_CUT = 3072  # 0.75 * TARGET_BYTES
 
 def _files(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The synthesized manifest listing: one row per data file."""
-    return spark.read.parquet(f"{sf_dir}/documents.parquet").select(
+    return table(spark, sf_dir, "documents").select(
         F.col("doc_id").alias("file_id"),
         F.col("source").alias("part"),
         F.col("n_chars").cast("long").alias("size_bytes"),
@@ -136,7 +138,7 @@ def q_zonemap_prune_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     overlap test min < year_end AND max >= year_start."""
     from ocr_intern_spark.operators.skew import global_rank
 
-    o = spark.read.parquet(f"{sf_dir}/orders.parquet").select(
+    o = table(spark, sf_dir, "orders").select(
         "o_orderkey", F.col("o_orderdate").alias("d")
     )
     layouts = []
@@ -302,7 +304,7 @@ MAX_AGE_DAYS = 14  # ...and anything younger than this vs the newest snapshot
 
 
 def _t_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/events.parquet")
+    return table(spark, sf_dir, "events")
 
 
 def q_snapshot_expiry_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -557,7 +559,7 @@ def q_shard_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     decomposition (the global_rank proof shape, applied to sums)."""
     from ocr_intern_spark.operators.skew import global_prefix_sum
 
-    d = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
+    d = table(spark, sf_dir, "documents").select(
         "doc_id",
         (
             F.col("n_chars").cast("long")
@@ -633,7 +635,7 @@ def q_vacuum_orphans(spark: SparkSession, sf_dir: str) -> DataFrame:
     sized listings + ONE ≤3-group aggregate. At 100 TB the storage
     listing is the only big input (10⁷ rows) and the join is keyed
     on file path."""
-    storage = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
+    storage = table(spark, sf_dir, "documents").select(
         F.concat(F.lit("data/f"), F.col("doc_id").cast("string")).alias(
             "path"
         ),
@@ -716,7 +718,7 @@ def q_clustering_depth_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     min/max aggregate is metadata-plane."""
     from ocr_intern_spark.operators.skew import global_rank
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
+    docs = table(spark, sf_dir, "documents").select(
         "doc_id", F.col("n_chars").cast("long").alias("k")
     )
     natural = docs.select(
@@ -855,7 +857,7 @@ def q_hilbert_order(spark: SparkSession, sf_dir: str) -> DataFrame:
             % HILBERT_N
         )
 
-    pts = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
+    pts = table(spark, sf_dir, "documents").select(
         "doc_id", coord("hx").alias("x"), coord("hy").alias("y")
     )
     levels = ", ".join(
@@ -1023,7 +1025,7 @@ def q_delete_vector_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _t_lineitem(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/lineitem.parquet")
+    return table(spark, sf_dir, "lineitem")
 
 
 _DV_SQL = f"""

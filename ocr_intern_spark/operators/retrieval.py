@@ -25,13 +25,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-
-def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    p = spark.sparkContext.defaultParallelism
-    if d.rdd.getNumPartitions() < p:
-        d = d.repartition(p)
-    return d
+from ocr_intern_spark.sources.tables import documents
 
 
 # --- BM25 keyword search -----------------------------------------------------
@@ -66,7 +60,7 @@ def q_bm25_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     3-term sum (sum order is textual, not aggregated — deterministic),
     final score to 1e-6.
     """
-    d = _docs(spark, sf_dir)
+    d = documents(spark, sf_dir)
     toks = F.filter(
         F.split(F.lower(F.trim(F.col("text"))), r"\s+"),
         lambda w: F.length(w) > 0,
@@ -178,7 +172,7 @@ def q_pmi_collocations(spark: SparkSession, sf_dir: str) -> DataFrame:
     millions while bigram slots scale with the corpus. The count
     cutoff shrinks the bigram side BEFORE any join.
     """
-    d = _docs(spark, sf_dir)
+    d = documents(spark, sf_dir)
     toks = F.split(F.trim(F.lower(F.col("text"))), r"\s+")
     pairs = F.zip_with(
         F.slice(toks, 1, F.greatest(F.size(toks) - 1, F.lit(0))),
@@ -406,7 +400,7 @@ def q_bm25_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: inherits the zero-shuffle BM25 scoring pass; the
     metrics add one TakeOrdered(20), two 1-row aggregates, and
     conditional counts."""
-    d = _docs(spark, sf_dir)
+    d = documents(spark, sf_dir)
     toks = F.filter(
         F.split(F.lower(F.trim(F.col("text"))), r"\s+"),
         lambda w: F.length(w) > 0,

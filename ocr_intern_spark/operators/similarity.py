@@ -20,14 +20,12 @@ import hashlib
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ocr_intern_spark.sources.tables import table
+
 QUERY_VEC_ID = 0
 TOP_K = 20
 N_HYPERPLANES = 16
 EMBED_DIM = 64
-
-
-def _emb(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/embeddings.parquet")
 
 
 def dot(a: Column, b: Column) -> Column:
@@ -55,7 +53,7 @@ def q_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     The 1-row query side is broadcast; scoring is a narrow map over
     the table — at 100 TB this is a single scan, no shuffle except
     the final top-K merge."""
-    e = _emb(spark, sf_dir)
+    e = table(spark, sf_dir, "embeddings")
     q = (
         e.where(F.col("vec_id") == QUERY_VEC_ID)
         .select(F.col("embedding").alias("qvec"))
@@ -114,7 +112,7 @@ def lsh_signature(vec: Column) -> Column:
 def q_ann_lsh_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ANN candidate buckets: signature → groupBy. Bucket stats only
     (the re-rank reuses q_cosine_topk within buckets)."""
-    e = _emb(spark, sf_dir)
+    e = table(spark, sf_dir, "embeddings")
     return (
         e.select("vec_id", lsh_signature(F.col("embedding")).alias("sig"))
         .groupBy("sig")
@@ -152,7 +150,7 @@ def q_embedding_neardup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     Approximate by design (band recall ~50% at cos 0.4) — the
     blocking keeps it linear-ish where an all-pairs cross join is
     impossible at 10^12 rows."""
-    e = _emb(spark, sf_dir)
+    e = table(spark, sf_dir, "embeddings")
     band_width = N_HYPERPLANES // NEARDUP_BANDS
     sig = e.select(
         "vec_id", "embedding", lsh_signature(F.col("embedding")).alias("sig")
@@ -294,7 +292,7 @@ def q_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     the search scans ONLY the probed cells (cell is the partition/
     cluster key at real scale, so pruning skips ~(1-nprobe/cells) of
     the data)."""
-    e = _emb(spark, sf_dir)
+    e = table(spark, sf_dir, "embeddings")
     cents = _ivf_centroids(e)
     assigned = e.join(_ivf_assign(e, cents).drop("ccos"), "vec_id")
 
@@ -400,7 +398,7 @@ def q_knn_join_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # expression work. dot/(na·nb) evaluates the identical IEEE ops in
     # the identical order as cosine(), so every rounded value is
     # bit-equal (oracle hash-exact ×3 sfs). Guide §1.2 step 2.
-    e = _emb(spark, sf_dir).select("vec_id", "embedding")
+    e = table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     a = e.select(
         F.col("vec_id").alias("a"),
         F.col("embedding").alias("va"),
@@ -543,7 +541,7 @@ def q_int8_quant_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     the overlap numbers exactly."""
     from pyspark.sql.window import Window
 
-    e = _emb(spark, sf_dir).select("vec_id", "embedding")
+    e = table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     scale = F.array_max(F.transform("embedding", lambda v: F.abs(v.cast("double"))))
     q8 = e.select(
         "vec_id",
@@ -713,7 +711,7 @@ def q_binary_quant_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     the RAM-resident rerank tier for 10^12-vector corpora."""
     from pyspark.sql.window import Window
 
-    e = _emb(spark, sf_dir).select(
+    e = table(spark, sf_dir, "embeddings").select(
         "vec_id", "embedding", _sign_banks(F.col("embedding")).alias("code")
     )
     qs = e.where(F.col("vec_id") % QUANT_QMOD == 0).select(
@@ -827,7 +825,7 @@ def q_ivf_recall_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast class shared with the quantization-recall family."""
     from pyspark.sql.window import Window
 
-    e = _emb(spark, sf_dir)
+    e = table(spark, sf_dir, "embeddings")
     cents = _ivf_centroids(e)
     assigned = e.join(_ivf_assign(e, cents).drop("ccos"), "vec_id").select(
         "vec_id", "embedding", "cell"
@@ -1044,7 +1042,7 @@ def q_matryoshka_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     ranking windows."""
     from pyspark.sql.window import Window
 
-    e = _emb(spark, sf_dir).select(
+    e = table(spark, sf_dir, "embeddings").select(
         "vec_id",
         "embedding",
         F.slice("embedding", 1, MRL_DIM).alias("mvec"),
@@ -1153,7 +1151,7 @@ def q_semdedup_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     grows with the corpus so cell population stays bounded and the
     join stays linear-ish, exactly the SemDeDup paper's trick. One
     exchange for assignment, one cell-keyed exchange for the join."""
-    e = _emb(spark, sf_dir)
+    e = table(spark, sf_dir, "embeddings")
     # r6: per-vector norm hoisted out of the intra-cell pair loop
     # (same bit-identical dot/(na·nb) rewrite as q_knn_join_topk)
     assigned = e.join(
@@ -1252,7 +1250,7 @@ def q_kmeans_refine(spark: SparkSession, sf_dir: str) -> DataFrame:
     re-broadcast — the standard distributed k-means round (what
     MLlib's KMeans does per iteration). Nothing all-pairs, nothing
     driver-side except the tiny codebook."""
-    e = _emb(spark, sf_dir)
+    e = table(spark, sf_dir, "embeddings")
     a0 = _ivf_assign(e, _ivf_centroids(e)).select(
         "vec_id", F.col("cell").alias("cell0")
     )
@@ -1383,7 +1381,7 @@ def q_pq_adc_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     synthetic embeddings, not the init)."""
     from pyspark.sql.window import Window
 
-    e = _emb(spark, sf_dir).select("vec_id", "embedding")
+    e = table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     subs = e.select(
         "vec_id",
         F.posexplode(
@@ -1584,7 +1582,7 @@ def q_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
     float-portability discipline)."""
     from pyspark.sql.window import Window
 
-    e = _emb(spark, sf_dir).select("vec_id", "embedding", "label")
+    e = table(spark, sf_dir, "embeddings").select("vec_id", "embedding", "label")
     anchors = e.where(F.col("vec_id") % NEG_QMOD == 0).select(
         F.col("vec_id").alias("anchor"),
         F.col("embedding").alias("aemb"),
@@ -1676,7 +1674,7 @@ def q_mmr_select(spark: SparkSession, sf_dir: str) -> DataFrame:
     checkpoint table at 100 TB). All cosines rounded to 1e-9 before
     the score arithmetic, scores to 1e-6 — both engines agree
     bit-exactly."""
-    e = _emb(spark, sf_dir)
+    e = table(spark, sf_dir, "embeddings")
     q = (
         e.where(F.col("vec_id") == QUERY_VEC_ID)
         .select(F.col("embedding").alias("qvec"))
@@ -1805,7 +1803,7 @@ def q_embedding_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     are IEEE-identical; robust_z is rounded to 1e-6. MAD==0 (a
     perfectly tight cell) falls back to flagging any below-median
     vector."""
-    e = _emb(spark, sf_dir)
+    e = table(spark, sf_dir, "embeddings")
     assigned = _ivf_assign(e, _ivf_centroids(e)).cache()
     med = assigned.groupBy("cell").agg(F.median("ccos").alias("med"))
     dev = assigned.join(F.broadcast(med), "cell").withColumn(
@@ -1906,7 +1904,7 @@ def q_margin_pair_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
     # r6: norms hoisted out of the pair loop (same bit-identical
     # rewrite as q_knn_join_topk — dot/(na·nb) is the same IEEE op
     # sequence as cosine(); oracle hash-exact ×3 sfs)
-    e = _emb(spark, sf_dir).select("vec_id", "embedding")
+    e = table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     xs = e.where(F.col("vec_id") % 2 == 0).select(
         F.col("vec_id").alias("a"),
         F.col("embedding").alias("va"),
@@ -2047,7 +2045,7 @@ def q_ivf_delta_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     rebalance monitor watches. Shares `_ivf_centroids`/`_ivf_assign`
     with the IVF ANN query so index build and index maintenance can
     never drift on tie-breaks."""
-    e = _emb(spark, sf_dir)
+    e = table(spark, sf_dir, "embeddings")
     base = e.where(F.col("vec_id") % DELTA_MOD != 0)
     delta = e.where(F.col("vec_id") % DELTA_MOD == 0)
     cents = _ivf_centroids(base)
@@ -2253,10 +2251,10 @@ def q_cluster_topterms(spark: SparkSession, sf_dir: str) -> DataFrame:
     ranking."""
     from pyspark.sql.window import Window
 
-    e = _emb(spark, sf_dir)
+    e = table(spark, sf_dir, "embeddings")
     assigned = _ivf_assign(e, _ivf_centroids(e)).select("vec_id", "cell")
     toks = (
-        spark.read.parquet(f"{sf_dir}/documents.parquet")
+        table(spark, sf_dir, "documents")
         .select(
             "doc_id",
             F.explode(
@@ -2370,7 +2368,7 @@ def q_geo_grid_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     cell, occupancy bounded by density×R², ×9 constant expansion on
     the probe side only; top-K is TakeOrderedAndProject. The oracle's
     quadratic blowup is confined to the sf≤0.1 corpus."""
-    doc = spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id")
+    doc = table(spark, sf_dir, "documents").select("doc_id")
 
     def coord(axis: str) -> Column:
         return (
@@ -2476,7 +2474,7 @@ def q_graph_local_clustering(spark: SparkSession, sf_dir: str) -> DataFrame:
     the all-pairs edge set.
 
     Vertices need deg ≥ 2 (the coefficient is undefined below)."""
-    doc = spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id")
+    doc = table(spark, sf_dir, "documents").select("doc_id")
 
     def coord(axis: str) -> Column:
         return (
@@ -2637,7 +2635,7 @@ def q_centroid_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     cells — domain-bounded); the drift algebra runs on the ≤(labels
     × dims) cell frame. At 10^12 vectors this is a scan + one keyed
     aggregate."""
-    emb = _emb(spark, sf_dir).select(
+    emb = table(spark, sf_dir, "embeddings").select(
         "label",
         (F.col("vec_id") % 2).alias("half"),
         F.posexplode("embedding").alias("d", "x"),
@@ -2748,7 +2746,7 @@ def q_graph_random_walks(spark: SparkSession, sf_dir: str) -> DataFrame:
     you batch many walks per join, same shape). The oracle unrolls
     the identical walk recurrence with a recursive CTE over the
     all-pairs adjacency, so the hash certifies every step choice."""
-    doc = spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id")
+    doc = table(spark, sf_dir, "documents").select("doc_id")
 
     def coord(axis: str) -> Column:
         return (

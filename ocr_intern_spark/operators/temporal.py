@@ -25,6 +25,8 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ocr_intern_spark.sources.tables import table
+
 
 def asof_join(
     left: DataFrame,
@@ -74,16 +76,12 @@ def asof_join(
     )
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
-
-
 def q_events_asof_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Each purchase event joined to the user's plan value as of the
     latest signup at-or-before the purchase — point-in-time feature
     attachment over the events table. Verified against DuckDB's
     native ASOF LEFT JOIN."""
-    ev = _t(spark, sf_dir, "events")
+    ev = table(spark, sf_dir, "events")
     sign = ev.where(F.col("event_type") == "signup").select(
         "user_id", F.col("ts").alias("valid_from"),
         F.col("value").alias("plan_value"),
@@ -128,7 +126,7 @@ def q_error_session_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     nested-loop and which explodes with per-user session count)."""
     from ocr_intern_spark.operators.analytics import sessionize
 
-    ev = _t(spark, sf_dir, "events")
+    ev = table(spark, sf_dir, "events")
     # 12-HOUR sessions: at this corpus's per-user event density the
     # default 30-min rule yields singleton sessions and a trivial
     # all-false attribution; 12 h gives a real in/out split (~23%)
@@ -212,7 +210,7 @@ def q_events_daily_gap_fill(spark: SparkSession, sf_dir: str) -> DataFrame:
     # oracle-side (uncast DuckDB window sum → HUGEINT cum_cents),
     # untouchable this round (oracle SQL frozen); see
     # OPTIMIZATION_r06.md "driver reds".
-    ev = _t(spark, sf_dir, "events")
+    ev = table(spark, sf_dir, "events")
     daily = ev.groupBy(
         "user_id", F.to_date("ts").alias("day")
     ).agg(
@@ -317,7 +315,7 @@ def q_events_peak_concurrency(spark: SparkSession, sf_dir: str) -> DataFrame:
     is the ≤31-row day frame."""
     from ocr_intern_spark.operators.analytics import sessionize
 
-    sess = sessionize(_t(spark, sf_dir, "events")).select(
+    sess = sessionize(table(spark, sf_dir, "events")).select(
         "session_start",
         (F.col("session_end") + F.expr(f"INTERVAL {_PEAK_GAP}")).alias(
             "act_end"
@@ -473,7 +471,7 @@ def q_events_nearest_error_gap(spark: SparkSession, sf_dir: str) -> DataFrame:
     cogroup is exactly two co-hashed exchanges (same key), nothing
     all-pairs. At 10^12 events a hot user salts into (user, day)
     panes with pane-boundary patching — same kernel."""
-    ev = _t(spark, sf_dir, "events")
+    ev = table(spark, sf_dir, "events")
     pur = ev.where(F.col("event_type") == "purchase").select(
         "user_id", "event_id", "ts"
     )
@@ -527,7 +525,7 @@ def q_events_bitemporal_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus is touched ONCE; everything after is user×15 grain)."""
     from ocr_intern_spark.operators.skew import global_rank
 
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet").select(
+    ev = table(spark, sf_dir, "events").select(
         "ts", "event_id", "user_id",
         F.floor(F.col("value") * 100).cast("long").alias("cents"),
     )

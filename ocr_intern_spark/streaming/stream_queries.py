@@ -54,13 +54,15 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ocr_intern_spark.sources.tables import table
+
 _N_FILES = 8
 
 
-def _stage(spark: SparkSession, sf_dir: str, table: str, dest: str) -> None:
+def _stage(spark: SparkSession, sf_dir: str, name: str, dest: str) -> None:
     """Stage a test table as _N_FILES parquet part-files under dest."""
     (
-        spark.read.parquet(f"{sf_dir}/{table}.parquet")
+        table(spark, sf_dir, name)
         .repartition(_N_FILES)
         .write.mode("overwrite")
         .parquet(dest)
@@ -302,7 +304,7 @@ def q_stream_windowed_append(spark: SparkSession, sf_dir: str) -> DataFrame:
         in_dir = os.path.join(tmp, "in")
         os.makedirs(in_dir)
         rows = (
-            spark.read.parquet(f"{sf_dir}/events.parquet")
+            table(spark, sf_dir, "events")
             .select("ts", "event_type", "value", "event_id")
             .orderBy("ts", "event_id")
             .collect()
@@ -454,7 +456,7 @@ def q_stream_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
         in_dir = os.path.join(tmp, "in")
         os.makedirs(in_dir)
         rows = (
-            spark.read.parquet(f"{sf_dir}/events.parquet")
+            table(spark, sf_dir, "events")
             .select("ts", "user_id", "value", "event_id")
             .orderBy("ts", "event_id")
             .collect()
@@ -614,7 +616,7 @@ def q_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch-side equivalent (events_asof_plan / events_funnel) re-scans
     history; this pays state proportional to the join window."""
     rows = (
-        spark.read.parquet(f"{sf_dir}/events.parquet")
+        table(spark, sf_dir, "events")
         .where(F.col("event_type").isin("click", "purchase"))
         .select("ts", "event_type", "user_id", "event_id")
         .orderBy("ts", "event_id")
@@ -775,7 +777,7 @@ def q_stream_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
             .option("maxFilesPerTrigger", 1)
             .parquet(in_dir)
         )
-        ev_static = spark.read.parquet(f"{sf_dir}/events.parquet")
+        ev_static = table(spark, sf_dir, "events")
         profiles = (
             ev_static.where(F.col("event_type") == "purchase")
             .groupBy("user_id")
@@ -883,7 +885,7 @@ def q_stream_late_drop_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         # later; ONE partitionBy write, repartitioned on the slice
         # column so each slice directory holds exactly one file. The
         # corpus never passes through the driver.
-        ev = spark.read.parquet(f"{sf_dir}/events.parquet").select(
+        ev = table(spark, sf_dir, "events").select(
             "ts", "event_type", "value", "event_id"
         )
         ranked = global_rank(

@@ -71,7 +71,7 @@ def test_char_entropy_known_values_and_plan(spark):
         assert got[3].entropy_bits == 2.0
         assert got[2].n_chars_nonws == 4  # spaces excluded
         # narrow shape: no keyed (hash) exchange anywhere — the only
-        # exchanges are _docs' balancing round-robin repartition and
+        # exchanges are the documents() spread's round-robin repartition and
         # the ORDER BY's range partitioning
         plan = out._jdf.queryExecution().executedPlan().toString()
         assert "rangepartitioning" in plan.lower(), plan

@@ -100,6 +100,7 @@ def test_every_doc_id_survives(spark):
         ("d-empty", []),
         ("d-dropped", [("boilerplate", "<a>x</a>", "", 0)]),
         ("d-ok", [("heading", "Titre", "", 0)]),
+        ("d-blank", [("text", "", "", 0), ("heading", "Titre", "", 1)]),
     ]
     df = spark.createDataFrame(
         rows,
@@ -113,6 +114,7 @@ def test_every_doc_id_survives(spark):
         "d-empty": [],
         "d-dropped": [],
         "d-ok": [("heading", "Titre", "", 0)],
+        "d-blank": [("heading", "Titre", "", 0)],
     }
 
 

@@ -52,12 +52,12 @@ def _bucket_membership(spark, fast: bool):
     from ocr_intern_spark.operators.dedup import (
         LSH_BANDS,
         MINHASH_SEEDS,
-        _docs,
         _shingles,
         minhash_signature_cols,
     )
+    from ocr_intern_spark.sources import tables
 
-    d = _docs(spark, SF_DIR)
+    d = tables.documents(spark, SF_DIR)
     if fast:
         aggs = [
             F.min(F.xxhash64(F.lit(s), F.col("shingle"))).alias(f"mh{s}")

@@ -88,8 +88,9 @@ def test_pq_codes_shape_and_self_distance(spark):
     from ocr_intern_spark.operators.similarity import PQ_K, PQ_M
 
     import ocr_intern_spark.operators.similarity as sim
+    from ocr_intern_spark.sources import tables
 
-    e = sim._emb(spark, SF_DIR).select("vec_id", "embedding")
+    e = tables.table(spark, SF_DIR, "embeddings").select("vec_id", "embedding")
     subs = e.select(
         "vec_id",
         F.posexplode(

@@ -134,7 +134,8 @@ def test_null_text_doc_matches_oracle(spark):
     """A doc with NULL text: every signal folds to 0.0 (the length, punct
     and stopword tests are NULL, so each CASE takes its 0.0 branch), so
     no melted ``val`` is NULL and the doc keeps its row, exactly as in
-    the oracle's per-signal inner joins."""
+    the oracle's per-signal inner joins. An empty text must not raise:
+    its punct ratio is NULL on both engines, as DuckDB's 0/0 is."""
     import duckdb
 
     from ocr_intern_spark.functions.text import QUERIES
@@ -145,6 +146,7 @@ def test_null_text_doc_matches_oracle(spark):
         None,
         "spam " * 40,
         "some repeated words some repeated words and a few more items",
+        "",
     ]
     with tempfile.TemporaryDirectory() as d:
         spark.createDataFrame(
@@ -158,7 +160,7 @@ def test_null_text_doc_matches_oracle(spark):
             f"read_parquet('{d}/documents.parquet/*.parquet')"
         )
         want = con.sql(oracle).fetchall()
-    assert [r[0] for r in got] == [r[0] for r in want] == [0, 1, 2, 3]
+    assert [r[0] for r in got] == [r[0] for r in want] == [0, 1, 2, 3, 4]
     for g, w in zip(got, want):
         assert g[1:] == pytest.approx(w[1:], abs=1e-9)
     assert got[1][1:4] == (0.0, 0.0, 0.0)

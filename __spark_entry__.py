@@ -3,7 +3,8 @@
 entry()   — flagship extraction pipeline over spans derived from the
             sf0.001 documents table.
 queries() — every oracle-checked operator (SURVEY.md §2 + the
-            training-data-pipeline set), one callable per name.
+            training-data-pipeline set), one callable per name, in
+            the driver's window order (_window_order).
 oracle_sql() — matching DuckDB ANSI SQL for each (omitted only for
             the full media/OCR pipeline, which is pinned instead by
             the pytest golden suite against the pure-Python oracle).
@@ -11,7 +12,10 @@ oracle_sql() — matching DuckDB ANSI SQL for each (omitted only for
 
 from __future__ import annotations
 
+import json
+import re
 from collections.abc import Callable
+from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -278,280 +282,62 @@ def _q_span_regression(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# The correctness driver checks the FIRST 50 entries of queries() per
-# round, so ordering is rotated each round to give every name a driver
-# row. Round-5 window (VERDICT r4 "Next round" #1, verbatim):
-#   1. extract_span_regression — the standing north-rule gate (per-doc
-#      span-sequence equality vs the golden fixtures) gets its first
-#      driver row;
-#   2. the first 49 never-driver-checked names from the r4 _DEFERRED
-#      backlog, in their original registration order (session-14 set
-#      first — newest, least externally verified; every name carries a
-#      builder-recorded ×3-sf local hash-exact check and a serial
-#      reference pin in tests/test_session1N_queries.py).
-# All 50 r4-window names (hash-green in CORRECTNESS_r04.json) rotate to
-# _BACK. Union of r01..r05 driver rows then covers 193/257 names; the
-# remaining 64 stay in _DEFERRED with local ×3-sf verification (the
-# 257th, text_curation_skyline, registered in r5 straight to
-# _DEFERRED). r6 is the optimization round: the registry and this
-# window are FROZEN — the four r5 driver reds are already inside it
-# (slots 4/42/46/48), so their canonicalized forms re-certify without
-# a rotation.
-_FRONT = [
-    # (1) the north-rule span-sequence regression gate:
-    "extract_span_regression",
-    # (2) the 49 oldest-registered never-driver-checked names
-    # (session-14 registrations, in registration order):
-    "customer_survival_km",
-    "events_acf",
-    "events_attribution",
-    "orders_benford_audit",
-    "events_hll_sketch",
-    "orders_seasonal_decompose",
-    "dedup_ppjoin_prefix",
-    "dedup_bloom_fpr_audit",
-    "dedup_record_linkage",
-    "sim_geo_grid_join",
-    "table_delete_vector_apply",
-    "table_hilbert_order",
-    "events_abtest_chi2",
-    "events_path_trigrams",
-    "orders_backlog_aging",
-    "events_cuped_adjust",
-    "stream_hll_sketch",
-    "graph_random_walks",
-    "events_ses_forecast",
-    "table_clustering_depth_audit",
-    "multimodal_scene_cuts",
-    "events_bootstrap_ci",
-    "text_cdc_shift_certificate",
-    "multimodal_phash_band_neardup",
-    "table_vacuum_orphans",
-    "events_markov_stationary",
-    "sim_centroid_drift",
-    "events_did_estimator",
-    "orders_price_index",
-    "orders_returns_shrinkage",
-    "stream_cms_sketch",
-    "events_power_analysis",
-    "text_term_burstiness",
-    "events_interarrival_cv",
-    "graph_local_clustering",
-    "late_order_priority",
-    "part_supplier_variety",
-    "bracket_revenue",
-    "extract_mojibake_repair",
-    "text_readability_fk",
-    "text_sample_alpha",
-    "events_sketch_accuracy",
-    "stream_windowed_append",
-    "source_interleaved_scan",
-    "ship_priority_mix",
-    "events_daily_type_pivot",
-    "events_daily_gap_fill",
-    "product_profit_by_nation",
-    "events_daily_type_unpivot",
-]
+# The correctness driver checks only the FIRST 50 names of queries() and
+# deposits its verdicts as CORRECTNESS_r<N>.json beside this file.
+# queries() orders the registry from those rows, so every round's window
+# goes where a driver row is most needed (tiers in _window_order). A
+# change that alters a query's output adds {name: round} to _CHANGED;
+# the entry goes inert once the driver files a row from that round on.
+_ROWS_DIR = Path(__file__).resolve().parent
+_GATE = "extract_span_regression"
+_CHANGED = {
+    name: 6
+    for name in (
+        "dedup_ngram_jaccard", "text_gopher_repetition",
+        "text_quality_ensemble", "extract_xycut_order",
+        "extract_full_pipeline", "sim_knn_join_topk", "graph_knn_bfs_hops",
+        "sim_margin_pair_mining", "sim_semdedup_prune", "text_ccnet_buckets",
+    )
+}
 
-# Names intentionally outside this round's 50-slot window: the driver
-# checks 50 of 256 per round, and 113 names entered r5 with no driver
-# row, so 64 necessarily remain deferred. Each carries a DuckDB oracle
-# verified hash-exact locally at sf0.001/0.01/0.1 (tools/check_oracle.py
-# sweeps recorded in COVERAGE.md: 247/247 and 255/255 full-registry
-# runs) plus a serial reference pin in its session test file. Ordering
-# is registration order; these lead _BACK so they head the r6 window.
-_DEFERRED: list[str] = [
-    # session-14 registrations not drained by the r5 window (6 names):
-    "sim_margin_pair_mining",
-    "stream_session_window",
-    "graph_knn_bfs_hops",
-    "forecast_revenue_change",
-    "events_peak_concurrency",
-    "events_nearest_error_gap",
-    # session-10 registrations (CDC MERGE, anchor-text graph,
-    # incremental IVF maintenance):
-    "events_merge_upsert",
-    "graph_anchor_text",
-    "sim_ivf_delta_assign",
-    # session-11 registrations (table-maintenance planning, quantized
-    # recall, SimHash-64, HITS, streaming joins, modularity, CCNet
-    # buckets, LSH sweeps, pack/quality/expectation audits):
-    "table_compaction_plan",
-    "sim_binary_quant_recall",
-    "dedup_simhash_hamming64",
-    "graph_hits",
-    "sim_matryoshka_recall",
-    "table_zonemap_prune_stats",
-    "stream_stream_join",
-    "dedup_cc_incremental",
-    "events_salted_type_totals",
-    "sim_ivf_recall_curve",
-    "graph_community_modularity",
-    "multimodal_audio_chunk_plan",
-    "text_ccnet_buckets",
-    "extract_span_lang_runs",
-    "dedup_lsh_banding_sweep",
-    "multimodal_image_tile_plan",
-    "text_pack_efficiency_report",
-    "events_quality_expectations",
-    "events_props_schema_drift",
-    "events_activity_bitmap",
-    "stream_static_enrich",
-    "table_partition_skew_report",
-    "graph_degree_assortativity",
-    "dedup_minhash_est_error",
-    "text_langid_confusion",
-    # session-12/13 registrations (snapshot expiry, column stats, CDC
-    # chunks, salted dim join, phash dedup, pareto front, IVM retract,
-    # CMS heavy hitters, bitemporal as-of, RFM, Gini, ROUGE, WAU):
-    "text_bm25_eval",
-    "table_snapshot_expiry_plan",
-    "table_column_stats",
-    "text_cdc_chunks",
-    "events_salted_dim_join",
-    "multimodal_phash_dedup",
-    "pareto_customers",
-    "sim_cluster_topterms",
-    "stream_late_drop_audit",
-    "events_session_overlap",
-    "events_ivm_retract",
-    "events_cms_heavy_hitters",
-    "multimodal_caption_align",
-    "market_basket_pairs",
-    "events_user_growth",
-    "graph_link_predict",
-    "customer_k_anonymity",
-    "events_target_encode_loo",
-    "table_shard_manifest",
-    "text_contrastive_views",
-    "cohort_ltv_triangle",
-    "events_cusum_changepoints",
-    "events_bitemporal_asof",
-    "multimodal_modality_balance",
-    "customer_rfm_segments",
-    "events_gini_concentration",
-    "text_rouge_neardup_audit",
-    "revenue_concentration",
-    "events_wau_stickiness",
-    # session-15 registration (VERDICT r4 stretch #7: the second
-    # pareto_front consumer — the (cost, quality) corpus-curation
-    # skyline) — the r5 window is reserved for backlog draining, so
-    # it enters deferred with local ×3-sf hash-exact verification:
-    "text_curation_skyline",
-]
-# _DEFERRED names lead _BACK so their position is deterministic
-# (directly after the window) and the two lists can never drift apart.
-# After the deferred block: the 50 r4-window names (every one
-# hash-green in CORRECTNESS_r04.json), then the older rotated-out
-# names, all green in r01-r03.
-_BACK = _DEFERRED + [
-    # the full r4 window, rotated out with fresh r04 hash rows:
-    "text_dsir_select",
-    "extract_table_grid",
-    "dedup_incremental_batch",
-    "dedup_lsh_quality",
-    "events_twap",
-    "graph_triangle_stats",
-    "sim_int8_quant_recall",
-    "sim_knn_join_topk",
-    "sim_mmr_select",
-    "text_bigram_logprob",
-    "text_langid_ngram",
-    "text_length_histogram",
-    "text_pack_sequences",
-    "text_quality_curriculum_bins",
-    "text_stratified_sample",
-    "text_unigram_logprob",
-    "text_winnow_fingerprints",
-    "text_winnow_shared_pairs",
-    "export_fanout",
-    "extract_template_fields_auto",
-    "extract_full_pipeline",
-    "extract_doc_confidence",
-    "extract_template_fields",
-    "text_zipf_fit",
-    "min_cost_supplier",
-    "dominant_part_suppliers",
-    "text_pii_redact",
-    "dedup_url_canonical",
-    "multimodal_interleave_filter",
-    "extract_dehyphenate",
-    "unshipped_order_revenue",
-    "nation_trade_volume",
-    "returned_item_customers",
-    "late_sole_supplier",
-    "text_line_dedup",
-    "text_source_cap",
-    "dedup_ngram_containment",
-    "customer_order_distribution",
-    "major_revenue_parts",
-    "large_order_customers",
-    "multimodal_frame_sample",
-    "stream_events_summary",
-    "stream_dedup_fingerprint",
-    "stream_resume_checkpoint",
-    "dedup_minhash_fast",
-    "dedup_minhash_fast_lsh_buckets",
-    "market_share_by_year",
-    "top_supplier_revenue",
-    "events_error_follows_click",
-    "customer_spend_deciles",
-    # older rotated-out names (green in r01-r03):
-    "events_rate_anomaly",
-    "text_pmi_collocations",
-    "text_source_kl_drift",
-    "text_source_vocab_overlap",
-    "text_heaps_fit",
-    "events_transition_matrix",
-    "sim_embedding_outliers",
-    "text_rrf_fusion",
-    "events_state_history",
-    "text_bpe_learn_merges",
-    "sim_hard_negatives",
-    "text_quality_classifier",
-    "sim_pq_adc_recall",
-    "graph_label_propagation",
-    "events_funnel",
-    "text_bm25_search",
-    "dedup_fuzzy_vocab_pairs",
-    "dedup_split_leakage_safe",
-    "graph_provenance_rank",
-    "text_span_dedup",
-    "text_gopher_quality_flags",
-    "text_allpairs_cosine",
-    "text_quality_ensemble",
-    "text_bpe_apply_fertility",
-    "graph_kcore",
-    "text_char_entropy",
-    "sim_ann_lsh_buckets",
-    "sim_cosine_topk",
-    "dedup_dup_clusters",
-    "dedup_minhash_lsh_buckets",
-    "dedup_minhash_signatures",
-    "text_deterministic_sample",
-    "text_redact_pii",
-    "dedup_exact_prefix",
-    "dedup_simhash",
-    "dedup_fingerprint_count",
-    "text_chunk_documents",
-    "extract_doc_type",
-    "extract_field_normalizers",
-    "extract_reading_order",
-    "extract_french_ocr_fixes",
-    "extract_boilerplate_strip",
-    "events_summary",
-    "events_by_type",
-    "recent_events_top100",
-    "pricing_summary",
-    "revenue_by_nation",
-    "top_customer_per_nation",
-    "order_priority_counts",
-    "customer_order_gaps",
-    "users_click_and_error",
-    "users_click_no_error",
-    "small_quantity_revenue",
-    "brand_promo_revenue",
-]
+
+def _driver_rows() -> dict[int, dict[str, dict]]:
+    """{round: {name: verdict row}} from the committed driver files."""
+    rows: dict[int, dict[str, dict]] = {}
+    for path in _ROWS_DIR.glob("CORRECTNESS_r*.json"):
+        m = re.fullmatch(r"CORRECTNESS_r(\d+)\.json", path.name)
+        if m:
+            rows[int(m.group(1))] = json.loads(path.read_text())
+    return rows
+
+
+def _window_order(names: list[str]) -> list[str]:
+    """Driver priority: the span gate, then names whose latest row is
+    red, then _CHANGED names with no row from their round, then names
+    never checked, then the rest by oldest latest row. The sort is
+    stable, so a tier keeps registration order."""
+    latest: dict[str, tuple[int, bool]] = {}
+    for rnd, rows in sorted(_driver_rows().items()):
+        for name, row in rows.items():
+            green = all(
+                row[k] is True
+                for k in ("rows_match", "schema_match", "hash_match")
+            )
+            latest[name] = (rnd, green)
+
+    def tier(name: str) -> tuple[int, int]:
+        rnd, green = latest.get(name, (0, True))
+        if name == _GATE:
+            return (0, 0)
+        if not green:
+            return (1, 0)
+        if rnd < _CHANGED.get(name, 0):
+            return (2, 0)
+        if name not in latest:
+            return (3, 0)
+        return (4, rnd)
+
+    return sorted(names, key=tier)
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
@@ -566,18 +352,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     all_q["extract_doc_confidence"] = _q_doc_confidence
     all_q["source_interleaved_scan"] = _q_source_interleaved_scan
     all_q["extract_span_regression"] = _q_span_regression
-
-    out: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
-    for name in _FRONT:
-        if name in all_q:
-            out[name] = all_q[name]
-    for name, fn in all_q.items():
-        if name not in out and name not in _BACK:
-            out[name] = fn
-    for name in _BACK:
-        if name in all_q:
-            out[name] = all_q[name]
-    return out
+    return {name: all_q[name] for name in _window_order(list(all_q))}
 
 
 # Materialized pure-Python-oracle goldens (tools/make_goldens.py) for

@@ -2460,10 +2460,10 @@ def q_ship_priority_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _SHIP_PRIORITY_MIX_SQL = f"""
 SELECT l_returnflag, l_linestatus,
-       sum(CASE WHEN o_orderpriority IN ('1-URGENT', '2-HIGH')
-                THEN 1 ELSE 0 END) AS high_count,
-       sum(CASE WHEN o_orderpriority NOT IN ('1-URGENT', '2-HIGH')
-                THEN 1 ELSE 0 END) AS low_count
+       CAST(sum(CASE WHEN o_orderpriority IN ('1-URGENT', '2-HIGH')
+                     THEN 1 ELSE 0 END) AS BIGINT) AS high_count,
+       CAST(sum(CASE WHEN o_orderpriority NOT IN ('1-URGENT', '2-HIGH')
+                     THEN 1 ELSE 0 END) AS BIGINT) AS low_count
 FROM lineitem l JOIN orders o ON l.l_orderkey = o.o_orderkey
 WHERE l_shipdate >= TIMESTAMP '{_Q12_YEAR_START}'
   AND l_shipdate < TIMESTAMP '{_Q12_YEAR_END}'
@@ -3358,7 +3358,8 @@ def q_pareto_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
 _PARETO_SQL = """
 WITH spend AS (
   SELECT o_custkey AS c_custkey,
-         sum(CAST(floor(o_totalprice * 100) AS BIGINT)) AS spend_cents
+         CAST(sum(CAST(floor(o_totalprice * 100) AS BIGINT)) AS BIGINT)
+           AS spend_cents
   FROM orders GROUP BY o_custkey
 ),
 pts AS (
@@ -6359,11 +6360,13 @@ credited AS (
 )
 SELECT CAST(c_day AS VARCHAR) AS day,
        count(*) AS n_touches,
-       sum(CASE WHEN rn_first = 1 THEN 1 ELSE 0 END) AS first_convs,
-       sum(CASE WHEN rn_last = 1 THEN 1 ELSE 0 END) AS last_convs,
-       sum(1000000 // n_touch
-           + CASE WHEN rn_last = 1 THEN 1000000 % n_touch ELSE 0 END)
-         AS linear_ppm
+       CAST(sum(CASE WHEN rn_first = 1 THEN 1 ELSE 0 END) AS BIGINT)
+         AS first_convs,
+       CAST(sum(CASE WHEN rn_last = 1 THEN 1 ELSE 0 END) AS BIGINT)
+         AS last_convs,
+       CAST(sum(1000000 // n_touch
+                + CASE WHEN rn_last = 1 THEN 1000000 % n_touch ELSE 0 END)
+            AS BIGINT) AS linear_ppm
 FROM credited
 GROUP BY c_day
 ORDER BY day

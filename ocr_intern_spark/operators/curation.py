@@ -849,11 +849,12 @@ def q_modality_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _MODALITY_BALANCE_SQL = f"""
 SELECT source, count(*) AS n_docs,
-       sum(LEAST(len(regexp_split_to_array(trim(text), '\\s+')), 24))
-         AS text_tokens,
+       CAST(sum(LEAST(len(regexp_split_to_array(trim(text), '\\s+')), 24))
+            AS BIGINT) AS text_tokens,
        count(*) * {MEDIA_TOKEN_COST} AS media_tokens,
        (count(*) * {MEDIA_TOKEN_COST} * 1000000)
-         // (sum(LEAST(len(regexp_split_to_array(trim(text), '\\s+')), 24))
+         // (CAST(sum(LEAST(len(regexp_split_to_array(trim(text), '\\s+')),
+                             24)) AS BIGINT)
              + count(*) * {MEDIA_TOKEN_COST}) AS media_share_ppm
 FROM documents
 GROUP BY source
@@ -965,9 +966,9 @@ counts AS (
     FROM d JOIN members USING (doc_id)
   ) GROUP BY doc_id, tok
 ),
-lens AS (SELECT doc_id, sum(c) AS len FROM counts GROUP BY doc_id),
+lens AS (SELECT doc_id, CAST(sum(c) AS BIGINT) AS len FROM counts GROUP BY doc_id),
 ov AS (
-  SELECT p.pa, p.pb, sum(LEAST(ca.c, cb.c)) AS overlap
+  SELECT p.pa, p.pb, CAST(sum(LEAST(ca.c, cb.c)) AS BIGINT) AS overlap
   FROM pairs p
   JOIN counts ca ON ca.doc_id = p.pa
   JOIN counts cb ON cb.doc_id = p.pb AND cb.tok = ca.tok
@@ -3235,11 +3236,11 @@ _SAMPLE_ALPHA_SQL = f"""
 WITH per AS (SELECT lang, count(*) AS n_docs FROM documents GROUP BY lang),
 s AS (SELECT lang, n_docs,
              CAST(floor(sqrt(n_docs) * 1e6) AS BIGINT) AS sqi FROM per),
-t AS (SELECT *, sum(sqi) OVER () AS tot FROM s),
+t AS (SELECT *, CAST(sum(sqi) OVER () AS BIGINT) AS tot FROM s),
 b AS (SELECT *, ({SAMPLE_ALPHA_BUDGET} * sqi) // tot AS base,
                ({SAMPLE_ALPHA_BUDGET} * sqi) % tot AS rem FROM t),
 r AS (SELECT *, row_number() OVER (ORDER BY rem DESC, lang) AS rk,
-               sum(base) OVER () AS sb FROM b)
+               CAST(sum(base) OVER () AS BIGINT) AS sb FROM b)
 SELECT lang, n_docs,
        base + CASE WHEN rk <= {SAMPLE_ALPHA_BUDGET} - sb THEN 1 ELSE 0 END
          AS sample_alloc

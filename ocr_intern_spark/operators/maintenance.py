@@ -602,7 +602,7 @@ p AS (
 )
 SELECT pre // {SHARD_BYTES} AS shard_id,
        count(*) AS n_docs,
-       sum(bytes) AS shard_bytes,
+       CAST(sum(bytes) AS BIGINT) AS shard_bytes,
        min(doc_id) AS first_doc,
        max(doc_id) AS last_doc
 FROM p

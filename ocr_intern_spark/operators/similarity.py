@@ -1990,13 +1990,13 @@ WITH scored AS (
 ),
 pos AS (SELECT * FROM scored WHERE c > 0),
 sx AS (
-  SELECT a, sum(c) AS s_x, count(*) AS n_x
+  SELECT a, CAST(sum(c) AS BIGINT) AS s_x, count(*) AS n_x
   FROM (SELECT a, c, row_number() OVER (PARTITION BY a ORDER BY c DESC, b) AS rk
         FROM pos)
   WHERE rk <= {MARGIN_K} GROUP BY a
 ),
 sy AS (
-  SELECT b, sum(c) AS s_y, count(*) AS n_y
+  SELECT b, CAST(sum(c) AS BIGINT) AS s_y, count(*) AS n_y
   FROM (SELECT b, c, row_number() OVER (PARTITION BY b ORDER BY c DESC, a) AS rk
         FROM pos)
   WHERE rk <= {MARGIN_K} GROUP BY b

@@ -277,7 +277,7 @@ dense AS (
     ON s.user_id = d.user_id AND s.day = d.day
 )
 SELECT user_id, day, n_events,
-       sum(day_cents) OVER w AS cum_cents,
+       CAST(sum(day_cents) OVER w AS BIGINT) AS cum_cents,
        day - max(CASE WHEN n_events > 0 THEN day END) OVER w
          AS days_since_active
 FROM dense
@@ -399,8 +399,9 @@ carry AS (
 ),
 run AS (
   SELECT CAST(ts AS DATE) AS day, ts,
-         sum(net) OVER (PARTITION BY CAST(ts AS DATE) ORDER BY ts
-             ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum
+         CAST(sum(net) OVER (PARTITION BY CAST(ts AS DATE) ORDER BY ts
+              ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT)
+           AS cum
   FROM net
 )
 SELECT r.day,

@@ -361,7 +361,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 # carries sf0.001 + sf0.01 + sf0.1 expectations keyed by
 # (n_docs, text_chars) of the documents table, so one fixed SQL string
 # selects the right slice at whatever sf the driver runs.
-_GOLDEN_DIR = "/root/repo/tests/goldens"
+_GOLDEN_DIR = str(Path(__file__).resolve().parent / "tests" / "goldens")
 _GOLDEN_KEY = (
     "n_docs = (SELECT count(*) FROM documents) "
     "AND text_chars = (SELECT sum(length(text)) FROM documents)"

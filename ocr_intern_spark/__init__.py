@@ -9,10 +9,11 @@ plus the relational analytics surface (aggregates, joins, top-K) and
 large-scale training-data-pipeline operators (dedup, similarity
 search, text quality).
 
-Architecture: declarative DataFrame plans end to end; per-document
-non-relational semantics live in exactly two vectorized Arrow stages
-(`mapInPandas` media OCR, `applyInPandas` reading order) — no
-per-row Python UDFs anywhere.
+Architecture: declarative DataFrame plans end to end. Where Python
+is needed (the recognizer, template regions, layout order, media
+renderers, keyed streaming state), it runs only in Arrow-batched
+stages — `mapInPandas`, `applyInPandas*`, a grouped-agg pandas UDF,
+an Arrow UDTF — never as a per-row Python UDF.
 """
 
 __version__ = "0.1.0"

@@ -1996,37 +1996,6 @@ GOPHER_MAX_WORDS = 100_000
 # --- multi-signal quality ensemble --------------------------------------------
 
 
-def _midrank_map(vals: DataFrame, col: str) -> DataFrame:
-    """Distributed exact mid-rank percentile of a QUANTIZED signal:
-    per-value counts (map-side partials) → cumulative window over the
-    bounded distinct-value frame (quantization bounds it: quality is
-    quarters, ratios/entropy are 3dp → ≤8001 values) → broadcast
-    value→percentile map. pct(v) = (below + ½·eq)/N — the mid-rank
-    convention, so ascending and descending orientations are exact
-    complements. No corpus-sized global sort anywhere."""
-    from pyspark.sql.window import Window
-
-    cnt = vals.groupBy(col).agg(F.count("*").alias("c"))
-    # bounded-window: frame is the distinct-value table of an integer signal
-    # (≤8001 values by construction), never the corpus
-    w = Window.orderBy(col).rowsBetween(Window.unboundedPreceding, 0)
-    tot = vals.agg(F.count("*").cast("double").alias("nn"))
-    return (
-        cnt.select(
-            col,
-            (F.sum("c").over(w) - F.col("c")).alias("below"),
-            "c",
-        )
-        .crossJoin(F.broadcast(tot))
-        .select(
-            col,
-            ((F.col("below") + 0.5 * F.col("c")) / F.col("nn")).alias(
-                f"pct_{col}"
-            ),
-        )
-    )
-
-
 def q_quality_ensemble(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Multi-signal quality ensemble (the FineWeb-style composite:
     no single heuristic survives contact with a web crawl, so rank

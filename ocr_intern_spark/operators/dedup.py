@@ -816,99 +816,6 @@ def connected_components(
     )
 
 
-def connected_components_star(
-    pairs: DataFrame, max_rounds: int = 30
-) -> DataFrame:
-    """Large-star/small-star connected components (Kiveris et al.,
-    "Connected Components in MapReduce and Beyond", SoCC'14):
-    alternately rewire each node's larger neighbors (large-star) and
-    smaller neighbors (small-star) to the neighborhood minimum until
-    the edge set is a union of stars rooted at each component's
-    minimum node.
-
-    Scale rationale vs `connected_components` (min-label
-    propagation): propagation needs O(component diameter) rounds — a
-    10^6-long chain needs 10^6 shuffles — while star contraction
-    converges in O(log n) rounds on ANY topology, because each round
-    at least halves the distance of every node to its root. Same
-    output contract: (doc_id, cluster_id = component min). One driver
-    action per round (a count+hash checksum that also materializes
-    the round's persist)."""
-    # checkpoint (NOT persist) each round: the alternating-star
-    # plan nests two joins + unions per round, and an un-truncated
-    # logical lineage grows exponentially — round ~8 OOMs the driver
-    # just STRINGIFYING the plan tree. _round_checkpoint cuts the
-    # lineage at every round boundary (reliable checkpoint when a
-    # dir is configured; localCheckpoint's no-lineage trade is
-    # documented on the helper).
-    E = (
-        pairs.select(F.least("a", "b").alias("u"),
-                     F.greatest("a", "b").alias("v"))
-        .where(F.col("u") != F.col("v"))
-        .distinct()
-        .transform(_round_checkpoint)
-    )
-    nodes = (
-        pairs.select(F.col("a").alias("doc_id"))
-        .unionByName(pairs.select(F.col("b").alias("doc_id")))
-        .distinct()
-    )
-    prev_chk = None
-    for _ in range(max_rounds):
-        # large-star: full neighborhoods; larger neighbors rewire to
-        # min(N(u) ∪ {u})
-        nbrs = E.select(F.col("u").alias("x"), F.col("v").alias("y")).unionByName(
-            E.select(F.col("v").alias("x"), F.col("u").alias("y"))
-        )
-        mins = nbrs.groupBy("x").agg(F.min("y").alias("miny")).select(
-            "x", F.least(F.col("miny"), F.col("x")).alias("m")
-        )
-        e1 = (
-            nbrs.join(mins, "x")
-            .where(F.col("y") > F.col("x"))
-            .select(F.col("m").alias("u"), F.col("y").alias("v"))
-            .where(F.col("u") != F.col("v"))
-            .distinct()
-        )
-        # small-star: each node's SMALLER neighbors (key = larger
-        # endpoint) all rewire to their minimum, and the node itself
-        # attaches to that minimum
-        sm = e1.select(F.col("v").alias("x"), F.col("u").alias("y"))
-        mins2 = sm.groupBy("x").agg(F.min("y").alias("m"))
-        attach_self = mins2.select(F.col("m").alias("u"), F.col("x").alias("v"))
-        attach_nbrs = (
-            sm.join(mins2, "x")
-            .where(F.col("y") != F.col("m"))
-            .select(F.col("m").alias("u"), F.col("y").alias("v"))
-        )
-        E = _round_checkpoint(attach_self.unionByName(attach_nbrs).distinct())
-        # bit_xor, not sum: ANSI mode (Spark 4 default) raises on
-        # BIGINT sum overflow; xor is order-independent and closed
-        row = E.agg(
-            F.count("*").alias("n"),
-            F.expr("bit_xor(xxhash64(u, v))").alias("h"),
-        ).first()
-        chk = (row["n"], row["h"])
-        if chk == prev_chk:
-            break
-        prev_chk = chk
-    else:
-        raise RuntimeError(
-            f"connected_components_star did not converge in {max_rounds} rounds"
-        )
-    labels = (
-        nodes.join(E.select(F.col("v").alias("doc_id"),
-                            F.col("u").alias("cluster_id")),
-                   "doc_id", "left")
-        .select(
-            "doc_id",
-            F.coalesce("cluster_id", "doc_id").alias("cluster_id"),
-        )
-        .orderBy("doc_id")
-    )
-    return labels
-
-
 _DUP_CLUSTERS_SQL = f"""
 WITH RECURSIVE pairs AS (
   SELECT a, b FROM (

@@ -39,7 +39,6 @@ Scale design notes (100 TB / 1000 executors):
 from __future__ import annotations
 
 import functools
-import re
 from typing import Any, Callable, Iterable, Iterator
 
 import numpy as np
@@ -258,9 +257,7 @@ def _fused_tokens(
     return m, det
 
 
-def _fuse_batch(
-    rows: pd.DataFrame, recognize: Recognizer, order_mode: str = "lines"
-) -> pd.DataFrame:
+def _fuse_batch(rows: pd.DataFrame, recognize: Recognizer) -> pd.DataFrame:
     """Hybrid fusion for one Arrow batch of media rows — vectorized
     across ALL refs at once (no per-ref Python work beyond the
     recognizer call itself).
@@ -289,34 +286,14 @@ def _fuse_batch(
         m = m.sort_values(["rid", "blk", "j"], kind="stable").reset_index(
             drop=True
         )
-        if order_mode == "xycut":
-            # north-star layout mode: recursive XY-cut + baseline
-            # clustering per media ref (operators/layout.py) — column
-            # segmentation the flat line sort cannot express. Per-rid
-            # recursion matches the per-ref recognizer granularity.
-            from ocr_intern_spark.operators.layout import xycut_order
-
-            chunks = []
-            for _rid, g in m.groupby("rid", sort=True):
-                order = xycut_order(
-                    g["x"].to_numpy(), g["y"].to_numpy(),
-                    g["w"].to_numpy(), g["h"].to_numpy(),
-                    (g["blk"] == 0).to_numpy(),
-                )
-                chunks.append(g.index.to_numpy()[order])
-            m = m.loc[np.concatenate(chunks)].reset_index(drop=True)
-        else:
-            # R2 (reference default): line binning + per-line RTL
-            # strict-majority vote
-            line = m["y"] // np.maximum(1, m["h"])
-            m = m.assign(line=line, arab=(m["blk"] == 0))
-            grp = m.groupby(["rid", "line"])["arab"]
-            rtl = grp.transform("sum") > grp.transform("size") / 2
-            signed_x = np.where(rtl, -m["x"], m["x"])
-            perm = np.lexsort(
-                (signed_x, m["line"].to_numpy(), m["rid"].to_numpy())
-            )
-            m = m.iloc[perm].reset_index(drop=True)
+        # R2: line binning + per-line RTL strict-majority vote
+        line = m["y"] // np.maximum(1, m["h"])
+        m = m.assign(line=line, arab=(m["blk"] == 0))
+        grp = m.groupby(["rid", "line"])["arab"]
+        rtl = grp.transform("sum") > grp.transform("size") / 2
+        signed_x = np.where(rtl, -m["x"], m["x"])
+        perm = np.lexsort((signed_x, m["line"].to_numpy(), m["rid"].to_numpy()))
+        m = m.iloc[perm].reset_index(drop=True)
         m["seq"] = m.groupby("rid").cumcount()
         parts.append(
             m[["rid", "seq"]].assign(text=m["text"].str.strip(), kind="ocr")
@@ -359,7 +336,6 @@ class ListAccumulator:
 def make_ocr_stage(
     recognize: Recognizer,
     timing_acc=None,
-    order_mode: str = "lines",
 ) -> Callable[[Iterator[pd.DataFrame]], Iterator[pd.DataFrame]]:
     """mapInPandas function: (doc_id, offset, pos, media_ref) batches →
     FLAT_DDL rows, one per surviving OCR token, seq = reading order.
@@ -375,7 +351,7 @@ def make_ocr_stage(
         try:
             for pdf in batches:
                 rows += len(pdf)
-                yield _fuse_batch(pdf, recognize, order_mode=order_mode)
+                yield _fuse_batch(pdf, recognize)
         finally:
             if timing_acc is not None:
                 from pyspark import TaskContext
@@ -397,7 +373,6 @@ def ocr_media_spans(
     recognize: Recognizer,
     ocr_partitions: int | None = None,
     timing_acc=None,
-    order_mode: str = "lines",
 ) -> DataFrame:
     media = flat.where(
         (F.col("kind") == "media")
@@ -408,8 +383,7 @@ def ocr_media_spans(
         # balance recognizer work independent of document skew
         media = media.repartition(ocr_partitions, F.hash("media_ref"))
     return media.mapInPandas(
-        make_ocr_stage(recognize, timing_acc=timing_acc, order_mode=order_mode),
-        schema=FLAT_DDL,
+        make_ocr_stage(recognize, timing_acc=timing_acc), schema=FLAT_DDL
     )
 
 
@@ -529,7 +503,6 @@ def extract(
     ocr_partitions: int | None = None,
     partitions: int | None = None,
     ocr_timing_acc=None,
-    order_mode: str = "lines",
 ) -> DataFrame:
     """documents(doc_id, spans[kind,text,media_ref,offset]) →
     extracted(doc_id, spans[kind,text,media_ref,order]).
@@ -539,12 +512,6 @@ def extract(
     span array. Required for idempotent checkpoint/resume: the
     anti-join against the extracted table must see every processed
     doc (SURVEY.md §4 item 3).
-
-    ``order_mode``: "lines" (default) is the reference's R2 flat line
-    sort — the golden span-sequence contract; "xycut" swaps in the
-    north-star layout reconstruction (recursive column segmentation +
-    baseline-clustered lines, operators/layout.py) for multi-column
-    pages the reference's sort interleaves.
     """
     p = partitions or docs.sparkSession.sparkContext.defaultParallelism
     # a pre-spread input (derive_spans' span frame) skips the exchange
@@ -560,7 +527,6 @@ def extract(
         recognize,
         ocr_partitions=ocr_partitions or p,
         timing_acc=ocr_timing_acc,
-        order_mode=order_mode,
     )
     # one sentinel row per doc → every doc_id survives assembly with
     # an empty array, no join (see assemble docstring)

@@ -266,9 +266,8 @@ def _batch_aggregates(
     """Recognizer calls + A2/A3 aggregates for one Arrow batch: one
     row per (media, template-field) gid with columns doc_id,
     media_ref, field_key, lang, best_text, base_conf, digit_conf,
-    joined — the candidate inputs the A4/A5 selection consumes
-    (either pandas-side via _select_fields or Catalyst-side via
-    select_fields_catalyst)."""
+    joined — the candidate inputs the A4/A5 selection
+    (_select_fields) consumes."""
     tok_rows = []
     meta = []
     tids = (
@@ -352,140 +351,6 @@ def template_fields(
         .repartition(p, F.hash("media_ref"))
     )
     return media.mapInPandas(make_fields_stage(recognize, template), schema=FIELDS_DDL)
-
-
-CANDIDATES_DDL = (
-    "doc_id string, media_ref string, field_key string, lang string, "
-    "best_text string, base_conf double, digit_conf double, joined string"
-)
-
-
-def make_candidates_stage(
-    recognize: Callable[[str], Iterable],
-    template: tuple[tuple[str, str, str | None], ...] = DEFAULT_TEMPLATE,
-) -> Callable[[Iterator[pd.DataFrame]], Iterator[pd.DataFrame]]:
-    """Arrow stage emitting the gid-level CANDIDATE AGGREGATES instead
-    of final field rows — the recognizer boundary and nothing else;
-    A4/A5 selection then runs wholly in Catalyst
-    (select_fields_catalyst), leaving no per-string Python anywhere."""
-
-    def stage(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield _batch_aggregates(pdf, recognize, template, None)
-
-    return stage
-
-
-def select_fields_catalyst(agg: DataFrame) -> DataFrame:
-    """A4 candidate scoring + A5 receipt boost + V11 normalization as
-    ONE Catalyst projection over the candidates frame — the fully
-    vectorized alternative to the pandas _select_fields (equivalence
-    pinned by tests/test_template_fields.py::test_catalyst_select_
-    matches_arrow_stage).
-
-    The reference's running-winner loop (template_extractor.py:
-    197-250) is an `aggregate` fold over the 3 candidates in
-    reference order, each normalized by the native V11 when-cascade
-    (functions/normalizers.py), updating on a STRICT lexicographic
-    (valid, score, len) improvement from the (best_text, base_conf,
-    invalid) start — bitwise the same decision sequence, no Python.
-    digit_conf arrives as NaN (pandas) or NULL (empty group) — both
-    mean 'absent'."""
-    from ocr_intern_spark.functions.normalizers import normalize_field
-
-    digit_ok = F.col("digit_conf").isNotNull() & ~F.isnan("digit_conf")
-    digits_only = F.regexp_replace("joined", r"[^\d/-]+", "")
-    digit_score = (
-        F.when(digit_ok, F.col("digit_conf")).otherwise(F.col("base_conf")) + 0.1
-    )
-
-    def cand(text_col, score_col):
-        nf = normalize_field(F.col("field_key"), text_col)
-        return F.struct(
-            text_col.alias("text"),
-            score_col.cast("double").alias("score"),
-            F.length(text_col).alias("len"),
-            nf["valid"].alias("valid"),
-            nf["value"].alias("norm"),
-            nf["type"].alias("type"),
-        )
-
-    cands = F.filter(
-        F.array(
-            cand(F.col("joined"), F.col("base_conf")),
-            cand(digits_only, digit_score),
-            cand(F.col("best_text"), F.col("base_conf")),
-        ),
-        lambda c: F.length(c["text"]) > 0,
-    )
-    init = F.struct(
-        F.col("best_text").alias("text"),
-        F.col("base_conf").cast("double").alias("score"),
-        F.length("best_text").alias("len"),
-        F.lit(False).alias("valid"),
-        F.lit("").alias("norm"),
-        F.lit("text").alias("type"),
-    )
-
-    def step(acc, c):
-        cv, av = c["valid"].cast("int"), acc["valid"].cast("int")
-        better = (cv > av) | (
-            (cv == av)
-            & (
-                (c["score"] > acc["score"])
-                | ((c["score"] == acc["score"]) & (c["len"] > acc["len"]))
-            )
-        )
-        return F.when(better, c).otherwise(acc)
-
-    win = F.aggregate(cands, init, step)
-
-    is_receipt = F.element_at(F.split("field_key", r"\."), -1) == "receipt_no"
-    fullm = win["text"].rlike(r"^\d{4}/\d{3,5}$")
-    conf = (
-        F.when(
-            is_receipt & digit_ok,
-            F.when(fullm, F.greatest(F.col("digit_conf") * 2.0, F.lit(40.0)))
-            .otherwise(F.col("digit_conf")),
-        )
-        .otherwise(F.col("base_conf"))
-    )
-    return agg.select(
-        "doc_id",
-        "media_ref",
-        "field_key",
-        win["text"].alias("value"),
-        win["norm"].alias("norm"),
-        win["valid"].alias("valid"),
-        win["type"].alias("type"),
-        conf.alias("conf"),
-        "lang",
-    )
-
-
-def template_fields_catalyst(
-    docs: DataFrame,
-    recognize: Callable[[str], Iterable],
-    template: tuple[tuple[str, str, str | None], ...] = DEFAULT_TEMPLATE,
-    partitions: int | None = None,
-) -> DataFrame:
-    """template_fields with selection moved OUT of the Arrow stage:
-    the stage stops at the recognizer + per-gid aggregates, and
-    A4/A5/V11 run as native Catalyst expressions on the resulting
-    frame. Same output contract as template_fields; at scale this
-    keeps the Python worker time recognizer-bound and lets the
-    selection join whole-stage codegen."""
-    p = partitions or docs.sparkSession.sparkContext.defaultParallelism
-    media = (
-        docs.select("doc_id", F.explode("spans").alias("s"))
-        .where((F.col("s.kind") == "media") & (F.col("s.media_ref") != ""))
-        .select("doc_id", F.col("s.media_ref").alias("media_ref"))
-        .repartition(p, F.hash("media_ref"))
-    )
-    agg = media.mapInPandas(
-        make_candidates_stage(recognize, template), schema=CANDIDATES_DDL
-    )
-    return select_fields_catalyst(agg)
 
 
 FIELDS_AUTO_DDL = FIELDS_DDL + ", template_id string"

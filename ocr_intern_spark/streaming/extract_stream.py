@@ -257,86 +257,6 @@ def stream_heavy_hitters(
     )
 
 
-def stream_heavy_hitters_tws(
-    toks: DataFrame, min_count: int, idle_ttl_ms: int = 600_000
-) -> DataFrame:
-    """Heavy-hitter promotion on the Spark 4 `transformWithState`
-    API (`StatefulProcessor` + typed ValueState with TTL) — the
-    successor to applyInPandasWithState that `stream_heavy_hitters`
-    uses. Same exactly-once promotion semantics (pinned for parity in
-    test_transform_with_state.py); the differences are the 100 TB
-    operational wins the new API buys:
-
-    * state decay is a per-value TTL the STORE enforces (no timer
-      bookkeeping in user code, no timed-out-key callback path);
-    * state is schema'd and evolvable (named ValueState vs a bare
-      tuple), so adding a field doesn't invalidate checkpoints;
-    * requires the RocksDB state store provider — disk-backed state,
-      the provider a real deployment runs anyway.
-
-    Runtime dependency: the Python↔JVM state server speaks protobuf
-    (`google.protobuf`) in the driver, the streaming driver worker,
-    and every task worker. Where the package isn't installed,
-    `tools/pbshim/sitecustomize.py` (opt-in via PYTHONPATH) activates
-    a vendored pure-Python runtime — the end-to-end pin in
-    test_transform_with_state.py runs the full wire protocol through
-    it, plus a fake-handle unit test pinning the processor logic with
-    no protocol at all.
-    """
-    cls = _make_heavy_hitters_processor_cls()
-    return toks.groupBy("tok").transformWithStateInPandas(
-        statefulProcessor=cls(min_count, idle_ttl_ms),
-        outputStructType=HH_OUT_DDL,
-        outputMode="append",
-        timeMode="ProcessingTime",
-    )
-
-
-def _make_heavy_hitters_processor_cls():
-    """Build the StatefulProcessor subclass lazily so importing this
-    module never requires the pyspark streaming-state stack."""
-    import pandas as pd
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    class HeavyHittersProcessor(StatefulProcessor):
-        """Promote a token exactly once when its running count crosses
-        `min_count`; idle keys decay via store-enforced TTL."""
-
-        def __init__(self, min_count: int, idle_ttl_ms: int) -> None:
-            self._min_count = min_count
-            self._idle_ttl_ms = idle_ttl_ms
-
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._st = handle.getValueState(
-                "hh", _HH_STATE_DDL, ttlDurationMs=self._idle_ttl_ms
-            )
-
-        def handleInputRows(self, key, rows, timerValues):
-            cnt, promoted = (
-                self._st.get() if self._st.exists() else (0, False)
-            )
-            for pdf in rows:
-                cnt += len(pdf)
-            emit = (not promoted) and cnt >= self._min_count
-            self._st.update((cnt, bool(promoted or emit)))
-            if emit:
-                yield pd.DataFrame({"tok": [key[0]], "count": [cnt]})
-
-        def close(self) -> None:
-            pass
-
-    return HeavyHittersProcessor
-
-
-def __getattr__(name):
-    if name == "HeavyHittersProcessor":
-        return _make_heavy_hitters_processor_cls()
-    raise AttributeError(name)
-
-
 def sessionize_events(
     events: DataFrame,
     gap: str = "30 minutes",

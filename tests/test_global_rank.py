@@ -4,6 +4,7 @@ the zipf full-vocab single-partition rank was the last unpartitioned
 window over an unbounded frame; this suite keeps it the last)."""
 
 import glob
+import os
 import re
 
 from pyspark.sql import functions as F
@@ -83,7 +84,8 @@ def test_every_unpartitioned_window_is_marked_bounded():
     six preceding lines stating why its frame is bounded by a
     constant/config, not by data. New unbounded windows fail here."""
     offenders = []
-    for path in glob.glob("/root/repo/ocr_intern_spark/**/*.py", recursive=True):
+    pkg = os.path.join(os.path.dirname(__file__), "..", "ocr_intern_spark")
+    for path in glob.glob(os.path.join(pkg, "**", "*.py"), recursive=True):
         lines = open(path).read().splitlines()
         for i, line in enumerate(lines):
             if "Window.orderBy(" not in line:

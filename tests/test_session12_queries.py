@@ -4,13 +4,15 @@ never a re-run of the Spark code."""
 
 import hashlib
 import math
+import os
 from collections import defaultdict
 
 import pyarrow.parquet as pq
 import pytest
 
 SF_DIR = "/root/testdata/sf0.001"
-GOLDEN = "/root/repo/tests/goldens/extract_full_pipeline.parquet"
+GOLDEN = os.path.join(os.path.dirname(__file__), "goldens",
+                      "extract_full_pipeline.parquet")
 
 
 def _plan(df) -> str:

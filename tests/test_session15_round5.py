@@ -226,7 +226,8 @@ def test_bench_fast_emits_compact_parseable_tail_line():
         tempfile.mkdtemp(prefix="bench_detail_"), "last_run.json"
     )
     out = subprocess.run(
-        [sys.executable, "/root/repo/bench.py", "--fast"],
+        [sys.executable, os.path.join(os.path.dirname(__file__), "..", "bench.py"),
+         "--fast"],
         capture_output=True,
         text=True,
         timeout=1800,

@@ -2,11 +2,7 @@
 pure-Python oracle, plus hand-pinned unit cases for the quirky bits."""
 
 from ocr_intern_spark.oracle.semantics import Token
-from ocr_intern_spark.oracle.template import (
-    DEFAULT_TEMPLATE,
-    extract_field,
-    extract_template_fields,
-)
+from ocr_intern_spark.oracle.template import extract_field, extract_template_fields
 from ocr_intern_spark.operators.template_fields import template_fields
 from ocr_intern_spark.sources.corpus import corpus_to_spark, make_corpus, stub_ocr_tokens
 
@@ -86,25 +82,3 @@ def test_spark_operator_matches_oracle(spark):
                     )
     assert got == expected
     assert len(got) > 100
-
-
-def test_catalyst_select_matches_arrow_stage(spark):
-    """V11-vectorization pin: selection moved into Catalyst
-    (select_fields_catalyst over the candidates stage) must reproduce
-    the pandas _select_fields path row-for-row — same winner, same
-    norm/valid/type from the native normalize_field cascade, same
-    receipt-boosted conf."""
-    from ocr_intern_spark.operators.template_fields import (
-        template_fields_catalyst,
-    )
-
-    docs_df = corpus_to_spark(spark, 40, seed=42, partitions=4)
-    key = lambda r: (r["doc_id"], r["media_ref"], r["field_key"])
-    val = lambda r: (r["value"], r["norm"], r["valid"], r["type"],
-                     round(r["conf"], 9), r["lang"])
-    arrow = {key(r): val(r)
-             for r in template_fields(docs_df, stub_ocr_tokens).collect()}
-    cat = {key(r): val(r)
-           for r in template_fields_catalyst(docs_df, stub_ocr_tokens).collect()}
-    assert cat == arrow
-    assert len(cat) > 100

@@ -22,7 +22,7 @@ import subprocess
 import sys
 import time
 
-HEAD_DIR = "/root/repo"
+HEAD_DIR = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 R2_COMMIT = "c7401f5"  # "round 2: end-of-round snapshot"
 R2_DIR = "/tmp/ab_r2_worktree"
 SF_DIR = "/root/testdata/sf0.1"

@@ -10,11 +10,14 @@ and an order-insensitive value hash. Usage:
 from __future__ import annotations
 
 import hashlib
+import os
 import sys
+from pathlib import Path
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+REPO = str(Path(__file__).resolve().parents[1])
+sys.path.insert(0, REPO)
 
 TABLES = (
     "region nation customer supplier part orders lineitem events "
@@ -50,6 +53,10 @@ def main() -> None:
     import __spark_entry__ as entrymod
     from pyspark.sql import SparkSession
 
+    # the Python workers import the package too: pin them to this tree
+    os.environ["PYTHONPATH"] = os.pathsep.join(
+        filter(None, [REPO, os.environ.get("PYTHONPATH")])
+    )
     spark = (
         SparkSession.builder.master("local[8]")
         .config("spark.sql.shuffle.partitions", "16")

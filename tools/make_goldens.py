@@ -27,12 +27,14 @@ from __future__ import annotations
 
 import sys
 from decimal import ROUND_HALF_UP, Decimal
+from pathlib import Path
 
 import pandas as pd
 
-sys.path.insert(0, "/root/repo")
+REPO = Path(__file__).resolve().parents[1]
+sys.path.insert(0, str(REPO))
 
-GOLDEN_DIR = "/root/repo/tests/goldens"
+GOLDEN_DIR = str(REPO / "tests" / "goldens")
 
 
 def spark_round6(x: float) -> float:

@@ -237,22 +237,26 @@ def make_fields_stage(
     templates_by_id: dict[str, tuple[tuple[str, str, str | None], ...]] | None = None,
 ) -> Callable[[Iterator[pd.DataFrame]], Iterator[pd.DataFrame]]:
     """Arrow stage. With ``templates_by_id`` set, each input row picks
-    its template via its ``template_id`` column (A7-driven selection);
-    unknown ids contribute no field rows (the reference records
+    its template via its ``template_id`` column (A7-driven selection)
+    and its output rows carry that ``template_id`` (field_key alone is
+    ambiguous across templates sharing section/field names); unknown
+    ids contribute no field rows (the reference records
     template_type='unknown' and runs no template extraction). Without
     it, the fixed ``template`` applies to every row."""
+    keys = ["doc_id", "media_ref", "field_key", "lang"]
+    out_cols = ["doc_id", "media_ref", "field_key", "value", "norm",
+                "valid", "type", "conf", "lang"]
+    if templates_by_id is not None:
+        keys.append("template_id")
+        out_cols.append("template_id")
 
     def stage(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             agg = _batch_aggregates(pdf, recognize, template, templates_by_id)
-            out_cols = ["doc_id", "media_ref", "field_key", "value", "norm",
-                        "valid", "type", "conf", "lang"]
             if not len(agg):
                 yield pd.DataFrame({c: [] for c in out_cols})
                 continue
-            sel = _select_fields(agg)
-            res = agg[["doc_id", "media_ref", "field_key", "lang"]].join(sel)
-            yield res[out_cols]
+            yield agg[keys].join(_select_fields(agg))[out_cols]
 
     return stage
 
@@ -265,9 +269,11 @@ def _batch_aggregates(
 ) -> pd.DataFrame:
     """Recognizer calls + A2/A3 aggregates for one Arrow batch: one
     row per (media, template-field) gid with columns doc_id,
-    media_ref, field_key, lang, best_text, base_conf, digit_conf,
-    joined — the candidate inputs the A4/A5 selection
-    (_select_fields) consumes."""
+    media_ref, field_key, lang, template_id, best_text, base_conf,
+    digit_conf, joined — the candidate inputs the A4/A5 selection
+    (_select_fields) consumes. template_id is the row's own (None
+    without ``templates_by_id``): a per-DOC decision, so two docs
+    sharing a media_ref under different templates stay apart."""
     tok_rows = []
     meta = []
     tids = (
@@ -284,7 +290,9 @@ def _batch_aggregates(
         for section, name, explicit in tpl:
             key = f"{section}.{name}"
             gid = len(meta)
-            meta.append((doc_id, ref, key, field_lang(section, name, explicit)))
+            meta.append(
+                (doc_id, ref, key, field_lang(section, name, explicit), tid)
+            )
             for j, t in enumerate(recognize(f"{ref}#{key}")):
                 tok_rows.append(
                     (gid, j, t.text or "", float(t.conf),
@@ -293,7 +301,8 @@ def _batch_aggregates(
     if not meta:
         return pd.DataFrame(
             {c: [] for c in ["doc_id", "media_ref", "field_key", "lang",
-                             "best_text", "base_conf", "digit_conf", "joined"]}
+                             "template_id", "best_text", "base_conf",
+                             "digit_conf", "joined"]}
         )
 
     tf = pd.DataFrame(tok_rows, columns=["gid", "j", "text", "conf", "area"])
@@ -326,6 +335,7 @@ def _batch_aggregates(
             "media_ref": [m[1] for m in meta],
             "field_key": [m[2] for m in meta],
             "lang": [m[3] for m in meta],
+            "template_id": [m[4] for m in meta],
             "best_text": best_text.reindex(gids, fill_value=""),
             "base_conf": base_conf.reindex(gids).fillna(0.0),
             "digit_conf": digit_conf.reindex(gids),
@@ -396,18 +406,7 @@ def template_fields_auto(
         .repartition(p, F.hash("media_ref"))
     )
     by_id = {tid: t.field_tuples() for tid, t in TEMPLATES.items()}
-    stage = make_fields_stage(recognize, templates_by_id=by_id)
-
-    def stage_with_tid(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        # re-attach template_id to the output rows (field_key alone is
-        # ambiguous across templates sharing section/field names);
-        # keyed by doc_id — template_id is a per-DOC decision, and a
-        # media_ref shared by two docs with different detected
-        # templates would mislabel one of them under a ref-keyed map
-        for pdf in batches:
-            tid_by_doc = dict(zip(pdf["doc_id"], pdf["template_id"]))
-            for out in stage(iter([pdf])):
-                out["template_id"] = out["doc_id"].map(tid_by_doc)
-                yield out
-
-    return media.mapInPandas(stage_with_tid, schema=FIELDS_AUTO_DDL)
+    return media.mapInPandas(
+        make_fields_stage(recognize, templates_by_id=by_id),
+        schema=FIELDS_AUTO_DDL,
+    )

@@ -12,17 +12,36 @@ Determinism contract (what makes a streaming query hash-checkable):
 
 * input is staged into N parquet files and consumed with
   ``maxFilesPerTrigger=1``, so the job genuinely executes as N
-  incremental micro-batches with state carried between them (each
-  query asserts ``n_batches > 1`` — a single-batch run would prove
-  nothing);
+  incremental micro-batches with state carried between them;
 * the observable output is either a **complete-mode aggregation**
   (final state over all input is order-independent — the same answer
-  whatever the micro-batch interleaving) or a **stateless per-row
+  whatever the micro-batch interleaving), a **stateless per-row
   transform through an exactly-once file sink** (set-equality with the
-  batch answer regardless of batching);
+  batch answer regardless of batching), or an **append-mode watermarked
+  result over time-sliced input** (no row is ever late, so the emitted
+  set is a pure function of the data);
 * every aggregate lands in a canonical type (counts stay BIGINT; sums
   that could exceed 9 significant digits are emitted as digit STRINGS
   on both engines — the dsir/table-grid lesson from round 3).
+
+The harness, once each, shared by all ten queries:
+
+* **Two staging policies.** ``_stage`` round-robins a table into
+  _N_FILES files: for the order-independent queries (complete-mode
+  aggregates, the sketches, the stateless resume proof), where which
+  row lands in which batch cannot change the answer. ``_time_slices``
+  + ``_stage_slices`` write file k as the k-th contiguous ceil-sized
+  slice of the (ts, event_id) order with strictly increasing mtimes:
+  for the append-mode watermarked queries, whose output depends on
+  arrival order. Both stage on the executors; the corpus never passes
+  through the driver.
+* **One runner.** ``_run`` starts a stream with Trigger.AvailableNow
+  and a checkpoint, awaits it, and returns the progress of its
+  non-empty micro-batches — raising if fewer than ``min_batches``
+  (default 2) ran, since a run collapsed into one micro-batch leaves
+  the incremental-state path untested.
+* ``_file_stream`` (the one file-stream reader), ``_scratch`` (the
+  scratch directory) and ``_utc`` (the session time-zone pin).
 
 Scale notes (100 TB): complete mode is used here only as the
 *verification harness* — its state is one row per group (event types /
@@ -50,54 +69,147 @@ import os
 import shutil
 import tempfile
 import uuid
+from collections.abc import Iterator
+from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import DataStreamWriter
+from pyspark.sql.types import StructField, StructType, TimestampType
 
+from ocr_intern_spark.operators.skew import global_rank
 from ocr_intern_spark.sources.tables import table
 
 _N_FILES = 8
 
 
-def _stage(spark: SparkSession, sf_dir: str, name: str, dest: str) -> None:
-    """Stage a test table as _N_FILES parquet part-files under dest."""
+@contextmanager
+def _scratch(prefix: str) -> Iterator[str]:
+    """A fresh scratch directory, removed on exit."""
+    tmp = tempfile.mkdtemp(prefix=prefix)
+    try:
+        yield tmp
+    finally:
+        shutil.rmtree(tmp, ignore_errors=True)
+
+
+@contextmanager
+def _utc(spark: SparkSession) -> Iterator[None]:
+    """Pin the session time zone to UTC, restoring the old value on
+    exit. The time-sliced queries read the zoneless ``ts`` as TIMESTAMP
+    under this pin so the wall values and day buckets match the
+    oracle's date_trunc exactly, and materialize their result inside
+    it so the returned frame is zone-independent at collect time."""
+    key = "spark.sql.session.timeZone"
+    old = spark.conf.get(key, None)
+    spark.conf.set(key, "UTC")
+    try:
+        yield
+    finally:
+        if old is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, old)
+
+
+def _stage(spark: SparkSession, sf_dir: str, name: str, dest: str) -> StructType:
+    """Order-independent staging: round-robin a test table into
+    _N_FILES parquet part-files under dest; returns its schema."""
+    df = table(spark, sf_dir, name)
+    df.repartition(_N_FILES).write.mode("overwrite").parquet(dest)
+    return df.schema
+
+
+def _time_slices(df: DataFrame) -> DataFrame:
+    """Time-sliced staging, step 1: label each row with ``slice`` =
+    the k-th of _N_FILES contiguous ceil-sized slices of the
+    (ts, event_id) order — the two-pass global rank, so no single
+    task or driver sorts the input. A caller may adjust ``slice``
+    before step 2 (the late-drop audit ships some rows late)."""
+    ranked = global_rank(df, F.col("ts"), F.col("event_id"), rank_name="_r")
+    n = ranked.agg(F.max("_r").alias("_n"))
+    return ranked.crossJoin(F.broadcast(n)).select(
+        *df.columns,
+        F.least(
+            F.expr(f"(_r - 1) DIV ((_n + {_N_FILES - 1}) DIV {_N_FILES})"),
+            F.lit(_N_FILES - 1),
+        )
+        .cast("int")
+        .alias("slice"),
+    )
+
+
+def _stage_slices(sliced: DataFrame, dest: str) -> StructType:
+    """Time-sliced staging, step 2: write each ``slice`` as exactly one
+    parquet file under dest, file k's mtime 60 s after file k−1's;
+    returns the stream schema, with ``ts`` as TIMESTAMP (Spark 4
+    watermarks reject TIMESTAMP_NTZ; read it under ``_utc``)."""
+    parted = dest + "_slices"
     (
-        table(spark, sf_dir, name)
-        .repartition(_N_FILES)
-        .write.mode("overwrite")
-        .parquet(dest)
+        sliced.repartition(_N_FILES, "slice")
+        .write.partitionBy("slice")
+        .parquet(parted)
+    )
+    os.makedirs(dest)
+    # Micro-batch ORDER: Spark's file-stream source sorts pending
+    # files by modification TIMESTAMP ONLY (path is not a
+    # tie-break — verified empirically: equal mtimes scramble the
+    # batch sequence), so an explicit mtime ladder is the one
+    # reliable ordering channel. 60-second spacing makes it
+    # immune to coarse mtime granularity (second- or even
+    # 2-second-resolution filesystems preserve the order).
+    for k in range(_N_FILES):
+        d = os.path.join(parted, f"slice={k}")
+        if not os.path.isdir(d):
+            continue
+        parts = [f for f in os.listdir(d) if f.endswith(".parquet")]
+        assert len(parts) == 1, (
+            f"slice {k}: expected exactly one staged file, got {parts}"
+        )
+        dst = os.path.join(dest, f"part-{k:05d}.parquet")
+        os.rename(os.path.join(d, parts[0]), dst)
+        os.utime(dst, (1700000000 + k * 60, 1700000000 + k * 60))
+    return StructType(
+        [
+            StructField(f.name, TimestampType()) if f.name == "ts" else f
+            for f in sliced.schema
+            if f.name != "slice"
+        ]
     )
 
 
-def _part_files(staged_dir: str) -> list[str]:
-    return sorted(glob.glob(os.path.join(staged_dir, "part-*.parquet")))
+def _file_stream(spark: SparkSession, in_dir: str, schema: StructType) -> DataFrame:
+    """The staged files of in_dir as a stream, one file per micro-batch."""
+    return (
+        spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(in_dir)
+    )
 
 
-def _run_to_memory_complete(
-    stream_agg: DataFrame, ckpt: str, min_batches: int = 2
-) -> DataFrame:
-    """Run a streaming aggregation to completion (AvailableNow) into a
-    memory sink in complete mode; return the final table. Raises if the
-    run collapsed into a single micro-batch (the incremental-state path
+def _run(writer: DataStreamWriter, ckpt: str, min_batches: int = 2) -> list[dict]:
+    """Run a stream to completion: start ``writer`` with
+    Trigger.AvailableNow and checkpoint ``ckpt``, await it, and return
+    the progress entries of the micro-batches that read input. Raises
+    if fewer than ``min_batches`` did (the incremental-state path
     would then be untested)."""
-    name = f"sq_{uuid.uuid4().hex}"
-    q = (
-        stream_agg.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("complete")
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
+    q = writer.option("checkpointLocation", ckpt).trigger(availableNow=True).start()
     q.awaitTermination()
-    n_batches = sum(1 for p in q.recentProgress if p["numInputRows"] > 0)
-    if n_batches < min_batches:
+    batches = [p for p in q.recentProgress if p["numInputRows"] > 0]
+    if len(batches) < min_batches:
         raise RuntimeError(
-            f"streaming query ran as {n_batches} micro-batch(es); "
+            f"streaming query ran as {len(batches)} micro-batch(es); "
             f"expected >= {min_batches} (maxFilesPerTrigger not honored?)"
         )
-    spark_table = stream_agg.sparkSession.table(name)
-    return spark_table
+    return batches
+
+
+def _to_memory(df: DataFrame, mode: str, ckpt: str) -> DataFrame:
+    """``_run`` df into a fresh memory-sink table in output mode
+    ``mode``; returns that table."""
+    name = f"sq_{uuid.uuid4().hex}"
+    _run(df.writeStream.format("memory").queryName(name).outputMode(mode), ckpt)
+    return df.sparkSession.table(name)
 
 
 def q_stream_events_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -108,16 +220,9 @@ def q_stream_events_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     both engines) so the running sum is exact; the sum itself is
     emitted as a digit string (Spark BIGINT vs DuckDB HUGEINT render
     differently past 9 significant digits)."""
-    tmp = tempfile.mkdtemp(prefix="sq_events_")
-    try:
+    with _scratch("sq_events_") as tmp:
         in_dir = os.path.join(tmp, "in")
-        _stage(spark, sf_dir, "events", in_dir)
-        schema = spark.read.parquet(in_dir).schema
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(in_dir)
-        )
+        stream = _file_stream(spark, in_dir, _stage(spark, sf_dir, "events", in_dir))
         agg = stream.groupBy("event_type").agg(
             F.count(F.lit(1)).alias("n_events"),
             F.sum(F.floor(F.col("value") * 100).cast("long"))
@@ -126,12 +231,10 @@ def q_stream_events_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.min("event_id").alias("first_event"),
             F.max("event_id").alias("last_event"),
         )
-        out = _run_to_memory_complete(agg, os.path.join(tmp, "ckpt"))
+        out = _to_memory(agg, "complete", os.path.join(tmp, "ckpt"))
         return out.select(
             "event_type", "n_events", "value_cents", "first_event", "last_event"
         )
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
 
 
 _STREAM_EVENTS_SUMMARY_SQL = """
@@ -154,15 +257,10 @@ def q_stream_dedup_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     bounded state is extract_stream.stream_dedup_exact (watermarked,
     append); this complete-mode run is its hash-checkable proof at
     test scale."""
-    tmp = tempfile.mkdtemp(prefix="sq_dedupfp_")
-    try:
+    with _scratch("sq_dedupfp_") as tmp:
         in_dir = os.path.join(tmp, "in")
-        _stage(spark, sf_dir, "documents", in_dir)
-        schema = spark.read.parquet(in_dir).schema
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(in_dir)
+        stream = _file_stream(
+            spark, in_dir, _stage(spark, sf_dir, "documents", in_dir)
         )
         fp = F.md5(
             F.trim(F.regexp_replace(F.lower(F.col("text")), r"\s+", " "))
@@ -171,10 +269,8 @@ def q_stream_dedup_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).alias("n_docs"),
             F.min("doc_id").alias("keep_doc"),
         )
-        out = _run_to_memory_complete(agg, os.path.join(tmp, "ckpt"))
+        out = _to_memory(agg, "complete", os.path.join(tmp, "ckpt"))
         return out.select("fp", "n_docs", "keep_doc")
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
 
 
 _STREAM_DEDUP_FP_SQL = """
@@ -198,58 +294,36 @@ def q_stream_resume_checkpoint(spark: SparkSession, sf_dir: str) -> DataFrame:
     exactly-once (a duplicated or dropped micro-batch changes the
     hash). Mirrors sources/storage.py's batch resume contract
     (manifest anti-join), here via Spark's own streaming logs."""
-    tmp = tempfile.mkdtemp(prefix="sq_resume_")
-    try:
-        all_dir = os.path.join(tmp, "all")
-        in_dir = os.path.join(tmp, "in")
-        out_dir = os.path.join(tmp, "out")
-        ckpt = os.path.join(tmp, "ckpt")
-        _stage(spark, sf_dir, "documents", all_dir)
-        parts = _part_files(all_dir)
+    with _scratch("sq_resume_") as tmp:
+        all_dir, in_dir, out_dir, ckpt = (
+            os.path.join(tmp, d) for d in ("all", "in", "out", "ckpt")
+        )
+        schema = _stage(spark, sf_dir, "documents", all_dir)
+        parts = sorted(glob.glob(os.path.join(all_dir, "part-*.parquet")))
         os.makedirs(in_dir)
-        for p in parts[: len(parts) // 2]:
-            shutil.copy(p, in_dir)
-        schema = spark.read.parquet(all_dir).schema
-
-        def run_once() -> int:
-            stream = (
-                spark.readStream.schema(schema)
-                .option("maxFilesPerTrigger", 1)
-                .parquet(in_dir)
-            )
-            toks = F.split(F.trim(F.col("text")), r"\s+")
-            stats = stream.select(
+        toks = F.split(F.trim(F.col("text")), r"\s+")
+        # run 1 sees half the input, then 'crashes'; run 2 resumes from
+        # the same checkpoint and must process only the new files
+        for landed in (parts[: len(parts) // 2], parts[len(parts) // 2 :]):
+            for p in landed:
+                shutil.copy(p, in_dir)
+            stats = _file_stream(spark, in_dir, schema).select(
                 "doc_id",
                 F.when(F.length(F.trim("text")) == 0, F.lit(0))
                 .otherwise(F.size(toks))
                 .alias("n_tokens"),
                 F.length("text").alias("n_chars"),
             )
-            q = (
+            _run(
                 stats.writeStream.format("parquet")
                 .option("path", out_dir)
-                .option("checkpointLocation", ckpt)
-                .outputMode("append")
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-            return sum(1 for p in q.recentProgress if p["numInputRows"] > 0)
-
-        b1 = run_once()  # half the input, then 'crash'
-        for p in parts[len(parts) // 2 :]:
-            shutil.copy(p, in_dir)
-        b2 = run_once()  # resume: same checkpoint, only new files
-        if b1 < 2 or b2 < 2:
-            raise RuntimeError(
-                f"resume proof degenerate: {b1}/{b2} micro-batches per run"
+                .outputMode("append"),
+                ckpt,
             )
         rows = spark.read.parquet(out_dir).collect()
         # materialize driver-side before the tmp sink is deleted; the
         # result is one small row per doc (bounded by the test corpus)
         return spark.createDataFrame(rows, "doc_id long, n_tokens int, n_chars int")
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
 
 
 _STREAM_RESUME_SQL = """
@@ -296,61 +370,16 @@ def q_stream_windowed_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     bound. The time-sliced staging mirrors reality: event streams
     arrive roughly time-ordered, which is exactly why the watermark
     trade works."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    tmp = tempfile.mkdtemp(prefix="sq_wma_")
-    try:
+    with _scratch("sq_wma_") as tmp:
         in_dir = os.path.join(tmp, "in")
-        os.makedirs(in_dir)
-        rows = (
-            table(spark, sf_dir, "events")
-            .select("ts", "event_type", "value", "event_id")
-            .orderBy("ts", "event_id")
-            .collect()
-        )  # harness-side staging at test scale, not the operator path
-        n = len(rows)
-        per = max(1, (n + _N_FILES - 1) // _N_FILES)
-        for k in range(_N_FILES):
-            chunk = rows[k * per : (k + 1) * per]
-            if not chunk:
-                break
-            path = os.path.join(in_dir, f"part-{k:05d}.parquet")
-            pq.write_table(
-                pa.table(
-                    {
-                        "ts": [r.ts for r in chunk],
-                        "event_type": [r.event_type for r in chunk],
-                        "value": [r.value for r in chunk],
-                        "event_id": [r.event_id for r in chunk],
-                    }
-                ),
-                path,
-            )
-            # FileStreamSource orders by mtime: pin batch order == slice
-            # order so the no-late-data invariant above actually holds
-            os.utime(path, (1700000000 + k * 60, 1700000000 + k * 60))
-
-        # Spark 4 watermarks require TIMESTAMP (not NTZ): read the
-        # zoneless parquet as LTZ under a UTC session-zone pin so the
-        # wall values and the day buckets match the oracle's
-        # date_trunc exactly. The pin is RESTORED in finally, and the
-        # result is materialized eagerly inside the pinned window so
-        # the returned frame is zone-independent at collect time.
-        tz_key = "spark.sql.session.timeZone"
-        old_tz = spark.conf.get(tz_key, None)
-        spark.conf.set(tz_key, "UTC")
-        try:
-            stream = (
-                spark.readStream.schema(
-                    "ts timestamp, event_type string, value double, "
-                    "event_id bigint"
-                )
-                .option("maxFilesPerTrigger", 1)
-                .parquet(in_dir)
-            )
+        ev = table(spark, sf_dir, "events").select(
+            "ts", "event_type", "value", "event_id"
+        )
+        schema = _stage_slices(_time_slices(ev), in_dir)
+        with _utc(spark):
             agg = (
-                stream.withWatermark("ts", _WM_DELAY)
+                _file_stream(spark, in_dir, schema)
+                .withWatermark("ts", _WM_DELAY)
                 .groupBy(F.window("ts", _WM_WINDOW).alias("w"), "event_type")
                 .agg(
                     F.count(F.lit(1)).alias("n_events"),
@@ -359,26 +388,8 @@ def q_stream_windowed_append(spark: SparkSession, sf_dir: str) -> DataFrame:
                     .alias("value_cents"),
                 )
             )
-            name = f"sq_{uuid.uuid4().hex}"
-            q = (
-                agg.writeStream.format("memory")
-                .queryName(name)
-                .outputMode("append")
-                .option("checkpointLocation", os.path.join(tmp, "ckpt"))
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-            n_batches = sum(
-                1 for p in q.recentProgress if p["numInputRows"] > 0
-            )
-            if n_batches < 2:
-                raise RuntimeError(
-                    f"append-mode run collapsed to {n_batches} micro-batch(es)"
-                )
-            final = [
-                (r.day_start, r.event_type, r.n_events, r.value_cents)
-                for r in spark.table(name)
+            final = (
+                _to_memory(agg, "append", os.path.join(tmp, "ckpt"))
                 .select(
                     F.date_format("w.start", "yyyy-MM-dd HH:mm:ss").alias(
                         "day_start"
@@ -388,19 +399,12 @@ def q_stream_windowed_append(spark: SparkSession, sf_dir: str) -> DataFrame:
                     "value_cents",
                 )
                 .collect()
-            ]
-        finally:
-            if old_tz is None:
-                spark.conf.unset(tz_key)
-            else:
-                spark.conf.set(tz_key, old_tz)
+            )
         return spark.createDataFrame(
             final,
             "day_start string, event_type string, n_events bigint, "
             "value_cents string",
         ).orderBy("day_start", "event_type")
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
 
 
 _STREAM_WINDOWED_APPEND_SQL = """
@@ -448,53 +452,16 @@ def q_stream_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     not the stream; at 10¹² events the same plan holds the same
     state bound, and session merging is the state store's job, never
     a shuffle of history."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    tmp = tempfile.mkdtemp(prefix="sq_sess_")
-    try:
+    with _scratch("sq_sess_") as tmp:
         in_dir = os.path.join(tmp, "in")
-        os.makedirs(in_dir)
-        rows = (
-            table(spark, sf_dir, "events")
-            .select("ts", "user_id", "value", "event_id")
-            .orderBy("ts", "event_id")
-            .collect()
-        )  # harness-side staging at test scale, not the operator path
-        n = len(rows)
-        per = max(1, (n + _N_FILES - 1) // _N_FILES)
-        for k in range(_N_FILES):
-            chunk = rows[k * per : (k + 1) * per]
-            if not chunk:
-                break
-            path = os.path.join(in_dir, f"part-{k:05d}.parquet")
-            pq.write_table(
-                pa.table(
-                    {
-                        "ts": [r.ts for r in chunk],
-                        "user_id": [r.user_id for r in chunk],
-                        "value": [r.value for r in chunk],
-                        "event_id": [r.event_id for r in chunk],
-                    }
-                ),
-                path,
-            )
-            os.utime(path, (1700000000 + k * 60, 1700000000 + k * 60))
-
-        tz_key = "spark.sql.session.timeZone"
-        old_tz = spark.conf.get(tz_key, None)
-        spark.conf.set(tz_key, "UTC")
-        try:
-            stream = (
-                spark.readStream.schema(
-                    "ts timestamp, user_id bigint, value double, "
-                    "event_id bigint"
-                )
-                .option("maxFilesPerTrigger", 1)
-                .parquet(in_dir)
-            )
+        ev = table(spark, sf_dir, "events").select(
+            "ts", "user_id", "value", "event_id"
+        )
+        schema = _stage_slices(_time_slices(ev), in_dir)
+        with _utc(spark):
             agg = (
-                stream.withWatermark("ts", _WM_DELAY)
+                _file_stream(spark, in_dir, schema)
+                .withWatermark("ts", _WM_DELAY)
                 .groupBy(
                     F.session_window("ts", _SESSION_GAP).alias("w"),
                     "user_id",
@@ -506,26 +473,8 @@ def q_stream_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
                     .alias("value_cents"),
                 )
             )
-            name = f"sq_{uuid.uuid4().hex}"
-            q = (
-                agg.writeStream.format("memory")
-                .queryName(name)
-                .outputMode("append")
-                .option("checkpointLocation", os.path.join(tmp, "ckpt"))
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-            n_batches = sum(
-                1 for p in q.recentProgress if p["numInputRows"] > 0
-            )
-            if n_batches < 2:
-                raise RuntimeError(
-                    f"append-mode run collapsed to {n_batches} micro-batch(es)"
-                )
-            final = [
-                (r.user_id, r.s_start, r.s_end, r.n_events, r.value_cents)
-                for r in spark.table(name)
+            final = (
+                _to_memory(agg, "append", os.path.join(tmp, "ckpt"))
                 .select(
                     "user_id",
                     F.date_format("w.start", "yyyy-MM-dd HH:mm:ss").alias(
@@ -538,19 +487,12 @@ def q_stream_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
                     "value_cents",
                 )
                 .collect()
-            ]
-        finally:
-            if old_tz is None:
-                spark.conf.unset(tz_key)
-            else:
-                spark.conf.set(tz_key, old_tz)
+            )
         return spark.createDataFrame(
             final,
             "user_id bigint, s_start string, s_end string, "
             "n_events bigint, value_cents string",
         ).orderBy("user_id", "s_start")
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
 
 
 _STREAM_SESSION_SQL = f"""
@@ -615,68 +557,32 @@ def q_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     user_id, exactly how a 1000-executor cluster holds it. The
     batch-side equivalent (events_asof_plan / events_funnel) re-scans
     history; this pays state proportional to the join window."""
-    rows = (
+    ev = (
         table(spark, sf_dir, "events")
         .where(F.col("event_type").isin("click", "purchase"))
         .select("ts", "event_type", "user_id", "event_id")
-        .orderBy("ts", "event_id")
-        .collect()
-    )  # harness-side staging at test scale, not the operator path
-    final = _ssj_run(spark, rows)
+    )
     return spark.createDataFrame(
-        final,
+        _ssj_run(spark, ev),
         "user_id bigint, click_id bigint, purchase_id bigint, "
         "gap_us bigint",
     ).orderBy("user_id", "click_id", "purchase_id")
 
 
-def _ssj_run(spark: SparkSession, rows, n_files: int = _N_FILES):
-    """Stage pre-sorted (ts, event_type, user_id, event_id) rows as
-    n_files time-sliced parquet files and run the watermarked
-    stream-stream interval join over them; returns the emitted pairs
-    as plain tuples. Split out so tests can inject a synthetic
-    staging where a pair provably straddles micro-batches."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    tmp = tempfile.mkdtemp(prefix="sq_ssj_")
-    try:
+def _ssj_run(spark: SparkSession, events: DataFrame) -> list:
+    """Stage (ts, event_type, user_id, event_id) events time-sliced and
+    run the watermarked stream-stream interval join over them; returns
+    the emitted (user_id, click_id, purchase_id, gap_us) rows. Split
+    out so tests can inject a synthetic staging where a pair provably
+    straddles micro-batches."""
+    with _scratch("sq_ssj_") as tmp:
         in_dir = os.path.join(tmp, "in")
-        os.makedirs(in_dir)
-        n = len(rows)
-        per = max(1, (n + n_files - 1) // n_files)
-        for k in range(n_files):
-            chunk = rows[k * per : (k + 1) * per]
-            if not chunk:
-                break
-            path = os.path.join(in_dir, f"part-{k:05d}.parquet")
-            pq.write_table(
-                pa.table(
-                    {
-                        "ts": [r.ts for r in chunk],
-                        "event_type": [r.event_type for r in chunk],
-                        "user_id": [r.user_id for r in chunk],
-                        "event_id": [r.event_id for r in chunk],
-                    }
-                ),
-                path,
-            )
-            os.utime(path, (1700000000 + k * 60, 1700000000 + k * 60))
-
-        tz_key = "spark.sql.session.timeZone"
-        old_tz = spark.conf.get(tz_key, None)
-        spark.conf.set(tz_key, "UTC")
-        try:
-            schema = (
-                "ts timestamp, event_type string, user_id bigint, "
-                "event_id bigint"
-            )
+        schema = _stage_slices(_time_slices(events), in_dir)
+        with _utc(spark):
 
             def side(ev: str, pre: str) -> DataFrame:
                 return (
-                    spark.readStream.schema(schema)
-                    .option("maxFilesPerTrigger", 1)
-                    .parquet(in_dir)
+                    _file_stream(spark, in_dir, schema)
                     .where(F.col("event_type") == ev)
                     .select(
                         F.col("user_id").alias(f"{pre}_user"),
@@ -701,35 +607,7 @@ def _ssj_run(spark: SparkSession, rows, n_files: int = _N_FILES):
                     F.unix_micros("p_ts") - F.unix_micros("c_ts")
                 ).alias("gap_us"),
             )
-            name = f"sq_{uuid.uuid4().hex}"
-            q = (
-                out.writeStream.format("memory")
-                .queryName(name)
-                .outputMode("append")
-                .option("checkpointLocation", os.path.join(tmp, "ckpt"))
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-            n_batches = sum(
-                1 for p in q.recentProgress if p["numInputRows"] > 0
-            )
-            if n_batches < 2:
-                raise RuntimeError(
-                    f"stream-stream join ran as {n_batches} micro-batch(es)"
-                )
-            final = [
-                (r.user_id, r.click_id, r.purchase_id, r.gap_us)
-                for r in spark.table(name).collect()
-            ]
-        finally:
-            if old_tz is None:
-                spark.conf.unset(tz_key)
-            else:
-                spark.conf.set(tz_key, old_tz)
-        return final
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+            return _to_memory(out, "append", os.path.join(tmp, "ckpt")).collect()
 
 
 _STREAM_SSJ_SQL = f"""
@@ -767,16 +645,9 @@ def q_stream_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     Determinism: complete-mode aggregation is micro-batch-order
     independent; the dim is a pure function of the batch table; sums
     emit as digit strings (the dsir lesson)."""
-    tmp = tempfile.mkdtemp(prefix="sq_enrich_")
-    try:
+    with _scratch("sq_enrich_") as tmp:
         in_dir = os.path.join(tmp, "in")
-        _stage(spark, sf_dir, "events", in_dir)
-        schema = spark.read.parquet(in_dir).schema
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(in_dir)
-        )
+        stream = _file_stream(spark, in_dir, _stage(spark, sf_dir, "events", in_dir))
         ev_static = table(spark, sf_dir, "events")
         profiles = (
             ev_static.where(F.col("event_type") == "purchase")
@@ -803,18 +674,12 @@ def q_stream_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("string")
             .alias("value_cents"),
         )
-        out = _run_to_memory_complete(agg, os.path.join(tmp, "ckpt"))
-        rows = [
-            (r.tier, r.event_type, r.n_events, r.value_cents)
-            for r in out.collect()
-        ]
+        out = _to_memory(agg, "complete", os.path.join(tmp, "ckpt"))
         return spark.createDataFrame(
-            rows,
+            out.collect(),
             "tier string, event_type string, n_events bigint, "
             "value_cents string",
         ).orderBy("tier", "event_type")
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
 
 
 _STREAM_ENRICH_SQL = """
@@ -872,135 +737,43 @@ def q_stream_late_drop_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     every production watermark trade (completeness vs state size) —
     this query pins that the metric means what the runbook says it
     means, batch by batch, not approximately."""
-    from ocr_intern_spark.operators.skew import global_rank
-
-    tmp = tempfile.mkdtemp(prefix="sq_late_")
-    try:
+    with _scratch("sq_late_") as tmp:
         in_dir = os.path.join(tmp, "in")
-        os.makedirs(in_dir)
-        # DISTRIBUTED staging (round-5 rework of the old collect() +
-        # pyarrow loop): the slice label is the two-pass global rank
-        # carved into _N_FILES ceil-sized batches (identical math to
-        # the old positional i // per), late rows shipped two slices
-        # later; ONE partitionBy write, repartitioned on the slice
-        # column so each slice directory holds exactly one file. The
-        # corpus never passes through the driver.
         ev = table(spark, sf_dir, "events").select(
             "ts", "event_type", "value", "event_id"
         )
-        ranked = global_rank(
-            ev, F.col("ts"), F.col("event_id"), rank_name="_r"
+        # late rows ship two slices after their own (capped at the last)
+        shifted = _time_slices(ev).withColumn(
+            "slice",
+            F.when(
+                F.col("event_id") % _LATE_DELAY_MOD == 0,
+                F.least(F.col("slice") + 2, F.lit(_N_FILES - 1)),
+            ).otherwise(F.col("slice")),
         )
-        nf = ranked.agg(F.max("_r").alias("_n"))
-        sliced = (
-            ranked.crossJoin(F.broadcast(nf))
-            .withColumn(
-                "_k",
-                F.least(
-                    F.expr(
-                        f"(_r - 1) DIV ((_n + {_N_FILES - 1}) "
-                        f"DIV {_N_FILES})"
-                    ),
-                    F.lit(_N_FILES - 1),
-                ),
-            )
-            .withColumn(
-                "_k",
-                F.when(
-                    F.col("event_id") % _LATE_DELAY_MOD == 0,
-                    F.least(F.col("_k") + 2, F.lit(_N_FILES - 1)),
-                ).otherwise(F.col("_k")),
-            )
-            .select(
-                "ts",
-                "event_type",
-                "value",
-                "event_id",
-                F.col("_k").cast("int").alias("slice"),
-            )
-        )
-        stage_dir = os.path.join(tmp, "stage")
-        (
-            sliced.repartition(_N_FILES, "slice")
-            .write.partitionBy("slice")
-            .parquet(stage_dir)
-        )
-        # Micro-batch ORDER: Spark's file-stream source sorts pending
-        # files by modification TIMESTAMP ONLY (path is not a
-        # tie-break — verified empirically: equal mtimes scramble the
-        # batch sequence), so an explicit mtime ladder is the one
-        # reliable ordering channel. 60-second spacing makes it
-        # immune to coarse mtime granularity (second- or even
-        # 2-second-resolution filesystems preserve the order), which
-        # was the fragility of the old write-order-derived ladder.
-        for k in range(_N_FILES):
-            d = os.path.join(stage_dir, f"slice={k}")
-            if not os.path.isdir(d):
-                continue
-            parts = [
-                f for f in os.listdir(d) if f.endswith(".parquet")
-            ]
-            assert len(parts) == 1, (
-                f"slice {k}: expected exactly one staged file, "
-                f"got {parts}"
-            )
-            dst = os.path.join(in_dir, f"part-{k:05d}.parquet")
-            os.rename(os.path.join(d, parts[0]), dst)
-            os.utime(dst, (1700000000 + k * 60, 1700000000 + k * 60))
-
-        tz_key = "spark.sql.session.timeZone"
-        old_tz = spark.conf.get(tz_key, None)
-        spark.conf.set(tz_key, "UTC")
-        try:
-            stream = (
-                spark.readStream.schema(
-                    "ts timestamp, event_type string, value double, "
-                    "event_id bigint"
-                )
-                .option("maxFilesPerTrigger", 1)
-                .parquet(in_dir)
-            )
+        schema = _stage_slices(shifted, in_dir)
+        with _utc(spark):
             agg = (
-                stream.withWatermark("ts", _WM_DELAY)
+                _file_stream(spark, in_dir, schema)
+                .withWatermark("ts", _WM_DELAY)
                 .groupBy(F.window("ts", _WM_WINDOW).alias("w"), "event_type")
                 .agg(F.count(F.lit(1)).alias("n_events"))
             )
-            name = f"sq_{uuid.uuid4().hex}"
-            q = (
-                agg.writeStream.format("memory")
-                .queryName(name)
-                .outputMode("append")
-                .option("checkpointLocation", os.path.join(tmp, "ckpt"))
-                .trigger(availableNow=True)
-                .start()
+            batches = _run(
+                agg.writeStream.format("noop").outputMode("append"),
+                os.path.join(tmp, "ckpt"),
+                min_batches=_N_FILES,
             )
-            q.awaitTermination()
-            audit = []
-            for p in q.recentProgress:
-                if p["numInputRows"] == 0:
-                    continue
-                so = p["stateOperators"][0]
-                audit.append(
-                    (
-                        len(audit),
-                        int(p["numInputRows"]),
-                        int(so["numRowsDroppedByWatermark"]),
-                    )
-                )
-            if len(audit) < _N_FILES:
-                raise RuntimeError(
-                    f"expected {_N_FILES} data micro-batches, got {len(audit)}"
-                )
-        finally:
-            if old_tz is None:
-                spark.conf.unset(tz_key)
-            else:
-                spark.conf.set(tz_key, old_tz)
+        audit = [
+            (
+                k,
+                int(p["numInputRows"]),
+                int(p["stateOperators"][0]["numRowsDroppedByWatermark"]),
+            )
+            for k, p in enumerate(batches)
+        ]
         return spark.createDataFrame(
             audit, "batch int, n_input bigint, n_dropped_late bigint"
         ).orderBy("batch")
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
 
 
 _STREAM_LATE_DROP_SQL = f"""
@@ -1059,30 +832,21 @@ def q_stream_hll_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
         hll_finalize,
     )
 
-    tmp = tempfile.mkdtemp(prefix="sq_hll_")
-    try:
+    with _scratch("sq_hll_") as tmp:
         in_dir = os.path.join(tmp, "in")
-        _stage(spark, sf_dir, "events", in_dir)
-        schema = spark.read.parquet(in_dir).schema
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(in_dir)
-        )
+        stream = _file_stream(spark, in_dir, _stage(spark, sf_dir, "events", in_dir))
         agg = (
             hll_decompose(stream.select("user_id"))
             .groupBy("j")
             .agg(F.max("r").alias("m"))
         )
-        regs = _run_to_memory_complete(agg, os.path.join(tmp, "ckpt"))
+        regs = _to_memory(agg, "complete", os.path.join(tmp, "ckpt"))
         ev = spark.read.parquet(in_dir).select("user_id")
         # materialize before the tmp dir vanishes (hll_finalize's
         # exact-distinct audit re-reads ev lazily)
         out = hll_finalize(regs, ev)
         rows = out.collect()
         return spark.createDataFrame(rows, out.schema)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
 
 
 def _stream_hll_sql() -> str:
@@ -1108,16 +872,9 @@ def q_stream_cms_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
         _cms_bucket,
     )
 
-    tmp = tempfile.mkdtemp(prefix="sq_cms_")
-    try:
+    with _scratch("sq_cms_") as tmp:
         in_dir = os.path.join(tmp, "in")
-        _stage(spark, sf_dir, "events", in_dir)
-        schema = spark.read.parquet(in_dir).schema
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(in_dir)
-        )
+        stream = _file_stream(spark, in_dir, _stage(spark, sf_dir, "events", in_dir))
         rows_i = F.explode(
             F.sequence(F.lit(0), F.lit(CMS_D - 1))
         ).alias("i")
@@ -1125,9 +882,7 @@ def q_stream_cms_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
             "i", _cms_bucket(F.col("i"), F.col("user_id")).alias("b")
         )
         agg = cells.groupBy("i", "b").agg(F.count(F.lit(1)).alias("cnt"))
-        sketch = _run_to_memory_complete(
-            agg, os.path.join(tmp, "ckpt")
-        ).persist()
+        sketch = _to_memory(agg, "complete", os.path.join(tmp, "ckpt"))
         ev = spark.read.parquet(in_dir).select("user_id")
         exact = ev.groupBy("user_id").agg(F.count(F.lit(1)).alias("n_exact"))
         probes = exact.select("user_id", rows_i).select(
@@ -1153,8 +908,6 @@ def q_stream_cms_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         rows = out.collect()
         return spark.createDataFrame(rows, out.schema)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
 
 
 def _stream_cms_sql() -> str:

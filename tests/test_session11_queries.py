@@ -522,7 +522,10 @@ def test_stream_stream_join_crosses_batches(spark):
     for i in range(14):
         rows.append(R(t0 + timedelta(minutes=5 * (i + 1)), "click", 50 + i, 200 + i))
     rows.append(R(t0 + timedelta(minutes=90), "purchase", 1, 999))
-    got = _ssj_run(spark, rows, n_files=8)
+    events = spark.createDataFrame(
+        rows, "ts timestamp_ntz, event_type string, user_id bigint, event_id bigint"
+    )
+    got = _ssj_run(spark, events)
     assert got == [(1, 100, 999, 90 * 60 * 1_000_000)]
 
 

@@ -84,7 +84,45 @@ def test_degenerate_single_batch_raises(spark, tmp_path):
     )
     agg = stream.groupBy("lang").count()
     with pytest.raises(RuntimeError, match="micro-batch"):
-        sq._run_to_memory_complete(agg, str(tmp_path / "ckpt"))
+        sq._run(
+            agg.writeStream.format("noop").outputMode("complete"),
+            str(tmp_path / "ckpt"),
+        )
+
+
+def test_time_sliced_staging_slices_the_total_order(spark, tmp_path):
+    """The shared time-sliced staging on 13 synthetic rows: ceil(13/8)
+    = 2 rows per file, so 7 files, file k holding exactly ranks
+    [2k, 2k+2) of the (ts, event_id) order — two ts ties straddle a
+    slice boundary, so only the event_id tie-break places them — with
+    strictly increasing mtimes (the file source's batch order)."""
+    import os
+    from datetime import datetime, timedelta
+
+    import pyarrow.parquet as pq
+
+    from ocr_intern_spark.streaming import stream_queries as sq
+
+    t0 = datetime(2024, 3, 1)
+    minutes = [0, 1, 2, 3, 3, 4, 5, 6, 7, 8, 8, 9, 10]  # ties at ranks 3|4, 9|10
+    ids = [40, 7, 33, 25, 12, 3, 18, 29, 5, 21, 14, 9, 36]
+    ordered = sorted(zip(minutes, ids))
+    # tie-break is visible: within each tie the larger id sorts second
+    assert ordered[3:5] == [(3, 12), (3, 25)]
+    assert ordered[9:11] == [(8, 14), (8, 21)]
+    rows = [(t0 + timedelta(minutes=m), i) for m, i in zip(minutes, ids)]
+    df = spark.createDataFrame(rows[::-1], "ts timestamp_ntz, event_id bigint")
+    dest = str(tmp_path / "in")
+    schema = sq._stage_slices(sq._time_slices(df), dest)
+    assert schema.simpleString() == "struct<ts:timestamp,event_id:bigint>"
+
+    files = sorted(os.listdir(dest))
+    assert files == [f"part-{k:05d}.parquet" for k in range(7)]
+    for k, f in enumerate(files):
+        got = pq.read_table(os.path.join(dest, f)).column("event_id").to_pylist()
+        assert sorted(got) == sorted(i for _, i in ordered[2 * k : 2 * k + 2])
+    mtimes = [os.stat(os.path.join(dest, f)).st_mtime for f in files]
+    assert all(a < b for a, b in zip(mtimes, mtimes[1:]))
 
 
 def test_windowed_append_matches_batch_horizon(spark):

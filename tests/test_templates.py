@@ -13,6 +13,7 @@ from ocr_intern_spark.oracle.template import extract_template_fields
 from ocr_intern_spark.operators.template_fields import (
     _choose,
     _select_fields,
+    make_fields_stage,
     template_fields,
     template_fields_auto,
 )
@@ -164,3 +165,31 @@ def test_template_fields_auto_selects_per_doc(spark):
     }
     got = {r["field_key"]: r["value"] for r in out if r["doc_id"] == "d1"}
     assert got == expected
+
+
+def test_fields_stage_carries_each_docs_template_id():
+    """Two docs share one media_ref under different templates: every
+    output row carries its OWN doc's template_id and that template's
+    fields, and the stage emits no pandas warning (the output is built
+    whole, never assigned into a column selection)."""
+    import warnings
+
+    by_id = {tid: t.field_tuples() for tid, t in TEMPLATES.items()}
+    pdf = pd.DataFrame(
+        {
+            "doc_id": ["d1", "d2"],
+            "template_id": ["certificat_residence", "extrait_naissance"],
+            "media_ref": ["img://shared", "img://shared"],
+        }
+    )
+    with warnings.catch_warnings():
+        warnings.simplefilter("error")
+        stage = make_fields_stage(stub_ocr_tokens, templates_by_id=by_id)
+        out = pd.concat(list(stage(iter([pdf]))))
+    for doc, tid in zip(pdf["doc_id"], pdf["template_id"]):
+        rows = out[out["doc_id"] == doc]
+        assert set(rows["template_id"]) == {tid}
+        assert set(rows["field_key"]) == {
+            f"{s}.{n}" for s, n, _ in by_id[tid]
+        }
+    assert len(out) == sum(len(by_id[t]) for t in pdf["template_id"])

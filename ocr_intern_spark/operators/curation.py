@@ -61,6 +61,29 @@ def _grams_sql(ngram: int = DECON_NGRAM) -> str:
 """
 
 
+def _gram_edges(d: DataFrame, ngram: int = DECON_NGRAM) -> DataFrame:
+    """(a, b): the gram-sharing provenance digraph — every document a
+    points at the first corpus occurrence b (min doc_id) of each
+    ngram-word gram it shares, distinct pairs, no self-loops. One
+    gram → first-doc hash aggregate and one join back (inverted-index
+    class, never all-pairs)."""
+    g = _grams(d, ngram)
+    first = g.groupBy("g").agg(F.min("doc_id").alias("src"))
+    return (
+        g.join(first, "g")
+        .where(F.col("doc_id") != F.col("src"))
+        .select(F.col("doc_id").alias("a"), F.col("src").alias("b"))
+        .distinct()
+    )
+
+
+def _undirected(e: DataFrame) -> DataFrame:
+    """(a, b) with a < b: each edge of e once, direction dropped."""
+    return e.select(
+        F.least("a", "b").alias("a"), F.greatest("a", "b").alias("b")
+    ).distinct()
+
+
 def q_decontaminate_flags(spark: SparkSession, sf_dir: str) -> DataFrame:
     """N-gram decontamination (the GPT-3 appendix-C recipe): flag
     every training document sharing at least one 8-word gram with any
@@ -1633,15 +1656,7 @@ def q_provenance_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
     recipe). Ranks rounded to 1e-9 per round, 1e-6 at the end - the
     repo's float-portability quantum discipline."""
     d = documents(spark, sf_dir)
-    g = _grams(d)
-    first = g.groupBy("g").agg(F.min("doc_id").alias("src"))
-    edges = (
-        g.join(first, "g")
-        .where(F.col("doc_id") != F.col("src"))
-        .select(F.col("doc_id").alias("a"), F.col("src").alias("b"))
-        .distinct()
-        .cache()  # reused every round; checkpoint table at scale
-    )
+    edges = _gram_edges(d).cache()  # reused every round; checkpoint table at scale
     nodes = d.select("doc_id")
     n1 = nodes.agg(F.count("*").alias("n"))
     deg = edges.groupBy("a").agg(F.count("*").alias("deg"))
@@ -1729,14 +1744,7 @@ def q_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.window import Window
 
     d = documents(spark, sf_dir)
-    g = _grams(d)
-    first = g.groupBy("g").agg(F.min("doc_id").alias("src"))
-    dir_e = (
-        g.join(first, "g")
-        .where(F.col("doc_id") != F.col("src"))
-        .select(F.col("doc_id").alias("a"), F.col("src").alias("b"))
-        .distinct()
-    )
+    dir_e = _gram_edges(d)
     edges = dir_e.unionByName(
         dir_e.select(F.col("b").alias("a"), F.col("a").alias("b"))
     ).distinct().cache()  # reused every round; checkpoint table at scale
@@ -1815,18 +1823,7 @@ def q_degree_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: canonical edges once (inverted-index class), one
     degree aggregate, two deg join-backs, ONE total-sum aggregate —
     O(|E|) flat."""
-    d = documents(spark, sf_dir)
-    g = _grams(d)
-    first = g.groupBy("g").agg(F.min("doc_id").alias("src"))
-    de = (
-        g.join(first, "g")
-        .where(F.col("doc_id") != F.col("src"))
-        .select(F.col("doc_id").alias("x"), F.col("src").alias("y"))
-        .distinct()
-    )
-    edges = de.select(
-        F.least("x", "y").alias("a"), F.greatest("x", "y").alias("b")
-    ).distinct()
+    edges = _undirected(_gram_edges(documents(spark, sf_dir)))
     ordered = edges.unionByName(
         edges.select(F.col("b").alias("a"), F.col("a").alias("b"))
     )
@@ -2186,18 +2183,9 @@ def q_community_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
     lab = q_label_propagation(spark, sf_dir).select(
         "doc_id", F.col("label").alias("community")
     )
-    d = documents(spark, sf_dir)
-    g = _grams(d)
-    first = g.groupBy("g").agg(F.min("doc_id").alias("src"))
-    de = (
-        g.join(first, "g")
-        .where(F.col("doc_id") != F.col("src"))
-        .select(F.col("doc_id").alias("x"), F.col("src").alias("y"))
-        .distinct()
-    )
-    edges = de.select(
-        F.least("x", "y").alias("a"), F.greatest("x", "y").alias("b")
-    ).distinct().cache()  # reused: m, degrees, intra join
+    edges = _undirected(
+        _gram_edges(documents(spark, sf_dir))
+    ).cache()  # reused: m, degrees, intra join
     m1 = edges.agg(F.count("*").alias("m"))
     deg = (
         edges.select(F.col("a").alias("doc_id"))
@@ -2296,17 +2284,7 @@ def q_triangle_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     (the single rounded division happens on two already-final
     scalars)."""
     d = documents(spark, sf_dir)
-    g = _grams(d)
-    first = g.groupBy("g").agg(F.min("doc_id").alias("src"))
-    de = (
-        g.join(first, "g")
-        .where(F.col("doc_id") != F.col("src"))
-        .select(F.col("doc_id").alias("x"), F.col("src").alias("y"))
-        .distinct()
-    )
-    edges = de.select(
-        F.least("x", "y").alias("a"), F.greatest("x", "y").alias("b")
-    ).distinct().cache()  # reused by degree + 3 joins
+    edges = _undirected(_gram_edges(d)).cache()  # reused by degree + 3 joins
     n1 = d.agg(F.count("*").alias("n_nodes"))
     ne = edges.agg(F.count("*").alias("n_edges"))
     deg = (
@@ -2410,18 +2388,9 @@ def q_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     removes whole degree-layers at once. Integer-only state.
 
     Output: surviving doc_id + its degree inside the final core."""
-    d = documents(spark, sf_dir)
-    g = _grams(d, KCORE_NGRAM)
-    first = g.groupBy("g").agg(F.min("doc_id").alias("src"))
-    de = (
-        g.join(first, "g")
-        .where(F.col("doc_id") != F.col("src"))
-        .select(F.col("doc_id").alias("x"), F.col("src").alias("y"))
-        .distinct()
-    )
-    edges = de.select(
-        F.least("x", "y").alias("a"), F.greatest("x", "y").alias("b")
-    ).distinct().cache()  # reused every round; checkpoint table at scale
+    edges = _undirected(
+        _gram_edges(documents(spark, sf_dir), KCORE_NGRAM)
+    ).cache()  # reused every round; checkpoint table at scale
 
     def degrees(e: DataFrame) -> DataFrame:
         return (
@@ -3415,16 +3384,9 @@ def q_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
     hash aggregate — identical plan shape to a PageRank round, O(|E|)
     per round, cached edge table reused four times (checkpoint table
     at real scale)."""
-    d = documents(spark, sf_dir)
-    g = _grams(d)
-    first = g.groupBy("g").agg(F.min("doc_id").alias("src"))
-    edges = (
-        g.join(first, "g")
-        .where(F.col("doc_id") != F.col("src"))
-        .select(F.col("doc_id").alias("a"), F.col("src").alias("b"))
-        .distinct()
-        .cache()  # reused by 4 half-rounds; checkpoint table at scale
-    )
+    edges = _gram_edges(
+        documents(spark, sf_dir)
+    ).cache()  # reused by 4 half-rounds; checkpoint table at scale
     auth1 = edges.groupBy("b").agg(F.count("*").cast("long").alias("auth1"))
     hub1 = (
         edges.join(auth1, "b")

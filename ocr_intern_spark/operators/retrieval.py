@@ -38,6 +38,59 @@ BM25_QUERY = ("spark", "dup", "window")  # one rare term ("dup") for
 BM25_TOPK = 20
 
 
+def _bm25_scored(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(doc_id, score, rel): the BM25 score of every document with a
+    positive score for BM25_QUERY, and rel = it holds ALL query terms.
+
+    tf per term is a narrow higher-order-function expression over the
+    token array; N, avgdl and df per term reduce to ONE 1-row
+    aggregate that is broadcast back. Per-term contributions are
+    rounded to 1e-9 before the explicit textual-order sum, the score
+    to 1e-6."""
+    d = documents(spark, sf_dir)
+    toks = F.filter(
+        F.split(F.lower(F.trim(F.col("text"))), r"\s+"),
+        lambda w: F.length(w) > 0,
+    )
+    base = d.select("doc_id", toks.alias("toks"), F.size(toks).alias("dl"))
+
+    def _tf(term: str):
+        # one-arg closure: a 2-param lambda would be read by the HOF
+        # binder as (element, index)
+        return F.size(F.filter(F.col("toks"), lambda w: w == F.lit(term)))
+
+    tf_cols = [_tf(t).alias(f"tf{i}") for i, t in enumerate(BM25_QUERY)]
+    per_doc = base.select("doc_id", "dl", *tf_cols)
+    stats = per_doc.agg(
+        F.count("*").alias("n"),
+        F.avg("dl").alias("avgdl"),
+        *[
+            F.sum((F.col(f"tf{i}") > 0).cast("bigint")).alias(f"df{i}")
+            for i in range(len(BM25_QUERY))
+        ],
+    )
+
+    def contrib(i: int):
+        tf = F.col(f"tf{i}").cast("double")
+        dff = F.col(f"df{i}").cast("double")
+        idf = F.log(1.0 + (F.col("n") - dff + 0.5) / (dff + 0.5))
+        norm = tf + BM25_K1 * (
+            1.0 - BM25_B + BM25_B * (F.col("dl") / F.col("avgdl"))
+        )
+        return F.round(idf * ((tf * (BM25_K1 + 1.0)) / norm), 9)
+
+    score = F.round(sum(contrib(i) for i in range(len(BM25_QUERY))), 6)
+    rel = None
+    for i in range(len(BM25_QUERY)):
+        c = F.col(f"tf{i}") > 0
+        rel = c if rel is None else rel & c
+    return (
+        per_doc.crossJoin(F.broadcast(stats))
+        .select("doc_id", score.alias("score"), rel.alias("rel"))
+        .where(F.col("score") > 0)
+    )
+
+
 def q_bm25_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     """BM25 top-k document retrieval for a fixed conjunctive-OR query.
 
@@ -60,44 +113,9 @@ def q_bm25_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     3-term sum (sum order is textual, not aggregated — deterministic),
     final score to 1e-6.
     """
-    d = documents(spark, sf_dir)
-    toks = F.filter(
-        F.split(F.lower(F.trim(F.col("text"))), r"\s+"),
-        lambda w: F.length(w) > 0,
-    )
-    base = d.select("doc_id", toks.alias("toks"), F.size(toks).alias("dl"))
-    def _tf(term: str):
-        # one-arg closure: a 2-param lambda would be read by the HOF
-        # binder as (element, index)
-        return F.size(F.filter(F.col("toks"), lambda w: w == F.lit(term)))
-
-    tf_cols = [_tf(t).alias(f"tf{i}") for i, t in enumerate(BM25_QUERY)]
-    per_doc = base.select("doc_id", "dl", *tf_cols)
-    stats = per_doc.agg(
-        F.count("*").alias("n"),
-        F.avg("dl").alias("avgdl"),
-        *[
-            F.sum((F.col(f"tf{i}") > 0).cast("bigint")).alias(f"df{i}")
-            for i in range(len(BM25_QUERY))
-        ],
-    )
-
-    def contrib(i: int):
-        tf = F.col(f"tf{i}").cast("double")
-        dff = F.col(f"df{i}").cast("double")
-        idf = F.log(
-            1.0 + (F.col("n") - dff + 0.5) / (dff + 0.5)
-        )
-        norm = tf + BM25_K1 * (
-            1.0 - BM25_B + BM25_B * (F.col("dl") / F.col("avgdl"))
-        )
-        return F.round(idf * ((tf * (BM25_K1 + 1.0)) / norm), 9)
-
-    score = F.round(sum(contrib(i) for i in range(len(BM25_QUERY))), 6)
     return (
-        per_doc.crossJoin(F.broadcast(stats))
-        .select("doc_id", score.alias("score"))
-        .where(F.col("score") > 0)
+        _bm25_scored(spark, sf_dir)
+        .select("doc_id", "score")
         .orderBy(F.col("score").desc(), "doc_id")
         .limit(BM25_TOPK)
     )
@@ -400,47 +418,9 @@ def q_bm25_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: inherits the zero-shuffle BM25 scoring pass; the
     metrics add one TakeOrdered(20), two 1-row aggregates, and
     conditional counts."""
-    d = documents(spark, sf_dir)
-    toks = F.filter(
-        F.split(F.lower(F.trim(F.col("text"))), r"\s+"),
-        lambda w: F.length(w) > 0,
-    )
-    base = d.select("doc_id", toks.alias("toks"), F.size(toks).alias("dl"))
-
-    def _tf(term: str):
-        return F.size(F.filter(F.col("toks"), lambda w: w == F.lit(term)))
-
-    tf_cols = [_tf(t).alias(f"tf{i}") for i, t in enumerate(BM25_QUERY)]
-    per_doc = base.select("doc_id", "dl", *tf_cols)
-    stats = per_doc.agg(
-        F.count("*").alias("n"),
-        F.avg("dl").alias("avgdl"),
-        *[
-            F.sum((F.col(f"tf{i}") > 0).cast("bigint")).alias(f"df{i}")
-            for i in range(len(BM25_QUERY))
-        ],
-    )
-
-    def contrib(i: int):
-        tf = F.col(f"tf{i}").cast("double")
-        dff = F.col(f"df{i}").cast("double")
-        idf = F.log(1.0 + (F.col("n") - dff + 0.5) / (dff + 0.5))
-        norm = tf + BM25_K1 * (
-            1.0 - BM25_B + BM25_B * (F.col("dl") / F.col("avgdl"))
-        )
-        return F.round(idf * ((tf * (BM25_K1 + 1.0)) / norm), 9)
-
-    score = F.round(sum(contrib(i) for i in range(len(BM25_QUERY))), 6)
-    rel = None
-    for i in range(len(BM25_QUERY)):
-        c = F.col(f"tf{i}") > 0
-        rel = c if rel is None else rel & c
-    scored = (
-        per_doc.crossJoin(F.broadcast(stats))
-        .select("doc_id", score.alias("score"), rel.alias("rel"))
-        .where(F.col("score") > 0)
-        .cache()  # reused: top-k, best-relevant scalar, rank count
-    )
+    scored = _bm25_scored(
+        spark, sf_dir
+    ).cache()  # reused: top-k, best-relevant scalar, rank count
     topk = (
         scored.orderBy(F.col("score").desc(), "doc_id")
         .limit(BM25_TOPK)

@@ -16,6 +16,7 @@ the DuckDB oracle (which evaluates in its own order) agrees.
 from __future__ import annotations
 
 import hashlib
+from collections.abc import Callable
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -380,7 +381,7 @@ KNN_K = 3
 
 
 def q_knn_join_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact kNN JOIN: the top-{k} cosine neighbors for EVERY vector
+    """Exact kNN JOIN: the top-KNN_K cosine neighbors for EVERY vector
     (not one query point) — the all-pairs baseline a similarity-graph
     build starts from. Pairwise scoring + per-vector window rank;
     ties broken by neighbor id so both engines rank identically.
@@ -459,7 +460,7 @@ BFS_MAX_HOPS = 24  # raise-guard; measured kNN-graph diameter is ~12
 def q_knn_bfs_hops(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Single-source BFS over the directed kNN graph: minimum hop
     count from the QUERY_VEC_ID vector to every vector reachable by
-    following top-{K} cosine-neighbor edges — the graph-connectivity
+    following top-KNN_K cosine-neighbor edges — the graph-connectivity
     view of a similarity index (how many expansion steps an
     ANN-graph walk needs to reach a target; unreachable vectors are
     the isolated islands a graph-based retriever can never surface).
@@ -529,70 +530,50 @@ QUANT_K = 10
 QUANT_QMOD = 25  # vec_id % QUANT_QMOD == 0 → evaluation query vector
 
 
-def q_int8_quant_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Scalar int8 quantization quality: per evaluation query, the
-    top-{k} overlap between float-cosine and int8-cosine neighbor
-    rankings — the memory-for-recall trade a 10^9-vector deployment
-    makes (4× smaller vectors, SIMD int dot products). Quantizer:
-    symmetric per-vector absmax — q_i = round(127 · v_i / max|v|).
+def _quant_recall(
+    e: DataFrame, score: Callable[[Column, Column], Column], desc: bool
+) -> DataFrame:
+    """The memory-for-recall harness: per evaluation query
+    (vec_id % QUANT_QMOD == 0), the top-QUANT_K overlap between the
+    float-cosine ranking and the ranking by score(code, qcode), over
+    e's (vec_id, embedding, code) rows. Cosines are rounded to 6 and
+    both rankings break ties by neighbor id, so a DuckDB oracle
+    reproduces the overlaps exactly.
 
-    Rankings use cosines rounded to 6 with id tie-breaks (the repo's
-    float-portability discipline), so the DuckDB oracle reproduces
-    the overlap numbers exactly."""
+    Scale shape: the evaluation-query side is broadcast
+    (n/QUANT_QMOD rows); one narrow scoring pass; two qid-partitioned
+    ranking windows; one overlap join + count."""
     from pyspark.sql.window import Window
 
-    e = table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    scale = F.array_max(F.transform("embedding", lambda v: F.abs(v.cast("double"))))
-    q8 = e.select(
-        "vec_id",
-        "embedding",
-        F.transform(
-            "embedding",
-            lambda v: F.round(v.cast("double") * 127.0 / scale).cast("int"),
-        ).alias("qvec"),
-    )
-    qs = q8.where(F.col("vec_id") % QUANT_QMOD == 0).select(
+    qs = e.where(F.col("vec_id") % QUANT_QMOD == 0).select(
         F.col("vec_id").alias("qid"),
         F.col("embedding").alias("qemb"),
-        F.col("qvec").alias("qq"),
+        F.col("code").alias("qcode"),
     )
-    pairs = q8.join(
-        F.broadcast(qs), F.col("vec_id") != F.col("qid")
-    ).select(
-        "qid", F.col("vec_id").alias("oid"),
+    pairs = e.join(F.broadcast(qs), F.col("vec_id") != F.col("qid")).select(
+        "qid",
+        F.col("vec_id").alias("oid"),
         F.round(cosine(F.col("embedding"), F.col("qemb")), 6).alias("fcos"),
-        F.round(
-            F.aggregate(
-                F.zip_with("qvec", "qq", lambda a, b: (a * b).cast("long")),
-                F.lit(0).cast("long"), lambda acc, v: acc + v,
-            ).cast("double")
-            / (
-                F.sqrt(F.aggregate(
-                    "qvec", F.lit(0).cast("long"),
-                    lambda acc, v: acc + (v * v).cast("long"),
-                ).cast("double"))
-                * F.sqrt(F.aggregate(
-                    "qq", F.lit(0).cast("long"),
-                    lambda acc, v: acc + (v * v).cast("long"),
-                ).cast("double"))
-            ),
-            6,
-        ).alias("qcos"),
+        score(F.col("code"), F.col("qcode")).alias("s"),
     )
     wf = Window.partitionBy("qid").orderBy(F.desc("fcos"), F.asc("oid"))
-    wq = Window.partitionBy("qid").orderBy(F.desc("qcos"), F.asc("oid"))
+    ws = Window.partitionBy("qid").orderBy(
+        F.desc("s") if desc else F.asc("s"), F.asc("oid")
+    )
     ranked = pairs.select(
-        "qid", "oid",
+        "qid",
+        "oid",
         F.row_number().over(wf).alias("frk"),
-        F.row_number().over(wq).alias("qrk"),
+        F.row_number().over(ws).alias("srk"),
     )
     ftop = ranked.where(F.col("frk") <= QUANT_K).select("qid", "oid")
-    qtop = ranked.where(F.col("qrk") <= QUANT_K).select("qid", "oid")
-    hits = ftop.join(qtop, ["qid", "oid"]).groupBy("qid").agg(
+    stop = ranked.where(F.col("srk") <= QUANT_K).select("qid", "oid")
+    hits = ftop.join(stop, ["qid", "oid"]).groupBy("qid").agg(
         F.count("*").alias("n_overlap")
     )
     return (
-        qs.select("qid").join(hits, "qid", "left")
+        qs.select("qid")
+        .join(hits, "qid", "left")
         .select(
             "qid",
             F.coalesce("n_overlap", F.lit(0)).alias("n_overlap"),
@@ -602,6 +583,44 @@ def q_int8_quant_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy("qid")
     )
+
+
+def q_int8_quant_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Scalar int8 quantization quality: per evaluation query, the
+    top-QUANT_K overlap between float-cosine and int8-cosine neighbor
+    rankings — the memory-for-recall trade a 10^9-vector deployment
+    makes (4× smaller vectors, SIMD int dot products). Quantizer:
+    symmetric per-vector absmax — q_i = round(127 · v_i / max|v|).
+
+    Rankings use cosines rounded to 6 with id tie-breaks (the repo's
+    float-portability discipline), so the DuckDB oracle reproduces
+    the overlap numbers exactly."""
+    scale = F.array_max(F.transform("embedding", lambda v: F.abs(v.cast("double"))))
+    q8 = table(spark, sf_dir, "embeddings").select(
+        "vec_id",
+        "embedding",
+        F.transform(
+            "embedding",
+            lambda v: F.round(v.cast("double") * 127.0 / scale).cast("int"),
+        ).alias("code"),
+    )
+
+    def sq(v: Column) -> Column:
+        return F.sqrt(F.aggregate(
+            v, F.lit(0).cast("long"), lambda acc, x: acc + (x * x).cast("long"),
+        ).cast("double"))
+
+    def int_cosine(a: Column, b: Column) -> Column:
+        return F.round(
+            F.aggregate(
+                F.zip_with(a, b, lambda x, y: (x * y).cast("long")),
+                F.lit(0).cast("long"), lambda acc, v: acc + v,
+            ).cast("double")
+            / (sq(a) * sq(b)),
+            6,
+        )
+
+    return _quant_recall(q8, int_cosine, desc=True)
 
 
 _INT8_RECALL_SQL = f"""
@@ -698,7 +717,7 @@ def q_binary_quant_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     sim_int8_quant_recall at the far end of the memory-for-recall
     curve: 64-dim float32 vectors collapse to ONE 64-bit code (32×
     smaller), neighbors rank by hamming distance via xor+popcount.
-    Per evaluation query: the top-{K} overlap between the float-cosine
+    Per evaluation query: the top-QUANT_K overlap between the float-cosine
     ranking and the hamming ranking.
 
     Tie-breaks are total (hamming asc, vec_id asc — hamming over 64
@@ -709,47 +728,10 @@ def q_binary_quant_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     side is broadcast (n/QUANT_QMOD rows); scoring is codegen'd
     integer xor/popcount — the exact kernel that makes 1-bit codes
     the RAM-resident rerank tier for 10^12-vector corpora."""
-    from pyspark.sql.window import Window
-
     e = table(spark, sf_dir, "embeddings").select(
         "vec_id", "embedding", _sign_banks(F.col("embedding")).alias("code")
     )
-    qs = e.where(F.col("vec_id") % QUANT_QMOD == 0).select(
-        F.col("vec_id").alias("qid"),
-        F.col("embedding").alias("qemb"),
-        F.col("code").alias("qcode"),
-    )
-    pairs = e.join(F.broadcast(qs), F.col("vec_id") != F.col("qid")).select(
-        "qid",
-        F.col("vec_id").alias("oid"),
-        F.round(cosine(F.col("embedding"), F.col("qemb")), 6).alias("fcos"),
-        _hamming(F.col("code"), F.col("qcode")).alias("ham"),
-    )
-    wf = Window.partitionBy("qid").orderBy(F.desc("fcos"), F.asc("oid"))
-    wb = Window.partitionBy("qid").orderBy(F.asc("ham"), F.asc("oid"))
-    ranked = pairs.select(
-        "qid",
-        "oid",
-        F.row_number().over(wf).alias("frk"),
-        F.row_number().over(wb).alias("brk"),
-    )
-    ftop = ranked.where(F.col("frk") <= QUANT_K).select("qid", "oid")
-    btop = ranked.where(F.col("brk") <= QUANT_K).select("qid", "oid")
-    hits = ftop.join(btop, ["qid", "oid"]).groupBy("qid").agg(
-        F.count("*").alias("n_overlap")
-    )
-    return (
-        qs.select("qid")
-        .join(hits, "qid", "left")
-        .select(
-            "qid",
-            F.coalesce("n_overlap", F.lit(0)).alias("n_overlap"),
-            F.round(F.coalesce("n_overlap", F.lit(0)) / QUANT_K, 6).alias(
-                "overlap"
-            ),
-        )
-        .orderBy("qid")
-    )
+    return _quant_recall(e, _hamming, desc=False)
 
 
 _BQ_BANK_SQL = (
@@ -805,7 +787,7 @@ ORDER BY qid
 def q_ivf_recall_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The IVF RECALL-vs-PROBES curve — the tuning table every ANN
     deployment reads before picking nprobe: per evaluation query
-    (vec_id % {QUANT_QMOD} == 0), candidate-set size and exact-top-{K}
+    (vec_id % QUANT_QMOD == 0), candidate-set size and exact-top-QUANT_K
     overlap at nprobe=1 and nprobe=2 against the shared deterministic
     IVF index (md5-sample centroids, argmax cell assignment — same
     helpers as sim_ivf_topk/semdedup so the index under measurement
@@ -821,7 +803,7 @@ def q_ivf_recall_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     a ≤cells-row frame; candidate generation is ONE hash join from
     the assignment table (cell is the cluster key at real scale, so
     the probe join IS partition pruning); ranking windows partition
-    by qid. The eval frame (n/{QUANT_QMOD} rows) is the allowlisted
+    by qid. The eval frame (n/QUANT_QMOD rows) is the allowlisted
     broadcast class shared with the quantization-recall family."""
     from pyspark.sql.window import Window
 
@@ -1026,9 +1008,9 @@ MRL_DIM = 16  # Matryoshka truncation width (prefix of the 64 dims)
 
 def q_matryoshka_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Matryoshka-truncation quality (Kusupati et al. 2022): rank
-    neighbors by cosine over the FIRST {MRL_DIM} dimensions only (4×
+    neighbors by cosine over the FIRST MRL_DIM dimensions only (4×
     smaller vectors by dropping the embedding tail, the MRL deployment
-    trade) and measure the top-{K} overlap against the full-dimension
+    trade) and measure the top-QUANT_K overlap against the full-dimension
     ranking per evaluation query. Third point on the repo's
     memory-for-recall curve: int8 (4×, near-lossless), matryoshka
     prefix (4×, lossy-ordered), binary sign (32×, coarse).
@@ -1040,48 +1022,13 @@ def q_matryoshka_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: identical to sim_int8_quant_recall — broadcast
     eval-query frame, one narrow scoring pass, qid-partitioned
     ranking windows."""
-    from pyspark.sql.window import Window
-
     e = table(spark, sf_dir, "embeddings").select(
         "vec_id",
         "embedding",
-        F.slice("embedding", 1, MRL_DIM).alias("mvec"),
+        F.slice("embedding", 1, MRL_DIM).alias("code"),
     )
-    qs = e.where(F.col("vec_id") % QUANT_QMOD == 0).select(
-        F.col("vec_id").alias("qid"),
-        F.col("embedding").alias("qemb"),
-        F.col("mvec").alias("qm"),
-    )
-    pairs = e.join(F.broadcast(qs), F.col("vec_id") != F.col("qid")).select(
-        "qid",
-        F.col("vec_id").alias("oid"),
-        F.round(cosine(F.col("embedding"), F.col("qemb")), 6).alias("fcos"),
-        F.round(cosine(F.col("mvec"), F.col("qm")), 6).alias("mcos"),
-    )
-    wf = Window.partitionBy("qid").orderBy(F.desc("fcos"), F.asc("oid"))
-    wm = Window.partitionBy("qid").orderBy(F.desc("mcos"), F.asc("oid"))
-    ranked = pairs.select(
-        "qid",
-        "oid",
-        F.row_number().over(wf).alias("frk"),
-        F.row_number().over(wm).alias("mrk"),
-    )
-    ftop = ranked.where(F.col("frk") <= QUANT_K).select("qid", "oid")
-    mtop = ranked.where(F.col("mrk") <= QUANT_K).select("qid", "oid")
-    hits = ftop.join(mtop, ["qid", "oid"]).groupBy("qid").agg(
-        F.count("*").alias("n_overlap")
-    )
-    return (
-        qs.select("qid")
-        .join(hits, "qid", "left")
-        .select(
-            "qid",
-            F.coalesce("n_overlap", F.lit(0)).alias("n_overlap"),
-            F.round(F.coalesce("n_overlap", F.lit(0)) / QUANT_K, 6).alias(
-                "overlap"
-            ),
-        )
-        .orderBy("qid")
+    return _quant_recall(
+        e, lambda m, qm: F.round(cosine(m, qm), 6), desc=True
     )
 
 
@@ -1363,7 +1310,7 @@ def q_pq_adc_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     codes. Queries rank candidates by ASYMMETRIC DISTANCE (ADC): the
     exact query-to-codeword distances are precomputed per subspace
     (tiny table) and a candidate's approximate distance is a pure
-    TABLE-LOOKUP SUM over its codes. Output per query: top-{k}
+    TABLE-LOOKUP SUM over its codes. Output per query: top-PQ_TOPK
     overlap between ADC and exact-L2 rankings — the compression-for-
     recall trade measured, companion to sim_int8_quant_recall
     (4 bytes/vector here vs 64 there vs 256 raw).
@@ -2346,28 +2293,19 @@ GEO_R = 1_000      # neighbor radius = grid cell size
 GEO_K = 500        # reported nearest pairs
 
 
-def q_geo_grid_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Spatial neighbor join (all point pairs within euclidean
-    radius R, top-K nearest reported) via GRID BUCKETING — the
-    standard distributed spatial-join strategy: hash every point to
-    an R×R cell, probe the 3×3 neighborhood with a constant ×9
-    explode, and equi-join on the cell key, with the exact distance
-    as a residual filter. The oracle is the ground-truth ALL-PAIRS
-    distance join, so the driver hash certifies the grid cover
-    (every qualifying pair shares a probed cell — the cover
-    guarantee that makes cell size ≥ R mandatory).
-
+def _geo_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(a, b, d2): every ORDERED pair of distinct documents within
+    euclidean radius GEO_R, d2 the exact integer squared distance.
     Points are synthesized deterministically from doc_id md5 (the
     corpus has no geo columns; the operator is the shape, the
-    coordinates are fixtures — same policy as the manifest
-    queries). Distances are exact integer d² — no sqrt crosses the
-    hash. A pair can match through only ONE (dx, dy) probe (the one
-    equal to b's cell), so the join needs no dedup.
+    coordinates are fixtures — same policy as the manifest queries).
 
-    Scale shape: equi-join on (cell_x, cell_y) — shuffle keyed by
-    cell, occupancy bounded by density×R², ×9 constant expansion on
-    the probe side only; top-K is TakeOrderedAndProject. The oracle's
-    quadratic blowup is confined to the sf≤0.1 corpus."""
+    Grid bucketing: every point hashes to a GEO_R×GEO_R cell, the
+    probe side explodes ×9 onto its 3×3 neighborhood, and the two
+    sides equi-join on the cell key with d2 as a residual filter. A
+    pair can match through only ONE (dx, dy) probe (the one equal to
+    b's cell), so the join needs no dedup; cell size ≥ GEO_R makes
+    the cover complete."""
     doc = table(spark, sf_dir, "documents").select("doc_id")
 
     def coord(axis: str) -> Column:
@@ -2412,22 +2350,47 @@ def q_geo_grid_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select("a", "ax", "ay", "jx", (F.col("cy") + F.col("dy")).alias("jy"))
     )
-    cand = probe.join(
-        pts.select(
-            F.col("doc_id").alias("b"),
-            F.col("x").alias("bx"),
-            F.col("y").alias("by"),
-            F.col("cx").alias("jx"),
-            F.col("cy").alias("jy"),
-        ),
-        ["jx", "jy"],
-    ).where(F.col("a") < F.col("b"))
     d2 = (F.col("ax") - F.col("bx")) * (F.col("ax") - F.col("bx")) + (
         F.col("ay") - F.col("by")
     ) * (F.col("ay") - F.col("by"))
     return (
-        cand.select("a", "b", d2.alias("d2"))
+        probe.join(
+            pts.select(
+                F.col("doc_id").alias("b"),
+                F.col("x").alias("bx"),
+                F.col("y").alias("by"),
+                F.col("cx").alias("jx"),
+                F.col("cy").alias("jy"),
+            ),
+            ["jx", "jy"],
+        )
+        .where(F.col("a") != F.col("b"))
+        .select("a", "b", d2.alias("d2"))
         .where(F.col("d2") <= GEO_R * GEO_R)
+    )
+
+
+def q_geo_grid_join(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Spatial neighbor join (all point pairs within euclidean
+    radius R, top-K nearest reported) via GRID BUCKETING — the
+    standard distributed spatial-join strategy: hash every point to
+    an R×R cell, probe the 3×3 neighborhood with a constant ×9
+    explode, and equi-join on the cell key, with the exact distance
+    as a residual filter. The oracle is the ground-truth ALL-PAIRS
+    distance join, so the driver hash certifies the grid cover
+    (every qualifying pair shares a probed cell — the cover
+    guarantee that makes cell size ≥ R mandatory).
+
+    Points and the grid cover come from _geo_pairs; distances are
+    exact integer d² — no sqrt crosses the hash.
+
+    Scale shape: equi-join on (cell_x, cell_y) — shuffle keyed by
+    cell, occupancy bounded by density×R², ×9 constant expansion on
+    the probe side only; top-K is TakeOrderedAndProject. The oracle's
+    quadratic blowup is confined to the sf≤0.1 corpus."""
+    return (
+        _geo_pairs(spark, sf_dir)
+        .where(F.col("a") < F.col("b"))
         .orderBy("d2", "a", "b")
         .limit(GEO_K)
     )
@@ -2474,65 +2437,8 @@ def q_graph_local_clustering(spark: SparkSession, sf_dir: str) -> DataFrame:
     the all-pairs edge set.
 
     Vertices need deg ≥ 2 (the coefficient is undefined below)."""
-    doc = table(spark, sf_dir, "documents").select("doc_id")
-
-    def coord(axis: str) -> Column:
-        return (
-            F.conv(
-                F.substring(
-                    F.md5(F.concat(F.col("doc_id").cast("string"), F.lit(axis))),
-                    1,
-                    8,
-                ),
-                16,
-                10,
-            ).cast("long")
-            % GEO_SPAN
-        )
-
-    pts = doc.select(
-        "doc_id", coord("x").alias("x"), coord("y").alias("y")
-    ).select(
-        "doc_id",
-        "x",
-        "y",
-        F.expr(f"x DIV {GEO_R}").alias("cx"),
-        F.expr(f"y DIV {GEO_R}").alias("cy"),
-    )
-    probe = (
-        pts.select(
-            F.col("doc_id").alias("a"),
-            F.col("x").alias("ax"),
-            F.col("y").alias("ay"),
-            "cx",
-            "cy",
-            F.explode(F.array(F.lit(-1), F.lit(0), F.lit(1))).alias("dx"),
-        )
-        .select(
-            "a",
-            "ax",
-            "ay",
-            (F.col("cx") + F.col("dx")).alias("jx"),
-            "cy",
-            F.explode(F.array(F.lit(-1), F.lit(0), F.lit(1))).alias("dy"),
-        )
-        .select("a", "ax", "ay", "jx", (F.col("cy") + F.col("dy")).alias("jy"))
-    )
-    d2 = (F.col("ax") - F.col("bx")) * (F.col("ax") - F.col("bx")) + (
-        F.col("ay") - F.col("by")
-    ) * (F.col("ay") - F.col("by"))
     directed = (
-        probe.join(
-            pts.select(
-                F.col("doc_id").alias("b"),
-                F.col("x").alias("bx"),
-                F.col("y").alias("by"),
-                F.col("cx").alias("jx"),
-                F.col("cy").alias("jy"),
-            ),
-            ["jx", "jy"],
-        )
-        .where((F.col("a") != F.col("b")) & (d2 <= GEO_R * GEO_R))
+        _geo_pairs(spark, sf_dir)
         .select(F.col("a").alias("v"), F.col("b").alias("u"))
         .persist()
     )
@@ -2746,72 +2652,11 @@ def q_graph_random_walks(spark: SparkSession, sf_dir: str) -> DataFrame:
     you batch many walks per join, same shape). The oracle unrolls
     the identical walk recurrence with a recursive CTE over the
     all-pairs adjacency, so the hash certifies every step choice."""
-    doc = table(spark, sf_dir, "documents").select("doc_id")
-
-    def coord(axis: str) -> Column:
-        return (
-            F.conv(
-                F.substring(
-                    F.md5(F.concat(F.col("doc_id").cast("string"), F.lit(axis))),
-                    1,
-                    8,
-                ),
-                16,
-                10,
-            ).cast("long")
-            % GEO_SPAN
-        )
-
-    pts = doc.select(
-        "doc_id", coord("x").alias("x"), coord("y").alias("y")
-    ).select(
-        "doc_id",
-        "x",
-        "y",
-        F.expr(f"x DIV {GEO_R}").alias("cx"),
-        F.expr(f"y DIV {GEO_R}").alias("cy"),
-    )
-    probe = (
-        pts.select(
-            F.col("doc_id").alias("a"),
-            F.col("x").alias("ax"),
-            F.col("y").alias("ay"),
-            "cx",
-            "cy",
-            F.explode(F.array(F.lit(-1), F.lit(0), F.lit(1))).alias("dx"),
-        )
-        .select(
-            "a",
-            "ax",
-            "ay",
-            (F.col("cx") + F.col("dx")).alias("jx"),
-            "cy",
-            F.explode(F.array(F.lit(-1), F.lit(0), F.lit(1))).alias("dy"),
-        )
-        .select("a", "ax", "ay", "jx", (F.col("cy") + F.col("dy")).alias("jy"))
-    )
-    d2 = (F.col("ax") - F.col("bx")) * (F.col("ax") - F.col("bx")) + (
-        F.col("ay") - F.col("by")
-    ) * (F.col("ay") - F.col("by"))
-    edges = (
-        probe.join(
-            pts.select(
-                F.col("doc_id").alias("b"),
-                F.col("x").alias("bx"),
-                F.col("y").alias("by"),
-                F.col("cx").alias("jx"),
-                F.col("cy").alias("jy"),
-            ),
-            ["jx", "jy"],
-        )
-        .where(F.col("a") != F.col("b"))
-        .select(
-            F.col("a").alias("src"), F.col("b").alias("dst"), d2.alias("d2")
-        )
-        .where(F.col("d2") <= GEO_R * GEO_R)
-    )
     from pyspark.sql.window import Window
 
+    edges = _geo_pairs(spark, sf_dir).select(
+        F.col("a").alias("src"), F.col("b").alias("dst"), "d2"
+    )
     adj = edges.withColumn(
         "r0",
         F.row_number().over(
@@ -2820,7 +2665,7 @@ def q_graph_random_walks(spark: SparkSession, sf_dir: str) -> DataFrame:
         - 1,
     ).select("src", "dst", "r0").persist()
     deg = adj.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
-    walks = pts.select(
+    walks = table(spark, sf_dir, "documents").select(
         F.col("doc_id").alias("start"),
         F.lit(0).cast("int").alias("step"),
         F.col("doc_id").alias("node"),

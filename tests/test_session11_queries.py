@@ -1,7 +1,8 @@
 """Pure-Python reference pins for the session-11 operators:
 Iceberg-style compaction planning (full plan recompute + the binpack
-size contract), binary-quantization recall (sign-bit codes + hamming
-ranking recomputed with stdlib ints), 64-bit SimHash hamming pairs
+size contract), int8 and binary quantization recall (absmax int8
+codes with HALF_UP rounding, sign-bit codes + hamming ranking, all
+recomputed with stdlib ints), 64-bit SimHash hamming pairs
 (all-pairs ground truth + the pigeonhole recall guarantee), and HITS
 (four half-rounds of exact integer propagation). Each reference is an
 independent stdlib recompute, never a re-run of the Spark code."""
@@ -9,6 +10,7 @@ independent stdlib recompute, never a re-run of the Spark code."""
 import hashlib
 import math
 from collections import Counter, defaultdict
+from decimal import ROUND_HALF_UP, Decimal
 
 import pyarrow.parquet as pq
 import pytest
@@ -183,6 +185,69 @@ def test_binary_quant_recall_exact(spark, embeddings):
     # 1-bit codes at 64 dims must retain SOME signal: mean overlap
     # strictly above the ~1.6% random-ranking expectation.
     assert sum(got.values()) / len(got) > 1.0
+
+
+# --- sim_int8_quant_recall ---------------------------------------------------
+
+
+def _half_up(x, places):
+    """Spark round(): HALF_UP on the shortest decimal repr (python's
+    round is banker's)."""
+    q = Decimal(1).scaleb(-places)
+    return float(Decimal(repr(x)).quantize(q, rounding=ROUND_HALF_UP))
+
+
+def _int8_reference(embeddings):
+    from ocr_intern_spark.operators.similarity import QUANT_K, QUANT_QMOD
+
+    def quant(v):
+        scale = max(abs(float(x)) for x in v)
+        return [int(_half_up(float(x) * 127.0 / scale, 0)) for x in v]
+
+    def cos6(a, b):
+        num = sum(float(x) * float(y) for x, y in zip(a, b))
+        den = math.sqrt(sum(float(x) * float(x) for x in a)) * math.sqrt(
+            sum(float(y) * float(y) for y in b)
+        )
+        return _half_up(num / den, 6)
+
+    def icos6(a, b):
+        num = sum(x * y for x, y in zip(a, b))
+        den = math.sqrt(float(sum(x * x for x in a))) * math.sqrt(
+            float(sum(y * y for y in b))
+        )
+        return _half_up(float(num) / den, 6)
+
+    coded = [(vid, emb, quant(emb)) for vid, emb in embeddings]
+    out = {}
+    for qid, qemb, qq in coded:
+        if qid % QUANT_QMOD != 0:
+            continue
+        rows = [
+            (oid, cos6(emb, qemb), icos6(q, qq))
+            for oid, emb, q in coded
+            if oid != qid
+        ]
+        ftop = {r[0] for r in sorted(rows, key=lambda r: (-r[1], r[0]))[:QUANT_K]}
+        qtop = {r[0] for r in sorted(rows, key=lambda r: (-r[2], r[0]))[:QUANT_K]}
+        out[qid] = len(ftop & qtop)
+    return out
+
+
+def test_int8_quant_recall_exact(spark, embeddings):
+    from ocr_intern_spark.operators.similarity import (
+        QUANT_K,
+        q_int8_quant_recall,
+    )
+
+    rows = q_int8_quant_recall(spark, SF_DIR).collect()
+    got = {r["qid"]: r["n_overlap"] for r in rows}
+    want = _int8_reference(embeddings)
+    assert want and got == want
+    assert all(r["overlap"] == _half_up(r["n_overlap"] / QUANT_K, 6) for r in rows)
+    # int8 is the near-lossless end of the curve: it must disagree with
+    # the float ranking somewhere, or the quantizer is not exercised
+    assert min(want.values()) < QUANT_K
 
 
 # --- dedup_simhash_hamming64 -------------------------------------------------

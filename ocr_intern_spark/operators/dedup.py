@@ -85,6 +85,150 @@ _SHINGLES_SQL = f"""
 """
 
 
+# --- shared shingle-index, pair-count and LSH-band builders ------------------
+#
+# Each structure below is built in ONE place; callers keep their own
+# .cache()/checkpoint/repartition on what a builder returns. The
+# *_SQL fragments are their DuckDB mirrors.
+
+
+def _hashed_index(
+    d: DataFrame, materialize: Callable[[DataFrame], DataFrame]
+) -> DataFrame:
+    """(doc_id, shingle) over the blurred shingles, each shingle
+    replaced by its xxhash64 (the 8-byte key; see
+    q_ngram_jaccard_pairs), landed once by `materialize`."""
+    return materialize(
+        _shingles(d).select("doc_id", F.xxhash64("shingle").alias("shingle"))
+    )
+
+
+def _rare_cut(sh: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """(sizes, shr) of a (doc_id, shingle) index: `sizes` (doc_id, n)
+    counts each doc's shingle set over the WHOLE index; `shr` drops the
+    shingles present in more than MAX_SHINGLE_DF docs (the stopword-
+    shingle skew cut) before any pair join. Sizes count before the cut
+    so every pair stage — exact, LSH re-rank, oracle — scores a pair
+    the same whatever the cut removed."""
+    sizes = sh.groupBy("doc_id").agg(F.count("*").alias("n"))
+    rare = (
+        sh.groupBy("shingle")
+        .agg(F.count("*").alias("df"))
+        .where(F.col("df") <= MAX_SHINGLE_DF)
+        .select("shingle")
+    )
+    return sizes, sh.join(rare, "shingle")
+
+
+def _with_sizes(pairs: DataFrame, sizes: DataFrame) -> DataFrame:
+    """A (da, db, …) pair frame joined to both docs' set sizes na, nb."""
+    sa = sizes.select(F.col("doc_id").alias("da"), F.col("n").alias("na"))
+    sb = sizes.select(F.col("doc_id").alias("db"), F.col("n").alias("nb"))
+    return pairs.join(sa, "da").join(sb, "db")
+
+
+def _pair_common(a: DataFrame, b: DataFrame, sizes: DataFrame) -> DataFrame:
+    """(da, db, common, na, nb) for every pair da < db sharing a
+    shingle: the inverted-index self-join of two sides of one index
+    (the caller may repartition `a`), counted per pair — never a cross
+    join — and joined to both set sizes."""
+    a, b = a.alias("a"), b.alias("b")
+    common = (
+        a.join(b, (F.col("a.shingle") == F.col("b.shingle"))
+               & (F.col("a.doc_id") < F.col("b.doc_id")))
+        .groupBy(F.col("a.doc_id").alias("da"), F.col("b.doc_id").alias("db"))
+        .agg(F.count("*").alias("common"))
+    )
+    return _with_sizes(common, sizes)
+
+
+def _jaccard() -> Column:
+    """|A ∩ B| / |A ∪ B| over the (common, na, nb) columns."""
+    return F.col("common") / (F.col("na") + F.col("nb") - F.col("common"))
+
+
+def _xx_signature(sh: DataFrame) -> DataFrame:
+    """(doc_id, mh0..): per seed s, min over the doc's shingles of
+    xxhash64(s, shingle). BIGINT min buffers keep the aggregation a
+    partial/final HashAggregate (the md5-string family degrades to
+    SortAggregate)."""
+    return sh.groupBy("doc_id").agg(
+        *[
+            F.min(F.xxhash64(F.lit(s), F.col("shingle"))).alias(f"mh{s}")
+            for s in range(MINHASH_SEEDS)
+        ]
+    )
+
+
+def _md5_bucket(*cols: Column) -> Column:
+    """The oracle-portable band bucket: md5 of the '|'-joined rows."""
+    return F.md5(F.concat_ws("|", *cols))
+
+
+def _band_buckets(
+    sig: DataFrame, bucket: Callable[..., Column]
+) -> DataFrame:
+    """(doc_id, band, bucket): LSH_BANDS bands of MINHASH_SEEDS //
+    LSH_BANDS signature rows, bucket = `bucket`(the band's mh columns).
+    Single pass: the bands explode from an inline array — a per-band
+    union would re-run the whole signature pipeline LSH_BANDS times."""
+    rows = MINHASH_SEEDS // LSH_BANDS
+    bands = [
+        F.struct(
+            F.lit(band).alias("band"),
+            bucket(
+                *[F.col(f"mh{band * rows + r}") for r in range(rows)]
+            ).alias("bucket"),
+        )
+        for band in range(LSH_BANDS)
+    ]
+    return sig.select(
+        "doc_id", F.explode(F.array(*bands)).alias("b")
+    ).select("doc_id", "b.band", "b.bucket")
+
+
+def _band_pairs(buckets: DataFrame) -> DataFrame:
+    """(da, db), da < db: the distinct candidate pairs — docs sharing
+    any (band, bucket) — via one equi-self-join on the bucket key."""
+    l, r = buckets.alias("l"), buckets.alias("r")
+    return (
+        l.join(r, (F.col("l.band") == F.col("r.band"))
+               & (F.col("l.bucket") == F.col("r.bucket"))
+               & (F.col("l.doc_id") < F.col("r.doc_id")))
+        .select(F.col("l.doc_id").alias("da"), F.col("r.doc_id").alias("db"))
+        .distinct()
+    )
+
+
+def _bucket_groups(buckets: DataFrame) -> DataFrame:
+    """The candidate groups: every (band, bucket) holding > 1 doc."""
+    return (
+        buckets.groupBy("band", "bucket")
+        .agg(
+            F.count("*").alias("n_docs"),
+            F.min("doc_id").alias("first_doc"),
+            F.max("doc_id").alias("last_doc"),
+        )
+        .where(F.col("n_docs") > 1)
+        .orderBy("band", "bucket")
+    )
+
+
+# _rare_cut in SQL; the CTE list stays open for the caller's next CTE.
+_RARE_CUT_SQL = f"""WITH sh AS ({_SHINGLES_SQL}),
+sizes AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
+rare AS (SELECT shingle FROM sh GROUP BY shingle HAVING count(*) <= {MAX_SHINGLE_DF}),
+shr AS (SELECT sh.* FROM sh JOIN rare USING (shingle)),"""
+
+# _pair_common's self-join count in SQL (the sizes join is the caller's)
+_PAIR_COMMON_SQL = f"""{_RARE_CUT_SQL}
+common AS (
+  SELECT a.doc_id AS da, b.doc_id AS db, count(*) AS common
+  FROM shr a JOIN shr b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
+  GROUP BY a.doc_id, b.doc_id
+)"""
+
+
 def q_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact dedup on a 5-word-prefix normal form (creates real
     collisions in the synthetic corpus): keeper = min doc_id."""
@@ -155,19 +299,8 @@ def q_ngram_jaccard_pairs(
     # The index is consumed three times (sizes, DF cut, self-join) —
     # materialized ONCE via the injected strategy. The previous
     # .cache() was the narrated-only version of the same story.
-    sh = (materialize or _round_checkpoint)(
-        _shingles(d).select("doc_id", F.xxhash64("shingle").alias("shingle"))
-    )
-    # per-doc shingle-set size
-    sizes = sh.groupBy("doc_id").agg(F.count("*").alias("n"))
-    # skew cut: drop shingles present in too many docs
-    rare = (
-        sh.groupBy("shingle")
-        .agg(F.count("*").alias("df"))
-        .where(F.col("df") <= MAX_SHINGLE_DF)
-        .select("shingle")
-    )
-    shr = sh.join(rare, "shingle")
+    sh = _hashed_index(d, materialize or _round_checkpoint)
+    sizes, shr = _rare_cut(sh)
     # Pair-count aggregation is the whole cost of this query (r6
     # profile at 10x-sf0.1: 23.4 s of 23.5 s total — the co-occurrence
     # stream is ~100M rows collapsing to ~82M mostly-unique (da, db)
@@ -191,26 +324,13 @@ def q_ngram_jaccard_pairs(
     #   bench contract forbids).
     dp = spark.sparkContext.defaultParallelism
     pair_parts = max(dp, min(8 * dp, int(sh.count() // 10_000)))
-    a = shr.repartition(pair_parts, "doc_id").alias("a")
-    b = shr.alias("b")
-    common = (
-        a.join(b, (F.col("a.shingle") == F.col("b.shingle"))
-               & (F.col("a.doc_id") < F.col("b.doc_id")))
-        .groupBy(F.col("a.doc_id").alias("da"), F.col("b.doc_id").alias("db"))
-        .agg(F.count("*").alias("common"))
-    )
-    sa = sizes.select(F.col("doc_id").alias("da"), F.col("n").alias("na"))
-    sb = sizes.select(F.col("doc_id").alias("db"), F.col("n").alias("nb"))
+    a = shr.repartition(pair_parts, "doc_id")
     return (
-        common.join(sa, "da").join(sb, "db")
+        _pair_common(a, shr, sizes)
         .select(
             F.col("da").alias("a"),
             F.col("db").alias("b"),
-            F.round(
-                F.col("common")
-                / (F.col("na") + F.col("nb") - F.col("common")),
-                6,
-            ).alias("jaccard"),
+            F.round(_jaccard(), 6).alias("jaccard"),
         )
         .where(F.col("jaccard") >= 0.5)
         .orderBy("a", "b")
@@ -218,15 +338,7 @@ def q_ngram_jaccard_pairs(
 
 
 _JACCARD_SQL = f"""
-WITH sh AS ({_SHINGLES_SQL}),
-sizes AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
-rare AS (SELECT shingle FROM sh GROUP BY shingle HAVING count(*) <= {MAX_SHINGLE_DF}),
-shr AS (SELECT sh.* FROM sh JOIN rare USING (shingle)),
-common AS (
-  SELECT a.doc_id AS da, b.doc_id AS db, count(*) AS common
-  FROM shr a JOIN shr b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-  GROUP BY a.doc_id, b.doc_id
-)
+{_PAIR_COMMON_SQL}
 SELECT da AS a, db AS b,
        round(common / CAST(sa.n + sb.n - common AS DOUBLE), 6) AS jaccard
 FROM common
@@ -254,17 +366,7 @@ def q_ngram_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     common·10 >= n_a·8 on both engines (no float division at the
     boundary); the reported score is rounded for display only."""
     d = documents(spark, sf_dir)
-    sh = _round_checkpoint(
-        _shingles(d).select("doc_id", F.xxhash64("shingle").alias("shingle"))
-    )
-    sizes = sh.groupBy("doc_id").agg(F.count("*").alias("n"))
-    rare = (
-        sh.groupBy("shingle")
-        .agg(F.count("*").alias("df"))
-        .where(F.col("df") <= MAX_SHINGLE_DF)
-        .select("shingle")
-    )
-    shr = sh.join(rare, "shingle")
+    sizes, shr = _rare_cut(_hashed_index(d, _round_checkpoint))
     a = shr.alias("a")
     b = shr.alias("b")
     common = (
@@ -290,10 +392,7 @@ def q_ngram_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 _CONTAINMENT_SQL = f"""
-WITH sh AS ({_SHINGLES_SQL}),
-sizes AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
-rare AS (SELECT shingle FROM sh GROUP BY shingle HAVING count(*) <= {MAX_SHINGLE_DF}),
-shr AS (SELECT sh.* FROM sh JOIN rare USING (shingle)),
+{_RARE_CUT_SQL}
 common AS (
   SELECT a.doc_id AS contained, b.doc_id AS container, count(*) AS common
   FROM shr a JOIN shr b ON a.shingle = b.shingle AND a.doc_id != b.doc_id
@@ -350,17 +449,7 @@ def q_minhash_fast(spark: SparkSession, sf_dir: str) -> DataFrame:
     bit-exact vs F.xxhash64 in tests/test_xxh64_oracle.py) over
     DuckDB-extracted shingles — hash-checked, not rows-only."""
     d = documents(spark, sf_dir)
-    sig = (
-        _shingles(d, blur=False)
-        .groupBy("doc_id")
-        .agg(
-            *[
-                F.min(F.xxhash64(F.lit(s), F.col("shingle"))).alias(f"mh{s}")
-                for s in range(MINHASH_SEEDS)
-            ]
-        )
-    )
-    return sig.orderBy("doc_id")
+    return _xx_signature(_shingles(d, blur=False)).orderBy("doc_id")
 
 
 def q_minhash_fast_lsh_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -373,98 +462,33 @@ def q_minhash_fast_lsh_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     golden from the pure-Python XXH64 spec implementation
     (oracle/xxh64.py) — hash-checked; candidate-group recall vs the
     md5 family additionally pinned by tests/test_minhash_fast.py."""
-    rows_per_band = MINHASH_SEEDS // LSH_BANDS
     d = documents(spark, sf_dir)
-    sig = (
-        _shingles(d, blur=False)
-        .groupBy("doc_id")
-        .agg(
-            *[
-                F.min(F.xxhash64(F.lit(s), F.col("shingle"))).alias(f"mh{s}")
-                for s in range(MINHASH_SEEDS)
-            ]
-        )
-    )
-    band_structs = []
-    for band in range(LSH_BANDS):
-        cols = [
-            F.col(f"mh{band * rows_per_band + r}") for r in range(rows_per_band)
-        ]
-        band_structs.append(
-            F.struct(
-                F.lit(band).alias("band"),
-                F.xxhash64(*cols).alias("bucket"),
-            )
-        )
-    allb = sig.select(
-        "doc_id", F.explode(F.array(*band_structs)).alias("b")
-    ).select(
-        "doc_id",
-        F.col("b.band").alias("band"),
-        F.col("b.bucket").alias("bucket"),
-    )
-    return (
-        allb.groupBy("band", "bucket")
-        .agg(
-            F.count("*").alias("n_docs"),
-            F.min("doc_id").alias("first_doc"),
-            F.max("doc_id").alias("last_doc"),
-        )
-        .where(F.col("n_docs") > 1)
-        .orderBy("band", "bucket")
-    )
+    sig = _xx_signature(_shingles(d, blur=False))
+    return _bucket_groups(_band_buckets(sig, F.xxhash64))
 
 
 def q_minhash_lsh_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     """LSH banding: md5 over each band's signature rows → bucket id;
-    emit buckets holding >1 doc (the candidate groups).
-
-    Single pass: the signature frame is computed ONCE and the bands
-    are exploded from an inline array — a per-band union would
-    re-run the whole shingle+minhash pipeline LSH_BANDS times."""
-    rows_per_band = MINHASH_SEEDS // LSH_BANDS
+    emit buckets holding >1 doc (the candidate groups). One signature
+    pass; the bands explode from it (_band_buckets)."""
     sig = _minhash_sig(spark, sf_dir)
-    band_structs = []
-    for band in range(LSH_BANDS):
-        cols = [
-            F.col(f"mh{band * rows_per_band + r}") for r in range(rows_per_band)
-        ]
-        band_structs.append(
-            F.struct(
-                F.lit(band).alias("band"),
-                F.md5(F.concat_ws("|", *cols)).alias("bucket"),
-            )
-        )
-    allb = sig.select(
-        "doc_id", F.explode(F.array(*band_structs)).alias("b")
-    ).select("doc_id", F.col("b.band").alias("band"), F.col("b.bucket").alias("bucket"))
-    return (
-        allb.groupBy("band", "bucket")
-        .agg(
-            F.count("*").alias("n_docs"),
-            F.min("doc_id").alias("first_doc"),
-            F.max("doc_id").alias("last_doc"),
-        )
-        .where(F.col("n_docs") > 1)
-        .orderBy("band", "bucket")
+    return _bucket_groups(_band_buckets(sig, _md5_bucket))
+
+
+# _band_buckets in SQL, md5 family
+_BANDS_SQL = " UNION ALL ".join(
+    f"SELECT doc_id, {band} AS band, md5("
+    + " || '|' || ".join(
+        f"mh{band * (MINHASH_SEEDS // LSH_BANDS) + r}"
+        for r in range(MINHASH_SEEDS // LSH_BANDS)
     )
-
-
-def _minhash_lsh_sql() -> str:
-    rows_per_band = MINHASH_SEEDS // LSH_BANDS
-    selects = []
-    for band in range(LSH_BANDS):
-        cols = " || '|' || ".join(
-            f"mh{band * rows_per_band + r}" for r in range(rows_per_band)
-        )
-        selects.append(
-            f"SELECT doc_id, {band} AS band, md5({cols}) AS bucket FROM sig"
-        )
-    union = " UNION ALL ".join(selects)
-    return f"""
+    + ") AS bucket FROM sig"
+    for band in range(LSH_BANDS)
+)
+_MINHASH_LSH_SQL = f"""
 WITH sh AS ({_MINHASH_SHINGLES_NOBLUR_SQL}),
 sig AS (SELECT doc_id, {_MINHASH_SQL_COLS} FROM sh GROUP BY doc_id),
-bands AS ({union})
+bands AS ({_BANDS_SQL})
 SELECT band, bucket, count(*) AS n_docs,
        min(doc_id) AS first_doc, max(doc_id) AS last_doc
 FROM bands GROUP BY band, bucket HAVING count(*) > 1 ORDER BY band, bucket
@@ -483,49 +507,14 @@ def q_lsh_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = documents(spark, sf_dir)
     sh = _shingles(d).cache()
     # exact pairs (same construction as q_ngram_jaccard_pairs, md5-free)
-    sizes = sh.groupBy("doc_id").agg(F.count("*").alias("n"))
-    rare = (
-        sh.groupBy("shingle").agg(F.count("*").alias("df"))
-        .where(F.col("df") <= MAX_SHINGLE_DF).select("shingle")
-    )
-    shr = sh.join(rare, "shingle")
-    a, b = shr.alias("a"), shr.alias("b")
-    common = (
-        a.join(b, (F.col("a.shingle") == F.col("b.shingle"))
-               & (F.col("a.doc_id") < F.col("b.doc_id")))
-        .groupBy(F.col("a.doc_id").alias("da"), F.col("b.doc_id").alias("db"))
-        .agg(F.count("*").alias("common"))
-    )
-    sa = sizes.select(F.col("doc_id").alias("da"), F.col("n").alias("na"))
-    sb = sizes.select(F.col("doc_id").alias("db"), F.col("n").alias("nb"))
-    jac = F.col("common") / (F.col("na") + F.col("nb") - F.col("common"))
+    sizes, shr = _rare_cut(sh)
     true_pairs = (
-        common.join(sa, "da").join(sb, "db").where(jac >= 0.5)
+        _pair_common(shr, shr, sizes).where(_jaccard() >= 0.5)
         .select("da", "db")
     )
     # LSH candidates over the same universe (md5 family, 4 bands × 2)
-    rows_per_band = MINHASH_SEEDS // LSH_BANDS
     sig = sh.groupBy("doc_id").agg(*minhash_signature_cols())
-    band_structs = [
-        F.struct(
-            F.lit(band).alias("band"),
-            F.md5(F.concat_ws("|", *[
-                F.col(f"mh{band * rows_per_band + r}") for r in range(rows_per_band)
-            ])).alias("bucket"),
-        )
-        for band in range(LSH_BANDS)
-    ]
-    buckets = sig.select(
-        "doc_id", F.explode(F.array(*band_structs)).alias("b")
-    ).select("doc_id", "b.band", "b.bucket")
-    l, r = buckets.alias("l"), buckets.alias("r")
-    cand = (
-        l.join(r, (F.col("l.band") == F.col("r.band"))
-               & (F.col("l.bucket") == F.col("r.bucket"))
-               & (F.col("l.doc_id") < F.col("r.doc_id")))
-        .select(F.col("l.doc_id").alias("da"), F.col("r.doc_id").alias("db"))
-        .distinct()
-    )
+    cand = _band_pairs(_band_buckets(sig, _md5_bucket))
     hits = true_pairs.join(cand, ["da", "db"])
     # the three scalars FOLDED INTO THE PLAN (1-row aggregates,
     # broadcast crossJoins) instead of three driver-side count jobs
@@ -556,33 +545,19 @@ def q_lsh_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_LSH_QUALITY_SQL = f"""
-WITH sh AS ({_SHINGLES_SQL}),
-sizes AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
-rare AS (SELECT shingle FROM sh GROUP BY shingle HAVING count(*) <= {MAX_SHINGLE_DF}),
-shr AS (SELECT sh.* FROM sh JOIN rare USING (shingle)),
-common AS (
-  SELECT a.doc_id AS da, b.doc_id AS db, count(*) AS common
-  FROM shr a JOIN shr b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-  GROUP BY a.doc_id, b.doc_id
-),
-true_pairs AS (
+# the exact true-pair set and md5 signatures the LSH evaluations share
+_TRUE_PAIRS_SIG_SQL = f"""true_pairs AS (
   SELECT da, db FROM common
   JOIN sizes sa ON sa.doc_id = da
   JOIN sizes sb ON sb.doc_id = db
   WHERE common / CAST(sa.n + sb.n - common AS DOUBLE) >= 0.5
 ),
-sig AS (SELECT doc_id, {_MINHASH_SQL_COLS} FROM sh GROUP BY doc_id),
+sig AS (SELECT doc_id, {_MINHASH_SQL_COLS} FROM sh GROUP BY doc_id),"""
+_LSH_QUALITY_SQL = f"""
+{_PAIR_COMMON_SQL},
+{_TRUE_PAIRS_SIG_SQL}
 bands AS (
-  {" UNION ALL ".join(
-    "SELECT doc_id, " + str(band) + " AS band, md5("
-    + " || '|' || ".join(
-        f"mh{band * (MINHASH_SEEDS // LSH_BANDS) + r}"
-        for r in range(MINHASH_SEEDS // LSH_BANDS)
-    )
-    + ") AS bucket FROM sig"
-    for band in range(LSH_BANDS)
-  )}
+  {_BANDS_SQL}
 ),
 cand AS (
   SELECT DISTINCT l.doc_id AS da, r.doc_id AS db
@@ -739,11 +714,12 @@ def q_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     DataFrames: each round joins current labels across edges and takes
     the elementwise min; converges in <= diameter rounds (near-dup
     components are tiny and star-like, so 2-4 rounds in practice;
-    the loop is capped and checked via a cheap changed-count). Labels
-    are persisted per round and the previous round unpersisted — at
-    10^12 docs this is the standard large-scale CC recipe (the
-    large-star/small-star optimization drops rounds to O(log n) but
-    needs the same join primitive).
+    the loop is capped and checked via a cheap changed-count). Each
+    round's labels are checkpointed (_round_checkpoint), which also
+    truncates the round's lineage — at 10^12 docs this is the
+    standard large-scale CC recipe (the large-star/small-star
+    optimization drops rounds to O(log n) but needs the same join
+    primitive).
 
     This is the one driver-side LOOP in the engine: each iteration is
     fully distributed; only the convergence flag (one long) ever
@@ -907,75 +883,32 @@ def lsh_candidate_jaccard_pairs(
     post-DF-cut shingle sets — the join's row volume is
     Σ_pairs |A| (candidates are a vanishing fraction of all
     shingle-sharing pairs at scale, which is the whole point of the
-    swap) — and keep jaccard >= 0.5 with sizes counted after the cut,
-    identical semantics to the exact stage. LSH recall over this
-    corpus's true pairs is what q_dedup_pipeline_survivors_lsh's
-    oracle row proves (1-(1-s²)⁴ per-pair; near-dups here sit well
+    swap) — and keep jaccard >= 0.5 with sizes counted before the
+    cut (_rare_cut), identical semantics to the exact stage. LSH
+    recall over this corpus's true pairs is what
+    q_dedup_pipeline_survivors_lsh's oracle row proves (1-(1-s²)⁴ per-pair; near-dups here sit well
     above the s=0.5 knee)."""
     d = documents(spark, sf_dir)
     # same reliable-checkpoint swap as q_ngram_jaccard_pairs: the
     # shingle index feeds both the signature pass and the verify join
-    sh = _round_checkpoint(
-        _shingles(d).select("doc_id", F.xxhash64("shingle").alias("shingle"))
-    )
-    sig = sh.groupBy("doc_id").agg(
-        *[
-            F.min(F.xxhash64(F.lit(s), F.col("shingle"))).alias(f"mh{s}")
-            for s in range(MINHASH_SEEDS)
-        ]
-    )
-    rows_per_band = MINHASH_SEEDS // LSH_BANDS
-    band_structs = [
-        F.struct(
-            F.lit(band).alias("band"),
-            F.xxhash64(
-                *[F.col(f"mh{band * rows_per_band + r}") for r in range(rows_per_band)]
-            ).alias("bucket"),
-        )
-        for band in range(LSH_BANDS)
-    ]
-    buckets = sig.select(
-        "doc_id", F.explode(F.array(*band_structs)).alias("b")
-    ).select("doc_id", "b.band", "b.bucket")
-    l, r = buckets.alias("l"), buckets.alias("r")
-    cand = (
-        l.join(
-            r,
-            (F.col("l.band") == F.col("r.band"))
-            & (F.col("l.bucket") == F.col("r.bucket"))
-            & (F.col("l.doc_id") < F.col("r.doc_id")),
-        )
-        .select(F.col("l.doc_id").alias("a"), F.col("r.doc_id").alias("b"))
-        .distinct()
-    )
+    sh = _hashed_index(d, _round_checkpoint)
+    cand = _band_pairs(_band_buckets(_xx_signature(sh), F.xxhash64))
     # exact re-rank, candidate pairs only
-    rare = (
-        sh.groupBy("shingle")
-        .agg(F.count("*").alias("df"))
-        .where(F.col("df") <= MAX_SHINGLE_DF)
-        .select("shingle")
-    )
-    shr = sh.join(rare, "shingle")
-    sizes = shr.groupBy("doc_id").agg(F.count("*").alias("n"))
-    sa = shr.select(F.col("doc_id").alias("a"), F.col("shingle").alias("sha"))
-    sb = shr.select(F.col("doc_id").alias("b2"), F.col("shingle").alias("shb"))
+    sizes, shr = _rare_cut(sh)
+    sa = shr.select(F.col("doc_id").alias("da"), F.col("shingle").alias("sha"))
+    sb = shr.select(F.col("doc_id").alias("db2"), F.col("shingle").alias("shb"))
     common = (
-        cand.join(sa, "a")
-        .join(sb, (F.col("b") == F.col("b2")) & (F.col("sha") == F.col("shb")))
-        .groupBy("a", "b")
+        cand.join(sa, "da")
+        .join(sb, (F.col("db") == F.col("db2")) & (F.col("sha") == F.col("shb")))
+        .groupBy("da", "db")
         .agg(F.count("*").alias("common"))
     )
-    na = sizes.select(F.col("doc_id").alias("a"), F.col("n").alias("na"))
-    nb = sizes.select(F.col("doc_id").alias("b"), F.col("n").alias("nb"))
     return (
-        common.join(na, "a")
-        .join(nb, "b")
+        _with_sizes(common, sizes)
         .select(
-            "a", "b",
-            F.round(
-                F.col("common") / (F.col("na") + F.col("nb") - F.col("common")),
-                6,
-            ).alias("jaccard"),
+            F.col("da").alias("a"),
+            F.col("db").alias("b"),
+            F.round(_jaccard(), 6).alias("jaccard"),
         )
         .where(F.col("jaccard") >= 0.5)
     )
@@ -1113,31 +1046,9 @@ def q_lsh_banding_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     cross join, no driver scalars."""
     d = documents(spark, sf_dir)
     sh = _shingles(d).cache()
-    sizes = sh.groupBy("doc_id").agg(F.count("*").alias("n"))
-    rare = (
-        sh.groupBy("shingle")
-        .agg(F.count("*").alias("df"))
-        .where(F.col("df") <= MAX_SHINGLE_DF)
-        .select("shingle")
-    )
-    shr = sh.join(rare, "shingle")
-    a, b = shr.alias("a"), shr.alias("b")
-    common = (
-        a.join(
-            b,
-            (F.col("a.shingle") == F.col("b.shingle"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .groupBy(
-            F.col("a.doc_id").alias("da"), F.col("b.doc_id").alias("db")
-        )
-        .agg(F.count("*").alias("common"))
-    )
-    sa = sizes.select(F.col("doc_id").alias("da"), F.col("n").alias("na"))
-    sb = sizes.select(F.col("doc_id").alias("db"), F.col("n").alias("nb"))
-    jac = F.col("common") / (F.col("na") + F.col("nb") - F.col("common"))
+    sizes, shr = _rare_cut(sh)
     true_pairs = (
-        common.join(sa, "da").join(sb, "db").where(jac >= 0.5)
+        _pair_common(shr, shr, sizes).where(_jaccard() >= 0.5)
         .select("da", "db")
         .cache()  # joined against all four configs + the 1-row total
     )
@@ -1149,14 +1060,8 @@ def q_lsh_banding_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.struct(
                     F.lit(bands).alias("cfg"),
                     F.lit(band).alias("band"),
-                    F.md5(
-                        F.concat_ws(
-                            "|",
-                            *[
-                                F.col(f"mh{band * rpb + r}")
-                                for r in range(rpb)
-                            ],
-                        )
+                    _md5_bucket(
+                        *[F.col(f"mh{band * rpb + r}") for r in range(rpb)]
                     ).alias("bucket"),
                 )
             )
@@ -1236,22 +1141,8 @@ def _lsh_sweep_sql() -> str:
             )
     cfg_rows = ", ".join(f"({b}, {r})" for b, r in LSH_SWEEP)
     return f"""
-WITH sh AS ({_SHINGLES_SQL}),
-sizes AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
-rare AS (SELECT shingle FROM sh GROUP BY shingle HAVING count(*) <= {MAX_SHINGLE_DF}),
-shr AS (SELECT sh.* FROM sh JOIN rare USING (shingle)),
-common AS (
-  SELECT a.doc_id AS da, b.doc_id AS db, count(*) AS common
-  FROM shr a JOIN shr b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-  GROUP BY a.doc_id, b.doc_id
-),
-true_pairs AS (
-  SELECT da, db FROM common
-  JOIN sizes sa ON sa.doc_id = da
-  JOIN sizes sb ON sb.doc_id = db
-  WHERE common / CAST(sa.n + sb.n - common AS DOUBLE) >= 0.5
-),
-sig AS (SELECT doc_id, {_MINHASH_SQL_COLS} FROM sh GROUP BY doc_id),
+{_PAIR_COMMON_SQL},
+{_TRUE_PAIRS_SIG_SQL}
 bands AS ({" UNION ALL ".join(band_selects)}),
 cand AS (
   SELECT DISTINCT l.cfg, l.doc_id AS da, r.doc_id AS db
@@ -1293,7 +1184,7 @@ def q_minhash_est_error(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash ESTIMATOR CALIBRATION — the sketch-accuracy contract
     for the dedup pipeline's own estimator: for every true near-dup
     pair (exact jaccard ≥ 0.5 on the shared shingle universe), the
-    {MINHASH_SEEDS}-component signature agreement (the unbiased
+    MINHASH_SEEDS-component signature agreement (the unbiased
     jaccard estimate, E[matches/k] = J) next to the exact jaccard,
     with the absolute error in integer micro-units. The per-pair
     grain makes the driver hash a calibration regression test: if the
@@ -1302,38 +1193,16 @@ def q_minhash_est_error(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     All integer: true jaccard as common·10⁶ div union (positive
     operands — floor-identical in both engines), estimate as
-    matches·(10⁶ div {MINHASH_SEEDS}).
+    matches·(10⁶ div MINHASH_SEEDS).
 
     Scale shape: true pairs via the inverted-index join (audited);
     signatures are ONE hash aggregate; the comparison is one
     pair-keyed join of two signature rows."""
     d = documents(spark, sf_dir)
     sh = _shingles(d).cache()
-    sizes = sh.groupBy("doc_id").agg(F.count("*").alias("n"))
-    rare = (
-        sh.groupBy("shingle")
-        .agg(F.count("*").alias("df"))
-        .where(F.col("df") <= MAX_SHINGLE_DF)
-        .select("shingle")
-    )
-    shr = sh.join(rare, "shingle")
-    a, b = shr.alias("a"), shr.alias("b")
-    common = (
-        a.join(
-            b,
-            (F.col("a.shingle") == F.col("b.shingle"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .groupBy(
-            F.col("a.doc_id").alias("da"), F.col("b.doc_id").alias("db")
-        )
-        .agg(F.count("*").alias("common"))
-    )
-    sa = sizes.select(F.col("doc_id").alias("da"), F.col("n").alias("na"))
-    sb = sizes.select(F.col("doc_id").alias("db"), F.col("n").alias("nb"))
+    sizes, shr = _rare_cut(sh)
     pairs = (
-        common.join(sa, "da")
-        .join(sb, "db")
+        _pair_common(shr, shr, sizes)
         .withColumn("unn", F.col("na") + F.col("nb") - F.col("common"))
         .where(F.col("common") / F.col("unn") >= 0.5)
         .select(
@@ -1381,10 +1250,7 @@ def _minhash_est_error_sql() -> str:
     )
     step = 1_000_000 // MINHASH_SEEDS
     return f"""
-WITH sh AS ({_SHINGLES_SQL}),
-sizes AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
-rare AS (SELECT shingle FROM sh GROUP BY shingle HAVING count(*) <= {MAX_SHINGLE_DF}),
-shr AS (SELECT sh.* FROM sh JOIN rare USING (shingle)),
+{_RARE_CUT_SQL}
 common AS (
   SELECT x.doc_id AS da, y.doc_id AS db, count(*) AS common
   FROM shr x JOIN shr y ON x.shingle = y.shingle AND x.doc_id < y.doc_id
@@ -1418,9 +1284,9 @@ CC_CUT_NUM, CC_CUT_DEN = 4, 5  # base corpus = doc_id <= max_id * 4/5
 
 
 def q_cc_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Incremental duplicate-cluster MAINTENANCE: new documents (the
-    top 1/{CC_CUT_DEN} of the doc_id range) arrive against a corpus
-    whose near-dup components were already computed; instead of
+    """Incremental duplicate-cluster MAINTENANCE: new documents
+    (doc_id above max(doc_id)·CC_CUT_NUM/CC_CUT_DEN) arrive against a
+    corpus whose near-dup components were already computed; instead of
     re-running connected components over all edges, the update runs
     CC only on the CONTRACTED delta graph — every delta edge's base
     endpoint is replaced by its frozen base cluster label, so the
@@ -1908,9 +1774,7 @@ def q_ppjoin_prefix_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     8-byte hashed key; the final filter is the all-integer cross
     multiplication (1+τ')·common ≥ τ'·(na+nb) with τ'=num/den."""
     d = documents(spark, sf_dir)
-    sh = _round_checkpoint(
-        _shingles(d).select("doc_id", F.xxhash64("shingle").alias("shingle"))
-    )
+    sh = _hashed_index(d, _round_checkpoint)
     sizes = sh.groupBy("doc_id").agg(F.count("*").alias("n"))
     df_ = sh.groupBy("shingle").agg(F.count("*").alias("df"))
     ranked = (
@@ -1955,11 +1819,8 @@ def q_ppjoin_prefix_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("da", "db")
         .agg(F.count(F.lit(1)).alias("common"))
     )
-    sa = sizes.select(F.col("doc_id").alias("da"), F.col("n").alias("na"))
-    sb = sizes.select(F.col("doc_id").alias("db"), F.col("n").alias("nb"))
     return (
-        common.join(sa, "da")
-        .join(sb, "db")
+        _with_sizes(common, sizes)
         # jacc ≥ num/den ⇔ den·common ≥ num·(na+nb−common)
         .where(
             PPJ_DEN * F.col("common")
@@ -2350,7 +2211,7 @@ QUERIES = {
     "dedup_minhash_fast": (q_minhash_fast, None),
     "dedup_minhash_portable64": (q_minhash_portable64, _MINHASH_P64_SQL),
     "dedup_minhash_fast_lsh_buckets": (q_minhash_fast_lsh_buckets, None),
-    "dedup_minhash_lsh_buckets": (q_minhash_lsh_buckets, _minhash_lsh_sql()),
+    "dedup_minhash_lsh_buckets": (q_minhash_lsh_buckets, _MINHASH_LSH_SQL),
     "dedup_dup_clusters": (q_dup_clusters, _DUP_CLUSTERS_SQL),
     "dedup_pipeline_survivors": (q_dedup_pipeline_survivors, _PIPELINE_SURVIVORS_SQL),
     # same oracle ON PURPOSE: hash-equality proves the LSH swap exact

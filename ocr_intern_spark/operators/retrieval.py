@@ -121,7 +121,10 @@ def q_bm25_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _bm25_sql() -> str:
+def _bm25_sql_parts() -> tuple[str, str]:
+    """The DuckDB side of _bm25_scored: the base / per_doc / stats CTE
+    list (tf and df columns per BM25_QUERY term) and the per-term
+    contribution sum scored over it."""
     tf_cols = ",\n         ".join(
         f"len(list_filter(toks, w -> w = '{t}')) AS tf{i}"
         for i, t in enumerate(BM25_QUERY)
@@ -138,8 +141,7 @@ def _bm25_sql() -> str:
         f" + {BM25_B} * (dl / avgdl)))), 9)"
         for i in range(len(BM25_QUERY))
     )
-    return f"""
-WITH base AS (
+    ctes = f"""WITH base AS (
   SELECT doc_id,
          list_filter(regexp_split_to_array(lower(trim(text)), '\\s+'),
                      w -> length(w) > 0) AS toks
@@ -154,7 +156,14 @@ stats AS (
   SELECT count(*) AS n, avg(dl) AS avgdl,
          {df_cols}
   FROM per_doc
-)
+)"""
+    return ctes, contribs
+
+
+def _bm25_sql() -> str:
+    ctes, contribs = _bm25_sql_parts()
+    return f"""
+{ctes}
 SELECT doc_id, score FROM (
   SELECT doc_id, round({contribs}, 6) AS score
   FROM per_doc, stats
@@ -485,40 +494,10 @@ def q_bm25_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _bm25_eval_sql() -> str:
-    tf_cols = ",\n         ".join(
-        f"len(list_filter(toks, w -> w = '{t}')) AS tf{i}"
-        for i, t in enumerate(BM25_QUERY)
-    )
-    df_cols = ",\n         ".join(
-        f"sum(CASE WHEN tf{i} > 0 THEN 1 ELSE 0 END) AS df{i}"
-        for i in range(len(BM25_QUERY))
-    )
-    contribs = " + ".join(
-        f"round(ln(1.0 + (n - CAST(df{i} AS DOUBLE) + 0.5)"
-        f" / (CAST(df{i} AS DOUBLE) + 0.5))"
-        f" * ((CAST(tf{i} AS DOUBLE) * {BM25_K1 + 1.0})"
-        f" / (CAST(tf{i} AS DOUBLE) + {BM25_K1} * (1.0 - {BM25_B}"
-        f" + {BM25_B} * (dl / avgdl)))), 9)"
-        for i in range(len(BM25_QUERY))
-    )
+    ctes, contribs = _bm25_sql_parts()
     rel = " AND ".join(f"tf{i} > 0" for i in range(len(BM25_QUERY)))
     return f"""
-WITH base AS (
-  SELECT doc_id,
-         list_filter(regexp_split_to_array(lower(trim(text)), '\\s+'),
-                     w -> length(w) > 0) AS toks
-  FROM documents
-),
-per_doc AS (
-  SELECT doc_id, len(toks) AS dl,
-         {tf_cols}
-  FROM base
-),
-stats AS (
-  SELECT count(*) AS n, avg(dl) AS avgdl,
-         {df_cols}
-  FROM per_doc
-),
+{ctes},
 scored AS (
   SELECT doc_id, round({contribs}, 6) AS score, ({rel}) AS rel
   FROM per_doc CROSS JOIN stats

@@ -2478,15 +2478,11 @@ def q_graph_local_clustering(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _local_clustering_sql() -> str:
-    coord = (
-        "CAST(('0x' || substr(md5(CAST(doc_id AS VARCHAR) || '{ax}'), 1, 8)) "
-        f"AS BIGINT) % {GEO_SPAN}"
-    )
     return f"""
 WITH pts AS (
   SELECT doc_id,
-         {coord.format(ax="x")} AS x,
-         {coord.format(ax="y")} AS y
+         {_GEO_COORD.format(ax="x")} AS x,
+         {_GEO_COORD.format(ax="y")} AS y
   FROM documents
 ),
 directed AS (
@@ -2712,15 +2708,11 @@ def q_graph_random_walks(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _random_walks_sql() -> str:
-    coord = (
-        "CAST(('0x' || substr(md5(CAST(doc_id AS VARCHAR) || '{ax}'), 1, 8)) "
-        f"AS BIGINT) % {GEO_SPAN}"
-    )
     return f"""
 WITH RECURSIVE pts AS (
   SELECT doc_id,
-         {coord.format(ax="x")} AS x,
-         {coord.format(ax="y")} AS y
+         {_GEO_COORD.format(ax="x")} AS x,
+         {_GEO_COORD.format(ax="y")} AS y
   FROM documents
 ),
 edges AS (

@@ -5,7 +5,11 @@ stage (dedup.py — q_dedup_pipeline_survivors vs
 q_dedup_pipeline_survivors_lsh, which also share one DuckDB oracle in
 the driver contract)."""
 
+import pytest
+
+from ocr_intern_spark.operators import dedup
 from ocr_intern_spark.operators.dedup import (
+    MAX_SHINGLE_DF,
     lsh_candidate_jaccard_pairs,
     q_dedup_pipeline_survivors,
     q_dedup_pipeline_survivors_lsh,
@@ -15,11 +19,17 @@ from ocr_intern_spark.operators.dedup import (
 SF = "/root/testdata/sf0.001"
 
 
-def test_lsh_pair_stage_matches_exact_pairs(spark):
+@pytest.mark.parametrize(
+    "max_df", [MAX_SHINGLE_DF, 3], ids=["default", "cut3"]
+)
+def test_lsh_pair_stage_matches_exact_pairs(spark, monkeypatch, max_df):
     """Candidate recall AND precision after re-rank: the re-ranked LSH
     pair set equals the exact jaccard>=0.5 pair set on this corpus
     (re-rank kills false candidates; the banding catches every true
-    pair above the similarity knee)."""
+    pair above the similarity knee). A cut of 3 removes shingles from
+    this corpus (its largest shingle df is 8), so both stages must
+    count set sizes before the cut to agree."""
+    monkeypatch.setattr(dedup, "MAX_SHINGLE_DF", max_df)
     exact = {
         (r["a"], r["b"], r["jaccard"])
         for r in q_ngram_jaccard_pairs(spark, SF).collect()

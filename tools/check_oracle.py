@@ -61,6 +61,8 @@ def main() -> None:
         SparkSession.builder.master("local[8]")
         .config("spark.sql.shuffle.partitions", "16")
         .config("spark.ui.enabled", "false")
+        # no [Stage n:>…] bars: a 2>&1 log keeps one result per line
+        .config("spark.ui.showConsoleProgress", "false")
         .config("spark.driver.memory", "8g")
         .getOrCreate()
     )

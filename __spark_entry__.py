@@ -57,7 +57,7 @@ def derive_spans(docs: DataFrame) -> DataFrame:
     the cluster first when the scan is under-partitioned (guide §2.5
     input skew)."""
     docs = spread(docs)
-    toks = F.split(F.trim(F.col("text")), r"\s+")
+    toks = text_q.words(F.col("text"))
     nchunks = F.ceil(F.size(toks) / F.lit(8)).cast("int")
     chunks = F.transform(
         F.sequence(F.lit(0), F.greatest(nchunks - 1, F.lit(0))),

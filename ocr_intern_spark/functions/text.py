@@ -19,11 +19,27 @@ from ocr_intern_spark.sources.tables import documents, table
 STOPWORDS = ("the", "a", "of", "and", "to", "in", "is", "on", "for")
 
 
+def words(text: Column) -> Column:
+    """The word rule every Spark-side text query shares: the text,
+    space-trimmed, split on whitespace runs. Blank text gives [""].
+    Pass `F.lower(col)` for case-folded words."""
+    return F.split(F.trim(text), r"\s+")
+
+
+def word_ngrams(toks: Column, n: int) -> Column:
+    """Stride-1 n-word windows of a word array, each joined by one
+    space. An array shorter than n gives one window, the whole array
+    joined; callers that need full windows filter size(toks) >= n."""
+    return F.transform(
+        F.sequence(F.lit(0), F.greatest(F.size(toks) - n, F.lit(0))),
+        lambda i: F.array_join(F.slice(toks, i + 1, n), " "),
+    )
+
+
 def token_count(text: Column) -> Column:
     """Whitespace token count; empty/blank text counts 0."""
-    t = F.trim(text)
-    return F.when(F.length(t) == 0, F.lit(0)).otherwise(
-        F.size(F.split(t, r"\s+"))
+    return F.when(F.length(F.trim(text)) == 0, F.lit(0)).otherwise(
+        F.size(words(text))
     )
 
 
@@ -36,7 +52,7 @@ def punct_ratio(text: Column) -> Column:
 
 
 def stopword_ratio(text: Column) -> Column:
-    toks = F.split(F.lower(F.trim(text)), r"\s+")
+    toks = words(F.lower(text))
     stop = F.size(F.filter(toks, lambda w: w.isin(*STOPWORDS)))
     return stop.cast("double") / F.size(toks)
 
@@ -203,12 +219,9 @@ def q_repetition_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("doc_id") % 5 == 0,
         F.concat(F.col("text"), F.lit(" "), F.col("text")),
     ).otherwise(F.col("text"))
-    toks = F.split(F.trim(F.lower(probe)), r"\s+")
+    toks = words(F.lower(probe))
     n = F.size(toks)
-    grams = F.transform(
-        F.sequence(F.lit(0), F.greatest(n - REP_N, F.lit(0))),
-        lambda i: F.array_join(F.slice(toks, i + 1, REP_N), " "),
-    )
+    grams = word_ngrams(toks, REP_N)
     rep_uni = F.when(
         n > 0,
         F.lit(1.0) - F.size(F.array_distinct(toks)) / n.cast("double"),
@@ -307,7 +320,7 @@ def q_gopher_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("doc_id") % 5 == 0,
         F.concat(F.col("text"), F.lit(" "), F.col("text")),
     ).otherwise(F.col("text"))
-    toks = F.split(F.trim(F.lower(probe)), r"\s+")
+    toks = words(F.lower(probe))
     base = d.repartition(parts, "doc_id").select(
         "doc_id",
         toks.alias("toks"),
@@ -494,7 +507,7 @@ def q_vocab_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = documents(spark, sf_dir)
     toks = d.select(
         "doc_id",
-        F.explode(F.split(F.trim(F.lower(F.col("text"))), r"\s+")).alias("tok"),
+        F.explode(words(F.lower(F.col("text")))).alias("tok"),
     )
     per_doc = toks.groupBy("tok", "doc_id").agg(F.count(F.lit(1)).alias("cnt"))
     top = (
@@ -569,9 +582,7 @@ def q_zipf_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = documents(spark, sf_dir)
     vocab = (
         d.select(
-            F.explode(
-                F.split(F.trim(F.lower(F.col("text"))), r"\s+")
-            ).alias("tok")
+            F.explode(words(F.lower(F.col("text")))).alias("tok")
         )
         .where(F.length("tok") > 0)
         .groupBy("tok")
@@ -659,15 +670,11 @@ def q_heaps_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     d = documents(spark, sf_dir)
     mx = d.agg(F.max("doc_id").alias("mx"))
-    toks = F.split(F.trim(F.lower(F.col("text"))), r"\s+")
-    nt = F.size(toks)
-    grams = F.transform(
-        F.sequence(F.lit(0), nt - HEAPS_NGRAM),
-        lambda i: F.array_join(F.slice(toks, i + 1, HEAPS_NGRAM), " "),
-    )
+    toks = words(F.lower(F.col("text")))
+    grams = word_ngrams(toks, HEAPS_NGRAM)
     inst = (
         d.crossJoin(F.broadcast(mx))
-        .where(nt >= HEAPS_NGRAM)
+        .where(F.size(toks) >= HEAPS_NGRAM)
         .select(
             # floor() explicitly: Spark's long-cast truncates while
             # DuckDB's CAST rounds — floor is identical in both
@@ -779,7 +786,7 @@ def q_chunk_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     transform + posexplode, no Python; one narrow stage, nothing to
     shuffle. Emits (doc_id, chunk_id, n_tokens, chunk)."""
     d = documents(spark, sf_dir)
-    toks = F.split(F.trim(F.col("text")), r"\s+")
+    toks = words(F.col("text"))
     n = F.size(toks)
     n_chunks = F.when(
         n <= CHUNK_TOKENS, F.lit(1)
@@ -1129,7 +1136,7 @@ def q_unigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = documents(spark, sf_dir)
     toks = d.select(
         "doc_id",
-        F.explode(F.split(F.trim(F.lower(F.col("text"))), r"\s+")).alias("w"),
+        F.explode(words(F.lower(F.col("text")))).alias("w"),
     ).where(F.length("w") > 0)
     vocab = toks.groupBy("w").agg(F.count("*").alias("cnt"))
     total = vocab.agg(F.sum("cnt").alias("total"))
@@ -1251,7 +1258,7 @@ def q_bigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     its eager barrier cost as much as the recomputes it saved (A/B
     at 10x-sf0.1, three alternating draws each)."""
     d = documents(spark, sf_dir)
-    toks = F.split(F.trim(F.lower(F.col("text"))), r"\s+")
+    toks = words(F.lower(F.col("text")))
     pairs = F.zip_with(
         F.slice(toks, 1, F.greatest(F.size(toks) - 1, F.lit(0))),
         F.slice(toks, 2, F.greatest(F.size(toks) - 1, F.lit(0))),
@@ -1361,7 +1368,7 @@ def q_tfidf_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = documents(spark, sf_dir)
     toks = d.select(
         "doc_id",
-        F.explode(F.split(F.lower(F.trim(F.col("text"))), r"\s+")).alias("w"),
+        F.explode(words(F.lower(F.col("text")))).alias("w"),
     ).where((F.length("w") > 2) & ~F.col("w").isin(*STOPWORDS)).cache()
     tf = toks.groupBy("doc_id", "w").agg(F.count("*").alias("tf"))
     df_ = toks.select("doc_id", "w").distinct().groupBy("w").agg(
@@ -1668,7 +1675,7 @@ def _bpe_vocab(d: DataFrame) -> DataFrame:
     """Corpus word-frequency table with words as char sequences."""
     return (
         d.select(
-            F.explode(F.split(F.trim(F.lower("text")), r"\s+")).alias("w")
+            F.explode(words(F.lower("text"))).alias("w")
         )
         .where(F.col("w") != "")
         .groupBy("w")
@@ -1771,11 +1778,8 @@ def q_bpe_apply_fertility(spark: SparkSession, sf_dir: str) -> DataFrame:
     fertility = n_subtok / n_words, one double division rounded to
     1e-6 — identical in both engines."""
     d = documents(spark, sf_dir)
-    words = (
-        d.select(
-            "doc_id",
-            F.explode(F.split(F.trim(F.lower("text")), r"\s+")).alias("w"),
-        )
+    word_rows = (
+        d.select("doc_id", F.explode(words(F.lower("text"))).alias("w"))
         .where(F.col("w") != "")
     )
     cur = _bpe_vocab(d)
@@ -1784,7 +1788,7 @@ def q_bpe_apply_fertility(spark: SparkSession, sf_dir: str) -> DataFrame:
         cur = _bpe_merge_round(cur, best, carry=["w", "freq"])
     encode_map = cur.select("w", F.size("syms").alias("n_sub"))
     return (
-        words.join(F.broadcast(encode_map), "w")
+        word_rows.join(F.broadcast(encode_map), "w")
         .groupBy("doc_id")
         .agg(
             F.count("*").alias("n_words"),
@@ -2018,7 +2022,7 @@ def q_quality_ensemble(spark: SparkSession, sf_dir: str) -> DataFrame:
     terms is rounded to 1e-6."""
     d = documents(spark, sf_dir)
     chars = _entropy_chars()
-    toks = F.split(F.trim(F.lower(F.col("text"))), r"\s+")
+    toks = words(F.lower(F.col("text")))
     n = F.size(toks)
     rep = F.when(
         n > 0,
@@ -2182,7 +2186,7 @@ def q_gopher_quality_flags(spark: SparkSession, sf_dir: str) -> DataFrame:
     bit-portable by construction. One narrow codegen pass, zero
     exchanges beyond the output sort."""
     d = documents(spark, sf_dir)
-    toks = F.split(F.trim(F.lower(F.col("text"))), r"\s+")
+    toks = words(F.lower(F.col("text")))
     nw = F.size(toks)
     chars = F.aggregate(
         toks, F.lit(0).cast("long"), lambda a, t: a + F.length(t)
@@ -2276,7 +2280,7 @@ def q_allpairs_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = documents(spark, sf_dir)
     toks = d.select(
         "doc_id",
-        F.explode(F.split(F.trim(F.lower(F.col("text"))), r"\s+")).alias("w"),
+        F.explode(words(F.lower(F.col("text")))).alias("w"),
     ).where(F.length("w") > 0)
     tf = toks.groupBy("doc_id", "w").agg(F.count("*").alias("tf"))
     df = tf.groupBy("w").agg(F.count("*").alias("df"))
@@ -2358,7 +2362,7 @@ def q_readability_fk(spark: SparkSession, sf_dir: str) -> DataFrame:
     token array, two regex counts — fused in codegen; no shuffle
     before the presentation sort. Map-only at 100 TB."""
     d = documents(spark, sf_dir)
-    toks = F.split(F.trim(F.col("text")), r"\s+")
+    toks = words(F.col("text"))
     k = (F.col("doc_id") % 4 + 6).cast("int")
     punct = F.array_join(
         F.transform(
@@ -2581,9 +2585,7 @@ def cdc_doc_chunks(d: DataFrame) -> DataFrame:
 
     toks = d.select(
         "doc_id",
-        F.posexplode(F.split(F.trim(F.lower(F.col("text"))), r"\s+")).alias(
-            "pos", "w"
-        ),
+        F.posexplode(words(F.lower(F.col("text")))).alias("pos", "w"),
     )
     w_seq = Window.partitionBy("doc_id").orderBy("pos")
     pair = F.concat_ws(" ", F.lag("w").over(w_seq), F.col("w"))
@@ -2688,9 +2690,7 @@ def q_term_burstiness(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = documents(spark, sf_dir)
     toks = d.select(
         "doc_id",
-        F.explode(
-            F.split(F.trim(F.lower(F.col("text"))), r"\s+")
-        ).alias("tok"),
+        F.explode(words(F.lower(F.col("text")))).alias("tok"),
     ).where(F.length("tok") > 0)
     per_doc = toks.groupBy("tok", "doc_id").agg(
         F.count(F.lit(1)).alias("c")
@@ -2777,9 +2777,7 @@ def q_cdc_shift_certificate(spark: SparkSession, sf_dir: str) -> DataFrame:
     def fixed_fps(frame: DataFrame) -> DataFrame:
         toks = frame.select(
             "doc_id",
-            F.posexplode(
-                F.split(F.trim(F.lower(F.col("text"))), r"\s+")
-            ).alias("pos", "w"),
+            F.posexplode(words(F.lower(F.col("text")))).alias("pos", "w"),
         )
         return (
             toks.groupBy(

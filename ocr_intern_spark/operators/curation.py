@@ -22,6 +22,8 @@ from ocr_intern_spark.functions.text import (
     _QUALITY_SQL,
     quality_score,
     token_count,
+    word_ngrams,
+    words,
 )
 from ocr_intern_spark.sources.tables import documents, table
 
@@ -36,14 +38,10 @@ BENCH_MOD = 10        # doc_id % BENCH_MOD == 0 → "benchmark" doc
 def _grams(d: DataFrame, ngram: int = DECON_NGRAM) -> DataFrame:
     """(doc_id, g): distinct ngram-word grams of the lowercased
     text; docs shorter than the gram length contribute none."""
-    toks = F.split(F.trim(F.lower(F.col("text"))), r"\s+")
-    n = F.size(toks)
-    idx = F.sequence(F.lit(0), n - ngram)
-    grams = F.transform(
-        idx, lambda i: F.array_join(F.slice(toks, i + 1, ngram), " ")
-    )
+    toks = words(F.lower(F.col("text")))
+    grams = word_ngrams(toks, ngram)
     return (
-        d.where(n >= ngram)
+        d.where(F.size(toks) >= ngram)
         .select("doc_id", F.explode(F.array_distinct(grams)).alias("g"))
     )
 
@@ -352,9 +350,9 @@ def q_interleaved_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.window import Window
 
     d = documents(spark, sf_dir)
-    toks = F.slice(F.split(F.trim(F.col("text")), r"\s+"), 1, 24)
+    toks = F.slice(words(F.col("text")), 1, 24)
     n = F.size(toks)
-    words = F.transform(
+    word_units = F.transform(
         toks,
         lambda w, i: F.struct(
             F.lit("text").alias("kind"),
@@ -374,7 +372,7 @@ def q_interleaved_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     units = d.select(
-        "doc_id", F.explode(F.concat(words, media)).alias("u")
+        "doc_id", F.explode(F.concat(word_units, media)).alias("u")
     ).select(
         "doc_id", F.col("u.seq").alias("seq"), F.col("u.kind").alias("kind"),
         F.col("u.unit").alias("unit"), F.col("u.token_cost").alias("token_cost"),
@@ -714,7 +712,7 @@ def q_caption_align(spark: SparkSession, sf_dir: str) -> DataFrame:
     # read bare (not via documents()): its round-robin repartition would
     # add a full exchange of the text payloads to a map-only plan
     d = table(spark, sf_dir, "documents")
-    toks = F.slice(F.split(F.trim(F.col("text")), r"\s+"), 1, 24)
+    toks = F.slice(words(F.col("text")), 1, 24)
     n = F.size(toks)
     m = (n / 2).cast("int")
     s = F.greatest(F.lit(1), m - (CAP_W - 1))
@@ -785,7 +783,7 @@ def q_contrastive_views(spark: SparkSession, sf_dir: str) -> DataFrame:
     At 10^12 docs the dataloader reads this output shard-aligned with
     table_shard_manifest's cuts."""
     d = table(spark, sf_dir, "documents")
-    toks = F.slice(F.split(F.trim(F.col("text")), r"\s+"), 1, 24)
+    toks = F.slice(words(F.col("text")), 1, 24)
     n = F.size(toks)
     m = (n / 2).cast("int")
     batch = (
@@ -844,7 +842,7 @@ def q_modality_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
     counts — scan-shaped at any corpus size."""
     d = table(spark, sf_dir, "documents")
     n_text = F.least(
-        F.size(F.split(F.trim(F.col("text")), r"\s+")), F.lit(24)
+        F.size(words(F.col("text"))), F.lit(24)
     )
     per_src = (
         d.select(
@@ -921,9 +919,7 @@ def q_rouge_neardup_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         d.join(members, "doc_id", "left_semi")
         .select(
             "doc_id",
-            F.explode(
-                F.split(F.trim(F.lower(F.col("text"))), r"\s+")
-            ).alias("tok"),
+            F.explode(words(F.lower(F.col("text")))).alias("tok"),
         )
         .groupBy("doc_id", "tok")
         .agg(F.count(F.lit(1)).alias("c"))
@@ -1195,7 +1191,7 @@ def q_span_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     same rule as decontamination); reassembly is ONE doc_id exchange.
     AQE skew-join splits any residual hot-span partition."""
     d = documents(spark, sf_dir).where(F.length(F.trim("text")) > 0)
-    toks = F.split(F.trim(F.lower(F.col("text"))), r"\s+")
+    toks = words(F.lower(F.col("text")))
     nseg = ((F.size(toks) - 1) / SPAN_W).cast("int") + 1
     segs = F.transform(
         F.sequence(F.lit(0), nseg - 1),
@@ -1300,7 +1296,7 @@ def q_substr_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     ONE doc_id exchange into a per-doc boolean array; the cover test
     is then a pure array fold (no per-token rows ever shuffle)."""
     d = documents(spark, sf_dir).where(F.length(F.trim("text")) > 0)
-    toks_col = F.split(F.trim(F.lower(F.col("text"))), r"\s+")
+    toks_col = words(F.lower(F.col("text")))
     base = d.select("doc_id", toks_col.alias("toks"))
     n = F.size("toks")
     wins = F.transform(
@@ -1446,7 +1442,7 @@ def q_quality_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ocr_intern_spark.operators.dedup import fnv1a64_spark
 
     d = documents(spark, sf_dir)
-    toks = F.split(F.trim(F.lower(F.col("text"))), r"\s+")
+    toks = words(F.lower(F.col("text")))
     n = F.size(toks)
     pairs = F.greatest(n - 1, F.lit(0))
     bi = F.zip_with(
@@ -1551,7 +1547,7 @@ def q_dsir_select(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "doc_id",
             (F.col("lang") == DSIR_TARGET).alias("is_t"),
-            F.explode(F.split(probe, r"\s+")).alias("g"),
+            F.explode(words(probe)).alias("g"),
         )
         .select(
             "doc_id",
@@ -2484,7 +2480,7 @@ def q_source_kl_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = documents(spark, sf_dir)
     toks = d.select(
         "source",
-        F.explode(F.split(F.trim(F.lower(F.col("text"))), r"\s+")).alias("t"),
+        F.explode(words(F.lower(F.col("text")))).alias("t"),
     ).where(F.length("t") > 0)
     st = toks.groupBy("source", "t").agg(F.count("*").alias("c")).cache()
     corpus = st.groupBy("t").agg(F.sum("c").alias("ct"))
@@ -2555,14 +2551,10 @@ def q_source_vocab_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     Portability: pure integer set algebra; the single float division
     is rounded to 1e-6."""
     d = documents(spark, sf_dir)
-    toks = F.split(F.trim(F.lower(F.col("text"))), r"\s+")
-    n = F.size(toks)
-    idx = F.sequence(F.lit(0), n - OVERLAP_NGRAM)
-    grams = F.transform(
-        idx, lambda i: F.array_join(F.slice(toks, i + 1, OVERLAP_NGRAM), " ")
-    )
+    toks = words(F.lower(F.col("text")))
+    grams = word_ngrams(toks, OVERLAP_NGRAM)
     sg = (
-        d.where(n >= OVERLAP_NGRAM)
+        d.where(F.size(toks) >= OVERLAP_NGRAM)
         .select("source", F.explode(F.array_distinct(grams)).alias("g"))
         .distinct()
         .cache()
@@ -2662,7 +2654,7 @@ def q_line_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     is still ONE verdict row — the hot key rides the broadcast-able
     side, never a window. Reassembly is one doc_id exchange."""
     d = documents(spark, sf_dir).where(F.length(F.trim("text")) > 0)
-    toks = F.split(F.trim(F.lower(F.col("text"))), r"\s+")
+    toks = words(F.lower(F.col("text")))
     nseg = ((F.size(toks) - 1) / LINE_W).cast("int") + 1
     segs = F.transform(
         F.sequence(F.lit(0), nseg - 1),
@@ -2923,7 +2915,7 @@ def q_url_canonicalize(spark: SparkSession, sf_dir: str) -> DataFrame:
     dedup for the ~40% of crawl duplicates that are URL-identical —
     the cheapest shuffle in the pipeline, and it runs first."""
     d = documents(spark, sf_dir)
-    toks = F.split(F.trim(F.lower(F.col("text"))), r"\s+")
+    toks = words(F.lower(F.col("text")))
     w = F.coalesce(F.try_element_at(toks, F.lit(1)), F.lit("x"))
     k = (F.col("doc_id") % URL_SITES).cast("string")
     v = (F.col("doc_id") % 6).cast("int")
@@ -3062,7 +3054,7 @@ def q_interleave_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     (doc_id is the grouping prefix). One shuffle end to end, exactly
     the plan this filter needs over the real spans array at 100 TB."""
     d = documents(spark, sf_dir).where(F.length(F.trim("text")) > 0)
-    toks = F.slice(F.split(F.trim(F.col("text")), r"\s+"), 1, 24)
+    toks = F.slice(words(F.col("text")), 1, 24)
     n = F.size(toks)
     m = (F.col("doc_id") % 5).cast("int")
     positions = F.when(
@@ -3248,7 +3240,7 @@ def q_anchor_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     exactly the anchor-corpus build: 10^12 edges hash-aggregated to
     ~10^8 hosts with no per-host sort anywhere."""
     d = documents(spark, sf_dir)
-    toks = F.split(F.trim(F.lower(F.col("text"))), r"\s+")
+    toks = words(F.lower(F.col("text")))
     edges = d.select(
         "doc_id",
         toks.alias("toks"),

@@ -23,7 +23,12 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from ocr_intern_spark.functions.text import STOPWORDS, fingerprint
+from ocr_intern_spark.functions.text import (
+    STOPWORDS,
+    fingerprint,
+    word_ngrams,
+    words,
+)
 from ocr_intern_spark.sources.tables import documents, table
 
 N_SHINGLE = 3          # words per shingle
@@ -54,14 +59,10 @@ def _shingles(d: DataFrame, blur: bool = True) -> DataFrame:
     """(doc_id, shingle) rows: N_SHINGLE-word sliding window over the
     normalized text. `blur=True` coarsens text first (drops every 7th
     word) so near-dups exist in the synthetic corpus."""
-    toks = F.split(F.trim(F.lower(F.col("text"))), r"\s+")
+    toks = words(F.lower(F.col("text")))
     if blur:
         toks = F.filter(toks, lambda w, i: i % 7 != 0)
-    n = F.size(toks)
-    idx = F.sequence(F.lit(0), F.greatest(n - N_SHINGLE, F.lit(0)))
-    sh = F.transform(
-        idx, lambda i: F.array_join(F.slice(toks, i + 1, N_SHINGLE), " ")
-    )
+    sh = word_ngrams(toks, N_SHINGLE)
     return d.select(
         "doc_id", F.explode(F.array_distinct(sh)).alias("shingle")
     ).where(F.length("shingle") > 0)
@@ -228,13 +229,19 @@ common AS (
   GROUP BY a.doc_id, b.doc_id
 )"""
 
+# the pair counts joined to both sizes, kept at jaccard >= 0.5
+_NEAR_PAIRS_SQL = """FROM common
+JOIN sizes sa ON sa.doc_id = da
+JOIN sizes sb ON sb.doc_id = db
+WHERE common / CAST(sa.n + sb.n - common AS DOUBLE) >= 0.5"""
+
 
 def q_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact dedup on a 5-word-prefix normal form (creates real
     collisions in the synthetic corpus): keeper = min doc_id."""
     d = documents(spark, sf_dir)
     prefix = F.array_join(
-        F.slice(F.split(F.trim(F.lower(F.col("text"))), r"\s+"), 1, 5), " "
+        F.slice(words(F.lower(F.col("text"))), 1, 5), " "
     )
     return (
         d.select("doc_id", F.md5(prefix).alias("fp"))
@@ -341,10 +348,7 @@ _JACCARD_SQL = f"""
 {_PAIR_COMMON_SQL}
 SELECT da AS a, db AS b,
        round(common / CAST(sa.n + sb.n - common AS DOUBLE), 6) AS jaccard
-FROM common
-JOIN sizes sa ON sa.doc_id = da
-JOIN sizes sb ON sb.doc_id = db
-WHERE common / CAST(sa.n + sb.n - common AS DOUBLE) >= 0.5
+{_NEAR_PAIRS_SQL}
 ORDER BY a, b
 """
 
@@ -654,7 +658,7 @@ def q_dedup_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     d = documents(spark, sf_dir)
     prefix = F.array_join(
-        F.slice(F.split(F.trim(F.lower(F.col("text"))), r"\s+"), 1, 5), " "
+        F.slice(words(F.lower(F.col("text"))), 1, 5), " "
     )
     scored = d.select(
         "doc_id",
@@ -795,20 +799,9 @@ def connected_components(
 _DUP_CLUSTERS_SQL = f"""
 WITH RECURSIVE pairs AS (
   SELECT a, b FROM (
-    WITH sh AS ({_SHINGLES_SQL}),
-    sizes AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
-    rare AS (SELECT shingle FROM sh GROUP BY shingle HAVING count(*) <= {MAX_SHINGLE_DF}),
-    shr AS (SELECT sh.* FROM sh JOIN rare USING (shingle)),
-    common AS (
-      SELECT x.doc_id AS da, y.doc_id AS db, count(*) AS common
-      FROM shr x JOIN shr y ON x.shingle = y.shingle AND x.doc_id < y.doc_id
-      GROUP BY x.doc_id, y.doc_id
-    )
-    SELECT da AS a, db AS b
-    FROM common
-    JOIN sizes sa ON sa.doc_id = da
-    JOIN sizes sb ON sb.doc_id = db
-    WHERE common / CAST(sa.n + sb.n - common AS DOUBLE) >= 0.5
+{_PAIR_COMMON_SQL}
+SELECT da AS a, db AS b
+{_NEAR_PAIRS_SQL}
   )
 ), edges AS (
   SELECT a, b FROM pairs UNION ALL SELECT b AS a, a AS b FROM pairs
@@ -979,7 +972,7 @@ def q_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = documents(spark, sf_dir)
     toks = d.select(
         "doc_id",
-        F.explode(F.split(F.trim(F.lower(F.col("text"))), r"\s+")).alias("w"),
+        F.explode(words(F.lower(F.col("text")))).alias("w"),
     ).where(F.length("w") > 0)
     h = F.md5(F.col("w"))
     aggs = [
@@ -1250,20 +1243,12 @@ def _minhash_est_error_sql() -> str:
     )
     step = 1_000_000 // MINHASH_SEEDS
     return f"""
-{_RARE_CUT_SQL}
-common AS (
-  SELECT x.doc_id AS da, y.doc_id AS db, count(*) AS common
-  FROM shr x JOIN shr y ON x.shingle = y.shingle AND x.doc_id < y.doc_id
-  GROUP BY x.doc_id, y.doc_id
-),
+{_PAIR_COMMON_SQL},
 pairs AS (
-  SELECT da, db,
-         CAST(common * 1000000 // (sa.n + sb.n - common) AS BIGINT)
-           AS true_j_micro
-  FROM common
-  JOIN sizes sa ON sa.doc_id = da
-  JOIN sizes sb ON sb.doc_id = db
-  WHERE common / CAST(sa.n + sb.n - common AS DOUBLE) >= 0.5
+SELECT da, db,
+       CAST(common * 1000000 // (sa.n + sb.n - common) AS BIGINT)
+         AS true_j_micro
+{_NEAR_PAIRS_SQL}
 ),
 sig AS (SELECT doc_id, {_MINHASH_SQL_COLS} FROM sh GROUP BY doc_id)
 SELECT da, db, true_j_micro,
@@ -1411,7 +1396,7 @@ def q_simhash_hamming64(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = documents(spark, sf_dir)
     toks = d.select(
         "doc_id",
-        F.explode(F.split(F.trim(F.lower(F.col("text"))), r"\s+")).alias("w"),
+        F.explode(words(F.lower(F.col("text")))).alias("w"),
     ).where(F.length("w") > 0)
     h = F.md5(F.col("w"))
     aggs = [
@@ -1547,9 +1532,7 @@ def q_fuzzy_vocab_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = documents(spark, sf_dir)
     raw = d.select(
         "doc_id",
-        F.explode(F.split(F.trim(F.lower(F.col("text"))), r"\s+")).alias(
-            "w0"
-        ),
+        F.explode(words(F.lower(F.col("text")))).alias("w0"),
     )
     corrupted = F.when(
         (F.col("doc_id") % 10 == 0) & (F.length("w0") >= FUZZY_MIN_LEN),
@@ -1697,7 +1680,7 @@ def q_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     d = documents(spark, sf_dir)
     prefix = F.array_join(
-        F.slice(F.split(F.trim(F.lower(F.col("text"))), r"\s+"), 1, 5), " "
+        F.slice(words(F.lower(F.col("text"))), 1, 5), " "
     )
     docs = d.select("doc_id", F.md5(prefix).alias("fp"))
     corpus = docs.where(F.col("doc_id") % 2 == 0)

@@ -24,6 +24,7 @@ from ocr_intern_spark.functions.normalizers import (
     classify_doc_type,
     normalize_field,
 )
+from ocr_intern_spark.functions.text import token_count, words
 from ocr_intern_spark.sources.tables import documents, table
 
 
@@ -175,7 +176,7 @@ def q_reading_order(spark: SparkSession, sf_dir: str) -> DataFrame:
     x = (i%6)*90, line = i//6, lang arabic iff (doc_id + i*i) % 5 < 2.
     row_number gives the reading order."""
     d = documents(spark, sf_dir)
-    toks = F.slice(F.split(F.trim(F.col("text")), r"\s+"), 1, 24)
+    toks = F.slice(words(F.col("text")), 1, 24)
     w = d.select("doc_id", F.posexplode(toks).alias("i", "word"))
     w = w.select(
         "doc_id", "i", "word",
@@ -269,7 +270,7 @@ def q_boilerplate_strip(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     d = documents(spark, sf_dir)
-    toks = F.split(F.trim(F.col("text")), r"\s+")
+    toks = words(F.col("text"))
     head = F.array_join(F.slice(toks, 1, 5), " ")
     tail = F.array_join(
         F.slice(toks, 6, F.greatest(F.size(toks) - 5, F.lit(0))), " "
@@ -359,7 +360,7 @@ def q_html_block_classify(spark: SparkSession, sf_dir: str) -> DataFrame:
     over (doc_id, block idx) — a single exchange, blocks never leave
     their doc's partition."""
     d = documents(spark, sf_dir)
-    toks = F.split(F.trim(F.col("text")), r"\s+")
+    toks = words(F.col("text"))
     nav = F.concat(
         F.lit("<nav><a href='/h'>"), F.element_at(toks, 1),
         F.lit("</a> <a href='/a'>"),
@@ -391,22 +392,17 @@ def q_html_block_classify(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
     )
     no_anchor = F.regexp_replace(F.col("block"), _ANCHOR_TAG_RE, "")
-    words = F.when(F.length(F.trim(no_anchor)) == 0, F.lit(0)).otherwise(
-        F.size(F.split(F.trim(no_anchor), r"\s+"))
-    )
-    _wc = lambda s: F.when(F.length(F.trim(s)) == 0, F.lit(0)).otherwise(
-        F.size(F.split(F.trim(s), r"\s+"))
-    )
+    n_words = token_count(no_anchor)
     linked_words = F.aggregate(
         F.regexp_extract_all(F.col("block"), F.lit(_ANCHOR_INNER_RE), F.lit(1)),
         F.lit(0),
-        lambda acc, s: acc + _wc(s),
+        lambda acc, s: acc + token_count(s),
     )
     scored = blocks.select(
         "doc_id", "idx",
-        words.alias("words"),
-        F.when(words == 0, F.lit(0.0))
-        .otherwise(linked_words.cast("double") / words)
+        n_words.alias("words"),
+        F.when(n_words == 0, F.lit(0.0))
+        .otherwise(linked_words.cast("double") / n_words)
         .alias("ld"),
     )
     w = Window.partitionBy("doc_id").orderBy("idx")
@@ -568,7 +564,7 @@ def q_dehyphenate(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffle before the presentation sort. A 100 TB corpus runs this
     as a map-only stage fused with whatever scan feeds it."""
     d = documents(spark, sf_dir)
-    toks = F.slice(F.split(F.trim(F.col("text")), r"\s+"), 1, 24)
+    toks = F.slice(words(F.col("text")), 1, 24)
     norm = F.array_join(toks, " ")
     half = lambda w: (F.length(w) / 2).cast("int")
     wrapped = F.array_join(
@@ -735,7 +731,7 @@ def q_span_lang_runs(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = table(spark, sf_dir, "documents")
     from ocr_intern_spark.functions.normalizers import guess_lang
 
-    toks = F.split(F.trim(F.col("text")), r"\s+")
+    toks = words(F.col("text"))
     nchunks = F.greatest(
         F.ceil(F.size(toks) / F.lit(8)).cast("int"), F.lit(1)
     )

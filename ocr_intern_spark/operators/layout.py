@@ -30,6 +30,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ocr_intern_spark.functions.text import words
 from ocr_intern_spark.sources.tables import documents
 
 MIN_GAP_X = 40.0  # vertical cut: column gutters (word gaps are ~10px)
@@ -213,7 +214,7 @@ def q_xycut_order(spark: SparkSession, sf_dir: str) -> DataFrame:
     rollup cascade. Spark runs the real recursive algorithm via
     applyInPandas; nothing order-related is hinted to it."""
     d = documents(spark, sf_dir)
-    toks = F.slice(F.split(F.trim(F.col("text")), r"\s+"), 1, 24)
+    toks = F.slice(words(F.col("text")), 1, 24)
     t = d.select(
         F.col("doc_id").cast("long").alias("doc_id"),
         F.posexplode(toks).alias("i", "word"),
@@ -351,7 +352,7 @@ def q_extract_table_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
     grid through it. The DuckDB oracle runs the same 1-D gap
     clustering as window SQL — integer coordinates end to end."""
     d = documents(spark, sf_dir)
-    toks = F.slice(F.split(F.trim(F.col("text")), r"\s+"), 1, 24)
+    toks = F.slice(words(F.col("text")), 1, 24)
     t = d.select(
         F.col("doc_id").cast("long").alias("doc_id"),
         F.posexplode(toks).alias("i", "text"),

@@ -25,6 +25,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ocr_intern_spark.functions.text import words
 from ocr_intern_spark.sources.tables import documents
 
 
@@ -49,7 +50,7 @@ def _bm25_scored(spark: SparkSession, sf_dir: str) -> DataFrame:
     to 1e-6."""
     d = documents(spark, sf_dir)
     toks = F.filter(
-        F.split(F.lower(F.trim(F.col("text"))), r"\s+"),
+        words(F.lower(F.col("text"))),
         lambda w: F.length(w) > 0,
     )
     base = d.select("doc_id", toks.alias("toks"), F.size(toks).alias("dl"))
@@ -200,7 +201,7 @@ def q_pmi_collocations(spark: SparkSession, sf_dir: str) -> DataFrame:
     cutoff shrinks the bigram side BEFORE any join.
     """
     d = documents(spark, sf_dir)
-    toks = F.split(F.trim(F.lower(F.col("text"))), r"\s+")
+    toks = words(F.lower(F.col("text")))
     pairs = F.zip_with(
         F.slice(toks, 1, F.greatest(F.size(toks) - 1, F.lit(0))),
         F.slice(toks, 2, F.greatest(F.size(toks) - 1, F.lit(0))),

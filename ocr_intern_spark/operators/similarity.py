@@ -21,6 +21,7 @@ from collections.abc import Callable
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ocr_intern_spark.functions.text import words
 from ocr_intern_spark.sources.tables import table
 
 QUERY_VEC_ID = 0
@@ -2204,9 +2205,7 @@ def q_cluster_topterms(spark: SparkSession, sf_dir: str) -> DataFrame:
         table(spark, sf_dir, "documents")
         .select(
             "doc_id",
-            F.explode(
-                F.split(F.trim(F.lower(F.col("text"))), r"\s+")
-            ).alias("tok"),
+            F.explode(words(F.lower(F.col("text")))).alias("tok"),
         )
         .join(assigned, F.col("doc_id") == F.col("vec_id"))
         .select("cell", "tok")

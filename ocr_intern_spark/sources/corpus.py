@@ -26,6 +26,7 @@ import random
 from typing import Any
 
 from ocr_intern_spark.oracle.semantics import Token
+from ocr_intern_spark.schema import DOCUMENTS_DDL
 
 # FR vocab includes the doc-type keywords (postprocess.py:85-95) and
 # OCR-confusable glyphs; AR vocab includes the Arabic keyword set.
@@ -176,21 +177,29 @@ def make_document(doc_id: str, seed: int = 42, oversized: bool = False) -> dict[
     return {"doc_id": doc_id, "spans": spans}
 
 
+def _oversized_ids(n_docs: int, seed: int, skew_pct: float = 0.01) -> set[int]:
+    """The seeded draw of which doc indexes are oversized."""
+    if n_docs <= 0:
+        # an empty corpus (also a DataSource `n_docs` option) is a
+        # valid, if odd, request, not a randrange(0) ValueError
+        return set()
+    rng = _rng_for("corpus", seed)
+    return {
+        rng.randrange(n_docs) for _ in range(max(1, int(n_docs * skew_pct)))
+    }
+
+
 def make_corpus(n_docs: int, seed: int = 42, skew_pct: float = 0.01) -> list[dict[str, Any]]:
     """n_docs synthetic documents; ~skew_pct are oversized (salting
     coverage, SURVEY.md §4 item 1)."""
-    rng = _rng_for("corpus", seed)
-    oversized = {rng.randrange(n_docs) for _ in range(max(1, int(n_docs * skew_pct)))}
+    oversized = _oversized_ids(n_docs, seed, skew_pct)
     return [
         make_document(f"doc-{i:06d}", seed=seed, oversized=(i in oversized))
         for i in range(n_docs)
     ]
 
 
-SPANS_DDL = (
-    "doc_id string, spans array<struct<kind:string,text:string,"
-    "media_ref:string,offset:int>>"
-)
+SPANS_DDL = DOCUMENTS_DDL
 
 
 def corpus_to_spark(spark, n_docs: int, seed: int = 42, partitions: int | None = None):

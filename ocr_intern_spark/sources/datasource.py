@@ -21,8 +21,9 @@ replayable source instead of hand-built memory fixtures.
 Determinism: document content depends only on (doc_id, seed) —
 `make_document` — so ANY partitioning of the id range yields the
 same table (partition-invariance is pinned in test_datasource.py).
-The oversized-doc skew set is derived driver-side with the same
-seeded draw as `make_corpus` and shipped inside each partition spec.
+The oversized-doc skew set is derived driver-side by `make_corpus`'s
+own seeded draw (`_oversized_ids`) and shipped inside each partition
+spec.
 """
 
 from __future__ import annotations
@@ -36,21 +37,13 @@ from pyspark.sql.datasource import (
     InputPartition,
 )
 
-from ocr_intern_spark.sources.corpus import SPANS_DDL, _rng_for, make_document
+from ocr_intern_spark.sources.corpus import (
+    SPANS_DDL,
+    _oversized_ids,
+    make_document,
+)
 
 FORMAT_NAME = "interleaved_corpus"
-
-
-def _oversized_ids(n_docs: int, seed: int, skew_pct: float = 0.01) -> set[int]:
-    """Same draw as make_corpus: which doc indexes are oversized."""
-    if n_docs <= 0:
-        # user-supplied option: an empty source is a valid (if odd)
-        # request, not a randrange(0) ValueError
-        return set()
-    rng = _rng_for("corpus", seed)
-    return {
-        rng.randrange(n_docs) for _ in range(max(1, int(n_docs * skew_pct)))
-    }
 
 
 def _doc_row(i: int, seed: int, oversized: bool) -> tuple:

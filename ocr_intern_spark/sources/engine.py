@@ -126,19 +126,6 @@ def parse_data_dict(d: dict, lang: str) -> list[Token]:
     return out
 
 
-def arabic_display_tokens(tokens: list[Token]) -> list[Token]:
-    """E6 (arabic.py:122-131): apply reshape+bidi display to every
-    Arabic token's text — the reference's ArabicOCR.process path.
-    Pure per-token text transform; the hybrid process_document path
-    does NOT apply it (the repo mirrors that default)."""
-    from ocr_intern_spark.functions.arabic_text import postprocess_arabic
-
-    return [
-        t._replace(text=postprocess_arabic(t.text)) if t.lang == "ara" else t
-        for t in tokens
-    ]
-
-
 class TesseractRecognizer:
     """media_ref → Token list via a real OCR backend.
 

@@ -18,6 +18,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ocr_intern_spark.functions.text import word_ngrams, words
 from ocr_intern_spark.operators.extract import (
     Recognizer,
     explode_spans,
@@ -342,16 +343,9 @@ def stream_decontaminate(
     incoming doc with `contaminated` + the distinct leaked-gram count
     (per-doc aggregation is within one doc row's own array — a
     projection, not a streaming aggregation, so append mode works)."""
-    toks = F.split(F.trim(F.lower(F.col("text"))), r"\s+")
-    n = F.size(toks)
+    toks = words(F.lower(F.col("text")))
     grams = F.when(
-        n >= ngram,
-        F.array_distinct(
-            F.transform(
-                F.sequence(F.lit(0), n - ngram),
-                lambda i: F.array_join(F.slice(toks, i + 1, ngram), " "),
-            )
-        ),
+        F.size(toks) >= ngram, F.array_distinct(word_ngrams(toks, ngram))
     ).otherwise(F.array().cast("array<string>"))
     bench_set = F.broadcast(
         bench_grams.select(F.col("g")).distinct().agg(

@@ -77,6 +77,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import DataStreamWriter
 from pyspark.sql.types import StructField, StructType, TimestampType
 
+from ocr_intern_spark.functions.text import token_count
 from ocr_intern_spark.operators.skew import global_rank
 from ocr_intern_spark.sources.tables import table
 
@@ -301,7 +302,6 @@ def q_stream_resume_checkpoint(spark: SparkSession, sf_dir: str) -> DataFrame:
         schema = _stage(spark, sf_dir, "documents", all_dir)
         parts = sorted(glob.glob(os.path.join(all_dir, "part-*.parquet")))
         os.makedirs(in_dir)
-        toks = F.split(F.trim(F.col("text")), r"\s+")
         # run 1 sees half the input, then 'crashes'; run 2 resumes from
         # the same checkpoint and must process only the new files
         for landed in (parts[: len(parts) // 2], parts[len(parts) // 2 :]):
@@ -309,9 +309,7 @@ def q_stream_resume_checkpoint(spark: SparkSession, sf_dir: str) -> DataFrame:
                 shutil.copy(p, in_dir)
             stats = _file_stream(spark, in_dir, schema).select(
                 "doc_id",
-                F.when(F.length(F.trim("text")) == 0, F.lit(0))
-                .otherwise(F.size(toks))
-                .alias("n_tokens"),
+                token_count(F.col("text")).alias("n_tokens"),
                 F.length("text").alias("n_chars"),
             )
             _run(

@@ -432,6 +432,8 @@ def q_minhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
 _MINHASH_SQL_COLS = ",\n       ".join(
     f"min(md5('{s}|' || shingle)) AS mh{s}" for s in range(MINHASH_SEEDS)
 )
+# the md5 minhash signature of every doc in the CTE `sh`
+_SIG_SQL = f"sig AS (SELECT doc_id, {_MINHASH_SQL_COLS} FROM sh GROUP BY doc_id)"
 _MINHASH_SHINGLES_NOBLUR_SQL = _SHINGLES_SQL.replace(
     "(w, i) -> (i - 1) % 7 != 0", "(w, i) -> true"
 )
@@ -491,7 +493,7 @@ _BANDS_SQL = " UNION ALL ".join(
 )
 _MINHASH_LSH_SQL = f"""
 WITH sh AS ({_MINHASH_SHINGLES_NOBLUR_SQL}),
-sig AS (SELECT doc_id, {_MINHASH_SQL_COLS} FROM sh GROUP BY doc_id),
+{_SIG_SQL},
 bands AS ({_BANDS_SQL})
 SELECT band, bucket, count(*) AS n_docs,
        min(doc_id) AS first_doc, max(doc_id) AS last_doc
@@ -551,12 +553,10 @@ def q_lsh_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # the exact true-pair set and md5 signatures the LSH evaluations share
 _TRUE_PAIRS_SIG_SQL = f"""true_pairs AS (
-  SELECT da, db FROM common
-  JOIN sizes sa ON sa.doc_id = da
-  JOIN sizes sb ON sb.doc_id = db
-  WHERE common / CAST(sa.n + sb.n - common AS DOUBLE) >= 0.5
+SELECT da, db
+{_NEAR_PAIRS_SQL}
 ),
-sig AS (SELECT doc_id, {_MINHASH_SQL_COLS} FROM sh GROUP BY doc_id),"""
+{_SIG_SQL},"""
 _LSH_QUALITY_SQL = f"""
 {_PAIR_COMMON_SQL},
 {_TRUE_PAIRS_SIG_SQL}
@@ -1250,7 +1250,7 @@ SELECT da, db,
          AS true_j_micro
 {_NEAR_PAIRS_SQL}
 ),
-sig AS (SELECT doc_id, {_MINHASH_SQL_COLS} FROM sh GROUP BY doc_id)
+{_SIG_SQL}
 SELECT da, db, true_j_micro,
        CAST({match_expr} AS INT) AS sig_matches,
        CAST(({match_expr}) * {step} AS BIGINT) AS est_j_micro,

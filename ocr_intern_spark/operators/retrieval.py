@@ -375,10 +375,10 @@ def _rrf_sql() -> str:
     # reuse the engine-shared constants/fragments (QUERY_VEC_ID, the
     # 6-decimal cosine) so the oracle can't silently drift from the
     # Spark side if the query id or rounding ever changes
-    from ocr_intern_spark.operators.similarity import _COS_SQL, QUERY_VEC_ID
+    from ocr_intern_spark.operators.similarity import _Q_SQL, QUERY_VEC_ID, _sql_cos
 
     bm25 = _bm25_sql()
-    cos = _COS_SQL.format(a="embedding", b="qvec")
+    cos = f"round({_sql_cos('embedding', 'qvec')}, 6)"
     return f"""
 WITH bm25 AS ({bm25}),
 lex AS (
@@ -386,8 +386,7 @@ lex AS (
          row_number() OVER (ORDER BY score DESC, doc_id) AS lex_rank
   FROM bm25 LIMIT {RRF_LIST_K}
 ),
-q AS (SELECT embedding AS qvec FROM embeddings
-      WHERE vec_id = {QUERY_VEC_ID}),
+{_Q_SQL},
 cosed AS (
   SELECT vec_id AS doc_id, {cos} AS cos
   FROM embeddings, q WHERE vec_id != {QUERY_VEC_ID}

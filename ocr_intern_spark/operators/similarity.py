@@ -50,6 +50,40 @@ def cosine(a: Column, b: Column) -> Column:
     return dot(a, b) / (l2norm(a) * l2norm(b))
 
 
+def hoisted_cosine(a: Column, b: Column, na: Column, nb: Column) -> Column:
+    """cosine() for a pair join whose sides carry precomputed L2 norms
+    na = l2norm(a), nb = l2norm(b). r6: hoisting the norms OUT of the
+    pair join matters because the interpreted aggregate() fold
+    otherwise re-derives each norm once per PAIR (2·n times per
+    vector), tripling the dominant per-pair expression work.
+    dot/(na·nb) evaluates the identical IEEE ops in the identical
+    order as cosine(), so every rounded value is bit-equal (oracle
+    hash-exact ×3 sfs)."""
+    return dot(a, b) / (na * nb)
+
+
+def _cos_expr(a: Column, b: Column) -> Column:
+    return F.round(cosine(a, b), 6)
+
+
+def _sql_cos(a: str, b: str) -> str:
+    """cosine() in DuckDB SQL, unrounded: the same double products,
+    summed and divided in the same order. Each caller applies its own
+    round(…, 6), round(…, 9) or floor(…·10⁶ + 0.5)."""
+    return (
+        f"(list_sum(list_transform(list_zip({a}, {b}), "
+        "p -> CAST(p[1] AS DOUBLE) * CAST(p[2] AS DOUBLE))) "
+        f"/ (sqrt(list_sum(list_transform({a}, v -> CAST(v AS DOUBLE) * v))) "
+        f"* sqrt(list_sum(list_transform({b}, v -> CAST(v AS DOUBLE) * v)))))"
+    )
+
+
+# the QUERY_VEC_ID probe row, as one CTE
+_Q_SQL = (
+    f"q AS (SELECT embedding AS qvec FROM embeddings WHERE vec_id = {QUERY_VEC_ID})"
+)
+
+
 def q_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact top-K by cosine against the QUERY_VEC_ID embedding.
     The 1-row query side is broadcast; scoring is a narrow map over
@@ -66,21 +100,15 @@ def q_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "vec_id",
             "label",
-            F.round(cosine(F.col("embedding"), F.col("qvec")), 6).alias("cos"),
+            _cos_expr(F.col("embedding"), F.col("qvec")).alias("cos"),
         )
     )
     return scored.orderBy(F.desc("cos"), F.asc("vec_id")).limit(TOP_K)
 
 
 _COSINE_TOPK_SQL = f"""
-WITH q AS (SELECT embedding AS qvec FROM embeddings WHERE vec_id = {QUERY_VEC_ID})
-SELECT vec_id, label,
-       round(
-         list_sum(list_transform(list_zip(embedding, qvec),
-                                 p -> CAST(p[1] AS DOUBLE) * CAST(p[2] AS DOUBLE)))
-         / (sqrt(list_sum(list_transform(embedding, x -> CAST(x AS DOUBLE) * x)))
-            * sqrt(list_sum(list_transform(qvec, x -> CAST(x AS DOUBLE) * x)))),
-         6) AS cos
+WITH {_Q_SQL}
+SELECT vec_id, label, round({_sql_cos("embedding", "qvec")}, 6) AS cos
 FROM embeddings, q
 WHERE vec_id != {QUERY_VEC_ID}
 ORDER BY cos DESC, vec_id ASC LIMIT {TOP_K}
@@ -124,7 +152,8 @@ def q_ann_lsh_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _ann_lsh_sql() -> str:
+def _lsh_sig_sql() -> str:
+    """lsh_signature(embedding) in SQL."""
     bit_exprs = []
     for row in _hyperplanes():
         arr = "[" + ", ".join(f"{v!r}" for v in row) + "]"
@@ -133,10 +162,12 @@ def _ann_lsh_sql() -> str:
             f"{arr}::DOUBLE[]), p -> CAST(p[1] AS DOUBLE) * p[2])) >= 0 "
             "THEN '1' ELSE '0' END"
         )
-    sig = " || ".join(bit_exprs)
-    return f"""
+    return " || ".join(bit_exprs)
+
+
+_ANN_LSH_SQL = f"""
 SELECT sig, count(*) AS n_vecs, min(vec_id) AS first_vec
-FROM (SELECT vec_id, {sig} AS sig FROM embeddings)
+FROM (SELECT vec_id, {_lsh_sig_sql()} AS sig FROM embeddings)
 GROUP BY sig HAVING count(*) > 1 ORDER BY sig
 """
 
@@ -188,35 +219,21 @@ def q_embedding_neardup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.first(F.col("b.embedding")).alias("eb"),
         )
         .select(
-            "va", "vb", F.round(cosine(F.col("ea"), F.col("eb")), 6).alias("cos")
+            "va", "vb", _cos_expr(F.col("ea"), F.col("eb")).alias("cos")
         )
     )
     return pairs.where(F.col("cos") >= NEARDUP_THRESHOLD).orderBy("va", "vb")
 
 
 def _neardup_sql() -> str:
-    bit_exprs = []
-    for row in _hyperplanes():
-        arr = "[" + ", ".join(f"{v!r}" for v in row) + "]"
-        bit_exprs.append(
-            "CASE WHEN list_sum(list_transform(list_zip(embedding, "
-            f"{arr}::DOUBLE[]), p -> CAST(p[1] AS DOUBLE) * p[2])) >= 0 "
-            "THEN '1' ELSE '0' END"
-        )
-    sig = " || ".join(bit_exprs)
     band_width = N_HYPERPLANES // NEARDUP_BANDS
     band_rows = " UNION ALL ".join(
         f"SELECT vec_id, embedding, '{i}:' || substr(sig, {1 + i * band_width}, {band_width}) AS band FROM sig"
         for i in range(NEARDUP_BANDS)
     )
-    cos = (
-        "list_sum(list_transform(list_zip(ea, eb), "
-        "p -> CAST(p[1] AS DOUBLE) * CAST(p[2] AS DOUBLE)))"
-        " / (sqrt(list_sum(list_transform(ea, x -> CAST(x AS DOUBLE) * x)))"
-        " * sqrt(list_sum(list_transform(eb, x -> CAST(x AS DOUBLE) * x))))"
-    )
+    cos = f"round({_sql_cos('ea', 'eb')}, 6)"
     return f"""
-WITH sig AS (SELECT vec_id, embedding, {sig} AS sig FROM embeddings),
+WITH sig AS (SELECT vec_id, embedding, {_lsh_sig_sql()} AS sig FROM embeddings),
 bands AS ({band_rows}),
 cand AS (
   SELECT a.vec_id AS va, b.vec_id AS vb,
@@ -224,8 +241,8 @@ cand AS (
   FROM bands a JOIN bands b ON a.band = b.band AND a.vec_id < b.vec_id
   GROUP BY a.vec_id, b.vec_id
 )
-SELECT va, vb, round({cos}, 6) AS cos
-FROM cand WHERE round({cos}, 6) >= {NEARDUP_THRESHOLD}
+SELECT va, vb, {cos} AS cos
+FROM cand WHERE {cos} >= {NEARDUP_THRESHOLD}
 ORDER BY va, vb
 """
 
@@ -233,10 +250,6 @@ ORDER BY va, vb
 IVF_CELLS = 8       # coarse centroids
 IVF_NPROBE = 2      # cells searched per query
 IVF_TOPK = 10
-
-
-def _cos_expr(a: Column, b: Column) -> Column:
-    return F.round(cosine(a, b), 6)
 
 
 def _ivf_centroids(e: DataFrame) -> DataFrame:
@@ -269,8 +282,9 @@ def _ivf_assign(e: DataFrame, cents: DataFrame) -> DataFrame:
     """Cell assignment: per vector the best centroid by (cos desc,
     cid asc) — a narrow argmax over IVF_CELLS broadcast codegen'd dot
     products. Returns (vec_id, cell, ccos). Shared by the IVF ANN
-    index and SemDeDup so the two queries (and their oracles) can
-    never drift apart on the tie-break."""
+    index and SemDeDup, and every oracle assigns through its twin
+    _assign_sql, so neither the queries nor their oracles can drift
+    apart on the tie-break."""
     scored = e.crossJoin(F.broadcast(cents)).select(
         "vec_id", "cid",
         _cos_expr(F.col("embedding"), F.col("cvec")).alias("ccos"),
@@ -282,6 +296,33 @@ def _ivf_assign(e: DataFrame, cents: DataFrame) -> DataFrame:
     ).select(
         "vec_id", (-F.col("b.ncid")).alias("cell"), F.col("b.ccos").alias("ccos")
     )
+
+
+def _cents_sql(src: str) -> str:
+    """_ivf_centroids in SQL: (cid, cvec) from the IVF_CELLS rows of
+    src with the smallest md5(vec_id)."""
+    return f"""
+  SELECT row_number() OVER (ORDER BY md5(CAST(vec_id AS VARCHAR))) - 1 AS cid,
+         embedding AS cvec
+  FROM {src}
+  ORDER BY md5(CAST(vec_id AS VARCHAR)) LIMIT {IVF_CELLS}
+"""
+
+
+def _assign_sql(src: str, cents: str) -> str:
+    """_ivf_assign in SQL: (vec_id, cell, ccos) for every src vector
+    against the (cid, cvec) rows of cents; callers join embedding or
+    label back as the Spark side does."""
+    return f"""
+  SELECT vec_id, cid AS cell, ccos FROM (
+    SELECT vec_id, cid, ccos,
+           row_number() OVER (PARTITION BY vec_id ORDER BY ccos DESC, cid ASC) AS rk
+    FROM (
+      SELECT e.vec_id, c.cid, round({_sql_cos("e.embedding", "c.cvec")}, 6) AS ccos
+      FROM {src} e CROSS JOIN {cents} c
+    )
+  ) WHERE rk = 1
+"""
 
 
 def q_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -324,39 +365,12 @@ def q_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 _IVF_SQL = f"""
-WITH cents AS (
-  SELECT row_number() OVER (ORDER BY md5(CAST(vec_id AS VARCHAR))) - 1 AS cid,
-         embedding AS cvec
-  FROM embeddings
-  ORDER BY md5(CAST(vec_id AS VARCHAR)) LIMIT {IVF_CELLS}
-),
-q AS (SELECT embedding AS qvec FROM embeddings WHERE vec_id = {QUERY_VEC_ID}),
-scored AS (
-  SELECT e.vec_id, e.label, e.embedding, c.cid,
-         round(
-           list_sum(list_transform(list_zip(e.embedding, c.cvec),
-                    p -> CAST(p[1] AS DOUBLE) * CAST(p[2] AS DOUBLE)))
-           / (sqrt(list_sum(list_transform(e.embedding, x -> CAST(x AS DOUBLE) * x)))
-            * sqrt(list_sum(list_transform(c.cvec, x -> CAST(x AS DOUBLE) * x)))), 6
-         ) AS ccos
-  FROM embeddings e CROSS JOIN cents c
-),
-best AS (
-  SELECT vec_id, cid AS cell FROM (
-    SELECT vec_id, cid,
-           row_number() OVER (PARTITION BY vec_id ORDER BY ccos DESC, cid ASC) AS rk
-    FROM scored
-  ) WHERE rk = 1
-),
+WITH cents AS ({_cents_sql("embeddings")}),
+{_Q_SQL},
+best AS ({_assign_sql("embeddings", "cents")}),
 probe AS (
   SELECT cid FROM (
-    SELECT c.cid,
-           round(
-             list_sum(list_transform(list_zip(c.cvec, q.qvec),
-                      p -> CAST(p[1] AS DOUBLE) * CAST(p[2] AS DOUBLE)))
-             / (sqrt(list_sum(list_transform(c.cvec, x -> CAST(x AS DOUBLE) * x)))
-              * sqrt(list_sum(list_transform(q.qvec, x -> CAST(x AS DOUBLE) * x)))), 6
-           ) AS qcos
+    SELECT c.cid, round({_sql_cos("c.cvec", "q.qvec")}, 6) AS qcos
     FROM cents c CROSS JOIN q
     ORDER BY qcos DESC, cid ASC LIMIT {IVF_NPROBE}
   )
@@ -366,13 +380,7 @@ cands AS (
   FROM embeddings e JOIN best b USING (vec_id) JOIN probe p ON b.cell = p.cid
   WHERE e.vec_id != {QUERY_VEC_ID}
 )
-SELECT vec_id, label, cell,
-       round(
-         list_sum(list_transform(list_zip(embedding, q.qvec),
-                  p -> CAST(p[1] AS DOUBLE) * CAST(p[2] AS DOUBLE)))
-         / (sqrt(list_sum(list_transform(embedding, x -> CAST(x AS DOUBLE) * x)))
-          * sqrt(list_sum(list_transform(q.qvec, x -> CAST(x AS DOUBLE) * x)))), 6
-       ) AS cos
+SELECT vec_id, label, cell, round({_sql_cos("embedding", "q.qvec")}, 6) AS cos
 FROM cands CROSS JOIN q
 ORDER BY cos DESC, vec_id ASC LIMIT {IVF_TOPK}
 """
@@ -394,12 +402,6 @@ def q_knn_join_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact semantics those approximations are graded against."""
     from pyspark.sql.window import Window
 
-    # r6: per-vector L2 norms are hoisted OUT of the pair join — the
-    # interpreted aggregate() fold otherwise re-derives each norm once
-    # per PAIR (2·n times per vector), tripling the dominant per-pair
-    # expression work. dot/(na·nb) evaluates the identical IEEE ops in
-    # the identical order as cosine(), so every rounded value is
-    # bit-equal (oracle hash-exact ×3 sfs). Guide §1.2 step 2.
     e = table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     a = e.select(
         F.col("vec_id").alias("a"),
@@ -416,8 +418,9 @@ def q_knn_join_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "a", "b",
             F.round(
-                dot(F.col("va"), F.col("vb"))
-                / (F.col("na") * F.col("nb")),
+                hoisted_cosine(
+                    F.col("va"), F.col("vb"), F.col("na"), F.col("nb")
+                ),
                 6,
             ).alias("cos"),
         )
@@ -435,12 +438,7 @@ def q_knn_join_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 # so the edge set can never drift between the two queries
 _KNN_CTE = f"""scored AS (
   SELECT x.vec_id AS a, y.vec_id AS b,
-         round(
-           list_sum(list_transform(list_zip(x.embedding, y.embedding),
-                                   p -> CAST(p[1] AS DOUBLE) * CAST(p[2] AS DOUBLE)))
-           / (sqrt(list_sum(list_transform(x.embedding, v -> CAST(v AS DOUBLE) * v)))
-              * sqrt(list_sum(list_transform(y.embedding, v -> CAST(v AS DOUBLE) * v)))),
-           6) AS cos
+         round({_sql_cos("x.embedding", "y.embedding")}, 6) AS cos
   FROM embeddings x JOIN embeddings y ON x.vec_id != y.vec_id
 ),
 ranked AS (
@@ -554,7 +552,7 @@ def _quant_recall(
     pairs = e.join(F.broadcast(qs), F.col("vec_id") != F.col("qid")).select(
         "qid",
         F.col("vec_id").alias("oid"),
-        F.round(cosine(F.col("embedding"), F.col("qemb")), 6).alias("fcos"),
+        _cos_expr(F.col("embedding"), F.col("qemb")).alias("fcos"),
         score(F.col("code"), F.col("qcode")).alias("s"),
     )
     wf = Window.partitionBy("qid").orderBy(F.desc("fcos"), F.asc("oid"))
@@ -584,6 +582,43 @@ def _quant_recall(
         )
         .orderBy("qid")
     )
+
+
+def _quant_recall_sql(coded: str, score: str, desc: bool) -> str:
+    """_quant_recall in SQL: coded is a SELECT of (vec_id, embedding,
+    code) rows, score an expression over code and qcode."""
+    order = "DESC" if desc else "ASC"
+    return f"""
+WITH coded AS ({coded}),
+qs AS (
+  SELECT vec_id AS qid, embedding AS qemb, code AS qcode
+  FROM coded WHERE vec_id % {QUANT_QMOD} = 0
+),
+pairs AS (
+  SELECT qid, vec_id AS oid,
+         round({_sql_cos("embedding", "qemb")}, 6) AS fcos,
+         {score} AS s
+  FROM coded, qs
+  WHERE vec_id != qid
+),
+ranked AS (
+  SELECT qid, oid,
+         row_number() OVER (PARTITION BY qid ORDER BY fcos DESC, oid) AS frk,
+         row_number() OVER (PARTITION BY qid ORDER BY s {order}, oid) AS srk
+  FROM pairs
+),
+hits AS (
+  SELECT f.qid, count(*) AS n_overlap
+  FROM (SELECT qid, oid FROM ranked WHERE frk <= {QUANT_K}) f
+  JOIN (SELECT qid, oid FROM ranked WHERE srk <= {QUANT_K}) g
+    USING (qid, oid)
+  GROUP BY f.qid
+)
+SELECT qid, CAST(coalesce(n_overlap, 0) AS BIGINT) AS n_overlap,
+       round(coalesce(n_overlap, 0) / CAST({QUANT_K} AS DOUBLE), 6) AS overlap
+FROM qs LEFT JOIN hits USING (qid)
+ORDER BY qid
+"""
 
 
 def q_int8_quant_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -624,54 +659,23 @@ def q_int8_quant_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _quant_recall(q8, int_cosine, desc=True)
 
 
-_INT8_RECALL_SQL = f"""
-WITH q8 AS (
+_INT8_RECALL_SQL = _quant_recall_sql(
+    """
   SELECT vec_id, embedding,
          list_transform(embedding,
            v -> CAST(round(CAST(v AS DOUBLE) * 127.0 /
                 list_max(list_transform(embedding, x -> abs(CAST(x AS DOUBLE)))))
-                AS INT)) AS qvec
+                AS INT)) AS code
   FROM embeddings
-),
-qs AS (
-  SELECT vec_id AS qid, embedding AS qemb, qvec AS qq
-  FROM q8 WHERE vec_id % {QUANT_QMOD} = 0
-),
-pairs AS (
-  SELECT qid, vec_id AS oid,
-         round(
-           list_sum(list_transform(list_zip(embedding, qemb),
-                                   p -> CAST(p[1] AS DOUBLE) * CAST(p[2] AS DOUBLE)))
-           / (sqrt(list_sum(list_transform(embedding, v -> CAST(v AS DOUBLE) * v)))
-              * sqrt(list_sum(list_transform(qemb, v -> CAST(v AS DOUBLE) * v)))),
-           6) AS fcos,
-         round(
-           CAST(list_sum(list_transform(list_zip(qvec, qq),
+""",
+    """round(
+           CAST(list_sum(list_transform(list_zip(code, qcode),
                 p -> CAST(p[1] AS BIGINT) * CAST(p[2] AS BIGINT))) AS DOUBLE)
-           / (sqrt(CAST(list_sum(list_transform(qvec, v -> CAST(v AS BIGINT) * v)) AS DOUBLE))
-              * sqrt(CAST(list_sum(list_transform(qq, v -> CAST(v AS BIGINT) * v)) AS DOUBLE))),
-           6) AS qcos
-  FROM q8, qs
-  WHERE vec_id != qid
-),
-ranked AS (
-  SELECT qid, oid,
-         row_number() OVER (PARTITION BY qid ORDER BY fcos DESC, oid) AS frk,
-         row_number() OVER (PARTITION BY qid ORDER BY qcos DESC, oid) AS qrk
-  FROM pairs
-),
-hits AS (
-  SELECT f.qid, count(*) AS n_overlap
-  FROM (SELECT qid, oid FROM ranked WHERE frk <= {QUANT_K}) f
-  JOIN (SELECT qid, oid FROM ranked WHERE qrk <= {QUANT_K}) g
-    USING (qid, oid)
-  GROUP BY f.qid
+           / (sqrt(CAST(list_sum(list_transform(code, v -> CAST(v AS BIGINT) * v)) AS DOUBLE))
+              * sqrt(CAST(list_sum(list_transform(qcode, v -> CAST(v AS BIGINT) * v)) AS DOUBLE))),
+           6)""",
+    desc=True,
 )
-SELECT qid, CAST(coalesce(n_overlap, 0) AS BIGINT) AS n_overlap,
-       round(coalesce(n_overlap, 0) / CAST({QUANT_K} AS DOUBLE), 6) AS overlap
-FROM qs LEFT JOIN hits USING (qid)
-ORDER BY qid
-"""
 
 
 BQ_BANKS = 4  # 64 dims packed as 4 × 16-bit words
@@ -742,47 +746,12 @@ _BQ_BANK_SQL = (
     "THEN (1 << i) ELSE 0 END)))"
 )
 
-_BINARY_RECALL_SQL = f"""
-WITH coded AS (
-  SELECT vec_id, embedding, {_BQ_BANK_SQL} AS code
-  FROM embeddings
-),
-qs AS (
-  SELECT vec_id AS qid, embedding AS qemb, code AS qcode
-  FROM coded WHERE vec_id % {QUANT_QMOD} = 0
-),
-pairs AS (
-  SELECT qid, vec_id AS oid,
-         round(
-           list_sum(list_transform(list_zip(embedding, qemb),
-                                   p -> CAST(p[1] AS DOUBLE) * CAST(p[2] AS DOUBLE)))
-           / (sqrt(list_sum(list_transform(embedding, v -> CAST(v AS DOUBLE) * v)))
-              * sqrt(list_sum(list_transform(qemb, v -> CAST(v AS DOUBLE) * v)))),
-           6) AS fcos,
-         list_sum(list_transform(list_zip(code, qcode),
-                  p -> bit_count(xor(CAST(p[1] AS BIGINT), CAST(p[2] AS BIGINT)))))
-           AS ham
-  FROM coded, qs
-  WHERE vec_id != qid
-),
-ranked AS (
-  SELECT qid, oid,
-         row_number() OVER (PARTITION BY qid ORDER BY fcos DESC, oid) AS frk,
-         row_number() OVER (PARTITION BY qid ORDER BY ham ASC, oid) AS brk
-  FROM pairs
-),
-hits AS (
-  SELECT f.qid, count(*) AS n_overlap
-  FROM (SELECT qid, oid FROM ranked WHERE frk <= {QUANT_K}) f
-  JOIN (SELECT qid, oid FROM ranked WHERE brk <= {QUANT_K}) g
-    USING (qid, oid)
-  GROUP BY f.qid
+_BINARY_RECALL_SQL = _quant_recall_sql(
+    f"SELECT vec_id, embedding, {_BQ_BANK_SQL} AS code FROM embeddings",
+    """list_sum(list_transform(list_zip(code, qcode),
+                  p -> bit_count(xor(CAST(p[1] AS BIGINT), CAST(p[2] AS BIGINT)))))""",
+    desc=False,
 )
-SELECT qid, CAST(coalesce(n_overlap, 0) AS BIGINT) AS n_overlap,
-       round(coalesce(n_overlap, 0) / CAST({QUANT_K} AS DOUBLE), 6) AS overlap
-FROM qs LEFT JOIN hits USING (qid)
-ORDER BY qid
-"""
 
 
 def q_ivf_recall_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -906,32 +875,9 @@ def q_ivf_recall_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_IVF_COS = (
-    "round(list_sum(list_transform(list_zip({a}, {b}), "
-    "p -> CAST(p[1] AS DOUBLE) * CAST(p[2] AS DOUBLE))) "
-    "/ (sqrt(list_sum(list_transform({a}, x -> CAST(x AS DOUBLE) * x))) "
-    "* sqrt(list_sum(list_transform({b}, x -> CAST(x AS DOUBLE) * x)))), 6)"
-)
-
 _IVF_RECALL_CURVE_SQL = f"""
-WITH cents AS (
-  SELECT row_number() OVER (ORDER BY md5(CAST(vec_id AS VARCHAR))) - 1 AS cid,
-         embedding AS cvec
-  FROM embeddings
-  ORDER BY md5(CAST(vec_id AS VARCHAR)) LIMIT {IVF_CELLS}
-),
-scored AS (
-  SELECT e.vec_id, e.embedding, c.cid,
-         {_IVF_COS.format(a="e.embedding", b="c.cvec")} AS ccos
-  FROM embeddings e CROSS JOIN cents c
-),
-assigned AS (
-  SELECT vec_id, embedding, cid AS cell FROM (
-    SELECT vec_id, embedding, cid,
-           row_number() OVER (PARTITION BY vec_id ORDER BY ccos DESC, cid ASC) AS rk
-    FROM scored
-  ) WHERE rk = 1
-),
+WITH cents AS ({_cents_sql("embeddings")}),
+best AS ({_assign_sql("embeddings", "cents")}),
 qs AS (
   SELECT vec_id AS qid, embedding AS qvec
   FROM embeddings WHERE vec_id % {QUANT_QMOD} = 0
@@ -940,22 +886,23 @@ qcells AS (
   SELECT qid, cid, probe_rk FROM (
     SELECT q.qid, c.cid,
            row_number() OVER (PARTITION BY q.qid ORDER BY
-             {_IVF_COS.format(a="c.cvec", b="q.qvec")} DESC, c.cid ASC)
+             round({_sql_cos("c.cvec", "q.qvec")}, 6) DESC, c.cid ASC)
              AS probe_rk
     FROM cents c CROSS JOIN qs q
   ) WHERE probe_rk <= 2
 ),
 cands AS (
   SELECT k.qid, a.vec_id AS oid, k.probe_rk,
-         {_IVF_COS.format(a="a.embedding", b="q.qvec")} AS ccand
-  FROM assigned a
-  JOIN qcells k ON a.cell = k.cid
+         round({_sql_cos("a.embedding", "q.qvec")}, 6) AS ccand
+  FROM best b
+  JOIN embeddings a ON a.vec_id = b.vec_id
+  JOIN qcells k ON b.cell = k.cid
   JOIN qs q ON q.qid = k.qid
   WHERE a.vec_id != k.qid
 ),
 exact AS (
   SELECT q.qid, e.vec_id AS oid,
-         {_IVF_COS.format(a="e.embedding", b="q.qvec")} AS fcos
+         round({_sql_cos("e.embedding", "q.qvec")}, 6) AS fcos
   FROM embeddings e CROSS JOIN qs q
   WHERE e.vec_id != q.qid
 ),
@@ -1028,53 +975,15 @@ def q_matryoshka_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         "embedding",
         F.slice("embedding", 1, MRL_DIM).alias("code"),
     )
-    return _quant_recall(
-        e, lambda m, qm: F.round(cosine(m, qm), 6), desc=True
-    )
+    return _quant_recall(e, _cos_expr, desc=True)
 
 
-_MRL_COS = (
-    "round(list_sum(list_transform(list_zip({a}, {b}), "
-    "p -> CAST(p[1] AS DOUBLE) * CAST(p[2] AS DOUBLE))) "
-    "/ (sqrt(list_sum(list_transform({a}, v -> CAST(v AS DOUBLE) * v))) "
-    "* sqrt(list_sum(list_transform({b}, v -> CAST(v AS DOUBLE) * v)))), 6)"
+_MATRYOSHKA_SQL = _quant_recall_sql(
+    "SELECT vec_id, embedding, "
+    f"list_slice(embedding, 1, {MRL_DIM}) AS code FROM embeddings",
+    f"round({_sql_cos('code', 'qcode')}, 6)",
+    desc=True,
 )
-
-_MATRYOSHKA_SQL = f"""
-WITH e AS (
-  SELECT vec_id, embedding,
-         list_slice(embedding, 1, {MRL_DIM}) AS mvec
-  FROM embeddings
-),
-qs AS (
-  SELECT vec_id AS qid, embedding AS qemb, mvec AS qm
-  FROM e WHERE vec_id % {QUANT_QMOD} = 0
-),
-pairs AS (
-  SELECT qid, vec_id AS oid,
-         {_MRL_COS.format(a="embedding", b="qemb")} AS fcos,
-         {_MRL_COS.format(a="mvec", b="qm")} AS mcos
-  FROM e, qs
-  WHERE vec_id != qid
-),
-ranked AS (
-  SELECT qid, oid,
-         row_number() OVER (PARTITION BY qid ORDER BY fcos DESC, oid) AS frk,
-         row_number() OVER (PARTITION BY qid ORDER BY mcos DESC, oid) AS mrk
-  FROM pairs
-),
-hits AS (
-  SELECT f.qid, count(*) AS n_overlap
-  FROM (SELECT qid, oid FROM ranked WHERE frk <= {QUANT_K}) f
-  JOIN (SELECT qid, oid FROM ranked WHERE mrk <= {QUANT_K}) g
-    USING (qid, oid)
-  GROUP BY f.qid
-)
-SELECT qid, CAST(coalesce(n_overlap, 0) AS BIGINT) AS n_overlap,
-       round(coalesce(n_overlap, 0) / CAST({QUANT_K} AS DOUBLE), 6) AS overlap
-FROM qs LEFT JOIN hits USING (qid)
-ORDER BY qid
-"""
 
 
 SEMDEDUP_TAU = 0.4  # intra-cluster cosine above which one of a pair is pruned
@@ -1100,8 +1009,6 @@ def q_semdedup_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     join stays linear-ish, exactly the SemDeDup paper's trick. One
     exchange for assignment, one cell-keyed exchange for the join."""
     e = table(spark, sf_dir, "embeddings")
-    # r6: per-vector norm hoisted out of the intra-cell pair loop
-    # (same bit-identical dot/(na·nb) rewrite as q_knn_join_topk)
     assigned = e.join(
         _ivf_assign(e, _ivf_centroids(e)), "vec_id"
     ).select(
@@ -1119,8 +1026,10 @@ def q_semdedup_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
         a.join(b, (F.col("a.cell") == F.col("b.cell")) & keeper_beats)
         .where(
             F.round(
-                dot(F.col("a.embedding"), F.col("b.embedding"))
-                / (F.col("a.nrm") * F.col("b.nrm")),
+                hoisted_cosine(
+                    F.col("a.embedding"), F.col("b.embedding"),
+                    F.col("a.nrm"), F.col("b.nrm"),
+                ),
                 6,
             )
             >= SEMDEDUP_TAU
@@ -1141,31 +1050,12 @@ def q_semdedup_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_COS_SQL = """round(
-           list_sum(list_transform(list_zip({a}, {b}),
-                    p -> CAST(p[1] AS DOUBLE) * CAST(p[2] AS DOUBLE)))
-           / (sqrt(list_sum(list_transform({a}, x -> CAST(x AS DOUBLE) * x)))
-            * sqrt(list_sum(list_transform({b}, x -> CAST(x AS DOUBLE) * x)))), 6
-         )"""
-
 _SEMDEDUP_SQL = f"""
-WITH cents AS (
-  SELECT row_number() OVER (ORDER BY md5(CAST(vec_id AS VARCHAR))) - 1 AS cid,
-         embedding AS cvec
-  FROM embeddings
-  ORDER BY md5(CAST(vec_id AS VARCHAR)) LIMIT {IVF_CELLS}
-),
-scored AS (
-  SELECT e.vec_id, e.embedding, c.cid,
-         {_COS_SQL.format(a="e.embedding", b="c.cvec")} AS ccos
-  FROM embeddings e CROSS JOIN cents c
-),
+WITH cents AS ({_cents_sql("embeddings")}),
 best AS (
-  SELECT vec_id, embedding, cid AS cell, ccos FROM (
-    SELECT *, row_number() OVER (PARTITION BY vec_id
-                                 ORDER BY ccos DESC, cid ASC) AS rk
-    FROM scored
-  ) WHERE rk = 1
+  SELECT s.*, e.embedding
+  FROM ({_assign_sql("embeddings", "cents")}) s
+  JOIN embeddings e ON e.vec_id = s.vec_id
 )
 SELECT a.vec_id, a.cell, a.ccos,
        EXISTS (
@@ -1173,7 +1063,7 @@ SELECT a.vec_id, a.cell, a.ccos,
          WHERE b.cell = a.cell
            AND (b.ccos < a.ccos
                 OR (b.ccos = a.ccos AND b.vec_id < a.vec_id))
-           AND {_COS_SQL.format(a="a.embedding", b="b.embedding")}
+           AND round({_sql_cos("a.embedding", "b.embedding")}, 6)
                >= {SEMDEDUP_TAU}
        ) AS pruned
 FROM best a
@@ -1227,50 +1117,25 @@ def q_kmeans_refine(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _assign_sql(cents_cte: str, out_name: str, cell_col: str) -> str:
-    """Assignment CTE pair against an arbitrary (cid, cvec) CTE —
-    the SQL twin of _ivf_assign, parameterized so the k-means oracle
-    reuses it for both the init and the refined codebook."""
-    return f"""
-{out_name}_scored AS (
-  SELECT e.vec_id, c.cid,
-         {_COS_SQL.format(a="e.embedding", b="c.cvec")} AS ccos
-  FROM embeddings e CROSS JOIN {cents_cte} c
-),
-{out_name} AS (
-  SELECT vec_id, cid AS {cell_col} FROM (
-    SELECT vec_id, cid,
-           row_number() OVER (PARTITION BY vec_id
-                              ORDER BY ccos DESC, cid ASC) AS rk
-    FROM {out_name}_scored
-  ) WHERE rk = 1
-)"""
-
-
 _KMEANS_SQL = f"""
-WITH cents0 AS (
-  SELECT row_number() OVER (ORDER BY md5(CAST(vec_id AS VARCHAR))) - 1 AS cid,
-         embedding AS cvec
-  FROM embeddings
-  ORDER BY md5(CAST(vec_id AS VARCHAR)) LIMIT {IVF_CELLS}
-),
-{_assign_sql("cents0", "a0", "cell0")},
+WITH cents0 AS ({_cents_sql("embeddings")}),
+a0 AS ({_assign_sql("embeddings", "cents0")}),
 upd AS (
-  SELECT cell0 AS cid, list(cv ORDER BY pos) AS cvec
+  SELECT cell AS cid, list(cv ORDER BY pos) AS cvec
   FROM (
-    SELECT cell0, pos, round(avg(CAST(v AS DOUBLE)), 6) AS cv
+    SELECT cell, pos, round(avg(CAST(v AS DOUBLE)), 6) AS cv
     FROM (
-      SELECT a0.cell0,
+      SELECT a0.cell,
              unnest(range(len(e.embedding))) AS pos,
              unnest(e.embedding) AS v
       FROM embeddings e JOIN a0 USING (vec_id)
     )
-    GROUP BY cell0, pos
+    GROUP BY cell, pos
   )
-  GROUP BY cell0
+  GROUP BY cell
 ),
-{_assign_sql("upd", "a1", "cell1")}
-SELECT a0.vec_id, a0.cell0, a1.cell1, a0.cell0 != a1.cell1 AS moved
+a1 AS ({_assign_sql("embeddings", "upd")})
+SELECT a0.vec_id, a0.cell AS cell0, a1.cell AS cell1, a0.cell != a1.cell AS moved
 FROM a0 JOIN a1 USING (vec_id)
 ORDER BY a0.vec_id
 """
@@ -1542,9 +1407,7 @@ def q_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
             "anchor",
             F.col("vec_id").alias("other"),
             (F.col("label") == F.col("albl")).alias("same"),
-            F.round(cosine(F.col("embedding"), F.col("aemb")), 6).alias(
-                "cos"
-            ),
+            _cos_expr(F.col("embedding"), F.col("aemb")).alias("cos"),
         )
     )
     wp = Window.partitionBy("anchor", "same").orderBy(
@@ -1575,12 +1438,7 @@ WITH anchors AS (
 ),
 scored AS (
   SELECT a.anchor, e.vec_id AS other, e.label = a.albl AS same,
-         round(
-           list_sum(list_transform(list_zip(e.embedding, a.aemb),
-                                   p -> CAST(p[1] AS DOUBLE) * CAST(p[2] AS DOUBLE)))
-           / (sqrt(list_sum(list_transform(e.embedding, v -> CAST(v AS DOUBLE) * v)))
-              * sqrt(list_sum(list_transform(a.aemb, v -> CAST(v AS DOUBLE) * v)))),
-           6) AS cos
+         round({_sql_cos("e.embedding", "a.aemb")}, 6) AS cos
   FROM embeddings e JOIN anchors a ON e.vec_id != a.anchor
 ),
 ranked AS (
@@ -1676,15 +1534,6 @@ def q_mmr_select(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("rank")
 
 
-def _sql_cos(x: str, y: str) -> str:
-    return (
-        f"(list_sum(list_transform(list_zip({x}, {y}), "
-        f"z -> CAST(z[1] AS DOUBLE) * CAST(z[2] AS DOUBLE))) "
-        f"/ (sqrt(list_sum(list_transform({x}, v -> CAST(v AS DOUBLE) * v))) "
-        f"* sqrt(list_sum(list_transform({y}, v -> CAST(v AS DOUBLE) * v)))))"
-    )
-
-
 def _mmr_sql() -> str:
     picks = []
     for k in range(1, MMR_K + 1):
@@ -1715,7 +1564,7 @@ p{k} AS (
         for k in range(1, MMR_K + 1)
     )
     return f"""
-WITH q AS (SELECT embedding AS qvec FROM embeddings WHERE vec_id = {QUERY_VEC_ID}),
+WITH {_Q_SQL},
 scored AS (
   SELECT vec_id, label, embedding,
          round({_sql_cos('embedding', 'qvec')}, 9) AS rel
@@ -1782,24 +1631,8 @@ def q_embedding_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 _OUTLIER_SQL = f"""
-WITH cents AS (
-  SELECT row_number() OVER (ORDER BY md5(CAST(vec_id AS VARCHAR))) - 1 AS cid,
-         embedding AS cvec
-  FROM embeddings
-  ORDER BY md5(CAST(vec_id AS VARCHAR)) LIMIT {IVF_CELLS}
-),
-scored AS (
-  SELECT e.vec_id, c.cid,
-         {_COS_SQL.format(a="e.embedding", b="c.cvec")} AS ccos
-  FROM embeddings e CROSS JOIN cents c
-),
-best AS (
-  SELECT vec_id, cid AS cell, ccos FROM (
-    SELECT *, row_number() OVER (PARTITION BY vec_id
-                                 ORDER BY ccos DESC, cid ASC) AS rk
-    FROM scored
-  ) WHERE rk = 1
-),
+WITH cents AS ({_cents_sql("embeddings")}),
+best AS ({_assign_sql("embeddings", "cents")}),
 med AS (SELECT cell, median(ccos) AS med FROM best GROUP BY cell),
 dev AS (
   SELECT b.*, m.med, abs(b.ccos - m.med) AS adev
@@ -1849,9 +1682,6 @@ def q_margin_pair_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
     feeds its three consumers (two neighborhoods, the pair frame)."""
     from pyspark.sql.window import Window
 
-    # r6: norms hoisted out of the pair loop (same bit-identical
-    # rewrite as q_knn_join_topk — dot/(na·nb) is the same IEEE op
-    # sequence as cosine(); oracle hash-exact ×3 sfs)
     e = table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     xs = e.where(F.col("vec_id") % 2 == 0).select(
         F.col("vec_id").alias("a"),
@@ -1864,8 +1694,7 @@ def q_margin_pair_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
         l2norm(F.col("embedding")).alias("nnb"),
     )
     c = F.floor(
-        dot(F.col("va"), F.col("vb"))
-        / (F.col("nna") * F.col("nnb"))
+        hoisted_cosine(F.col("va"), F.col("vb"), F.col("nna"), F.col("nnb"))
         * 1_000_000
         + F.lit(0.5)
     ).cast("long")
@@ -1922,17 +1751,11 @@ def q_margin_pair_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_MARGIN_COS = """
-           list_sum(list_transform(list_zip(x.embedding, y.embedding),
-                                   p -> CAST(p[1] AS DOUBLE) * CAST(p[2] AS DOUBLE)))
-           / (sqrt(list_sum(list_transform(x.embedding, v -> CAST(v AS DOUBLE) * v)))
-              * sqrt(list_sum(list_transform(y.embedding, v -> CAST(v AS DOUBLE) * v))))
-"""
-
 _MARGIN_SQL = f"""
 WITH scored AS (
   SELECT x.vec_id AS a, y.vec_id AS b,
-         CAST(floor(({_MARGIN_COS}) * 1000000 + 0.5) AS BIGINT) AS c
+         CAST(floor({_sql_cos("x.embedding", "y.embedding")} * 1000000 + 0.5)
+              AS BIGINT) AS c
   FROM embeddings x JOIN embeddings y
     ON x.vec_id % 2 = 0 AND y.vec_id % 2 = 1
 ),
@@ -2028,50 +1851,16 @@ def q_ivf_delta_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _ivf_delta_sql() -> str:
-    def cos(a: str, b: str) -> str:
-        return (
-            f"round(list_sum(list_transform(list_zip({a}, {b}), "
-            "p -> CAST(p[1] AS DOUBLE) * CAST(p[2] AS DOUBLE))) "
-            f"/ (sqrt(list_sum(list_transform({a}, "
-            "x -> CAST(x AS DOUBLE) * x))) "
-            f"* sqrt(list_sum(list_transform({b}, "
-            "x -> CAST(x AS DOUBLE) * x)))), 6)"
-        )
-
-    assign = """
-  SELECT vec_id, cid AS cell, ccos FROM (
-    SELECT s.vec_id, s.cid, s.ccos,
-           row_number() OVER (
-             PARTITION BY s.vec_id ORDER BY s.ccos DESC, s.cid ASC
-           ) AS rk
-    FROM {scored} s
-  ) WHERE rk = 1
-"""
-    return f"""
+_IVF_DELTA_SQL = f"""
 WITH base AS (
   SELECT * FROM embeddings WHERE vec_id % {DELTA_MOD} != 0
 ),
 delta AS (
   SELECT * FROM embeddings WHERE vec_id % {DELTA_MOD} = 0
 ),
-cents AS (
-  SELECT row_number() OVER (ORDER BY md5(CAST(vec_id AS VARCHAR))) - 1
-           AS cid,
-         embedding AS cvec
-  FROM base
-  ORDER BY md5(CAST(vec_id AS VARCHAR)) LIMIT {IVF_CELLS}
-),
-bscored AS (
-  SELECT e.vec_id, c.cid, {cos('e.embedding', 'c.cvec')} AS ccos
-  FROM base e CROSS JOIN cents c
-),
-dscored AS (
-  SELECT e.vec_id, c.cid, {cos('e.embedding', 'c.cvec')} AS ccos
-  FROM delta e CROSS JOIN cents c
-),
-bbest AS ({assign.format(scored='bscored')}),
-dbest AS ({assign.format(scored='dscored')}),
+cents AS ({_cents_sql("base")}),
+bbest AS ({_assign_sql("base", "cents")}),
+dbest AS ({_assign_sql("delta", "cents")}),
 b AS (SELECT cell, count(*) AS n_base FROM bbest GROUP BY cell),
 d AS (
   SELECT cell, count(*) AS n_delta,
@@ -2238,24 +2027,8 @@ def q_cluster_topterms(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 _TOPTERMS_SQL = f"""
-WITH cents AS (
-  SELECT row_number() OVER (ORDER BY md5(CAST(vec_id AS VARCHAR))) - 1 AS cid,
-         embedding AS cvec
-  FROM embeddings
-  ORDER BY md5(CAST(vec_id AS VARCHAR)) LIMIT {IVF_CELLS}
-),
-scored AS (
-  SELECT e.vec_id, c.cid,
-         {_COS_SQL.format(a="e.embedding", b="c.cvec")} AS ccos
-  FROM embeddings e CROSS JOIN cents c
-),
-best AS (
-  SELECT vec_id, cid AS cell FROM (
-    SELECT *, row_number() OVER (PARTITION BY vec_id
-                                 ORDER BY ccos DESC, cid ASC) AS rk
-    FROM scored
-  ) WHERE rk = 1
-),
+WITH cents AS ({_cents_sql("embeddings")}),
+best AS ({_assign_sql("embeddings", "cents")}),
 raw AS (
   SELECT doc_id,
          unnest(regexp_split_to_array(trim(lower(text)), '\\s+')) AS tok
@@ -2762,13 +2535,13 @@ QUERIES = {
     "graph_link_predict": (q_graph_link_predict, _LINK_PREDICT_SQL),
     "sim_knn_join_topk": (q_knn_join_topk, _KNN_JOIN_SQL),
     "sim_int8_quant_recall": (q_int8_quant_recall, _INT8_RECALL_SQL),
-    "sim_ann_lsh_buckets": (q_ann_lsh_buckets, _ann_lsh_sql()),
+    "sim_ann_lsh_buckets": (q_ann_lsh_buckets, _ANN_LSH_SQL),
     "sim_embedding_neardup": (q_embedding_neardup_pairs, _neardup_sql()),
     "sim_ivf_topk": (q_ivf_topk, _IVF_SQL),
     "sim_kmeans_refine": (q_kmeans_refine, _KMEANS_SQL),
     "sim_margin_pair_mining": (q_margin_pair_mining, _MARGIN_SQL),
     "graph_knn_bfs_hops": (q_knn_bfs_hops, _BFS_SQL),
-    "sim_ivf_delta_assign": (q_ivf_delta_assign, _ivf_delta_sql()),
+    "sim_ivf_delta_assign": (q_ivf_delta_assign, _IVF_DELTA_SQL),
     "sim_binary_quant_recall": (q_binary_quant_recall, _BINARY_RECALL_SQL),
     "sim_matryoshka_recall": (q_matryoshka_recall, _MATRYOSHKA_SQL),
     "sim_ivf_recall_curve": (q_ivf_recall_curve, _IVF_RECALL_CURVE_SQL),

@@ -26,7 +26,7 @@ from ocr_intern_spark.operators.extract import (
     ocr_media_spans,
     transform_plain_spans,
 )
-from ocr_intern_spark.schema import DOCUMENTS_DDL
+from ocr_intern_spark.schema import DOCUMENTS_DDL, EXTRACTED_DDL, FLAT_DDL
 
 
 def read_documents_stream(
@@ -68,14 +68,8 @@ def stream_extract_to_store(
     )
 
 
-FLAT_TOTAL_DDL = (
-    "doc_id string, offset int, pos int, seq int, kind string, "
-    "text string, media_ref string, total int"
-)
-ASSEMBLED_DDL = (
-    "doc_id string, spans array<struct<kind:string,text:string,"
-    "media_ref:string,order:int>>, complete boolean"
-)
+FLAT_TOTAL_DDL = f"{FLAT_DDL}, total int"
+ASSEMBLED_DDL = f"{EXTRACTED_DDL}, complete boolean"
 _STATE_DDL = (
     "offsets array<int>, poss array<int>, seqs array<int>, "
     "kinds array<string>, texts array<string>, refs array<string>, "

@@ -10,6 +10,7 @@ OCR with overlapping boxes, and an oversized-doc tail.
 import re
 
 import pytest
+from pyspark.sql.types import StructType
 
 from ocr_intern_spark.oracle.semantics import extract_document
 from ocr_intern_spark.operators.extract import (
@@ -23,6 +24,7 @@ from ocr_intern_spark.sources.corpus import (
     make_corpus,
     stub_ocr_tokens,
 )
+from ocr_intern_spark.schema import EXTRACTED_DDL
 
 N_DOCS = 80
 
@@ -59,6 +61,10 @@ def test_extract_schema(spark):
         "struct<doc_id:string,spans:array<struct<"
         "kind:string,text:string,media_ref:string,order:int>>>"
     )
+    # the DDL cannot state Spark's inferred non-null spans/order, so the
+    # types are compared without nullability
+    ddl = StructType.fromDDL(EXTRACTED_DDL)
+    assert out.schema.simpleString() == ddl.simpleString()
 
 
 def test_order_is_dense_and_zero_based(spark):

@@ -2,7 +2,8 @@
 
 Runs every queries()[name] on Spark and the matching oracle_sql()[name]
 on DuckDB over the same parquet dir, compares row count, column names,
-and an order-insensitive value hash. Usage:
+and an order-insensitive value hash. A name that queries() does not
+know is an error (exit 1), not a skip. Usage:
 
     python tools/check_oracle.py [sf_dir] [name ...]
 """
@@ -53,6 +54,12 @@ def main() -> None:
     import __spark_entry__ as entrymod
     from pyspark.sql import SparkSession
 
+    qs = entrymod.queries()
+    unknown = sorted(only - set(qs))
+    if unknown:
+        print(f"unknown query names: {', '.join(unknown)}")
+        sys.exit(1)
+
     # the Python workers import the package too: pin them to this tree
     os.environ["PYTHONPATH"] = os.pathsep.join(
         filter(None, [REPO, os.environ.get("PYTHONPATH")])
@@ -74,7 +81,6 @@ def main() -> None:
             f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'"
         )
 
-    qs = entrymod.queries()
     oracles = entrymod.oracle_sql()
     failures = []
     for name, fn in qs.items():

@@ -373,8 +373,8 @@ def q_rrf_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _rrf_sql() -> str:
     # reuse the engine-shared constants/fragments (QUERY_VEC_ID, the
-    # 6-decimal cosine) so the oracle can't silently drift from the
-    # Spark side if the query id or rounding ever changes
+    # probe row, the cosine) so the oracle can't silently drift from
+    # the Spark side if the query id or the cosine ever changes
     from ocr_intern_spark.operators.similarity import _Q_SQL, QUERY_VEC_ID, _sql_cos
 
     bm25 = _bm25_sql()

@@ -1,8 +1,11 @@
 """Registry-wide physical-plan regression gate.
 
 Every registered query's pre-AQE physical plan is built at sf0.001
-(construction only — `sparkPlan()` never executes the job) and
-checked against the two plan classes that kill a 100 TB run:
+and checked against the two plan classes that kill a 100 TB run.
+`sparkPlan()` never executes the job, but building a frame can run a
+bounded collect: `sim_knn_join_topk` and the two graph queries over
+its edges collect the eval-sized embeddings frame for the driver-side
+pair kernel (`similarity.pairwise_topk`).
 
 * `CartesianProduct` — never allowed, anywhere;
 * `BroadcastNestedLoopJoin` — allowed ONLY for the documented
@@ -13,13 +16,9 @@ checked against the two plan classes that kill a 100 TB run:
   observed scalar-class maximum is 30 — 1-row totals, ≤5-row
   alphabet frames, ≤31-row day spines). A future edit that turns a
   scalar broadcast into a genuine cross product fails the gate with
-  no human audit needed (VERDICT r4 "Next round" #5).
-* documented all-pairs EVAL BASELINES (`_BNLJ_EVAL_BASELINES`) are
-  the one class whose build side legitimately scales with data (the
-  brute-force head that certifies a bucketed/blocked scale path
-  elsewhere). For these the assertion is no-blowup: build rows must
-  not exceed the largest base table at that sf (a join-product build
-  would).
+  no human audit needed (VERDICT r4 "Next round" #5). Every
+  allowlisted name must still plan a BNLJ, so an entry whose join
+  went away leaves the list instead of waiting to hide a new one.
 
 Streaming queries are excluded: their callables run real streams to
 produce the comparison frame, so "building the plan" would execute
@@ -31,9 +30,6 @@ from pyspark.sql import DataFrame
 
 SF_DIR = "/root/testdata/sf0.001"
 
-# Largest base table at sf0.001 (lineitem ~6k rows) — the no-blowup
-# ceiling for eval-baseline builds; asserted against the real table
-# below rather than hard-coded.
 _SCALAR_BUILD_BOUND = 64
 
 # The scalar-broadcast class: every build side here is a 1-row
@@ -52,8 +48,7 @@ _BNLJ_ALLOWED = frozenset(
         # session-13 parts 2-4): 1-row totals (topterms, basket
         # n_orders, rfm anchor, wau bounds, concentration total +
         # 4-row cut frame), the ≤31-row day spine (cusum), the
-        # 15-cell bitemporal grid, and the kNN eval-frame pairwise
-        # class link_predict inherits from sim_knn_join_topk:
+        # 15-cell bitemporal grid:
         # session-14 scalar broadcasts: KM's 1-row anchor date, ACF's
         # 1-row (n, sum) stats + 1-row denominator frames, and the
         # Bloom audit's 1-row train-count + 1-row bitmap-digest frames:
@@ -84,7 +79,6 @@ _BNLJ_ALLOWED = frozenset(
         "text_term_burstiness",
         "sim_cluster_topterms",
         "market_basket_pairs",
-        "graph_link_predict",
         "events_cusum_changepoints",
         "events_bitemporal_asof",
         "customer_rfm_segments",
@@ -109,7 +103,6 @@ _BNLJ_ALLOWED = frozenset(
         "sim_ivf_delta_assign",
         "sim_ivf_topk",
         "sim_kmeans_refine",
-        "sim_knn_join_topk",
         "sim_margin_pair_mining",
         "sim_pq_adc_recall",
         "sim_semdedup_prune",
@@ -124,7 +117,6 @@ _BNLJ_ALLOWED = frozenset(
         "text_langid_ngram",
         "text_mix_resample",
         "text_pmi_collocations",
-        "text_quality_ensemble",
         "text_rrf_fusion",
         "text_source_kl_drift",
         "text_source_mix_weights",
@@ -132,14 +124,6 @@ _BNLJ_ALLOWED = frozenset(
         "text_unigram_logprob",
     }
 )
-
-# The documented all-pairs eval-baseline class: the build side is the
-# WHOLE (small, eval-sized) comparison frame by design — the exact
-# head whose agreement certifies the blocked/bucketed scale path
-# (blocked-swap proofs in sim_ivf_recall_curve et al.). Bounded by
-# "no larger than any single base table", not by the scalar bound.
-_BNLJ_EVAL_BASELINES = frozenset({"sim_knn_join_topk"})
-
 
 def _walk(node):
     yield node
@@ -205,36 +189,27 @@ def test_bnlj_only_documented_class(sweep):
     )
 
 
-def test_bnlj_scalar_builds_are_bounded(sweep, spark):
+def test_bnlj_scalar_builds_are_bounded(sweep):
     """The allowlist is self-verifying: every allowlisted BNLJ build
-    side must COUNT under the scalar bound at sf0.001 (eval baselines
-    under the largest base table). Membership alone can no longer
-    hide a regression that makes a build side data-scaled."""
+    side must COUNT under the scalar bound at sf0.001. Membership
+    alone can no longer hide a regression that makes a build side
+    data-scaled."""
     _, _, build_counts = sweep
-    biggest_table = spark.read.parquet(f"{SF_DIR}/lineitem.parquet").count()
-    offenders = []
-    for name, counts in build_counts.items():
-        bound = (
-            biggest_table
-            if name in _BNLJ_EVAL_BASELINES
-            else _SCALAR_BUILD_BOUND
-        )
-        over = [c for c in counts if c > bound]
-        if over:
-            offenders.append((name, over, bound))
+    offenders = [
+        (name, over)
+        for name, counts in build_counts.items()
+        if (over := [c for c in counts if c > _SCALAR_BUILD_BOUND])
+    ]
     assert not offenders, (
-        f"BNLJ build sides over their bound at sf0.001: {offenders} — "
-        "a scalar broadcast became data-scaled (or an eval baseline "
-        "picked up a join-product blowup)"
+        f"BNLJ build sides over {_SCALAR_BUILD_BOUND} rows at sf0.001: "
+        f"{offenders} — a scalar broadcast became data-scaled"
     )
 
 
-def test_bnlj_allowlist_has_no_stale_names(spark):
-    """Names on the allowlist must still exist in the registry —
-    otherwise the list silently stops guarding anything."""
-    import __spark_entry__ as e
-
-    names = set(e.queries())
-    stale = (_BNLJ_ALLOWED | _BNLJ_EVAL_BASELINES) - names
+def test_bnlj_allowlist_has_no_stale_names(sweep):
+    """Every allowlisted name must still plan a BNLJ at sf0.001 — a
+    name gone from the registry, or whose join no longer plans one,
+    otherwise stays on the list and silently guards nothing."""
+    _, _, build_counts = sweep
+    stale = _BNLJ_ALLOWED - set(build_counts)
     assert not stale, f"stale allowlist entries: {sorted(stale)}"
-    assert _BNLJ_EVAL_BASELINES <= _BNLJ_ALLOWED

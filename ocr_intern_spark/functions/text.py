@@ -68,10 +68,20 @@ def quality_score(text: Column) -> Column:
     return len_ok + punct_ok + stop_ok
 
 
+def normalized_text(text: Column) -> Column:
+    """Lowercased text with each whitespace run collapsed to one space
+    and the ends trimmed; NORMALIZED_TEXT_SQL is the DuckDB twin."""
+    return F.trim(F.regexp_replace(F.lower(text), r"\s+", " "))
+
+
 def fingerprint(text: Column) -> Column:
-    """Document fingerprint: md5 of the whitespace-normalized,
-    lowercased text (portable across engines)."""
-    return F.md5(F.trim(F.regexp_replace(F.lower(text), r"\s+", " ")))
+    """Document fingerprint: md5 of the normalized text (portable
+    across engines); FINGERPRINT_SQL is the DuckDB twin."""
+    return F.md5(normalized_text(text))
+
+
+NORMALIZED_TEXT_SQL = "trim(regexp_replace(lower(text), '\\s+', ' ', 'g'))"
+FINGERPRINT_SQL = f"md5({NORMALIZED_TEXT_SQL})"
 
 
 # ---------------------------------------------------------------------------
@@ -97,7 +107,7 @@ SELECT doc_id,
          CAST(length(list_filter(regexp_split_to_array(lower(trim(text)), '\\s+'),
                                  w -> list_contains({list(STOPWORDS)!r}, w))) AS DOUBLE)
          / length(regexp_split_to_array(lower(trim(text)), '\\s+')), 6) AS stop_ratio,
-       md5(trim(regexp_replace(lower(text), '\\s+', ' ', 'g'))) AS fp
+       {FINGERPRINT_SQL} AS fp
 FROM documents
 """
 
@@ -1492,7 +1502,7 @@ def _winnow_fps(d: DataFrame) -> DataFrame:
     strings): one narrow codegen stage per doc, no shuffle until the
     caller aggregates. md5-string min is engine-portable (same
     lexicographic order in DuckDB)."""
-    norm = F.trim(F.regexp_replace(F.lower(F.col("text")), r"\s+", " "))
+    norm = normalized_text(F.col("text"))
     base = d.select("doc_id", norm.alias("norm")).where(
         F.length("norm") >= WINNOW_K
     )
@@ -1514,7 +1524,7 @@ def _winnow_fps(d: DataFrame) -> DataFrame:
 
 _WINNOW_FPS_SQL_BODY = f"""
   WITH n AS (
-    SELECT doc_id, trim(regexp_replace(lower(text), '\\s+', ' ', 'g')) AS norm
+    SELECT doc_id, {NORMALIZED_TEXT_SQL} AS norm
     FROM documents
   ),
   g AS (

@@ -18,7 +18,15 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from ocr_intern_spark.sources.tables import table
+from ocr_intern_spark.sources.tables import cents, cents_sql, table
+
+
+def _net_revenue() -> Column:
+    """TPC-H net revenue of a lineitem: price after discount."""
+    return F.col("l_extendedprice") * (1 - F.col("l_discount"))
+
+
+_NET_REV_SQL = "l_extendedprice * (1 - l_discount)"
 
 
 # --- A8: windowed perf summary (performance_analytics.py:58-89) -----------
@@ -141,9 +149,7 @@ def q_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(
             F.round(F.sum("l_quantity"), 4).alias("sum_qty"),
             F.round(F.sum("l_extendedprice"), 2).alias("sum_base_price"),
-            F.round(
-                F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 2
-            ).alias("sum_disc_price"),
+            F.round(F.sum(_net_revenue()), 2).alias("sum_disc_price"),
             F.round(F.avg("l_quantity"), 6).alias("avg_qty"),
             F.round(F.avg("l_discount"), 6).alias("avg_disc"),
             F.count("*").alias("count_order"),
@@ -152,11 +158,11 @@ def q_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_PRICING_SUMMARY_SQL = """
+_PRICING_SUMMARY_SQL = f"""
 SELECT l_returnflag, l_linestatus,
        round(sum(l_quantity), 4) AS sum_qty,
        round(sum(l_extendedprice), 2) AS sum_base_price,
-       round(sum(l_extendedprice * (1 - l_discount)), 2) AS sum_disc_price,
+       round(sum({_NET_REV_SQL}), 2) AS sum_disc_price,
        round(avg(l_quantity), 6) AS avg_qty,
        round(avg(l_discount), 6) AS avg_disc,
        count(*) AS count_order
@@ -183,9 +189,7 @@ def q_revenue_by_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(F.broadcast(nation), cust.c_nationkey == nation.n_nationkey)
         .groupBy("n_name")
         .agg(
-            F.round(
-                F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 2
-            ).alias("revenue"),
+            F.round(F.sum(_net_revenue()), 2).alias("revenue"),
             F.count("*").alias("n_items"),
         )
         .orderBy("n_name")
@@ -193,9 +197,9 @@ def q_revenue_by_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
     return rev
 
 
-_REVENUE_BY_NATION_SQL = """
+_REVENUE_BY_NATION_SQL = f"""
 SELECT n_name,
-       round(sum(l_extendedprice * (1 - l_discount)), 2) AS revenue,
+       round(sum({_NET_REV_SQL}), 2) AS revenue,
        count(*) AS n_items
 FROM lineitem
 JOIN orders ON l_orderkey = o_orderkey
@@ -524,16 +528,14 @@ def q_brand_promo_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     return j.where(clause1 | clause2).agg(
         F.count("*").alias("n_items"),
         F.sum(
-            (F.col("l_extendedprice") * (1 - F.col("l_discount"))).cast(
-                "decimal(18,4)"
-            )
+            _net_revenue().cast("decimal(18,4)")
         ).alias("revenue"),
     )
 
 
-_BRAND_PROMO_SQL = """
+_BRAND_PROMO_SQL = f"""
 SELECT count(*) AS n_items,
-       sum(CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(18,4))) AS revenue
+       sum(CAST({_NET_REV_SQL} AS DECIMAL(18,4))) AS revenue
 FROM lineitem JOIN part ON l_partkey = p_partkey
 WHERE (p_brand = 'Brand#1' AND p_size BETWEEN 1 AND 15
        AND l_quantity BETWEEN 1 AND 20)
@@ -1249,7 +1251,7 @@ def q_market_share_by_year(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("n_nationkey").alias("sn_key"),
         F.col("n_name").alias("supp_nation"),
     )
-    vol = F.col("l_extendedprice") * (1 - F.col("l_discount"))
+    vol = _net_revenue()
     base = (
         li.join(F.broadcast(promo), li.l_partkey == F.col("p_partkey"))
         .join(orders, li.l_orderkey == orders.o_orderkey)
@@ -1285,9 +1287,9 @@ def q_market_share_by_year(spark: SparkSession, sf_dir: str) -> DataFrame:
 _MARKET_SHARE_SQL = f"""
 SELECT year(o_orderdate) AS o_year,
        round(sum(CASE WHEN sn.n_name = '{_MKT_NATION}'
-                      THEN l_extendedprice * (1 - l_discount)
+                      THEN {_NET_REV_SQL}
                       ELSE 0.0 END)
-             / sum(l_extendedprice * (1 - l_discount)), 6) AS mkt_share,
+             / sum({_NET_REV_SQL}), 6) AS mkt_share,
        count(*) AS n_items
 FROM lineitem
 JOIN part     ON l_partkey = p_partkey AND p_type = 'PROMO'
@@ -1322,7 +1324,7 @@ def q_top_supplier_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     raw double sums."""
     li = table(spark, sf_dir, "lineitem")
     supp = table(spark, sf_dir, "supplier")
-    vol = F.col("l_extendedprice") * (1 - F.col("l_discount"))
+    vol = _net_revenue()
     rev = (
         li.where(
             (F.col("l_shipdate") >= F.lit(_Q15_START).cast("timestamp"))
@@ -1346,7 +1348,7 @@ def q_top_supplier_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
 _TOP_SUPPLIER_SQL = f"""
 WITH rev AS (
   SELECT l_suppkey AS s_suppkey,
-         round(sum(l_extendedprice * (1 - l_discount)), 2) AS total_revenue
+         round(sum({_NET_REV_SQL}), 2) AS total_revenue
   FROM lineitem
   WHERE l_shipdate >= TIMESTAMP '{_Q15_START}'
     AND l_shipdate <  TIMESTAMP '{_Q15_END}'
@@ -1575,15 +1577,14 @@ def q_major_revenue_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     would error out. The sum is emitted as a digit string (BIGINT vs
     HUGEINT rendering)."""
     li = table(spark, sf_dir, "lineitem")
-    cents = F.floor(
-        F.col("l_extendedprice") * (1 - F.col("l_discount")) * 100
-    ).cast("long")
     # persist the per-part frame: Spark shares no subplans, so without
     # it the global-totals branch re-scans and re-shuffles the full
     # fact table (verified in the executedPlan) — the cached frame is
     # |parts| rows, millions at 100 TB, trivially memory-resident
     per_part = (
-        li.groupBy("l_partkey").agg(F.sum(cents).alias("rev_cents")).persist()
+        li.groupBy("l_partkey")
+        .agg(F.sum(cents(_net_revenue())).alias("rev_cents"))
+        .persist()
     )
     totals = per_part.agg(
         F.sum("rev_cents").alias("_total"), F.count(F.lit(1)).alias("_np")
@@ -1601,10 +1602,10 @@ def q_major_revenue_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_MAJOR_PARTS_SQL = """
+_MAJOR_PARTS_SQL = f"""
 WITH p AS (
   SELECT l_partkey,
-         sum(CAST(floor(l_extendedprice * (1 - l_discount) * 100) AS BIGINT))
+         sum({cents_sql(_NET_REV_SQL)})
            AS rev_cents
   FROM lineitem GROUP BY l_partkey
 ), t AS (SELECT sum(rev_cents) AS total, count(*) AS np FROM p)
@@ -1700,7 +1701,7 @@ def q_unshipped_order_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     orders = table(spark, sf_dir, "orders").where(F.col("o_orderdate") < cut)
     li = table(spark, sf_dir, "lineitem").where(F.col("l_shipdate") > cut)
-    rev = F.col("l_extendedprice") * (1 - F.col("l_discount"))
+    rev = _net_revenue()
     return (
         li.join(orders, li.l_orderkey == orders.o_orderkey)
         .join(F.broadcast(cust), orders.o_custkey == cust.c_custkey)
@@ -1713,7 +1714,7 @@ def q_unshipped_order_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _UNSHIPPED_SQL = f"""
 SELECT l_orderkey, o_orderdate, o_orderpriority,
-       round(sum(l_extendedprice * (1 - l_discount)), 2) AS revenue
+       round(sum({_NET_REV_SQL}), 2) AS revenue
 FROM customer
 JOIN orders   ON c_custkey = o_custkey
 JOIN lineitem ON l_orderkey = o_orderkey
@@ -1764,7 +1765,7 @@ def q_nation_trade_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     li = table(spark, sf_dir, "lineitem")
     orders = table(spark, sf_dir, "orders")
-    vol = F.col("l_extendedprice") * (1 - F.col("l_discount"))
+    vol = _net_revenue()
     return (
         li.join(F.broadcast(supp), li.l_suppkey == supp.s_suppkey)
         .join(orders, li.l_orderkey == orders.o_orderkey)
@@ -1784,7 +1785,7 @@ def q_nation_trade_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
 _NATION_TRADE_SQL = f"""
 SELECT sn.n_name AS supp_nation, cn.n_name AS cust_nation,
        year(l_shipdate) AS l_year,
-       round(sum(l_extendedprice * (1 - l_discount)), 2) AS volume,
+       round(sum({_NET_REV_SQL}), 2) AS volume,
        count(*) AS n_items
 FROM lineitem
 JOIN supplier ON l_suppkey = s_suppkey
@@ -1823,7 +1824,7 @@ def q_returned_item_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     cust = table(spark, sf_dir, "customer")
     nation = table(spark, sf_dir, "nation")
-    rev = F.col("l_extendedprice") * (1 - F.col("l_discount"))
+    rev = _net_revenue()
     per_cust = (
         li.join(orders, li.l_orderkey == orders.o_orderkey)
         .groupBy("o_custkey")
@@ -1852,7 +1853,7 @@ def q_returned_item_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
 _RETURNED_CUST_SQL = f"""
 SELECT c_custkey, c_name, n_name AS nation,
        round(c_acctbal, 2) AS acctbal,
-       round(sum(l_extendedprice * (1 - l_discount)), 2) AS revenue
+       round(sum({_NET_REV_SQL}), 2) AS revenue
 FROM lineitem
 JOIN orders ON l_orderkey = o_orderkey
 JOIN customer ON o_custkey = c_custkey
@@ -2102,9 +2103,6 @@ def q_min_cost_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     scoped = part.where(
         (F.col("p_type") == _Q2_TYPE) & (F.col("p_size") <= _Q2_MAX_SIZE)
     ).select("p_partkey")
-    cents = F.floor(
-        F.col("l_extendedprice") * (1 - F.col("l_discount")) * 100
-    ).cast("long")
     per_ps = (
         li.join(F.broadcast(scoped), li.l_partkey == F.col("p_partkey"))
         .join(
@@ -2112,7 +2110,7 @@ def q_min_cost_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
             li.l_suppkey == F.col("s_suppkey"),
         )
         .groupBy("l_partkey", "l_suppkey")
-        .agg(F.min(cents).alias("min_cents"))
+        .agg(F.min(cents(_net_revenue())).alias("min_cents"))
     )
     best = per_ps.groupBy("l_partkey").agg(
         F.min("min_cents").alias("best_cents")
@@ -2146,7 +2144,7 @@ WITH euro AS (
 ),
 sc AS (
   SELECT l_partkey, l_suppkey,
-         min(CAST(floor(l_extendedprice * (1 - l_discount) * 100) AS BIGINT))
+         min({cents_sql(_NET_REV_SQL)})
            AS min_cents
   FROM lineitem
   JOIN part ON l_partkey = p_partkey
@@ -2353,13 +2351,10 @@ def q_bracket_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
         branch = (
             F.when(cond, i) if branch is None else branch.when(cond, i)
         )
-    cents = F.floor(
-        F.col("l_extendedprice") * (1 - F.col("l_discount")) * 100
-    ).cast("long")
     return (
         li.where(F.col("l_quantity").between(qty_lo, qty_hi))
         .join(F.broadcast(scoped), li.l_partkey == F.col("p_partkey"))
-        .select(branch.alias("bracket"), cents.alias("cents"))
+        .select(branch.alias("bracket"), cents(_net_revenue()).alias("cents"))
         .where(F.col("bracket").isNotNull())
         .groupBy("bracket")
         .agg(
@@ -2382,8 +2377,7 @@ def _bracket_sql() -> str:
     return f"""
 SELECT CASE {case} END AS bracket,
        count(*) AS n_items,
-       CAST(sum(CAST(floor(l_extendedprice * (1 - l_discount) * 100)
-                     AS BIGINT)) AS VARCHAR) AS revenue_cents
+       CAST(sum({cents_sql(_NET_REV_SQL)}) AS VARCHAR) AS revenue_cents
 FROM lineitem JOIN part ON l_partkey = p_partkey
 WHERE {" OR ".join(conds)}
 GROUP BY 1 ORDER BY bracket
@@ -2596,9 +2590,7 @@ def q_forecast_revenue_change(spark: SparkSession, sf_dir: str) -> DataFrame:
     cents summed as decimal(38,0) → digit string (overflow-proof at
     10^12 rows, render-identical both engines)."""
     li = table(spark, sf_dir, "lineitem")
-    cents = F.floor(
-        F.col("l_extendedprice") * F.col("l_discount") * 100
-    ).cast("long")
+    rev = cents(F.col("l_extendedprice") * F.col("l_discount"))
     return (
         li.where(
             (F.col("l_shipdate") >= F.lit(f"{_Q6_YEAR}-01-01").cast("timestamp_ntz"))
@@ -2608,14 +2600,14 @@ def q_forecast_revenue_change(spark: SparkSession, sf_dir: str) -> DataFrame:
             & (F.col("l_quantity") < _Q6_MAX_QTY)
         )
         .agg(
-            F.sum(cents.cast("decimal(38,0)")).cast("string").alias("revenue_cents"),
+            F.sum(rev.cast("decimal(38,0)")).cast("string").alias("revenue_cents"),
             F.count(F.lit(1)).alias("n_lines"),
         )
     )
 
 
 _FORECAST_REVENUE_SQL = f"""
-SELECT CAST(sum(CAST(floor(l_extendedprice * l_discount * 100) AS BIGINT))
+SELECT CAST(sum({cents_sql("l_extendedprice * l_discount")})
             AS VARCHAR) AS revenue_cents,
        count(*) AS n_lines
 FROM lineitem
@@ -2673,10 +2665,8 @@ def q_product_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
             supp.s_nationkey == nation.n_nationkey,
         ).select("s_suppkey", "n_name")
     )
-    rev_cents = F.floor(
-        F.col("l_extendedprice") * (1 - F.col("l_discount")) * 100
-    ).cast("long")
-    ext_cents = F.floor(F.col("l_extendedprice") * 100).cast("long")
+    rev_cents = cents(_net_revenue())
+    ext_cents = cents(F.col("l_extendedprice"))
     qty = F.col("l_quantity").cast("long")
     # bounded-window: frame = lines for ONE (part, supplier) pair
     w_ps = Window.partitionBy("l_partkey", "l_suppkey")
@@ -2719,9 +2709,9 @@ def q_product_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
 _PRODUCT_PROFIT_SQL = f"""
 WITH fact AS (
   SELECT l_orderkey, l_partkey, l_suppkey,
-         CAST(floor(l_extendedprice * (1 - l_discount) * 100) AS BIGINT)
+         {cents_sql(_NET_REV_SQL)}
            AS rev_cents,
-         CAST(floor(l_extendedprice * 100) AS BIGINT) AS ext_cents,
+         {cents_sql("l_extendedprice")} AS ext_cents,
          CAST(l_quantity AS BIGINT) AS qty
   FROM lineitem JOIN part ON l_partkey = p_partkey
   WHERE p_name LIKE '%{_Q9_PART_LIKE}%'
@@ -2794,7 +2784,7 @@ def q_events_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
         "ts",
         "event_id",
         "event_type",
-        F.floor(F.col("value") * 100).cast("bigint").alias("cents"),
+        cents(F.col("value")).alias("cents"),
         (F.col("ts") < cut).alias("b"),
     )
     a = ~F.col("b")
@@ -2838,7 +2828,7 @@ _MERGE_UPSERT_SQL = f"""
 WITH tgt AS (
   SELECT user_id, CAST(json_extract(props, '$.k') AS INT) AS k,
          count(*) AS n_t,
-         sum(CAST(floor(value * 100) AS BIGINT)) AS c_t,
+         sum({cents_sql("value")}) AS c_t,
          max(event_id) AS id_t
   FROM events
   WHERE ts < TIMESTAMP '{_MERGE_CUT}'
@@ -2847,7 +2837,7 @@ WITH tgt AS (
 src0 AS (
   SELECT user_id, CAST(json_extract(props, '$.k') AS INT) AS k,
          event_id, event_type, ts,
-         CAST(floor(value * 100) AS BIGINT) AS cents
+         {cents_sql("value")} AS cents
   FROM events
   WHERE ts >= TIMESTAMP '{_MERGE_CUT}'
 ),
@@ -3007,8 +2997,8 @@ def q_quality_expectations(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
         F.sum(F.when(F.col("ts").isNull(), 1).otherwise(0)).alias("null_ts"),
         F.countDistinct("event_id").alias("n_ids"),
-        F.min(F.floor(F.col("value") * 100).cast("long")).alias("min_cents"),
-        F.max(F.floor(F.col("value") * 100).cast("long")).alias("max_cents"),
+        F.min(cents(F.col("value"))).alias("min_cents"),
+        F.max(cents(F.col("value"))).alias("max_cents"),
         F.sum(
             F.when(
                 ~F.col("event_type").isin(
@@ -3073,8 +3063,8 @@ WITH agg AS (
          sum(CASE WHEN event_type IS NULL THEN 1 ELSE 0 END) AS null_type,
          sum(CASE WHEN ts IS NULL THEN 1 ELSE 0 END) AS null_ts,
          count(DISTINCT event_id) AS n_ids,
-         min(CAST(floor(value * 100) AS BIGINT)) AS min_cents,
-         max(CAST(floor(value * 100) AS BIGINT)) AS max_cents,
+         min({cents_sql("value")}) AS min_cents,
+         max({cents_sql("value")}) AS max_cents,
          sum(CASE WHEN event_type NOT IN
                ('click', 'view', 'purchase', 'signup', 'error')
              THEN 1 ELSE 0 END) AS unknown_types,
@@ -3206,7 +3196,7 @@ def q_salted_type_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     part = salted.groupBy("event_type", "_salt").agg(
         F.count("*").alias("pn"),
-        F.sum(F.floor(F.col("value") * 100).cast("long")).alias("pc"),
+        F.sum(cents(F.col("value"))).alias("pc"),
         F.min("event_id").alias("pmin"),
         F.max("event_id").alias("pmax"),
     )
@@ -3222,10 +3212,10 @@ def q_salted_type_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_SALTED_TOTALS_SQL = """
+_SALTED_TOTALS_SQL = f"""
 SELECT event_type,
        count(*) AS n_events,
-       CAST(sum(CAST(floor(value * 100) AS BIGINT)) AS VARCHAR) AS value_cents,
+       CAST(sum({cents_sql("value")}) AS VARCHAR) AS value_cents,
        min(event_id) AS first_event,
        max(event_id) AS last_event
 FROM events
@@ -3281,10 +3271,7 @@ def q_salted_dim_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         joined.groupBy("event_type", F.to_date("ts").alias("day"))
         .agg(
             F.count("*").alias("n_events"),
-            F.sum(
-                F.floor(F.col("value") * 100).cast("long")
-                * F.col("cost_milli")
-            )
+            F.sum(cents(F.col("value")) * F.col("cost_milli"))
             .cast("string")
             .alias("weighted_cents_milli"),
         )
@@ -3310,7 +3297,7 @@ WITH dim AS (
 )
 SELECT e.event_type, CAST(CAST(e.ts AS DATE) AS VARCHAR) AS day,
        count(*) AS n_events,
-       CAST(sum(CAST(floor(e.value * 100) AS BIGINT) * d.cost_milli)
+       CAST(sum({cents_sql("e.value")} * d.cost_milli)
             AS VARCHAR) AS weighted_cents_milli
 FROM events e JOIN dim d USING (event_type)
 GROUP BY e.event_type, CAST(e.ts AS DATE)
@@ -3339,15 +3326,14 @@ def q_pareto_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
         table(spark, sf_dir, "orders")
         .groupBy(F.col("o_custkey").alias("c_custkey"))
         .agg(
-            F.sum(F.floor(F.col("o_totalprice") * 100).cast("long"))
-            .alias("spend_cents")
+            F.sum(cents(F.col("o_totalprice"))).alias("spend_cents")
         )
     )
     pts = (
         table(spark, sf_dir, "customer")
         .select(
             "c_custkey",
-            F.floor(F.col("c_acctbal") * 100).cast("long").alias("bal_cents"),
+            cents(F.col("c_acctbal")).alias("bal_cents"),
         )
         .join(spend, "c_custkey")
         .select("c_custkey", "spend_cents", "bal_cents")
@@ -3355,16 +3341,16 @@ def q_pareto_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     return pareto_front(pts, "spend_cents", "bal_cents").orderBy("c_custkey")
 
 
-_PARETO_SQL = """
+_PARETO_SQL = f"""
 WITH spend AS (
   SELECT o_custkey AS c_custkey,
-         CAST(sum(CAST(floor(o_totalprice * 100) AS BIGINT)) AS BIGINT)
+         CAST(sum({cents_sql("o_totalprice")}) AS BIGINT)
            AS spend_cents
   FROM orders GROUP BY o_custkey
 ),
 pts AS (
   SELECT c.c_custkey, s.spend_cents,
-         CAST(floor(c.c_acctbal * 100) AS BIGINT) AS bal_cents
+         {cents_sql("c.c_acctbal")} AS bal_cents
   FROM customer c JOIN spend s USING (c_custkey)
 )
 SELECT c_custkey, spend_cents, bal_cents
@@ -3555,7 +3541,7 @@ def q_events_ivm_retract(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_type",
         "value",
         (F.col("_r") - 1).alias("rn"),
-        F.floor(F.col("value") * 100).cast("long").alias("cents"),
+        cents(F.col("value")).alias("cents"),
     )
     # the carve scalar FOLDED INTO THE PLAN as a 1-row broadcast off
     # the persisted rank frame (max(rn)+1 == n), instead of a driver-
@@ -3617,7 +3603,7 @@ WITH ordered AS (
   FROM events
 ),
 final AS (  -- the surviving multiset: base minus retractions, plus delta
-  SELECT ts, event_type, CAST(floor(value * 100) AS BIGINT) AS cents
+  SELECT ts, event_type, {cents_sql("value")} AS cents
   FROM ordered
   WHERE rn >= n * {_IVM_SPLIT_PCT} // 100
      OR event_id % {_IVM_RETRACT_MOD} != 0
@@ -3958,7 +3944,7 @@ def q_events_target_encode_loo(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = table(spark, sf_dir, "events").select(
         "user_id",
         "event_type",
-        F.floor(F.col("value") * 100).cast("long").alias("cents"),
+        cents(F.col("value")).alias("cents"),
     )
     per_type = ev.groupBy("event_type").agg(
         F.sum("cents").alias("t_sum"), F.count(F.lit(1)).alias("t_n")
@@ -3985,10 +3971,10 @@ def q_events_target_encode_loo(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_TARGET_ENCODE_SQL = """
+_TARGET_ENCODE_SQL = f"""
 WITH ev AS (
   SELECT user_id, event_type,
-         CAST(floor(value * 100) AS BIGINT) AS cents
+         {cents_sql("value")} AS cents
   FROM events
 ),
 per_type AS (
@@ -4026,7 +4012,7 @@ def q_cohort_ltv_triangle(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = table(spark, sf_dir, "orders").select(
         "o_custkey",
         F.date_trunc("month", "o_orderdate").alias("om"),
-        F.floor(F.col("o_totalprice") * 100).cast("long").alias("cents"),
+        cents(F.col("o_totalprice")).alias("cents"),
     )
     first = o.groupBy("o_custkey").agg(F.min("om").alias("cohort"))
     aged = o.join(first, "o_custkey").select(
@@ -4056,10 +4042,10 @@ def q_cohort_ltv_triangle(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("cohort", "age")
 
 
-_COHORT_LTV_SQL = """
+_COHORT_LTV_SQL = f"""
 WITH o AS (
   SELECT o_custkey, date_trunc('month', o_orderdate) AS om,
-         CAST(floor(o_totalprice * 100) AS BIGINT) AS cents
+         {cents_sql("o_totalprice")} AS cents
   FROM orders
 ),
 firsts AS (SELECT o_custkey, min(om) AS cohort FROM o GROUP BY o_custkey),
@@ -4245,9 +4231,7 @@ def q_customer_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(
             F.max(F.to_date("o_orderdate")).alias("last_day"),
             F.count(F.lit(1)).alias("n_orders"),
-            F.sum(F.floor(F.col("o_totalprice") * 100).cast("long")).alias(
-                "spend_cents"
-            ),
+            F.sum(cents(F.col("o_totalprice"))).alias("spend_cents"),
         )
     )
     anchor = table(spark, sf_dir, "orders").agg(
@@ -4304,7 +4288,7 @@ WITH per AS (
   SELECT o_custkey AS c,
          max(CAST(o_orderdate AS DATE)) AS last_day,
          count(*) AS n_orders,
-         sum(CAST(floor(o_totalprice * 100) AS BIGINT)) AS spend_cents
+         sum({cents_sql("o_totalprice")}) AS spend_cents
   FROM orders GROUP BY o_custkey
 ),
 anchor AS (SELECT max(CAST(o_orderdate AS DATE)) AS a FROM orders),
@@ -4439,11 +4423,7 @@ def q_revenue_concentration(spark: SparkSession, sf_dir: str) -> DataFrame:
     per = (
         table(spark, sf_dir, "orders")
         .groupBy(F.col("o_custkey").alias("c"))
-        .agg(
-            F.sum(F.floor(F.col("o_totalprice") * 100).cast("long")).alias(
-                "spend"
-            )
-        )
+        .agg(F.sum(cents(F.col("o_totalprice"))).alias("spend"))
     )
     ranked = global_rank(per, F.desc("spend"), F.asc("c"), rank_name="rk")
     cum = global_prefix_sum(
@@ -4482,7 +4462,7 @@ def _concentration_sql() -> str:
     return f"""
 WITH per AS (
   SELECT o_custkey AS c,
-         sum(CAST(floor(o_totalprice * 100) AS BIGINT)) AS spend
+         sum({cents_sql("o_totalprice")}) AS spend
   FROM orders GROUP BY o_custkey
 ),
 ranked AS (
@@ -5070,7 +5050,7 @@ def q_orders_price_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = table(spark, sf_dir, "lineitem").select(
         "l_partkey",
         F.year("l_shipdate").alias("y"),
-        F.floor(F.col("l_extendedprice") * 100).cast("long").alias("cents"),
+        cents(F.col("l_extendedprice")).alias("cents"),
         F.col("l_quantity").cast("long").alias("qty"),
     )
     per = (
@@ -5130,7 +5110,7 @@ def q_orders_price_index(spark: SparkSession, sf_dir: str) -> DataFrame:
 _PRICE_INDEX_SQL = f"""
 WITH li AS (
   SELECT l_partkey, year(l_shipdate) AS y,
-         CAST(floor(l_extendedprice * 100) AS BIGINT) AS cents,
+         {cents_sql("l_extendedprice")} AS cents,
          CAST(l_quantity AS BIGINT) AS qty
   FROM lineitem
   WHERE year(l_shipdate) IN ({PI_BASE_YEAR}, {PI_CURR_YEAR})
@@ -5849,9 +5829,7 @@ def q_orders_backlog_aging(spark: SparkSession, sf_dir: str) -> DataFrame:
         .crossJoin(F.broadcast(anchor))
         .select(
             F.datediff("anchor", F.to_date("o_orderdate")).alias("age"),
-            F.floor(F.col("o_totalprice") * 100)
-            .cast("long")
-            .alias("cents"),
+            cents(F.col("o_totalprice")).alias("cents"),
         )
     )
     bucket = F.when(F.col("age") <= AGING_BUCKETS[0][0], AGING_BUCKETS[0][1])
@@ -5870,12 +5848,12 @@ def q_orders_backlog_aging(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_BACKLOG_SQL = """
+_BACKLOG_SQL = f"""
 WITH anchor AS (SELECT max(CAST(o_orderdate AS DATE)) AS a FROM orders),
 aged AS (
   SELECT date_diff('day', CAST(o_orderdate AS DATE),
                    (SELECT a FROM anchor)) AS age,
-         CAST(floor(o_totalprice * 100) AS BIGINT) AS cents
+         {cents_sql("o_totalprice")} AS cents
   FROM orders WHERE o_orderstatus = 'O'
 )
 SELECT CASE WHEN age <= 30 THEN '000-030'
@@ -6055,7 +6033,7 @@ def q_orders_seasonal_decompose(spark: SparkSession, sf_dir: str) -> DataFrame:
     decomposition boundary rule."""
     o = table(spark, sf_dir, "orders").select(
         F.to_date("o_orderdate").alias("day"),
-        F.floor(F.col("o_totalprice") * 100).cast("long").alias("cents"),
+        cents(F.col("o_totalprice")).alias("cents"),
     )
     daily = o.groupBy("day").agg(F.sum("cents").alias("r"))
     bounds = daily.agg(F.min("day").alias("d0"), F.max("day").alias("d1"))
@@ -6101,7 +6079,7 @@ def q_orders_seasonal_decompose(spark: SparkSession, sf_dir: str) -> DataFrame:
 _SEASONAL_SQL = f"""
 WITH o AS (
   SELECT CAST(o_orderdate AS DATE) AS day,
-         CAST(floor(o_totalprice * 100) AS BIGINT) AS cents
+         {cents_sql("o_totalprice")} AS cents
   FROM orders
 ),
 daily AS (SELECT day, sum(cents) AS r FROM o GROUP BY day),
@@ -6167,8 +6145,9 @@ def q_orders_benford_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: ONE map-side-combinable aggregate over the scan +
     a 9-row literal spine and a 1-row total broadcast — the audit
     costs a scan at any table size."""
-    cents = F.floor(F.col("o_totalprice") * 100).cast("long")
-    digit = F.substring(cents.cast("string"), 1, 1).cast("int")
+    digit = F.substring(
+        cents(F.col("o_totalprice")).cast("string"), 1, 1
+    ).cast("int")
     counts = (
         table(spark, sf_dir, "orders")
         .select(digit.alias("digit"))
@@ -6206,7 +6185,7 @@ def _benford_sql() -> str:
     )
     return f"""
 WITH counts AS (
-  SELECT CAST(substr(CAST(CAST(floor(o_totalprice * 100) AS BIGINT)
+  SELECT CAST(substr(CAST({cents_sql("o_totalprice")}
                           AS VARCHAR), 1, 1) AS INT) AS digit,
          count(*) AS n_obs
   FROM orders GROUP BY 1

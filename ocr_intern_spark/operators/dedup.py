@@ -24,12 +24,13 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ocr_intern_spark.functions.text import (
+    FINGERPRINT_SQL,
     STOPWORDS,
     fingerprint,
     word_ngrams,
     words,
 )
-from ocr_intern_spark.sources.tables import documents, table
+from ocr_intern_spark.sources.tables import cents, cents_sql, documents, table
 
 N_SHINGLE = 3          # words per shingle
 MINHASH_SEEDS = 8      # signature length
@@ -272,9 +273,9 @@ def q_dedup_fingerprint_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_DEDUP_FP_SQL = """
+_DEDUP_FP_SQL = f"""
 SELECT count(*) AS n_docs,
-       count(DISTINCT md5(trim(regexp_replace(lower(text), '\\s+', ' ', 'g')))) AS n_unique
+       count(DISTINCT {FINGERPRINT_SQL}) AS n_unique
 FROM documents
 """
 
@@ -1876,7 +1877,7 @@ def q_record_linkage(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = table(spark, sf_dir, "customer").select(
         "c_custkey",
         name_key.alias("name_key"),
-        F.floor(F.col("c_acctbal") * 100).cast("long").alias("cents"),
+        cents(F.col("c_acctbal")).alias("cents"),
         F.col("c_nationkey").cast("long").alias("nat"),
         "c_mktsegment",
     )
@@ -1955,7 +1956,7 @@ _LINKAGE_SQL = f"""
 WITH base AS (
   SELECT c_custkey,
          regexp_replace(lower(c_name), '[^a-z0-9]', '', 'g') AS name_key,
-         CAST(floor(c_acctbal * 100) AS BIGINT) AS cents,
+         {cents_sql("c_acctbal")} AS cents,
          CAST(c_nationkey AS BIGINT) AS nat,
          c_mktsegment
   FROM customer
@@ -2032,11 +2033,10 @@ def q_bloom_fpr_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     on positions (≤ M rows ever survive); probe = explode(k) +
     broadcast-join the ≤M-row bit set + an all-k count; every
     aggregate is map-side combinable."""
-    fp = F.md5(
-        F.trim(F.regexp_replace(F.lower(F.col("text")), r"\s+", " "))
-    )
     docs = documents(spark, sf_dir).select(
-        "doc_id", fp.alias("fp"), (F.col("doc_id") % 2).alias("half")
+        "doc_id",
+        fingerprint(F.col("text")).alias("fp"),
+        (F.col("doc_id") % 2).alias("half"),
     )
     train = docs.where("half = 0").select("fp").distinct()
     probe = docs.where("half = 1").select("fp").distinct()
@@ -2122,7 +2122,7 @@ def q_bloom_fpr_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 _BLOOM_SQL = f"""
 WITH docs AS (
   SELECT doc_id,
-         md5(trim(regexp_replace(lower(text), '\\s+', ' ', 'g'))) AS fp,
+         {FINGERPRINT_SQL} AS fp,
          doc_id % 2 AS half
   FROM documents
 ),

@@ -23,7 +23,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from ocr_intern_spark.sources.tables import table
+from ocr_intern_spark.sources.tables import cents, cents_sql, table
 
 # Iceberg rewrite_data_files-style knobs: target rewrite group size,
 # and the small-file admission cut (files >= SMALL_CUT are already
@@ -327,7 +327,7 @@ def q_snapshot_expiry_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy(F.to_date("ts").alias("snap_day"))
         .agg(
             F.count("*").alias("n_files"),
-            F.sum(F.floor(F.col("value") * 100).cast("long")).alias("_bytes"),
+            F.sum(cents(F.col("value"))).alias("_bytes"),
         )
     )
     # bounded-window: frame = the snapshot log (one row per ingest day)
@@ -371,7 +371,7 @@ def q_snapshot_expiry_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
 _SNAPSHOT_EXPIRY_SQL = f"""
 WITH snaps AS (
   SELECT CAST(ts AS DATE) AS snap_day, count(*) AS n_files,
-         sum(CAST(floor(value * 100) AS BIGINT)) AS _bytes
+         sum({cents_sql("value")}) AS _bytes
   FROM events GROUP BY 1
 ),
 ranked AS (
@@ -459,10 +459,8 @@ def q_column_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         # value (floor-cents canonical form)
         F.count("value").alias("v_nn"),
         F.countDistinct("value").alias("v_nd"),
-        F.floor(F.min("value") * 100).cast("long").cast("string")
-        .alias("v_min"),
-        F.floor(F.max("value") * 100).cast("long").cast("string")
-        .alias("v_max"),
+        cents(F.min("value")).cast("string").alias("v_min"),
+        cents(F.max("value")).cast("string").alias("v_max"),
         # props
         F.count("props").alias("p_nn"),
         F.countDistinct("props").alias("p_nd"),
@@ -496,7 +494,7 @@ def q_column_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("column_name")
 
 
-_COLUMN_STATS_SQL = """
+_COLUMN_STATS_SQL = f"""
 WITH n AS (SELECT count(*) AS n_rows FROM events)
 SELECT 'event_id' AS column_name, n_rows,
        n_rows - count(event_id) AS n_null,
@@ -523,8 +521,8 @@ SELECT 'event_type', n_rows, n_rows - count(event_type),
 FROM events, n GROUP BY n_rows
 UNION ALL
 SELECT 'value', n_rows, n_rows - count(value), count(DISTINCT value),
-       CAST(CAST(floor(min(value) * 100) AS BIGINT) AS VARCHAR),
-       CAST(CAST(floor(max(value) * 100) AS BIGINT) AS VARCHAR),
+       CAST({cents_sql("min(value)")} AS VARCHAR),
+       CAST({cents_sql("max(value)")} AS VARCHAR),
        CAST(NULL AS BIGINT)
 FROM events, n GROUP BY n_rows
 UNION ALL
@@ -973,7 +971,7 @@ def q_delete_vector_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
         "l_returnflag",
         "l_partkey",
         "l_suppkey",
-        F.floor(F.col("l_quantity") * 100).cast("long").alias("qty_cents"),
+        cents(F.col("l_quantity")).alias("qty_cents"),
     )
     # (l_orderkey, l_linenumber) is NOT unique in the synthetic corpus;
     # (…, l_partkey, l_suppkey) is — the ordering must be total or the
@@ -1037,7 +1035,7 @@ WITH rows AS (
          ) - 1 AS pos,
          (l_returnflag = 'R'
           AND (l_partkey + l_suppkey) % 5 = 2) AS deleted,
-         CAST(floor(l_quantity * 100) AS BIGINT) AS qty_cents
+         {cents_sql("l_quantity")} AS qty_cents
   FROM lineitem
 ),
 dv AS (SELECT file_id, pos FROM rows WHERE deleted),

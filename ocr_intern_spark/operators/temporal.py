@@ -25,7 +25,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from ocr_intern_spark.sources.tables import table
+from ocr_intern_spark.sources.tables import cents, cents_sql, table
 
 
 def asof_join(
@@ -215,9 +215,7 @@ def q_events_daily_gap_fill(spark: SparkSession, sf_dir: str) -> DataFrame:
         "user_id", F.to_date("ts").alias("day")
     ).agg(
         F.count(F.lit(1)).alias("n_events"),
-        F.sum(F.floor(F.col("value") * 100).cast("bigint")).alias(
-            "day_cents"
-        ),
+        F.sum(cents(F.col("value"))).alias("day_cents"),
     )
     spine = (
         daily.select("user_id")
@@ -259,7 +257,7 @@ _GAP_FILL_SQL = f"""
 WITH daily AS (
   SELECT user_id, CAST(ts AS DATE) AS day,
          count(*) AS n_events,
-         sum(CAST(floor(value * 100) AS BIGINT)) AS day_cents
+         sum({cents_sql("value")}) AS day_cents
   FROM events GROUP BY 1, 2
 ),
 spine AS (
@@ -528,7 +526,7 @@ def q_events_bitemporal_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     ev = table(spark, sf_dir, "events").select(
         "ts", "event_id", "user_id",
-        F.floor(F.col("value") * 100).cast("long").alias("cents"),
+        cents(F.col("value")).alias("cents"),
     )
     ranked = global_rank(ev, F.col("ts"), F.col("event_id"), rank_name="_r")
     # ingest-offset stand-in, as in events_ivm_retract — the row count
@@ -610,7 +608,7 @@ def _bitemporal_sql() -> str:
     return f"""
 WITH ranked AS (
   SELECT user_id, ts, event_id,
-         CAST(floor(value * 100) AS BIGINT) AS cents,
+         {cents_sql("value")} AS cents,
          row_number() OVER (ORDER BY ts, event_id) AS rn,
          count(*) OVER () AS n
   FROM events

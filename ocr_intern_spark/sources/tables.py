@@ -6,12 +6,16 @@ split: every stage Catalyst keeps below the first exchange then runs
 as one task. ``spread`` round-robins such a frame to
 ``defaultParallelism`` partitions — but only when it has fewer, since
 at real scale the scan is already wide and an unconditional
-repartition would shuffle the whole corpus for nothing.
+repartition would shuffle the whole corpus for nothing. ``cents``
+(Spark) and ``cents_sql`` (DuckDB) turn the DOUBLE money columns into
+BIGINT cents, the floor of the value times 100, because sums are exact
+— equal on both engines under any partitioning — only on integers.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 
 def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -25,3 +29,11 @@ def spread(df: DataFrame, partitions: int | None = None) -> DataFrame:
 
 def documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spread(table(spark, sf_dir, "documents"))
+
+
+def cents(c: Column) -> Column:
+    return F.floor(c * 100).cast("long")
+
+
+def cents_sql(expr: str) -> str:
+    return f"CAST(floor({expr} * 100) AS BIGINT)"

@@ -77,9 +77,13 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import DataStreamWriter
 from pyspark.sql.types import StructField, StructType, TimestampType
 
-from ocr_intern_spark.functions.text import token_count
+from ocr_intern_spark.functions.text import (
+    FINGERPRINT_SQL,
+    fingerprint,
+    token_count,
+)
 from ocr_intern_spark.operators.skew import global_rank
-from ocr_intern_spark.sources.tables import table
+from ocr_intern_spark.sources.tables import cents, cents_sql, table
 
 _N_FILES = 8
 
@@ -226,7 +230,7 @@ def q_stream_events_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
         stream = _file_stream(spark, in_dir, _stage(spark, sf_dir, "events", in_dir))
         agg = stream.groupBy("event_type").agg(
             F.count(F.lit(1)).alias("n_events"),
-            F.sum(F.floor(F.col("value") * 100).cast("long"))
+            F.sum(cents(F.col("value")))
             .cast("string")
             .alias("value_cents"),
             F.min("event_id").alias("first_event"),
@@ -238,10 +242,10 @@ def q_stream_events_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
 
-_STREAM_EVENTS_SUMMARY_SQL = """
+_STREAM_EVENTS_SUMMARY_SQL = f"""
 SELECT event_type,
        count(*) AS n_events,
-       CAST(sum(CAST(floor(value * 100) AS BIGINT)) AS VARCHAR) AS value_cents,
+       CAST(sum({cents_sql("value")}) AS VARCHAR) AS value_cents,
        min(event_id) AS first_event,
        max(event_id) AS last_event
 FROM events
@@ -263,10 +267,7 @@ def q_stream_dedup_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
         stream = _file_stream(
             spark, in_dir, _stage(spark, sf_dir, "documents", in_dir)
         )
-        fp = F.md5(
-            F.trim(F.regexp_replace(F.lower(F.col("text")), r"\s+", " "))
-        )
-        agg = stream.groupBy(fp.alias("fp")).agg(
+        agg = stream.groupBy(fingerprint(F.col("text")).alias("fp")).agg(
             F.count(F.lit(1)).alias("n_docs"),
             F.min("doc_id").alias("keep_doc"),
         )
@@ -274,8 +275,8 @@ def q_stream_dedup_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
         return out.select("fp", "n_docs", "keep_doc")
 
 
-_STREAM_DEDUP_FP_SQL = """
-SELECT md5(trim(regexp_replace(lower(text), '\\s+', ' ', 'g'))) AS fp,
+_STREAM_DEDUP_FP_SQL = f"""
+SELECT {FINGERPRINT_SQL} AS fp,
        count(*) AS n_docs,
        min(doc_id) AS keep_doc
 FROM documents
@@ -381,7 +382,7 @@ def q_stream_windowed_append(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .groupBy(F.window("ts", _WM_WINDOW).alias("w"), "event_type")
                 .agg(
                     F.count(F.lit(1)).alias("n_events"),
-                    F.sum(F.floor(F.col("value") * 100).cast("long"))
+                    F.sum(cents(F.col("value")))
                     .cast("string")
                     .alias("value_cents"),
                 )
@@ -405,10 +406,10 @@ def q_stream_windowed_append(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).orderBy("day_start", "event_type")
 
 
-_STREAM_WINDOWED_APPEND_SQL = """
+_STREAM_WINDOWED_APPEND_SQL = f"""
 WITH m AS (SELECT max(ts) - INTERVAL 1 HOUR AS wm FROM events),
 e AS (SELECT date_trunc('day', ts) AS day_start, event_type,
-             CAST(floor(value * 100) AS BIGINT) AS cents
+             {cents_sql("value")} AS cents
       FROM events)
 SELECT strftime(day_start, '%Y-%m-%d %H:%M:%S') AS day_start, event_type,
        count(*) AS n_events,
@@ -466,7 +467,7 @@ def q_stream_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
                 )
                 .agg(
                     F.count(F.lit(1)).alias("n_events"),
-                    F.sum(F.floor(F.col("value") * 100).cast("long"))
+                    F.sum(cents(F.col("value")))
                     .cast("string")
                     .alias("value_cents"),
                 )
@@ -497,7 +498,7 @@ _STREAM_SESSION_SQL = f"""
 WITH m AS (SELECT max(ts) - INTERVAL 1 HOUR AS wm FROM events),
 s AS (
   SELECT user_id, ts, event_id,
-         CAST(floor(value * 100) AS BIGINT) AS cents,
+         {cents_sql("value")} AS cents,
          CASE WHEN lag(ts) OVER w IS NULL
               OR ts - lag(ts) OVER w >= {_SESSION_GAP_SQL}
               THEN 1 ELSE 0 END AS new_s
@@ -650,11 +651,7 @@ def q_stream_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
         profiles = (
             ev_static.where(F.col("event_type") == "purchase")
             .groupBy("user_id")
-            .agg(
-                F.sum(F.floor(F.col("value") * 100).cast("long")).alias(
-                    "cents"
-                )
-            )
+            .agg(F.sum(cents(F.col("value"))).alias("cents"))
             .select(
                 "user_id",
                 F.when(F.col("cents") >= 100_000, F.lit("gold"))
@@ -668,7 +665,7 @@ def q_stream_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.coalesce("tier", F.lit("none")).alias("tier"), "event_type"
         ).agg(
             F.count(F.lit(1)).alias("n_events"),
-            F.sum(F.floor(F.col("value") * 100).cast("long"))
+            F.sum(cents(F.col("value")))
             .cast("string")
             .alias("value_cents"),
         )
@@ -680,19 +677,19 @@ def q_stream_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).orderBy("tier", "event_type")
 
 
-_STREAM_ENRICH_SQL = """
+_STREAM_ENRICH_SQL = f"""
 WITH profiles AS (
   SELECT user_id,
-         CASE WHEN sum(CAST(floor(value * 100) AS BIGINT)) >= 100000
+         CASE WHEN sum({cents_sql("value")}) >= 100000
               THEN 'gold'
-              WHEN sum(CAST(floor(value * 100) AS BIGINT)) >= 10000
+              WHEN sum({cents_sql("value")}) >= 10000
               THEN 'silver'
               ELSE 'bronze' END AS tier
   FROM events WHERE event_type = 'purchase' GROUP BY user_id
 )
 SELECT coalesce(p.tier, 'none') AS tier, e.event_type,
        count(*) AS n_events,
-       CAST(sum(CAST(floor(e.value * 100) AS BIGINT)) AS VARCHAR)
+       CAST(sum({cents_sql("e.value")}) AS VARCHAR)
          AS value_cents
 FROM events e LEFT JOIN profiles p USING (user_id)
 GROUP BY 1, 2
